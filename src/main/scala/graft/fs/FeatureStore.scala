@@ -62,9 +62,10 @@ object WriteMode {
   *   - feature tables may be written partitioned (`spec.partitionBy`)
   *     so training-set joins at scale can prune partitions;
   *   - nothing here ever collects a data-sized result to the driver;
-  *     the one collect is the publish-time key manifest, bounded at
-  *     one row per snapshot FILE (i.e. by `numPartitions`), never by
-  *     row count.
+  *     the publish-time key manifest reads one footer per snapshot FILE
+  *     (i.e. bounded by `numPartitions`), and an online point lookup
+  *     decodes on the driver only its manifest-pruned, row-group-pruned
+  *     range files and keeps only the requested rows.
   */
 final class FeatureStore(private[fs] val spark: SparkSession,
     val root: String, val retainVersions: Int = 2)
@@ -73,7 +74,7 @@ final class FeatureStore(private[fs] val spark: SparkSession,
   require(retainVersions >= 1,
     s"FeatureStore: retainVersions must be >= 1, got $retainVersions")
 
-  private val hconf = spark.sessionState.newHadoopConf()
+  private[fs] val hconf = spark.sessionState.newHadoopConf()
   private[fs] val rootPath = new Path(root)
   private[fs] val fs: FileSystem = rootPath.getFileSystem(hconf)
   // FileContext gives the no-overwrite/overwrite rename semantics the
@@ -92,16 +93,12 @@ final class FeatureStore(private[fs] val spark: SparkSession,
 
   private def tableDir(name: String) = new Path(rootPath, name)
   private def specFile(name: String) = new Path(tableDir(name), "spec.properties")
-  // Where the live spec parks during the FileSystem-fallback pointer
-  // swap (saveSpec): readers that miss spec.properties in that window
-  // fall back to this instead of seeing the table vanish.
-  private def backupSpecFile(name: String) = new Path(tableDir(name), "spec.properties.bak")
   private def dataDir(name: String, version: Int) = new Path(tableDir(name), s"v$version")
 
   // ---------------------------------------------------------------- catalog
 
   def tableExists(name: String): Boolean =
-    fs.exists(specFile(name)) || fs.exists(backupSpecFile(name))
+    fs.exists(specFile(name)) || fs.exists(backupOf(specFile(name)))
 
   def listTables(): Seq[String] =
     fs.listStatus(rootPath).toSeq
@@ -531,54 +528,61 @@ final class FeatureStore(private[fs] val spark: SparkSession,
     p.setProperty("partitionBy", spec.partitionBy.mkString(","))
     p.setProperty("buckets", spec.buckets.toString)
     p.setProperty("version", version.toString)
-    val specPath = specFile(spec.name)
+    replaceFile(specFile(spec.name))(p.store(_, "graft feature table spec"))
+  }
+
+  /** Replace `target` with what `write` produces, so that a reader sees
+    * the old file or the new one, never a partial file. Local roots use
+    * a pure NIO write + ATOMIC_MOVE: no delete-then-rename visibility
+    * window, no ChecksumFileSystem .crc sidecars. Elsewhere the file is
+    * written beside the target and moved in by FileContext's atomic
+    * overwrite rename.
+    */
+  private[fs] def replaceFile(target: Path)(write: java.io.OutputStream => Unit): Unit = {
+    val tmpName = s"${target.getName}.tmp${System.nanoTime()}"
     if (isLocalFs) {
-      // local roots: pure NIO write + ATOMIC_MOVE — no delete-then-
-      // rename visibility window, no ChecksumFileSystem .crc sidecars
-      val tmp = localNio(tableDir(spec.name))
-        .resolve(s"spec.properties.tmp${System.nanoTime()}")
+      val tmp = localNio(target.getParent).resolve(tmpName)
       val out = java.nio.file.Files.newOutputStream(tmp)
-      try p.store(out, "graft feature table spec") finally out.close()
-      java.nio.file.Files.move(tmp, localNio(specPath),
+      try write(out) finally out.close()
+      java.nio.file.Files.move(tmp, localNio(target),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     } else {
-      val tmp = new Path(tableDir(spec.name), s"spec.properties.tmp${System.nanoTime()}")
+      val tmp = new Path(target.getParent, tmpName)
       val out = fs.create(tmp, true)
-      try p.store(out, "graft feature table spec") finally out.close()
+      try write(out) finally out.close()
       fcOpt match {
-        // atomic overwrite rename on HDFS: readers see old or new spec,
-        // never a partial file
-        case Some(fc) => fc.rename(tmp, specPath, Options.Rename.OVERWRITE)
+        case Some(fc) => fc.rename(tmp, target, Options.Rename.OVERWRITE)
         case None =>
           // No atomic-overwrite rename on this scheme, so the swap is
-          // two renames: park the live spec at a backup name, then move
-          // the new one in. A concurrent reader that misses spec.
-          // properties in the between-renames window finds the backup
-          // (tableExists/loadSpec fall back to it) instead of
-          // concluding the table vanished.
-          val bak = backupSpecFile(spec.name)
+          // two renames: park the live file at its backup name, then
+          // move the new one in. A concurrent reader that misses the
+          // target in the between-renames window finds the backup
+          // (openReplaced) instead of concluding the file vanished.
+          val bak = backupOf(target)
           fs.delete(bak, false)
-          if (fs.exists(specPath) && !fs.rename(specPath, bak))
-            throw new java.io.IOException(
-              s"feature table ${spec.name}: spec backup rename failed")
-          if (!fs.rename(tmp, specPath))
-            throw new java.io.IOException(
-              s"feature table ${spec.name}: spec pointer swap failed")
+          if (fs.exists(target) && !fs.rename(target, bak))
+            throw new java.io.IOException(s"$target: backup rename failed")
+          if (!fs.rename(tmp, target))
+            throw new java.io.IOException(s"$target: pointer swap failed")
       }
     }
   }
 
+  private def backupOf(p: Path) = new Path(p.getParent, s"${p.getName}.bak")
+
+  /** Open a file that [[replaceFile]] swaps, falling back to the backup
+    * the FileSystem-fallback swap parks it at. Throws
+    * FileNotFoundException when neither exists.
+    */
+  private[fs] def openReplaced(p: Path): java.io.InputStream =
+    try fs.open(p)
+    catch { case _: java.io.FileNotFoundException => fs.open(backupOf(p)) }
+
   private[fs] def loadSpec(name: String): (FeatureTableSpec, Int) = {
     require(tableExists(name), s"feature table $name does not exist")
     val p = new Properties()
-    val in =
-      try fs.open(specFile(name))
-      catch { case _: java.io.FileNotFoundException =>
-        // mid-swap window on the FileSystem fallback path: the live
-        // spec is parked at the backup name (saveSpec)
-        fs.open(backupSpecFile(name))
-      }
+    val in = openReplaced(specFile(name))
     try p.load(in) finally in.close()
     def list(k: String) =
       p.getProperty(k, "").split(",").toSeq.map(_.trim).filter(_.nonEmpty)

@@ -508,26 +508,27 @@ class FeatureStoreSpec extends SparkSpec {
     store.createTable(FeatureTableSpec("t", Seq("id"), v.schema))
     store.writeTable("t", v, WriteMode.Overwrite)
     store.publishTable("t", numPartitions = 4)
-    val allFiles = store.readOnlineTable("t").inputFiles.toSet
-    assert(allFiles.size >= 4, s"expected a multi-file snapshot, got $allFiles")
+    val manifest = store.onlineManifest("t")
+    assert(manifest.files.size >= 4, s"expected a multi-file snapshot, got ${manifest.files}")
 
-    // two adjacent keys land in one range file; the plan must not list
+    // two adjacent keys land in one range file; the lookup must not read
     // the other files at all (file-level pruning via the key manifest)
+    val hitFiles = manifest.prune(Seq(5L, 7L))
+    assert(hitFiles.length == 1,
+      s"point lookup reads ${hitFiles.length} files of ${manifest.files.size}")
     val hit = store.lookupOnline("t", Seq(5L, 7L))
-    assert(hit.inputFiles.length == 1,
-      s"point lookup read ${hit.inputFiles.length} files of ${allFiles.size}")
     assert(hit.orderBy("id").as[(Long, Double)].collect().toSeq ==
       Seq((5L, 5.0), (7L, 7.0)))
 
     // keys at opposite ends: at most 2 files, exact rows
+    assert(manifest.prune(Seq(1L, 998L)).length <= 2)
     val span = store.lookupOnline("t", Seq(1L, 998L))
-    assert(span.inputFiles.length <= 2)
     assert(span.orderBy("id").as[(Long, Double)].collect().toSeq ==
       Seq((1L, 1.0), (998L, 998.0)))
 
     // a key outside every file range: zero files, empty result, schema kept
+    assert(manifest.prune(Seq(99999L)).isEmpty)
     val miss = store.lookupOnline("t", Seq(99999L))
-    assert(miss.inputFiles.isEmpty)
     assert(miss.count() == 0)
     assert(miss.columns.toSeq == Seq("id", "x"))
 
@@ -544,8 +545,8 @@ class FeatureStoreSpec extends SparkSpec {
     store.createTable(FeatureTableSpec("s", Seq("k"), v.schema))
     store.writeTable("s", v, WriteMode.Overwrite)
     store.publishTable("s", numPartitions = 4)
+    assert(store.onlineManifest("s").prune(Seq("k042")).length == 1)
     val hit = store.lookupOnline("s", Seq("k042"))
-    assert(hit.inputFiles.length == 1)
     assert(hit.select("x").as[Long].collect().toSeq == Seq(42L))
 
     // timestamp leading key → no manifest → fallback still answers
