@@ -3,49 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pin the zone Verify validated under: q54/q56/q57 derive epoch
-      // micros from ntz columns, and a host-local zone would bench
-      // different (unverified) work
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // r18 optimization: the generated-code cache (STATIC conf,
-      // default 100 entries) evicts long before pass 2 re-plans the
-      // same 294 queries, so every pass-2 stage re-ran Janino on an
-      // identical source. 4096 entries keeps both passes' classes
-      // resident — compiled-code reuse, never data reuse (results are
-      // recomputed from parquet every pass; guide §1 honesty note in
-      // OPTIMIZATION_r18.md).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      // r19: dynamic partition pruning searches every join for a
-      // partitioned-scan side it could filter — this engine's tables
-      // are UNPARTITIONED parquet files (TESTDATA.md layout), so the
-      // rule can never fire (PlanPhases: 0 effective invocations
-      // board-wide) yet costs real optimizer time on join-dense plans
-      // (q227: 0.56–0.71 s per planning pass, measured). Off by
-      // default for this layout; flip the env for a deployment whose
-      // tables ARE hive-partitioned.
-      .config("spark.sql.optimizer.dynamicPartitionPruning.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_DPP", "false"))
-    // Optional extra confs for LOCAL A/B experiments only
-    // ("k=v;k2=v2"): the driver never sets this env, so its bench
-    // always runs the default session shape above.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { kvs =>
-      kvs.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      }
-    }
-    val spark = builder
-      // same session shape as Verify: q205 requires the injected
-      // RangeJoinRewrite rule, and benching must time the verified plan
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(GraftSession.defaultCores)
     // Warm-up outside the timed region: first-touch costs (codegen JIT,
     // parquet footer reads, FileSourceScan setup) otherwise land on
     // whichever query the map iterates first.

@@ -655,7 +655,7 @@ private[graft] trait PipelinesRound16b { this: PipelinesBase =>
       // Column-form canonicalizer kept deliberately (r19, measured):
       // the staged variant (withCanonicalUrl) cut the node count 22.4k
       // -> 18k here but ADDED project layers that the optimizer walks
-      // through the five-arm union — paired PlanPhases got SLOWER
+      // through the five-arm union — paired `Probe phases` got SLOWER
       // (0.59 -> 0.91 s pass-2 planning); staging only pays when the
       // tree shrink dominates (q232)
       .withColumn("url", graft.ext.Urls.canonicalizeUrl(col("resolved")))

@@ -366,7 +366,7 @@ private[graft] object PipelinesTextSim {
       // conf-parameterized + retuned r19 (was 8 since r17): state-store
       // instances per stateful operator scale with this, and each one
       // pays load/update/commit per micro-batch regardless of its row
-      // share. Paired 8-vs-4 StreamProbe A/B at sf0.1: the state-machine
+      // share. Paired 8-vs-4 `Probe stream` A/B at sf0.1: the state-machine
       // gates dropped 0.4–0.95 s each (q204 5.16→4.21, q195 3.02→2.39,
       // q199 3.18→2.73, q197 3.94→3.53) while the CPU-heavy gates
       // (q184/q200–q202/q265) stayed flat; 2 showed no further gain.

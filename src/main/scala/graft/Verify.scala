@@ -1,28 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // r19: same DPP default as Bench (unpartitioned-parquet layout —
-      // the rule never fires here; see Bench.scala), so the verified
-      // session shape IS the benched one
-      .config("spark.sql.optimizer.dynamicPartitionPruning.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_DPP", "false"))
-      // the production session shape: SQL functions + the range-join
-      // rewrite rule installed the standard way (q205 gates the rule
-      // from naive SQL text; r13 verdict ask #3)
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(GraftSession.defaultCores)
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated allowlist for local iteration on single
     // queries (same contract as Bench); the driver leaves it unset.

@@ -144,10 +144,10 @@ object Components {
       srcCol: String, dstCol: String,
       maxRounds: Int): (DataFrame, DataFrame) = {
     // the canonical delta is consumed TWICE (touched-node probe + star
-    // rounds); cut its lineage eagerly so an expensive upstream
-    // candidate generator (e.g. tiled all-pairs cosine) runs once, not
-    // per consumer — the connectedComponents checkpoint discipline,
-    // and the frame is delta-sized, never graph-sized
+    // rounds); a lazy local checkpoint cuts its lineage so an expensive
+    // upstream candidate generator (e.g. tiled all-pairs cosine) runs
+    // once, not per consumer — the connectedComponents checkpoint
+    // discipline, and the frame is delta-sized, never graph-sized
     val delta = newEdges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
         col(srcCol) =!= col(dstCol))

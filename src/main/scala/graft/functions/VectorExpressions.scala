@@ -630,10 +630,16 @@ object VectorExpressions {
       var i = 0
       while (i < windows) {
         md.reset()
+        // concat_ws semantics: a null token is skipped along with its
+        // separator (an all-null window digests the empty string)
+        var joined = false
         var w = 0
         while (w < n) {
-          if (w > 0) md.update(' '.toByte)
-          md.update(toks.getUTF8String(i + w).getBytes)
+          if (!toks.isNullAt(i + w)) {
+            if (joined) md.update(' '.toByte)
+            md.update(toks.getUTF8String(i + w).getBytes)
+            joined = true
+          }
           w += 1
         }
         out(i) = InternalRow(i + 1, md.digest())

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Empirical scale validation (VERDICT r12 ask #1): every 100 TB
@@ -26,8 +26,9 @@ import org.apache.spark.sql.functions._
   * comma-separated scale filter, e.g. `64,256`). A filtered run
   * PRINTS its cells but does not rewrite SCALE.md — partial sweeps
   * are for investigation, the committed table is always a full one.
-  * `SPARK_GRAFT_SHUFFLE` overrides shuffle.partitions independently
-  * of the thread count (to test partition-scaling hypotheses).
+  * To test a partition-scaling hypothesis, set shuffle.partitions
+  * apart from the thread count through `SPARK_GRAFT_EXTRA_CONF`
+  * (see [[graft.GraftSession]]).
   */
 object ScaleCheck {
 
@@ -44,15 +45,9 @@ object ScaleCheck {
     val scaleFilter: Option[Set[Int]] =
       args.lift(2).map(_.split(",").map(_.trim.toInt).toSet)
     val filtered = tierFilter.isDefined || scaleFilter.isDefined
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.GraftSession.defaultCores
+    val spark = graft.GraftSession.build(cpus)
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
 
     def loadavg(): String =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
@@ -115,7 +110,7 @@ object ScaleCheck {
             col("source"), col("lang"))
         }
         replicas.reduce(_ unionByName _)
-          .repartition(cpus.toInt)
+          .repartition(cpus)
           .write.mode("overwrite").parquet(dir)
       }
     }.toMap
@@ -141,7 +136,7 @@ object ScaleCheck {
             col("source"), col("lang"))
         }
         replicas.reduce(_ unionByName _)
-          .repartition(cpus.toInt)
+          .repartition(cpus)
           .write.mode("overwrite").parquet(dir)
       }
     }.toMap
@@ -758,7 +753,7 @@ object ScaleCheck {
             val tb0 = System.nanoTime()
             store.createTable(graft.fs.FeatureTableSpec(tname, Seq("doc_id"),
               feats.schema, "scale-tier bucketed features",
-              buckets = cpus.toInt))
+              buckets = cpus))
             store.writeTable(tname, feats, graft.fs.WriteMode.Overwrite)
             println(f"[scale] bucketed_table_build ${s}%3dx " +
               f"build=${(System.nanoTime() - tb0) / 1e9}%8.2fs (untimed)")
@@ -830,7 +825,7 @@ object ScaleCheck {
     md.append(s"${Scales.map(_.toString + "×").mkString("/")} with per-replica token salting (replicas share no shingles, so\n")
     md.append("the true duplicate structure grows linearly — an unsalted replication\n")
     md.append("would quadratically clone every dup cluster and measure the fixture, not\n")
-    md.append(s"the operator). local[$cpus], shuffle.partitions=$cpus, min-of-2 per cell,\n")
+    md.append(s"the operator). local[$cpus], shuffle.partitions=$shufflePartitions, min-of-2 per cell,\n")
     md.append("noop sink (the Bench discipline). Output cardinality is reported so\n")
     md.append("linear-output growth is visible next to the wall-time ratio.\n\n")
     md.append(s"- base dir: `$baseDir`; loadavg before `$loadBefore`, after `$loadAfter`\n")

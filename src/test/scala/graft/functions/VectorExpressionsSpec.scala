@@ -170,7 +170,7 @@ class VectorExpressionsSpec extends SparkSpec {
   test("positionalNgramMd5: fused positions+digests equal the HOF chain") {
     val rnd = new scala.util.Random(11)
     val words = Vector("alpha", "beta", "gamma", "\u00e9l\u00e8ve", "x", "longer-token",
-      "\u6771\u4eac", "z9")
+      "\u6771\u4eac", "z9", null)
     val docs = (0 until 60).map { i =>
       // lengths 0..11 straddle every n: size < n must emit NO windows
       (i.toLong, Array.fill(rnd.nextInt(12))(words(rnd.nextInt(words.size))))
