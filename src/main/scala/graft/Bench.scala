@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -21,8 +20,8 @@ object Bench {
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
       catch { case _: Throwable => "" }
     val loadBefore = loadavg()
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val selected = SparkEntry.gates.sortBy(_.name)
+      .filter(g => only.forall(_.contains(g.name)))
     // Steal-immune sidecar columns (r13 verdict ask #1): wall time is
     // the only number host steal can corrupt, so every query also
     // records executor CPU-ns and shuffle read/write bytes from a
@@ -35,27 +34,33 @@ object Bench {
       org.apache.spark.graftmetrics.GraftTaskMetrics.flush(spark.sparkContext)
       taskMetrics.snapshot()
     }
-    // Measurement record: wall secs, completed-without-throwing, CPU
-    // secs, shuffle read/write bytes. The noop sink — not count() — is
-    // what makes the timing honest: under count() Catalyst prunes
-    // every unused projection, so a pure-projection query (token
-    // counts, quality scores, PII scrub, ...) would time the parquet
-    // scan alone and report near-zero regardless of the operator's
-    // real cost. noop evaluates every output column and discards the
-    // rows — the standard Spark benching sink.
-    final case class Sample(wall: Double, ok: Boolean, cpu: Double,
-        shufRead: Long, shufWrite: Long)
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Sample = {
+    // Measurement record: wall secs, the cause when the gate threw
+    // ("<Class>: <first line of the message>"), CPU secs, shuffle
+    // read/write bytes. The noop sink — not count() — is what makes the
+    // timing honest: under count() Catalyst prunes every unused
+    // projection, so a pure-projection query (token counts, quality
+    // scores, PII scrub, ...) would time the parquet scan alone and
+    // report near-zero regardless of the operator's real cost. noop
+    // evaluates every output column and discards the rows — the
+    // standard Spark benching sink.
+    final case class Sample(wall: Double, err: Option[String], cpu: Double,
+        shufRead: Long, shufWrite: Long) {
+      def ok: Boolean = err.isEmpty
+    }
+    def time(g: Gate): Sample = {
       val (c0, r0, w0) = metricsCut()
       val t0 = System.nanoTime()
-      val ok = try {
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true
-      } catch { case _: Throwable => false }
+      val err = try {
+        g.build(spark, sfDir).write.mode("overwrite").format("noop").save(); None
+      } catch { case e: Throwable =>
+        Some(e.getClass.getName + ": " +
+          Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse(""))
+      }
       val wall = (System.nanoTime() - t0) / 1e9
       val (c1, r1, w1) = metricsCut()
-      Sample(wall, ok, (c1 - c0) / 1e9, r1 - r0, w1 - w0)
+      Sample(wall, err, (c1 - c0) / 1e9, r1 - r0, w1 - w0)
     }
-    val firstPass = selected.map { case (name, fn) => (name, fn, time(fn)) }
+    val firstPass = selected.map(g => (g, time(g)))
     // A single stop-the-world pause (GC, JIT deopt storm, host
     // contention) can inflate one query 10x — r04 recorded q20 at
     // 25.6s vs a 1.6s steady state, and r10's cross-round grading
@@ -82,8 +87,8 @@ object Bench {
     // not CacheManager entries; invalidateStoreCaches drops their
     // driver-side handles so pass 2 rebuilds them like pass 1 did.)
     spark.catalog.clearCache()
-    val results = firstPass.map { case (name, fn, s1) =>
-      val s2 = time(fn)
+    val results = firstPass.map { case (g, s1) =>
+      val s2 = time(g)
       // an OK sample always beats a failed one — when pass 1 threw and
       // pass 2 succeeded but ran slower, reporting pass 1 would
       // describe an ABORTED execution (r14 ADVICE); among same-status
@@ -95,13 +100,15 @@ object Bench {
       val best =
         if (s1.ok != s2.ok) { if (s1.ok) s1 else s2 }
         else if (s2.wall < s1.wall) s2 else s1
-      name -> best
+      g -> best
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v.wall }
+    val qs = results.map { case (g, v) => s"\"" + g.name + "\":" + v.wall }
       .mkString("{", ",", "}")
-    val metricsJson = results.map { case (k, v) =>
-      s"\"" + k + "\":" + s"""{"wall":${v.wall},"ok":${v.ok},"cpu":${v.cpu},""" +
-        s""""shuffle_read":${v.shufRead},"shuffle_write":${v.shufWrite}}"""
+    val metricsJson = results.map { case (g, v) =>
+      s"\"" + g.name + "\":" + s"""{"wall":${v.wall},"ok":${v.ok},"cpu":${v.cpu},""" +
+        s""""shuffle_read":${v.shufRead},"shuffle_write":${v.shufWrite},""" +
+        s""""family":"${g.family.name}"""" +
+        v.err.fold("")(e => ",\"err\":" + Verify.jsonString(e)) + "}"
     }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2.wall).sum else 0.0
     val cpuTotal = if (results.nonEmpty) results.map(_._2.cpu).sum else 0.0

@@ -8,11 +8,8 @@ import org.apache.spark.sql.types.DecimalType
 /** Gate queries — behavioral/event analytics: funnels, cohort
   * retention, session funnels, transition matrices. Split out of
   * QueriesCuration in r12 (the >700-line file discipline).
-  *
-  * Mixed into [[PipelinesExt]]; the sibling [[OraclesBehavior]] below
-  * keeps each query's DuckDB oracle SQL in the same file.
   */
-private[graft] trait PipelinesBehavior { this: PipelinesBase =>
+private[graft] trait PipelinesBehavior extends PipelinesBase {
 
   // Conversion funnel: per-user first view / first subsequent purchase
   // — conditional-min aggregates over one events scan, epoch-µs output
@@ -116,10 +113,6 @@ private[graft] trait PipelinesBehavior { this: PipelinesBase =>
     graft.streaming.Sessionize.coOccurrenceLift(t(s, d, "events"),
         gapMicros = 14400000000L, maxDist = 3)
       .orderBy("src_type", "dst_type")
-}
-
-/** DuckDB oracle SQL for the [[PipelinesBehavior]] queries. */
-private[graft] trait OraclesBehavior { this: OracleSnippets =>
 
   /** The q176 session-co-occurrence extraction through a final
     * `pc(src_type, dst_type, n_pairs)` CTE — ONE source of truth for
@@ -146,8 +139,8 @@ private[graft] trait OraclesBehavior { this: OracleSnippets =>
        |  GROUP BY src_type, dst_type)""".stripMargin
   }
 
-  protected def sqlBehavior: Map[String, String] = Map(
-    "q96_event_transitions" ->
+  override def gates: Seq[Gate] = super.gates ++ Seq(
+    Gate("q96_event_transitions", Family.Sql, eventTransitions, _ =>
       """WITH e AS (
         |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events),
         |t AS (SELECT event_type,
@@ -157,9 +150,9 @@ private[graft] trait OraclesBehavior { this: OracleSnippets =>
         |SELECT event_type, next_type, CAST(count(*) AS BIGINT) AS n_transitions
         |FROM t WHERE next_type IS NOT NULL
         |GROUP BY event_type, next_type
-        |ORDER BY event_type, next_type""".stripMargin,
+        |ORDER BY event_type, next_type""".stripMargin),
 
-    "q95_session_funnel" ->
+    Gate("q95_session_funnel", Family.Sql, sessionFunnel, _ =>
       """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS us
         |           FROM events),
         |s AS (SELECT *, CASE WHEN lag(us) OVER w IS NULL THEN 1
@@ -175,9 +168,9 @@ private[graft] trait OraclesBehavior { this: OracleSnippets =>
         |    min(CASE WHEN event_type = 'purchase' THEN us END) >
         |    min(CASE WHEN event_type = 'view' THEN us END), false) AS INT) AS converted
         |FROM s2 GROUP BY user_id, session_id
-        |ORDER BY user_id, session_id""".stripMargin,
+        |ORDER BY user_id, session_id""".stripMargin),
 
-    "q93_funnel" ->
+    Gate("q93_funnel", Family.Sql, conversionFunnel, _ =>
       """SELECT user_id,
         |  min(CASE WHEN event_type = 'view' THEN epoch_us(ts) END) AS first_view_us,
         |  min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS first_purchase_us,
@@ -185,9 +178,9 @@ private[graft] trait OraclesBehavior { this: OracleSnippets =>
         |    min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) >
         |    min(CASE WHEN event_type = 'view' THEN epoch_us(ts) END), false) AS INT)
         |    AS converted
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
 
-    "q94_cohort_retention" ->
+    Gate("q94_cohort_retention", Family.Sql, cohortRetention, _ =>
       """WITH f AS (
         |  SELECT user_id, epoch_us(date_trunc('week', min(ts))) AS cohort_us
         |  FROM events GROUP BY user_id),
@@ -198,18 +191,18 @@ private[graft] trait OraclesBehavior { this: OracleSnippets =>
         |  CAST((w_us - cohort_us) // 604800000000 AS BIGINT) AS week_n,
         |  CAST(count(*) AS BIGINT) AS n_users
         |FROM a JOIN f USING (user_id)
-        |GROUP BY cohort_us, week_n ORDER BY cohort_us, week_n""".stripMargin,
+        |GROUP BY cohort_us, week_n ORDER BY cohort_us, week_n""".stripMargin),
     // the q34 session assignment, then one lead() arm per distance
     // with the same-session guard, unioned and counted
-    "q176_session_cooccur" ->
+    Gate("q176_session_cooccur", Family.Sql, sessionCoOccurrence, _ =>
       s"""WITH $coocCtesSql
          |SELECT src_type, dst_type, n_pairs FROM pc
-         |ORDER BY src_type, dst_type""".stripMargin,
+         |ORDER BY src_type, dst_type""".stripMargin),
 
     // pair marginals + total over the shared pair CTE, then the exact
     // integer-rational lift (the log-free PMI sibling) — products and
     // division written in the engine's exact order
-    "q178_cooccur_lift" ->
+    Gate("q178_cooccur_lift", Family.Sql, sessionCoOccurLift, _ =>
       s"""WITH $coocCtesSql,
          |st AS (SELECT src_type, CAST(sum(n_pairs) AS BIGINT) AS n_src
          |  FROM pc GROUP BY 1),
@@ -220,7 +213,7 @@ private[graft] trait OraclesBehavior { this: OracleSnippets =>
          |  CAST(floor(CAST(n_pairs AS DOUBLE) * CAST(n AS DOUBLE) * 1000000.0e0
          |    / (CAST(n_src AS DOUBLE) * CAST(n_dst AS DOUBLE))) AS BIGINT) AS lift_q
          |FROM pc JOIN st USING (src_type) JOIN dt USING (dst_type) CROSS JOIN tt
-         |ORDER BY src_type, dst_type""".stripMargin,
+         |ORDER BY src_type, dst_type""".stripMargin),
 
   )
 }

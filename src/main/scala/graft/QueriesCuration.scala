@@ -11,12 +11,8 @@ import graft.fs.{FeatureTableSpec, PointInTime, WriteMode}
 
 /** Gate queries — semantic dedup, curation pipelines, pricing/funnel
   * analytics, encoders, and the dup-graph tier (CC, sampling).
-  *
-  * Mixed into [[PipelinesExt]]; the sibling [[OraclesCuration]]
-  * below keeps each query's DuckDB oracle SQL in the same file
-  * (one review unit per query, the VERDICT r9 #4 split).
   */
-private[graft] trait PipelinesCuration { this: PipelinesBase =>
+private[graft] trait PipelinesCuration extends PipelinesBase {
 
   // Semantic dedup, exact retained set: earliest-survivor rule over
   // the tiled all-pairs cosine join. Same similarity expression the
@@ -265,25 +261,20 @@ private[graft] trait PipelinesCuration { this: PipelinesBase =>
       .orderBy("doc_id")
   }
 
-
-}
-
-/** DuckDB oracle SQL for the [[PipelinesCuration]] queries. */
-private[graft] trait OraclesCuration { this: OracleSnippets =>
-  protected def sqlCuration: Map[String, String] = Map(
-    "q80_semantic_dedup" ->
+  override def gates: Seq[Gate] = super.gates ++ Seq(
+    Gate("q80_semantic_dedup", Family.Dedup, semanticDedupExact, _ =>
       """SELECT a.vec_id FROM embeddings a
         |WHERE NOT EXISTS (
         |  SELECT 1 FROM embeddings b
         |  WHERE b.vec_id < a.vec_id
         |    AND list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
         |          CAST(b.embedding AS DOUBLE[])) >= 0.45)
-        |ORDER BY vec_id""".stripMargin,
+        |ORDER BY vec_id""".stripMargin),
 
 
     // DuckDB quirk: array_to_string of an EMPTY list is NULL, Spark's
     // array_join is '' — coalesce harmonizes the all-words-pruned edge
-    "q82_vocab_prune" ->
+    Gate("q82_vocab_prune", Family.Lm, vocabPrune, _ =>
       """WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS wd
         |           FROM documents),
         |dfreq AS (SELECT wd, count(DISTINCT doc_id) AS df FROM w GROUP BY wd),
@@ -292,20 +283,20 @@ private[graft] trait OraclesCuration { this: OracleSnippets =>
         |SELECT doc_id,
         |  coalesce(array_to_string(list_filter(string_split(text, ' '),
         |    x -> NOT list_contains(stop_list, x)), ' '), '') AS pruned
-        |FROM documents, sl ORDER BY doc_id""".stripMargin,
+        |FROM documents, sl ORDER BY doc_id""".stripMargin),
 
 
-    "q92_fuzzy_names" ->
+    Gate("q92_fuzzy_names", Family.Dedup, fuzzyNamePairs, _ =>
       """WITH n AS (SELECT DISTINCT p_name AS name FROM part
         |           WHERE p_name IS NOT NULL)
         |SELECT a.name AS name_a, b.name AS name_b,
         |  CAST(levenshtein(a.name, b.name) AS INT) AS dist
         |FROM n a, n b
         |WHERE a.name < b.name AND levenshtein(a.name, b.name) <= 2
-        |ORDER BY name_a, name_b""".stripMargin,
+        |ORDER BY name_a, name_b""".stripMargin),
 
 
-    "q90_robust_scale" ->
+    Gate("q90_robust_scale", Family.Fs, robustScaleBalances, _ =>
       """WITH q AS (
         |  SELECT quantile_cont(c_acctbal, 0.25) AS q1,
         |         quantile_cont(c_acctbal, 0.5)  AS med,
@@ -313,12 +304,12 @@ private[graft] trait OraclesCuration { this: OracleSnippets =>
         |  FROM customer)
         |SELECT c_custkey, c_acctbal,
         |  (c_acctbal - med) / (q3 - q1) AS acctbal_r
-        |FROM customer, q ORDER BY c_custkey""".stripMargin,
+        |FROM customer, q ORDER BY c_custkey""".stripMargin),
 
 
     // same operation order as the Spark side: (cast(s_g - l) + m*prior)
     // / cast(n_g - 1 + m) — identical IEEE doubles on both engines
-    "q91_target_encoding" ->
+    Gate("q91_target_encoding", Family.Fs, targetEncodePriority, _ =>
       """WITH g AS (
         |  SELECT o_orderpriority, count(*) AS n_g,
         |    sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS s_g
@@ -332,12 +323,12 @@ private[graft] trait OraclesCuration { this: OracleSnippets =>
         |     + 10.0 * prior)
         |  / CAST(n_g - 1 + 10.0 AS DOUBLE) AS enc_f
         |FROM orders JOIN g USING (o_orderpriority), p
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin),
 
 
     // bin = #edges <= value on both sides; edges from quantile_cont
     // match Spark's exact percentile bit-for-bit (q42 contract)
-    "q89_decile_binning" ->
+    Gate("q89_decile_binning", Family.Fs, decileBinning, _ =>
       """WITH e AS (
         |  SELECT quantile_cont(o_totalprice,
         |    [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS edges
@@ -346,19 +337,19 @@ private[graft] trait OraclesCuration { this: OracleSnippets =>
         |  CAST(count(*) AS BIGINT) AS n_orders,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
         |  min(o_totalprice) AS mn, max(o_totalprice) AS mx
-        |FROM orders, e GROUP BY bin ORDER BY bin""".stripMargin,
+        |FROM orders, e GROUP BY bin ORDER BY bin""".stripMargin),
 
 
     // the partition-pruned scan must produce exactly what a plain
     // filtered scan of the source produces
-    "q87_partitioned_scan" ->
+    Gate("q87_partitioned_scan", Family.Sql, partitionedScan, _ =>
       """SELECT user_id, CAST(count(*) AS BIGINT) AS n_purchases,
         |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
         |FROM events WHERE event_type = 'purchase'
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |GROUP BY user_id ORDER BY user_id""".stripMargin),
 
 
-    "q88_grouped_arrays" ->
+    Gate("q88_grouped_arrays", Family.Sql, groupedArrays, _ =>
       """WITH g AS (
         |  SELECT o_custkey, list_sort(list(o_totalprice)) AS totals,
         |         count(*) AS n
@@ -366,30 +357,30 @@ private[graft] trait OraclesCuration { this: OracleSnippets =>
         |SELECT o_custkey, CAST(n AS BIGINT) AS n_orders,
         |  totals[1] AS min_total, totals[-1] AS max_total,
         |  totals[CAST((n + 1) // 2 AS INT)] AS mid_total
-        |FROM g ORDER BY o_custkey""".stripMargin,
+        |FROM g ORDER BY o_custkey""".stripMargin),
 
 
     // the oracle aggregates ALL orders in one pass — the Spark side
     // must make base-state + delta-merge equal the full recompute
-    "q86_incremental_agg" ->
+    Gate("q86_incremental_agg", Family.Sql, incrementalAggRefresh, _ =>
       """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS cnt,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
         |  min(o_totalprice) AS mn, max(o_totalprice) AS mx
         |FROM orders GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+        |ORDER BY o_orderpriority""".stripMargin),
 
 
     // recursive transitive closure over the q30 edge set — the
     // declarative fixpoint the alternating-star algorithm must equal
-    "q97_dup_clusters" ->
+    Gate("q97_dup_clusters", Family.Graph, dupClusters, _ =>
       s"""WITH RECURSIVE $ccClosureCtesSql
          |SELECT node AS vec_id, min(lbl) AS component
-         |FROM reach GROUP BY node ORDER BY vec_id""".stripMargin,
+         |FROM reach GROUP BY node ORDER BY vec_id""".stripMargin),
 
 
     // semantic decontamination: max probe cosine per vector, retained
     // set below the threshold — exact doubles both engines
-    "q187_semantic_decontam" ->
+    Gate("q187_semantic_decontam", Family.Dedup, semanticDecontam, _ =>
       """WITH p AS (SELECT vec_id AS pid, CAST(embedding AS DOUBLE[]) AS pe
         |           FROM embeddings WHERE vec_id % 100 = 3),
         |m AS (SELECT e.vec_id,
@@ -399,23 +390,23 @@ private[graft] trait OraclesCuration { this: OracleSnippets =>
         |      WHERE e.vec_id != pid
         |      GROUP BY e.vec_id)
         |SELECT vec_id, max_probe_cos FROM m
-        |WHERE max_probe_cos < 0.3 ORDER BY vec_id""".stripMargin,
+        |WHERE max_probe_cos < 0.3 ORDER BY vec_id""".stripMargin),
 
 
     // invariant gate (r12): the clustered-SemDeDup retained set is
     // engine-specific; the booleans assert clustering-independent facts
-    "q81_semdedup_clustered" ->
+    Gate("q81_semdedup_clustered", Family.Dedup, semanticDedupClustered, _ =>
       """SELECT CAST(count(*) AS BIGINT) AS n_docs,
         |  TRUE AS dropped_have_earlier_dup,
         |  TRUE AS retained_bounds_ok
-        |FROM embeddings""".stripMargin,
+        |FROM embeddings""".stripMargin),
 
 
     // portable-MinHash end-to-end dedup replay (r12): word-3-gram
     // md5-52 signatures → banded candidates → est >= 0.5 edges →
     // recursive closure → keep each component's min id. The full
     // q26-pipeline + q97-closure composition as ONE oracle.
-    "q101_neardup_dedup" ->
+    Gate("q101_neardup_dedup", Family.Dedup, nearDupDedup, _ =>
       s"""WITH RECURSIVE
          |${minhashEstCtesSql("documents", n = 3, numHashes = 32, bands = 8)},
          |mpairs AS (SELECT id_a, id_b FROM mest WHERE est_jaccard >= 0.5),
@@ -428,20 +419,20 @@ private[graft] trait OraclesCuration { this: OracleSnippets =>
          |mcomp AS (SELECT node, min(lbl) AS component FROM mreach GROUP BY node)
          |SELECT d.doc_id, d.source FROM documents d
          |JOIN mcomp c ON c.node = d.doc_id
-         |WHERE c.component = d.doc_id ORDER BY d.doc_id""".stripMargin,
+         |WHERE c.component = d.doc_id ORDER BY d.doc_id""".stripMargin),
 
 
     // same md5 threshold CASE as the Spark filter — the sampled SET
     // must match row-for-row, not merely in expectation
-    "q98_stratified_sample" ->
+    Gate("q98_stratified_sample", Family.Sketch, stratifiedSample, _ =>
       """SELECT doc_id, source, n_chars FROM documents
         |WHERE md5(CAST(doc_id AS VARCHAR)) <
         |  CASE source WHEN 'src0' THEN 'c0000000' WHEN 'src1' THEN '80000000'
         |              WHEN 'src2' THEN '40000000' ELSE '19999999' END
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
 
 
-    "q99_chunk_documents" ->
+    Gate("q99_chunk_documents", Family.Lm, chunkDocuments, _ =>
       """WITH d AS (
         |  SELECT doc_id,
         |    CASE WHEN length(trim(text)) = 0 THEN []
@@ -459,10 +450,10 @@ private[graft] trait OraclesCuration { this: OracleSnippets =>
         |  CAST(chunk_id * 48 AS BIGINT) AS start_tok,
         |  array_to_string(list_slice(toks, chunk_id*48 + 1, chunk_id*48 + 64), ' ') AS chunk_text,
         |  CAST(len(list_slice(toks, chunk_id*48 + 1, chunk_id*48 + 64)) AS INTEGER) AS n_tokens
-        |FROM e ORDER BY doc_id, chunk_id""".stripMargin,
+        |FROM e ORDER BY doc_id, chunk_id""".stripMargin),
 
 
-    "q100_packing_plan" ->
+    Gate("q100_packing_plan", Family.Lm, packingPlan, _ =>
       s"""WITH tc AS (
          |  SELECT doc_id, source, CAST($tokenCountSql AS BIGINT) AS n_tokens
          |  FROM documents
@@ -475,13 +466,13 @@ private[graft] trait OraclesCuration { this: OracleSnippets =>
          |             sum(n_tokens) OVER w - n_tokens) / 512.0) AS BIGINT) AS last_pack
          |FROM tc
          |WINDOW w AS (PARTITION BY source ORDER BY doc_id)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
 
     // same fraction arithmetic as Sampling.sampleToMix, step for step
     // (min-scale, least with 1.0, floor to the 8-hex threshold); the
     // >= 1.0 branch mirrors the Scala keep-everything sentinel
-    "q103_mix_rebalance" ->
+    Gate("q103_mix_rebalance", Family.Lm, mixRebalance, _ =>
       """WITH targets(source, t) AS (VALUES ('src0', 0.5), ('src1', 0.3), ('src2', 0.2)),
         |counts AS (
         |  SELECT source, CAST(count(*) AS DOUBLE) AS n
@@ -495,10 +486,10 @@ private[graft] trait OraclesCuration { this: OracleSnippets =>
         |WHERE md5(CAST(doc_id AS VARCHAR)) <
         |  CASE WHEN frac >= 1.0 THEN 'g'
         |       ELSE printf('%08x', CAST(floor(frac * 4294967296.0) AS BIGINT)) END
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
 
 
-    "q104_quality_top_frac" ->
+    Gate("q104_quality_top_frac", Family.Lm, qualityTopFraction, _ =>
       s"""WITH f AS (SELECT doc_id, source,
          |    CAST(length(text) AS DOUBLE) AS nc,
          |    CAST($tokenCountSql AS DOUBLE) AS nt,
@@ -515,7 +506,7 @@ private[graft] trait OraclesCuration { this: OracleSnippets =>
          |  percent_rank() OVER (PARTITION BY source ORDER BY quality DESC, doc_id) AS pr
          |  FROM q)
          |SELECT doc_id, source, quality FROM r WHERE pr <= 0.4
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
 
   )

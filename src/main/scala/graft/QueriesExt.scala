@@ -18,11 +18,19 @@ import graft.fs.{FeatureTableSpec, PointInTime, WriteMode}
   * DuckDB reads full ns, so comparing raw timestamps would be a dtype
   * coin-flip; integer micros are unambiguous.
   */
-/** Shared plumbing for the gate-query traits: table loading and
-  * the per-(session, dir) temp feature-store cache the PIT gates
-  * reuse across queries.
+/** Shared plumbing for the gate-query traits: table loading, the
+  * per-(session, dir) temp feature-store cache the PIT gates reuse
+  * across queries, and the DuckDB SQL snippets several oracles share.
   */
 private[graft] trait PipelinesBase {
+
+  /** The gates declared so far in the linearization: each gate trait
+    * overrides this as `super.gates ++ Seq(Gate(...), ...)`, next to
+    * its queries. A `def`, not a `val`: oracle lambdas read other
+    * traits' snippet vals, which a strict list built during trait
+    * initialization could see as null.
+    */
+  def gates: Seq[Gate] = Nil
 
   protected def t(s: SparkSession, d: String, name: String) = Tables.load(s, d, name)
 
@@ -141,31 +149,10 @@ private[graft] trait PipelinesBase {
       (if (recallFloor.isDefined) Seq(col("recall_ok")) else Nil): _*)
       .orderBy("query_id")
   }
-}
 
-/** All gate queries, split per theme (VERDICT r9 #4): each
-  * `Queries<Theme>.scala` file holds a Pipelines trait and the
-  * matching Oracles trait so a query and its DuckDB oracle SQL
-  * review as one unit. This object is the stable entry point —
-  * `SparkEntry`, tests, and streaming parity specs address
-  * everything as `PipelinesExt.<query>`.
-  */
-object PipelinesExt extends PipelinesBase
-  with PipelinesSurface with PipelinesTextSim with PipelinesSqlSuite
-  with PipelinesCuration with PipelinesTpchDeep with PipelinesBehavior
-  with PipelinesVectorSketch with PipelinesTextHygiene
-  with PipelinesRetrieval with PipelinesScaleOps
-  with PipelinesRound10 with PipelinesRound11 with PipelinesRound11b
-  with PipelinesRound11c with PipelinesRound12 with PipelinesRound13
-  with PipelinesRound14 with PipelinesRound15 with PipelinesRound16
-  with PipelinesRound16b with PipelinesRound17 with PipelinesRound18
-
-/** Shared DuckDB SQL snippets: ONE source of truth for semantics
-  * multiple gates reuse (thresholds, token/gram definitions, the
-  * dup-graph closure) — a width changed in one copy but not
-  * another would let a gate verify against stale semantics.
-  */
-private[graft] trait OracleSnippets {
+  // Shared DuckDB oracle snippets: ONE source of truth for semantics
+  // several gates reuse (a threshold or width changed in one copy but
+  // not another would let a gate verify against stale semantics).
 
   /** DuckDB-side normalized-text fingerprint (note the 'g' flag —
     * DuckDB regexp_replace is first-match-only without it; Spark's
@@ -173,13 +160,7 @@ private[graft] trait OracleSnippets {
     */
   protected val fpSql = """md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))"""
 
-  // exact verbatim 8-gram overlap vs probe docs 3/7/11/19/23 — ground
-  // truth for BOTH q79 (gram equi-join) and q109 (bloom-prefiltered)
-  // --- shared oracle snippets: ONE source of truth for semantics that
-  // multiple gates reuse (a threshold or window width changed in one
-  // copy but not another would let a gate verify against stale
-  // semantics). Raw whitespace tokens, the 8-token md5 gram list, and
-  // the q97/q120 recursive connected-components closure.
+  // raw whitespace tokens
   protected val rawTokensCaseSql =
     """CASE WHEN text IS NULL OR length(trim(text)) = 0 THEN []
       |         ELSE regexp_split_to_array(trim(text), '\s+') END""".stripMargin
@@ -477,6 +458,8 @@ private[graft] trait OracleSnippets {
     s"$v0,\n${(1 to n).map(stage).mkString(",\n")}"
   }
 
+  // exact verbatim 8-gram overlap vs probe docs 3/7/11/19/23 — ground
+  // truth for BOTH q79 (gram equi-join) and q109 (bloom-prefiltered)
   protected val contaminationNgramOverlapSql =
     s"""WITH t AS (SELECT doc_id,
        |    $rawTokensCaseSql AS w
@@ -565,25 +548,19 @@ private[graft] trait OracleSnippets {
        |FROM lineitem""".stripMargin
 }
 
-/** DuckDB oracle SQL for every hash-gated query, merged from the
-  * per-theme traits (adjacent to their queries).
+/** All gate queries, split per theme: each `Queries<Theme>.scala`
+  * file holds one Pipelines trait whose `gates` list declares each of
+  * its queries with its family and DuckDB oracle, so a query and its
+  * oracle review as one unit. This object is the stable entry point —
+  * `SparkEntry`, tests, and streaming parity specs address
+  * everything as `PipelinesExt.<query>`.
   */
-object OraclesExt extends OracleSnippets
-    with OraclesSurface with OraclesTextSim with OraclesSqlSuite
-    with OraclesCuration with OraclesTpchDeep with OraclesBehavior
-    with OraclesVectorSketch with OraclesTextHygiene
-    with OraclesRetrieval with OraclesScaleOps
-    with OraclesRound10 with OraclesRound11 with OraclesRound11b
-    with OraclesRound11c with OraclesRound12 with OraclesRound13
-    with OraclesRound14 with OraclesRound15 with OraclesRound16
-    with OraclesRound16b with OraclesRound17 with OraclesRound18 {
-  // def, not val: the q44 entry interpolates the CSV fixture path that
-  // csvIngest records when it runs — Verify dumps oracle SQL only after
-  // running the queries, so building the map lazily picks it up.
-  def sql: Map[String, String] =
-    sqlSurface ++ sqlTextSim ++ sqlSqlSuite ++ sqlCuration ++
-      sqlTpchDeep ++ sqlBehavior ++ sqlVectorSketch ++ sqlTextHygiene ++
-      sqlRetrieval ++ sqlScaleOps ++ sqlRound10 ++ sqlRound11 ++ sqlRound11b ++
-      sqlRound11c ++ sqlRound12 ++ sqlRound13 ++ sqlRound14 ++ sqlRound15 ++
-      sqlRound16 ++ sqlRound16b ++ sqlRound17 ++ sqlRound18
-}
+object PipelinesExt extends PipelinesBase
+  with PipelinesSurface with PipelinesTextSim with PipelinesSqlSuite
+  with PipelinesCuration with PipelinesTpchDeep with PipelinesBehavior
+  with PipelinesVectorSketch with PipelinesTextHygiene
+  with PipelinesRetrieval with PipelinesScaleOps
+  with PipelinesRound10 with PipelinesRound11 with PipelinesRound11b
+  with PipelinesRound11c with PipelinesRound12 with PipelinesRound13
+  with PipelinesRound14 with PipelinesRound15 with PipelinesRound16
+  with PipelinesRound16b with PipelinesRound17 with PipelinesRound18

@@ -11,12 +11,8 @@ import graft.fs.{FeatureTableSpec, PointInTime, WriteMode}
 
 /** Gate queries — retrieval (BM25/RRF/binary/int8 tiers), chunking and
   * packing, drift, curriculum ordering, and projections.
-  *
-  * Mixed into [[PipelinesExt]]; the sibling [[OraclesRetrieval]]
-  * below keeps each query's DuckDB oracle SQL in the same file
-  * (one review unit per query, the VERDICT r9 #4 split).
   */
-private[graft] trait PipelinesRetrieval { this: PipelinesBase with PipelinesCuration =>
+private[graft] trait PipelinesRetrieval extends PipelinesBase { this: PipelinesCuration =>
 
   // BM25 keyword retrieval over the corpus for a fixed query-term set
   // — one scan + 1-row stats broadcast + TakeOrderedAndProject; the
@@ -226,13 +222,10 @@ private[graft] trait PipelinesRetrieval { this: PipelinesBase with PipelinesCura
       .select(col("p.i"), col("p.j"), col("p.cov_q"))
       .orderBy("i", "j")
   }
-}
 
-/** DuckDB oracle SQL for the [[PipelinesRetrieval]] queries. */
-private[graft] trait OraclesRetrieval { this: OracleSnippets =>
-  protected def sqlRetrieval: Map[String, String] = Map(
+  override def gates: Seq[Gate] = super.gates ++ Seq(
 
-    "q125_dist_drift" ->
+    Gate("q125_dist_drift", Family.Sketch, distDrift, _ =>
       """WITH a AS (
         |  SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_a
         |  FROM orders WHERE EXTRACT(year FROM o_orderdate) = 1996
@@ -253,12 +246,12 @@ private[graft] trait OraclesRetrieval { this: OracleSnippets =>
         |      * (CAST(n_a AS DOUBLE) / ta - CAST(n_b AS DOUBLE) / tb))
         |    / ((CAST(n_a AS DOUBLE) / ta + CAST(n_b AS DOUBLE) / tb) / 2.0e0)
         |    * 1000000000000.0e0 + 0.5e0) AS BIGINT) AS drift_q
-        |FROM j, t ORDER BY o_orderpriority""".stripMargin,
+        |FROM j, t ORDER BY o_orderpriority""".stripMargin),
 
 
     // dedup → quality → decontaminate → sample, each stage the same
     // SQL its standalone gate uses
-    "q124_curation_pipeline" ->
+    Gate("q124_curation_pipeline", Family.Lm, curationPipeline, _ =>
       s"""WITH dd AS (
          |  SELECT doc_id, source, text FROM (
          |    SELECT doc_id, source, text,
@@ -294,10 +287,10 @@ private[graft] trait OraclesRetrieval { this: OracleSnippets =>
          |SELECT doc_id, source, quality FROM q
          |WHERE doc_id NOT IN (SELECT doc_id FROM hits)
          |  AND md5(CAST(doc_id AS VARCHAR)) < '80000000'
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
 
-    "q123_label_centroids" ->
+    Gate("q123_label_centroids", Family.Ann, labelCentroids, _ =>
       """WITH dims AS (
         |  SELECT label, u.i AS pos,
         |    CAST(floor(CAST(embedding[u.i] AS DOUBLE) * 1000000.0e0 + 0.5e0)
@@ -306,11 +299,11 @@ private[graft] trait OraclesRetrieval { this: OracleSnippets =>
         |SELECT label, CAST(pos AS INTEGER) AS pos,
         |  CAST(count(*) AS BIGINT) AS n, CAST(sum(q) AS BIGINT) AS sq,
         |  CAST(CAST(sum(q) AS BIGINT) AS DOUBLE) / count(*) AS centroid_q
-        |FROM dims GROUP BY label, pos ORDER BY label, pos""".stripMargin,
+        |FROM dims GROUP BY label, pos ORDER BY label, pos""".stripMargin),
 
 
     // q104's quality arithmetic verbatim + a partitioned rank
-    "q122_group_topk" ->
+    Gate("q122_group_topk", Family.Lm, groupTopK, _ =>
       s"""WITH f AS (SELECT doc_id, source,
          |    CAST(length(text) AS DOUBLE) AS nc,
          |    CAST($tokenCountSql AS DOUBLE) AS nt,
@@ -328,13 +321,13 @@ private[graft] trait OraclesRetrieval { this: OracleSnippets =>
          |    ORDER BY quality DESC, doc_id) AS INTEGER) AS rnk
          |  FROM q)
          |SELECT doc_id, source, quality, rnk FROM r WHERE rnk <= 5
-         |ORDER BY source, rnk""".stripMargin,
+         |ORDER BY source, rnk""".stripMargin),
 
 
     // sign packing: bit i of a half-word carries dimension (off+i)
     // with weight 2^(32-i) — the acc·2+bit fold's exact shift sum;
     // 32 bits per BIGINT so no engine hits signed overflow (§5.3)
-    "q119_binary_ann" ->
+    Gate("q119_binary_ann", Family.Ann, binaryAnn, _ =>
       """WITH p AS (
         |  SELECT vec_id,
         |    CAST(list_sum(list_transform(range(1, 33),
@@ -350,22 +343,22 @@ private[graft] trait OraclesRetrieval { this: OracleSnippets =>
         |SELECT vec_id,
         |  CAST(bit_count(xor(h1, q1)) + bit_count(xor(h2, q2)) AS INTEGER)
         |    AS hamming
-        |FROM p, q ORDER BY hamming, vec_id LIMIT 50""".stripMargin,
+        |FROM p, q ORDER BY hamming, vec_id LIMIT 50""".stripMargin),
 
 
     // q97's recursive-closure oracle (shared CTE text) + the q98
     // md5-threshold split on the COMPONENT id
-    "q120_cluster_split" ->
+    Gate("q120_cluster_split", Family.Dedup, clusterSplit, _ =>
       s"""WITH RECURSIVE $ccClosureCtesSql, comp AS (
          |  SELECT node AS vec_id, min(lbl) AS component
          |  FROM reach GROUP BY node)
          |SELECT vec_id, component,
          |  CASE WHEN md5(CAST(component AS VARCHAR)) < '40000000'
          |       THEN 'test' ELSE 'train' END AS split
-         |FROM comp ORDER BY vec_id""".stripMargin,
+         |FROM comp ORDER BY vec_id""".stripMargin),
 
 
-    "q121_bpe_pairs" ->
+    Gate("q121_bpe_pairs", Family.Lm, bpePairs, _ =>
       """WITH d AS (SELECT
         |    CASE WHEN length(trim(text)) = 0 THEN []
         |         ELSE regexp_split_to_array(lower(trim(text)), '\s+') END AS toks
@@ -379,16 +372,16 @@ private[graft] trait OraclesRetrieval { this: OracleSnippets =>
         |             i -> substr(word, i, 2)) END) AS pair
         |  FROM v)
         |SELECT pair, CAST(sum(wcnt) AS BIGINT) AS cnt
-        |FROM pr GROUP BY pair ORDER BY cnt DESC, pair LIMIT 50""".stripMargin,
+        |FROM pr GROUP BY pair ORDER BY cnt DESC, pair LIMIT 50""".stripMargin),
 
 
-    "q114_bm25_search" ->
+    Gate("q114_bm25_search", Family.Ann, bm25Search, _ =>
       s"""WITH ${bm25CteSql(Seq("spark", "vector", "stream"))}
          |SELECT doc_id, dl, bm25_q FROM sc
-         |ORDER BY bm25_q DESC, doc_id LIMIT 50""".stripMargin,
+         |ORDER BY bm25_q DESC, doc_id LIMIT 50""".stripMargin),
 
 
-    "q115_int8_quantize" ->
+    Gate("q115_int8_quantize", Family.Ann, int8Quantize, _ =>
       """WITH dims AS (
         |  SELECT u.i AS pos, CAST(embedding[u.i] AS DOUBLE) AS x
         |  FROM embeddings, generate_series(1, 64) AS u(i)),
@@ -403,12 +396,12 @@ private[graft] trait OraclesRetrieval { this: OracleSnippets =>
         |  FROM embeddings, arrs)
         |SELECT vec_id, array_to_string(cs, ' ') AS codes_str,
         |  CAST(list_sum(cs) AS BIGINT) AS code_sum
-        |FROM codes ORDER BY vec_id""".stripMargin,
+        |FROM codes ORDER BY vec_id""".stripMargin),
 
 
     // same 8-token-window md5 grams as the q79 oracle (shared snippet;
     // no lowercasing — ngramFingerprints tokenizes raw trimmed text)
-    "q116_dup_spans" ->
+    Gate("q116_dup_spans", Family.Dedup, dupSpans, _ =>
       (s"""WITH t AS (SELECT doc_id,
          |    $rawTokensCaseSql AS w
          |  FROM documents),
@@ -424,10 +417,10 @@ private[graft] trait OraclesRetrieval { this: OracleSnippets =>
         |SELECT doc_id, CAST(coalesce(n_spans, 0) AS BIGINT) AS n_spans,
         |  CAST(coalesce(n_dup, 0) AS BIGINT) AS n_dup_spans
         |FROM t LEFT JOIN tot USING (doc_id) LEFT JOIN pc USING (doc_id)
-        |ORDER BY doc_id""".stripMargin),
+        |ORDER BY doc_id""".stripMargin)),
 
 
-    "q117_unigram_lm" ->
+    Gate("q117_unigram_lm", Family.Lm, unigramLm, _ =>
       """WITH d AS (SELECT doc_id,
         |    CASE WHEN length(trim(text)) = 0 THEN []
         |         ELSE regexp_split_to_array(lower(trim(text)), '\s+') END AS toks
@@ -444,10 +437,10 @@ private[graft] trait OraclesRetrieval { this: OracleSnippets =>
         |  FROM tm JOIN qp USING (term) GROUP BY doc_id)
         |SELECT doc_id, CAST(coalesce(n_tokens, 0) AS BIGINT) AS n_tokens,
         |  CAST(coalesce(lm_q, 0) AS BIGINT) AS lm_q
-        |FROM d LEFT JOIN sc USING (doc_id) ORDER BY doc_id""".stripMargin,
+        |FROM d LEFT JOIN sc USING (doc_id) ORDER BY doc_id""".stripMargin),
 
 
-    "q118_hybrid_rrf" ->
+    Gate("q118_hybrid_rrf", Family.Ann, hybridRrf, _ =>
       s"""WITH ${bm25CteSql(Seq("spark", "vector", "stream"))},
          |tr AS (
          |  SELECT doc_id,
@@ -477,14 +470,14 @@ private[graft] trait OraclesRetrieval { this: OracleSnippets =>
          |  CAST(coalesce(CAST(floor(1000000000.0e0 / (60.0e0 + text_rank)) AS BIGINT), 0)
          |     + coalesce(CAST(floor(1000000000.0e0 / (60.0e0 + vec_rank)) AS BIGINT), 0)
          |    AS BIGINT) AS rrf_q
-         |FROM f ORDER BY rrf_q DESC, doc_id LIMIT 50""".stripMargin,
+         |FROM f ORDER BY rrf_q DESC, doc_id LIMIT 50""".stripMargin),
 
 
     // q106: floor(x·1e6 + 0.5) quantization makes every product and
     // sum exact integer arithmetic — identical in both engines for
     // identical input doubles (floor is pure IEEE; round is not:
     // Spark routes doubles through shortest-decimal strings).
-    "q106_embedding_gram" ->
+    Gate("q106_embedding_gram", Family.Ann, embeddingGram, _ =>
       """WITH q AS (
         |  SELECT list_transform(embedding,
         |    x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)) AS v
@@ -497,10 +490,10 @@ private[graft] trait OraclesRetrieval { this: OracleSnippets =>
         |       generate_series(1, 64) AS gj(j)
         |  WHERE gj.j >= gi.i)
         |SELECT i, j, CAST(sum(prod) AS BIGINT) AS s
-        |FROM p GROUP BY i, j ORDER BY i, j""".stripMargin,
+        |FROM p GROUP BY i, j ORDER BY i, j""".stripMargin),
 
 
-    "q108_curriculum_schedule" ->
+    Gate("q108_curriculum_schedule", Family.Lm, curriculumSchedule, _ =>
       s"""WITH tok AS (
          |  SELECT doc_id, $tokenCountSql AS n_tokens FROM documents),
          |b AS (
@@ -513,7 +506,7 @@ private[graft] trait OraclesRetrieval { this: OracleSnippets =>
          |  FROM b)
          |SELECT CAST(row_number() OVER (ORDER BY band, rkey, doc_id) - 1 AS BIGINT) AS step,
          |  doc_id, band
-         |FROM r ORDER BY step""".stripMargin,
+         |FROM r ORDER BY step""".stripMargin),
 
 
     // q107_pca_whiten: the raw projection is engine-specific
@@ -525,11 +518,11 @@ private[graft] trait OraclesRetrieval { this: OracleSnippets =>
     // the oracle is the exact constant identity grid. Per-row
     // projection parity / orthonormality are spec-asserted
     // (ProjectionsSpec) against local brute force.
-    "q107_pca_whiten" ->
+    Gate("q107_pca_whiten", Family.Ann, pcaWhiten, _ =>
       """SELECT CAST(ii.i AS INTEGER) AS i, CAST(jj.j AS INTEGER) AS j,
         |  CAST(CASE WHEN ii.i = jj.j THEN 1000000 ELSE 0 END AS BIGINT) AS cov_q
         |FROM (SELECT unnest(range(8)) AS i) ii, (SELECT unnest(range(8)) AS j) jj
         |WHERE jj.j >= ii.i
-        |ORDER BY i, j""".stripMargin,
+        |ORDER BY i, j""".stripMargin),
   )
 }

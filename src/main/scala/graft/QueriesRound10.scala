@@ -8,7 +8,7 @@ import graft.fs.{FeatureLookup, FeatureStore, FeatureTableSpec, LogisticScorer,
   PointInTime, ScorerRegistry, WriteMode}
 
 /** Fixtures shared between round-10 queries and their oracles — ONE
-  * definition per semantic constant (the OracleSnippets discipline).
+  * definition per semantic constant (as for the shared oracle snippets).
   */
 private[graft] object Round10Fixtures {
   /** Hand-computable BPE merge table for the q139 gate, rank-ordered.
@@ -29,11 +29,8 @@ private[graft] object Round10Fixtures {
 /** Gate queries — round 10: the near-dup retention composition verified
   * over an EXACT pair set, and the serving/maintenance tier added this
   * round (BPE segmentation, delta-CC, decay→feature-store composition).
-  *
-  * Mixed into [[PipelinesExt]]; the sibling [[OraclesRound10]] below
-  * keeps each query's DuckDB oracle SQL in the same file.
   */
-private[graft] trait PipelinesRound10 { this: PipelinesBase =>
+private[graft] trait PipelinesRound10 extends PipelinesBase {
 
   /** The q101 composition (pairs → connected components → min-id
     * retention) run over the EXACT tiled-cosine edge set (the q97/q130
@@ -282,28 +279,25 @@ private[graft] trait PipelinesRound10 { this: PipelinesBase =>
     Perceptron.hashedPerceptronScore(docs, "doc_id", "text", w)
       .orderBy("doc_id")
   }
-}
 
-/** DuckDB oracle SQL for the [[PipelinesRound10]] queries. */
-private[graft] trait OraclesRound10 { this: OracleSnippets =>
-  protected def sqlRound10: Map[String, String] = Map(
+  override def gates: Seq[Gate] = super.gates ++ Seq(
 
     // retained = nodes that are their component's minimum label under
     // the recursive closure of the exact cosine edge set — singletons
     // (no edges) are their own component and always survive
-    "q138_neardup_retain_exact" ->
+    Gate("q138_neardup_retain_exact", Family.Dedup, nearDupRetainExact, _ =>
       s"""WITH RECURSIVE $ccClosureCtesSql,
          |comp AS (SELECT node, min(lbl) AS component FROM reach GROUP BY node)
          |SELECT e.vec_id, e.label
          |FROM embeddings e JOIN comp c ON e.vec_id = c.node
          |WHERE c.component = c.node
-         |ORDER BY e.vec_id""".stripMargin,
+         |ORDER BY e.vec_id""".stripMargin),
 
     // the same wrapped-separator replace chain, built from the same
     // merge table — DuckDB replace() and Spark replace() share
     // all-occurrence left-to-right semantics, so the representations
     // are bit-identical
-    "q139_bpe_segment" -> {
+    Gate("q139_bpe_segment", Family.Lm, bpeSegmentDocs, _ => {
       val SEP = "\u001f"
       val wrapped =
         s"array_to_string(list_transform(range(1, length(w)+1), i -> '$SEP' || substr(w, i, 1) || '$SEP'), '')"
@@ -320,22 +314,22 @@ private[graft] trait OraclesRound10 { this: OracleSnippets =>
          |  CAST(coalesce(list_sum(list_transform(segs, x -> len(string_split(x, ' ')))), 0) AS BIGINT) AS n_pieces,
          |  coalesce(array_to_string(segs, ' | '), '') AS seg_text
          |FROM s ORDER BY doc_id""".stripMargin
-    },
+    }),
 
     // incremental ≡ full: the closure over ALL edges (the q97 oracle,
     // shared CTE) — the prior/delta split must be invisible in the
     // final labeling
-    "q140_delta_cc" ->
+    Gate("q140_delta_cc", Family.Graph, deltaCcLabels, _ =>
       s"""WITH RECURSIVE $ccClosureCtesSql
          |SELECT node AS vec_id, min(lbl) AS component
-         |FROM reach GROUP BY node ORDER BY vec_id""".stripMargin,
+         |FROM reach GROUP BY node ORDER BY vec_id""".stripMargin),
 
     // final merged table ≡ full-window decayed features (the stale
     // quarter-snapshot is fully overwritten: its users all reappear in
     // the refresh), then the J4 scoring join replayed literally —
     // weights added in the scorer's sorted-column order (decayed_q,
     // then n_events), NULL lookups coalesced to 0.0
-    "q141_decayed_scoring" ->
+    Gate("q141_decayed_scoring", Family.Fs, decayedScoring, _ =>
       """WITH e AS (
         |  SELECT user_id, epoch_us(date_trunc('day', ts)) AS day_us,
         |    CAST(floor(value * 100.0e0 + 0.5e0) AS BIGINT) AS vq
@@ -365,24 +359,24 @@ private[graft] trait OraclesRound10 { this: OracleSnippets =>
         |      + coalesce(CAST(dec.n_events AS DOUBLE), 0.0e0) * CAST(0.01e0 AS DOUBLE)) > 0
         |    THEN 'True' ELSE 'False' END AS prediction
         |FROM customer c LEFT JOIN dec ON c.c_custkey = dec.user_id
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin),
 
     // the training loop unrolled via the shared bpeTrainCtesSql
     // builder (one MATERIALIZED CTE stage per merge -- inlining would
     // re-expand the previous vocab once per reference, exponential);
     // argmax tie-break (cnt DESC, l, r) and the >= 2 min-count mirror
     // bpeTrain exactly
-    "q142_bpe_train" -> {
+    Gate("q142_bpe_train", Family.Lm, bpeTrainMerges, _ => {
       val n = Round10Fixtures.bpeTrainMerges
       val sel = (1 to n)
         .map(k => s"SELECT CAST($k AS BIGINT) AS merge_rank, l AS lhs, r AS rhs FROM m$k")
         .mkString("\nUNION ALL\n")
       s"WITH ${bpeTrainCtesSql(n)}\n$sel\nORDER BY merge_rank"
-    },
+    }),
 
     // q123's per-snapshot centroid arithmetic, squared mean differences
     // floor-quantized BEFORE the cross-dim sum (§5.3)
-    "q150_embedding_drift" ->
+    Gate("q150_embedding_drift", Family.Sketch, embeddingDriftHalves, _ =>
       """WITH da AS (
         |  SELECT label, u.i AS pos, CAST(count(*) AS BIGINT) AS na,
         |    CAST(sum(CAST(floor(CAST(embedding[u.i] AS DOUBLE) * 1000000.0e0 + 0.5e0)
@@ -404,11 +398,11 @@ private[graft] trait OraclesRound10 { this: OracleSnippets =>
         |SELECT label, CAST(max(na) AS BIGINT) AS n_base,
         |  CAST(max(nb) AS BIGINT) AS n_current,
         |  CAST(sum(tq) AS BIGINT) AS drift_q
-        |FROM t GROUP BY label ORDER BY label""".stripMargin,
+        |FROM t GROUP BY label ORDER BY label""".stripMargin),
 
     // the q89 quantile_cont bucket rule over the shared token counter;
     // counts and token sums are exact integers
-    "q149_length_buckets" ->
+    Gate("q149_length_buckets", Family.Lm, lengthBuckets, _ =>
       s"""WITH tc AS (SELECT doc_id, CAST($tokenCountSql AS BIGINT) AS n_tokens
          |  FROM documents),
          |e AS (SELECT quantile_cont(CAST(n_tokens AS DOUBLE), [0.25, 0.5, 0.75]) AS edges
@@ -418,11 +412,11 @@ private[graft] trait OraclesRound10 { this: OracleSnippets =>
          |  CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
          |  CAST(min(n_tokens) AS BIGINT) AS min_tokens,
          |  CAST(max(n_tokens) AS BIGINT) AS max_tokens
-         |FROM tc, e GROUP BY length_bucket ORDER BY length_bucket""".stripMargin,
+         |FROM tc, e GROUP BY length_bucket ORDER BY length_bucket""".stripMargin),
 
     // the q33 ASOF oracle with a staleness CASE on exact epoch-µs
     // arithmetic — matches outside the 2-day TTL become NULL
-    "q148_pit_ttl" ->
+    Gate("q148_pit_ttl", Family.Fs, pitTtlLookup, _ =>
       """WITH daily AS (
         |  SELECT user_id, date_trunc('day', ts) AS day_ts,
         |    CAST(count(*) AS BIGINT) AS day_events
@@ -435,11 +429,11 @@ private[graft] trait OraclesRound10 { this: OracleSnippets =>
         |       THEN d.day_events END AS day_events
         |FROM spine s ASOF LEFT JOIN daily d
         |  ON s.user_id = d.user_id AND s.ts >= d.day_ts
-        |ORDER BY s.event_id""".stripMargin,
+        |ORDER BY s.event_id""".stripMargin),
 
     // the shared token-count and fingerprint snippets feed per-source
     // conditional aggregates — every output an exact integer
-    "q147_corpus_card" ->
+    Gate("q147_corpus_card", Family.Lm, corpusCardBySource, _ =>
       s"""WITH d AS (SELECT source, lang,
          |    CAST($tokenCountSql AS BIGINT) AS nt,
          |    CAST(length(text) AS BIGINT) AS nc,
@@ -453,20 +447,20 @@ private[graft] trait OraclesRound10 { this: OracleSnippets =>
          |  CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_en,
          |  CAST(count(DISTINCT fp) AS BIGINT) AS n_distinct_fp,
          |  CAST(count(*) - count(DISTINCT fp) AS BIGINT) AS n_exact_dups
-         |FROM d GROUP BY source ORDER BY source""".stripMargin,
+         |FROM d GROUP BY source ORDER BY source""".stripMargin),
 
     // q126's brute-force cosine shape at full dimensionality with the
     // null-safe label-mismatch filter — every arithmetic step mirrored
     // (1e6-quantized components, 1e9-quantized cosine, zero-norm guard)
-    "q146_hard_negatives" ->
+    Gate("q146_hard_negatives", Family.Ann, hardNegatives, _ =>
       s"""WITH $hardNegCtesSql
          |SELECT query_id, rnk, vec_id, label, cos_tq FROM rk WHERE rnk <= 5
-         |ORDER BY query_id, rnk""".stripMargin,
+         |ORDER BY query_id, rnk""".stripMargin),
 
     // the q138 retention flipped to the max-PageRank survivor: the
     // recursive closure picks clusters, the shared rank recurrence
     // scores members, row_number picks (rq DESC, node) per cluster
-    "q145_rank_retention" ->
+    Gate("q145_rank_retention", Family.Dedup, rankRetainExact, _ =>
       s"""WITH RECURSIVE $ccClosureCtesSql,
          |${pageRankCtesSql(5)},
          |comp AS (SELECT node, min(lbl) AS component FROM reach GROUP BY node),
@@ -479,22 +473,22 @@ private[graft] trait OraclesRound10 { this: OracleSnippets =>
          |SELECT e.vec_id, e.label
          |FROM embeddings e LEFT JOIN dropped d ON e.vec_id = d.node
          |WHERE d.node IS NULL
-         |ORDER BY e.vec_id""".stripMargin,
+         |ORDER BY e.vec_id""".stripMargin),
 
     // the full-batch perceptron recurrence unrolled (the q131/q142
     // pattern): w0 = 0; per iteration margins via a weight join,
     // y·margin <= 0 selects the misclassified set, per-bucket and bias
     // updates add in. Bucket ints derive from the md5 hex prefix with
     // the strpos idiom (matching Spark's conv(substring(md5,1,2),16,10))
-    "q143_perceptron_train" ->
+    Gate("q143_perceptron_train", Family.Lm, perceptronTrain, _ =>
       s"""WITH ${perceptronCtesSql(3)}
-         |SELECT pos, CAST(w AS BIGINT) AS weight FROM w3 ORDER BY pos""".stripMargin,
+         |SELECT pos, CAST(w AS BIGINT) AS weight FROM w3 ORDER BY pos""".stripMargin),
 
     // train→serve round-trip: the SAME trained-weight CTEs (one source
     // of truth with q143) joined back onto every document's feature
     // counts — margin and prediction must match Spark's literal-array
     // scan projection exactly
-    "q144_perceptron_score" ->
+    Gate("q144_perceptron_score", Family.Lm, perceptronScore, _ =>
       s"""WITH ${perceptronCtesSql(3)},
          |sc AS (
          |  SELECT f.doc_id, CAST(sum(f.cnt * w.w) AS BIGINT) AS dot
@@ -504,7 +498,7 @@ private[graft] trait OraclesRound10 { this: OracleSnippets =>
          |  CAST(coalesce(sc.dot, 0) + (SELECT w FROM w3 WHERE pos = 256) AS BIGINT) AS margin_q,
          |  (coalesce(sc.dot, 0) + (SELECT w FROM w3 WHERE pos = 256)) > 0 AS predicted
          |FROM y LEFT JOIN sc USING (doc_id)
-         |ORDER BY y.doc_id""".stripMargin,
+         |ORDER BY y.doc_id""".stripMargin),
   )
 
   /** The q143/q144 shared trained-model recurrence: hashed-unigram

@@ -10,11 +10,8 @@ import graft.ext.{Components, Dedup, Perceptron, Retrieval, SetSimJoin, Similari
   * filter, the CCNet shape), retention served from incrementally
   * maintained dup labels, and the exact-row promotion of the
   * `summary()` gate.
-  *
-  * Mixed into [[PipelinesExt]]; the sibling [[OraclesRound11]] below
-  * keeps each query's DuckDB oracle SQL in the same file.
   */
-private[graft] trait PipelinesRound11 { this: PipelinesBase with PipelinesTextSim =>
+private[graft] trait PipelinesRound11 extends PipelinesBase { this: PipelinesTextSim with PipelinesRound10 =>
 
   /** The CCNet-style quality-classifier loop, end to end: a perceptron
     * trains on the LABELED SLICE (doc_id % 5 = 0; label = lang = 'en'),
@@ -143,16 +140,12 @@ private[graft] trait PipelinesRound11 { this: PipelinesBase with PipelinesTextSi
         "source", col("doc_id"), alpha = 0.5)
       .orderBy("doc_id")
 
-}
-
-/** DuckDB oracle SQL for the [[PipelinesRound11]] queries. */
-private[graft] trait OraclesRound11 { this: OracleSnippets with OraclesRound10 =>
-  protected def sqlRound11: Map[String, String] = Map(
+  override def gates: Seq[Gate] = super.gates ++ Seq(
 
     // the q143 training recurrence restricted to the labeled slice,
     // then the q124 dedup-survivor CTE, then the q144 margin replay
     // over the survivors — threshold filter at the end
-    "q151_classifier_curation" ->
+    Gate("q151_classifier_curation", Family.Lm, classifierCuration, _ =>
       s"""WITH ${perceptronCtesSql(3, " WHERE doc_id % 5 = 0")},
          |dd AS MATERIALIZED (
          |  SELECT doc_id, source, text FROM (
@@ -179,23 +172,23 @@ private[graft] trait OraclesRound11 { this: OracleSnippets with OraclesRound10 =
          |med AS (SELECT quantile_cont(CAST(margin_q AS DOUBLE), 0.5e0) AS m FROM mar)
          |SELECT doc_id, source, margin_q FROM mar, med
          |WHERE CAST(margin_q AS DOUBLE) > m
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
     // the q138 oracle VERBATIM — full recursive closure + min-id
     // retention; the Spark side answers from incrementally-maintained
     // labels, so a hash match IS the incremental ≡ full-recompute proof
-    "q152_incremental_retention" ->
+    Gate("q152_incremental_retention", Family.Dedup, incrementalRetention, _ =>
       s"""WITH RECURSIVE $ccClosureCtesSql,
          |comp AS (SELECT node, min(lbl) AS component FROM reach GROUP BY node)
          |SELECT e.vec_id, e.label
          |FROM embeddings e JOIN comp c ON e.vec_id = c.node
          |WHERE c.component = c.node
-         |ORDER BY e.vec_id""".stripMargin,
+         |ORDER BY e.vec_id""".stripMargin),
 
     // summary()'s exact rows as formatted cells: counts are BIGINTs,
     // min/max are raw column doubles — both engines print
     // shortest-round-trip decimal strings for them
-    "q153_summary_exact" ->
+    Gate("q153_summary_exact", Family.Sketch, summaryExactRows, _ =>
       """SELECT 'count' AS summary,
         |  CAST(count(l_quantity) AS VARCHAR) AS l_quantity,
         |  CAST(count(l_extendedprice) AS VARCHAR) AS l_extendedprice,
@@ -211,13 +204,13 @@ private[graft] trait OraclesRound11 { this: OracleSnippets with OraclesRound10 =
         |  CAST(max(l_extendedprice) AS VARCHAR),
         |  CAST(max(l_discount) AS VARCHAR)
         |FROM lineitem
-        |ORDER BY summary""".stripMargin,
+        |ORDER BY summary""".stripMargin),
 
     // exhaustive all-pairs exact Jaccard over the planted-dup corpus —
     // the Spark side answers from prefix-filtered candidates, so a
     // hash match proves the AllPairs prefix filter is lossless; the
     // division is one correctly-rounded IEEE op over exact integers
-    "q154_jaccard_join" ->
+    Gate("q154_jaccard_join", Family.Dedup, jaccardJoinPairs, _ =>
       """WITH corpus AS (
         |  SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0
         |  UNION ALL
@@ -237,11 +230,11 @@ private[graft] trait OraclesRound11 { this: OracleSnippets with OraclesRound10 =
         |SELECT id_a, id_b,
         |  CAST(floor(j * 1000000000.0e0 + 0.5e0) AS BIGINT) AS jacc_q
         |FROM pr WHERE j >= 0.9e0
-        |ORDER BY id_a, id_b""".stripMargin,
+        |ORDER BY id_a, id_b""".stripMargin),
 
     // the q146 quantized-cosine ranking minus the label filter, self
     // excluded, then the per-query disagreement vote over the top 5
-    "q155_label_noise" ->
+    Gate("q155_label_noise", Family.Ann, labelNoiseAudit, _ =>
       """WITH qe AS (SELECT vec_id, label, list_transform(range(1, 65),
         |    i -> CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000.0e0 + 0.5e0)
         |      AS BIGINT)) AS v
@@ -271,12 +264,12 @@ private[graft] trait OraclesRound11 { this: OracleSnippets with OraclesRound10 =
         |    AS BIGINT) * 2 > 5 AS noisy
         |FROM rk WHERE rnk <= 5
         |GROUP BY query_id, qlabel
-        |ORDER BY vec_id""".stripMargin,
+        |ORDER BY vec_id""".stripMargin),
 
     // the q103 scale/frac/md5-threshold chain with targets DERIVED as
     // sqrt(n) — every double op (sqrt, the two divisions, the product)
     // is correctly rounded, so the kept SET is engine-portable
-    "q156_temperature_mix" ->
+    Gate("q156_temperature_mix", Family.Lm, temperatureMixDocs, _ =>
       """WITH counts AS (
         |  SELECT source, CAST(count(*) AS BIGINT) AS nn
         |  FROM documents WHERE source IS NOT NULL GROUP BY source),
@@ -290,7 +283,7 @@ private[graft] trait OraclesRound11 { this: OracleSnippets with OraclesRound10 =
         |WHERE md5(CAST(doc_id AS VARCHAR)) <
         |  CASE WHEN frac >= 1.0e0 THEN 'g'
         |       ELSE printf('%08x', CAST(floor(frac * 4294967296.0e0) AS BIGINT)) END
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
 
   )
 }

@@ -10,11 +10,8 @@ import graft.ext.{Dedup, Mmr, Perceptron, Retrieval, SetSimJoin, Similarity, Tex
   * the text-dedup compositions over the exact Jaccard join, the
   * span-scrub rewrite, the tokenizer train→apply→budget chain, the
   * contrastive-pair dataset, and numeric drift.
-  *
-  * Mixed into [[PipelinesExt]]; the sibling [[OraclesRound11b]] keeps
-  * each query's DuckDB oracle SQL in the same file.
   */
-private[graft] trait PipelinesRound11b { this: PipelinesBase with PipelinesTextSim =>
+private[graft] trait PipelinesRound11b extends PipelinesBase { this: PipelinesTextSim with PipelinesRound10 =>
 
   /** Numeric-distribution drift: order prices before vs after
     * 1996-01-01, binned under decile edges FITTED ON THE BASE half
@@ -221,17 +218,14 @@ private[graft] trait PipelinesRound11b { this: PipelinesBase with PipelinesTextS
       k = 5, dims = 64, lambdaNum = 1, lambdaDen = 2)
       .orderBy("rnk")
   }
-}
 
-/** DuckDB oracle SQL for the [[PipelinesRound11b]] queries. */
-private[graft] trait OraclesRound11b { this: OracleSnippets with OraclesRound10 =>
-  protected def sqlRound11b: Map[String, String] = Map(
+  override def gates: Seq[Gate] = super.gates ++ Seq(
 
     // two quantized-cosine rankings (full-dim truth, 16-dim prefix
     // system — self included in both, symmetric), then the recall and
     // first-relevant-rank arithmetic — each metric one exact-rational
     // division
-    "q165_retrieval_eval" -> {
+    Gate("q165_retrieval_eval", Family.Ann, retrievalEval, _ => {
       def rank(dims: Int, p: String): String =
         s"""${p}e AS (SELECT vec_id, list_transform(range(1, ${dims + 1}),
            |    i -> CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000.0e0 + 0.5e0)
@@ -269,12 +263,12 @@ private[graft] trait OraclesRound11b { this: OracleSnippets with OraclesRound10 
          |  coalesce(1.0e0 / fr.first_rank, 0.0e0) AS rr
          |FROM rec r LEFT JOIN fr USING (query_id)
          |ORDER BY r.query_id""".stripMargin
-    },
+    }),
 
     // the q144 margin replay (shared trained-weight CTEs), exact
     // percentile thresholds, then conditional confusion counts per
     // threshold — precision/recall cells all exact BIGINTs
-    "q164_threshold_sweep" ->
+    Gate("q164_threshold_sweep", Family.Lm, thresholdSweep, _ =>
       s"""WITH ${perceptronCtesSql(3)},
          |sc AS (
          |  SELECT f.doc_id, CAST(sum(f.cnt * w.w) AS BIGINT) AS dot
@@ -294,12 +288,12 @@ private[graft] trait OraclesRound11b { this: OracleSnippets with OraclesRound10 
          |  CAST(sum(CASE WHEN CAST(margin_q AS DOUBLE) <= thr AND pos THEN 1 ELSE 0 END) AS BIGINT) AS fn,
          |  CAST(sum(CASE WHEN CAST(margin_q AS DOUBLE) <= thr AND NOT pos THEN 1 ELSE 0 END) AS BIGINT) AS tn
          |FROM ex GROUP BY 1, 2
-         |ORDER BY thr_idx""".stripMargin,
+         |ORDER BY thr_idx""".stripMargin),
 
     // positional 8-gram md5s (the gram8 space-joined definition),
     // distinct-doc counts, covered-position union per doc, then the
     // order-preserving string_agg rebuild
-    "q163_scrub_spans" ->
+    Gate("q163_scrub_spans", Family.Lm, scrubSpans, _ =>
       s"""WITH t AS (SELECT doc_id, $rawTokensCaseSql AS w FROM documents),
          |occ AS (
          |  SELECT doc_id, u.i AS pos,
@@ -324,12 +318,12 @@ private[graft] trait OraclesRound11b { this: OracleSnippets with OraclesRound10 
          |SELECT t.doc_id, coalesce(a.s, '') AS scrubbed_text,
          |  CAST(len(t.w) - coalesce(a.nk, 0) AS BIGINT) AS n_removed
          |FROM t LEFT JOIN agg a USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
     // positives from the shared q30 edge CTE, negatives from the
     // shared q146 ranking chain — the labeled dataset both existing
     // gates compose into
-    "q162_contrastive_pairs" ->
+    Gate("q162_contrastive_pairs", Family.Ann, contrastivePairs, _ =>
       s"""WITH $dupEdgesCtesSql, $hardNegCtesSql
          |SELECT id_a AS anchor_id, id_b AS pair_id, 1 AS pair_label FROM pairs
          |UNION ALL
@@ -338,12 +332,12 @@ private[graft] trait OraclesRound11b { this: OracleSnippets with OraclesRound10 
          |  AND NOT EXISTS (SELECT 1 FROM pairs p
          |    WHERE p.id_a = least(rk.query_id, rk.vec_id)
          |      AND p.id_b = greatest(rk.query_id, rk.vec_id))
-         |ORDER BY pair_label, anchor_id, pair_id""".stripMargin,
+         |ORDER BY pair_label, anchor_id, pair_id""".stripMargin),
 
     // the q142 training recurrence chained INTO the q139 replace-chain
     // segmentation via scalar subqueries on the learned m_k CTEs, then
     // the per-source piece counts — train → apply → budget on one hash
-    "q161_token_budget" -> {
+    Gate("q161_token_budget", Family.Lm, tokenBudgetCard, _ => {
       val S = "\u001f"
       val n = Round10Fixtures.bpeTrainMerges
       // DuckDB lambdas reject subqueries, so the learned 1-row merge
@@ -368,11 +362,11 @@ private[graft] trait OraclesRound11b { this: OracleSnippets with OraclesRound10 
          |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
          |  CAST(sum(coalesce(list_sum(list_transform(segs, x -> len(string_split(x, ' ')))), 0)) AS BIGINT) AS n_pieces
          |FROM sg GROUP BY source ORDER BY source""".stripMargin
-    },
+    }),
 
     // base-half decile edges (q89 quantile_cont contract) frozen and
     // applied to both halves, then the q125 drift-term arithmetic
-    "q159_numeric_drift" ->
+    Gate("q159_numeric_drift", Family.Sketch, numericDriftPrices, _ =>
       """WITH e AS (
         |  SELECT quantile_cont(o_totalprice,
         |    [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS edges
@@ -399,13 +393,13 @@ private[graft] trait OraclesRound11b { this: OracleSnippets with OraclesRound10 
         |      * (CAST(n_a AS DOUBLE) / ta - CAST(n_b AS DOUBLE) / tb))
         |    / ((CAST(n_a AS DOUBLE) / ta + CAST(n_b AS DOUBLE) / tb) / 2.0e0)
         |    * 1000000000000.0e0 + 0.5e0) AS BIGINT) AS drift_q
-        |FROM j, t ORDER BY bin""".stripMargin,
+        |FROM j, t ORDER BY bin""".stripMargin),
 
     // the q138 retention oracle shape over the JACCARD edge set: the
     // exhaustive all-pairs edges (≥ 0.9), symmetrized, recursively
     // closed, min-id survivors; seeded from the FULL sliced corpus so
     // empty-token docs survive as singletons
-    "q158_jaccard_retention" ->
+    Gate("q158_jaccard_retention", Family.Dedup, jaccardRetention, _ =>
       """WITH RECURSIVE corpus AS (
         |  SELECT doc_id, text, source FROM documents WHERE doc_id % 10 = 0
         |  UNION ALL
@@ -436,13 +430,13 @@ private[graft] trait OraclesRound11b { this: OracleSnippets with OraclesRound10 
         |SELECT c.doc_id, c.source
         |FROM corpus c JOIN comp ON c.doc_id = comp.node
         |WHERE comp.component = comp.node
-        |ORDER BY c.doc_id""".stripMargin,
+        |ORDER BY c.doc_id""".stripMargin),
 
     // the greedy MMR recurrence unrolled (the q142/q143 discipline):
     // one MATERIALIZED 1-row CTE per pick, each an argmax of
     // rel_q − greatest(sim to every previous pick) over the remaining
     // candidates — the whole pick SEQUENCE replays, in exact BIGINTs
-    "q157_mmr_rerank" ->
+    Gate("q157_mmr_rerank", Family.Ann, mmrRerankTopK, _ =>
       s"""WITH $quantEmbCteSql,
          |q0 AS (SELECT v AS qv FROM qe WHERE vec_id = 0),
          |sc AS (SELECT vec_id, v,
@@ -460,13 +454,13 @@ private[graft] trait OraclesRound11b { this: OracleSnippets with OraclesRound10 
          |    SELECT *, row_number() OVER (ORDER BY rel_q DESC, vec_id) AS rnk
          |    FROM ct) WHERE rnk <= 20),
          |${mmrStagesSql(5)}
-         |${mmrSelectSql(5)}""".stripMargin,
+         |${mmrSelectSql(5)}""".stripMargin),
 
     // BM25 relevance × embedding diversity: the q114 keyword
     // candidates re-ranked by the same MMR recurrence — the hybrid
     // eval-pool/RAG shape where plain top-k returns k near-copies of
     // the best keyword hit
-    "q160_hybrid_mmr" ->
+    Gate("q160_hybrid_mmr", Family.Ann, hybridMmrRerank, _ =>
       s"""WITH ${bm25CteSql(Seq("spark", "vector", "stream"))},
          |$quantEmbCteSql,
          |cand AS MATERIALIZED (
@@ -479,7 +473,7 @@ private[graft] trait OraclesRound11b { this: OracleSnippets with OraclesRound10 
          |  JOIN qe e ON e.vec_id = t.doc_id
          |  WHERE t.rk <= 20),
          |${mmrStagesSql(5)}
-         |${mmrSelectSql(5)}""".stripMargin,
+         |${mmrSelectSql(5)}""".stripMargin),
   )
 
   /** 1e6-quantized embedding vectors — shared by every MMR oracle. */

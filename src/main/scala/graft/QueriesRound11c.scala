@@ -14,11 +14,8 @@ import graft.ext.{Clustering, TextAnalysis}
   * (repeat sources under a token budget with a per-source epoch cap —
   * the regime temperature mixing cannot reach because it only ever
   * down-samples).
-  *
-  * Mixed into [[PipelinesExt]]; the sibling [[OraclesRound11c]] keeps
-  * each query's DuckDB oracle SQL in the same file.
   */
-private[graft] trait PipelinesRound11c { this: PipelinesBase =>
+private[graft] trait PipelinesRound11c extends PipelinesBase {
 
   /** Prototypicality pruning (Sorscher et al. 2022): k-means the
     * embedding corpus (the q131 recurrence — same k, iterations, and
@@ -272,16 +269,13 @@ private[graft] trait PipelinesRound11c { this: PipelinesBase =>
         col("first_pack"), col("last_pack"))
       .orderBy("eid")
   }
-}
 
-/** DuckDB oracle SQL for the [[PipelinesRound11c]] queries. */
-private[graft] trait OraclesRound11c { this: OracleSnippets =>
-  protected def sqlRound11c: Map[String, String] = Map(
+  override def gates: Seq[Gate] = super.gates ++ Seq(
 
     // the shared q131 Lloyd recurrence, then the per-cluster exact
     // median (quantile_cont — the q164 percentile contract) and the
     // strict far-half cut
-    "q166_prototype_prune" ->
+    Gate("q166_prototype_prune", Family.Ann, prototypePrune, _ =>
       s"""WITH ${kmeansCtesSql(8, 2)},
          |asg AS (SELECT vec_id, cid, dist FROM a3 WHERE rk = 1),
          |thr AS (SELECT cid, quantile_cont(CAST(dist AS DOUBLE), 0.5e0) AS t
@@ -289,12 +283,12 @@ private[graft] trait OraclesRound11c { this: OracleSnippets =>
          |SELECT a.vec_id, a.cid, a.dist AS dist_q
          |FROM asg a JOIN thr USING (cid)
          |WHERE CAST(a.dist AS DOUBLE) > t
-         |ORDER BY a.vec_id""".stripMargin,
+         |ORDER BY a.vec_id""".stripMargin),
 
 
     // the q131 Lloyd recurrence chained into a per-cluster md5-ordered
     // quota rank — the cluster-balanced sampled SET replays exactly
-    "q188_cluster_balance" ->
+    Gate("q188_cluster_balance", Family.Ann, clusterBalancedDocs, _ =>
       s"""WITH ${kmeansCtesSql(8, 2)},
          |asg AS (SELECT vec_id, cid, dist FROM a3 WHERE rk = 1),
          |rq AS (SELECT vec_id, cid, dist,
@@ -302,11 +296,11 @@ private[graft] trait OraclesRound11c { this: OracleSnippets =>
          |      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk2
          |  FROM asg)
          |SELECT vec_id, cid, dist AS dist_q FROM rq
-         |WHERE rk2 <= 30 ORDER BY vec_id""".stripMargin,
+         |WHERE rk2 <= 30 ORDER BY vec_id""".stripMargin),
 
     // the q163 positional-gram/coverage/rebuild shape, with the dup
     // span set replaced by the probe documents' distinct gram set
-    "q167_decontam_scrub" ->
+    Gate("q167_decontam_scrub", Family.Dedup, decontamScrub, _ =>
       s"""WITH t AS (SELECT doc_id, $rawTokensCaseSql AS w FROM documents),
          |occ AS (
          |  SELECT doc_id, u.i AS pos,
@@ -330,7 +324,7 @@ private[graft] trait OraclesRound11c { this: OracleSnippets =>
          |SELECT t.doc_id, coalesce(a.s, '') AS scrubbed_text,
          |  CAST(len(t.w) - coalesce(a.nk, 0) AS BIGINT) AS n_removed
          |FROM t LEFT JOIN agg a USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
     // UniMax water-filling in closed form (ascending-cap prefix sums:
     // sources before the stop index take their cap, the rest level at
@@ -338,32 +332,32 @@ private[graft] trait OraclesRound11c { this: OracleSnippets =>
     // lexicographically smallest), then the per-epoch materialization
     // — full passes via generate_series, the fractional epoch via the
     // md5 threshold at the exact remainder fraction
-    "q168_epoch_mix" ->
+    Gate("q168_epoch_mix", Family.Lm, epochMixPlan, _ =>
       s"""WITH $epochMixCtesSql
          |SELECT doc_id, source, epoch FROM mix
-         |ORDER BY doc_id, epoch""".stripMargin,
+         |ORDER BY doc_id, epoch""".stripMargin),
 
     // the four q24 signal expressions, one quantile_cont per signal
     // over the whole corpus (the q166 percentile contract), then the
     // integer bin-sum fusion
-    "q170_quality_ensemble" ->
+    Gate("q170_quality_ensemble", Family.Lm, qualityEnsemble, _ =>
       s"""WITH $ensembleCtesSql
-         |SELECT doc_id, ensemble_q FROM ens ORDER BY doc_id""".stripMargin,
+         |SELECT doc_id, ensemble_q FROM ens ORDER BY doc_id""".stripMargin),
 
     // the q170 scores, the exact corpus median, and the strict
     // above-median cut — the published store table must equal it
-    "q177_ensemble_curation" ->
+    Gate("q177_ensemble_curation", Family.Lm, ensembleCuration, _ =>
       s"""WITH $ensembleCtesSql,
          |md AS (SELECT quantile_cont(CAST(ensemble_q AS DOUBLE), 0.5e0) AS m
          |  FROM ens)
          |SELECT doc_id, ensemble_q FROM ens, md
          |WHERE CAST(ensemble_q AS DOUBLE) > m
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
     // per-(type, day) counts, the trailing 7-row window sum/count per
     // type, and the exact-rational spike ratio with the NULL baseline
     // guard
-    "q183_temporal_spikes" ->
+    Gate("q183_temporal_spikes", Family.Sketch, temporalSpikesByType, _ =>
       """WITH c AS (
         |  SELECT event_type, epoch_us(date_trunc('day', ts)) AS day_us,
         |    CAST(count(*) AS BIGINT) AS n
@@ -378,12 +372,12 @@ private[graft] trait OraclesRound11c { this: OracleSnippets =>
         |  CASE WHEN tn = 7 AND tsum > 0
         |    THEN CAST(floor(CAST(n AS DOUBLE) * 7.0e0 * 1000000.0e0
         |      / CAST(tsum AS DOUBLE)) AS BIGINT) END AS spike_q
-        |FROM s ORDER BY event_type, day_us""".stripMargin,
+        |FROM s ORDER BY event_type, day_us""".stripMargin),
 
     // tempered weights (sqrt·sqrt∘sqrt, quantized to BIGINT), ordered
     // cumulative intervals, md5 draw targets mod the total mass, and
     // the half-open containment match
-    "q182_negative_samples" ->
+    Gate("q182_negative_samples", Family.Lm, negativeSamples, _ =>
       """WITH tm AS (SELECT unnest(
         |    CASE WHEN text IS NULL OR length(trim(text)) = 0 THEN []
         |         ELSE regexp_split_to_array(lower(trim(text)), '\s+') END) AS term
@@ -405,11 +399,11 @@ private[graft] trait OraclesRound11c { this: OracleSnippets =>
         |  FROM dr, tot)
         |SELECT tg.draw_id, c.term, c.wq AS w_q
         |FROM tg JOIN c ON tg.t >= c.cum - c.wq AND tg.t < c.cum
-        |ORDER BY tg.draw_id""".stripMargin,
+        |ORDER BY tg.draw_id""".stripMargin),
 
     // the q103 scale/frac/md5-threshold chain with targets
     // min(n, cap) — every double step written in the engine's order
-    "q180_capped_mix" ->
+    Gate("q180_capped_mix", Family.Lm, cappedMixDocs, _ =>
       """WITH counts AS (
         |  SELECT lang, CAST(count(*) AS BIGINT) AS n
         |  FROM documents WHERE lang IS NOT NULL GROUP BY lang),
@@ -423,11 +417,11 @@ private[graft] trait OraclesRound11c { this: OracleSnippets =>
         |WHERE md5(CAST(doc_id AS VARCHAR)) <
         |  CASE WHEN frac >= 1.0e0 THEN 'g'
         |       ELSE printf('%08x', CAST(floor(frac * 4294967296.0e0) AS BIGINT)) END
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
 
     // the fingerprint md5 (fpSql), the 13-hex-digit integer parse
     // (q127 idiom), order-free BIGINT sums per source, full-outer diff
-    "q179_manifest_diff" -> {
+    Gate("q179_manifest_diff", Family.Lm, manifestDiffHalves, _ => {
       def man(name: String, where: String): String =
         s"""$name AS (
            |  SELECT source, CAST(count(*) AS BIGINT) AS n,
@@ -447,14 +441,14 @@ private[graft] trait OraclesRound11c { this: OracleSnippets =>
          |    OR coalesce(ma.fp, 0) != coalesce(mb.fp, 0)) AS changed
          |FROM ma FULL OUTER JOIN mb ON ma.source = mb.source
          |ORDER BY source""".stripMargin
-    },
+    }),
 
 
     // both md5 decisions replay: the fim gate under the printf
     // threshold, the two 13-hex-digit boundary draws (the q127
     // strpos/list_reduce idiom, no +1 here) mod (n+1), then the PSM
     // sentinel assembly over 1-based list slices
-    "q175_fim_plan" -> {
+    Gate("q175_fim_plan", Family.Lm, fimPlanDocs, _ => {
       def u(salt: String): String =
         s"""list_reduce(list_transform(range(1, 14),
            |      i -> CAST(strpos('0123456789abcdef',
@@ -481,13 +475,13 @@ private[graft] trait OraclesRound11c { this: OracleSnippets =>
          |  CAST(CASE WHEN fim THEN hi - lo ELSE 0 END AS BIGINT) AS n_middle,
          |  CAST(CASE WHEN fim THEN n - hi ELSE 0 END AS BIGINT) AS n_suffix
          |FROM c ORDER BY doc_id""".stripMargin
-    },
+    }),
 
 
     // every mask decision replays: md5(doc:pos:sc) under the replayed
     // printf threshold, L-window coverage, maximal-run starts, and
     // both sentinel rebuilds — list HOFs over the same position space
-    "q171_span_corruption" ->
+    Gate("q171_span_corruption", Family.Lm, spanCorruption, _ =>
       s"""WITH t AS (SELECT doc_id, $rawTokensCaseSql AS w FROM documents),
          |b AS (SELECT doc_id, w, len(w) AS n,
          |    list_transform(range(1, len(w) + 1), i ->
@@ -516,29 +510,29 @@ private[graft] trait OraclesRound11c { this: OracleSnippets =>
          |    ELSE CAST([] AS VARCHAR[]) END)), ' '), '') AS target_text,
          |  CAST(len(list_filter(mk, x -> x)) AS BIGINT) AS n_masked,
          |  CAST(len(runs) AS BIGINT) AS n_spans
-         |FROM r ORDER BY doc_id""".stripMargin,
+         |FROM r ORDER BY doc_id""".stripMargin),
 
     // the q168 epoch plan feeding the q100 packing window: the
     // replicated corpus orders by the composite (epoch, doc) id
     // within each source stream, running token sums and pack spans
     // replay over it
-    "q169_epoch_packing" ->
+    Gate("q169_epoch_packing", Family.Lm, epochPacking, _ =>
       s"""WITH $epochPackCtesSql
          |SELECT eid, doc_id, epoch, source, n_tokens, start_tok, end_tok,
          |  first_pack, last_pack
-         |FROM pk ORDER BY eid""".stripMargin,
+         |FROM pk ORDER BY eid""".stripMargin),
 
     // the q169 pack plan grouped per (source, pack): docs STARTING in
     // the pack plus the ordered within-pack boundary offsets — the
     // attention-reset manifest a trainer consumes
-    "q181_pack_manifest" ->
+    Gate("q181_pack_manifest", Family.Lm, packManifest, _ =>
       s"""WITH $epochPackCtesSql
          |SELECT source, first_pack AS pack, CAST(count(*) AS BIGINT) AS n_docs,
          |  string_agg(CAST(start_tok % 512 AS VARCHAR), ','
          |    ORDER BY start_tok % 512, eid) AS boundaries
          |FROM pk WHERE n_tokens > 0
          |GROUP BY 1, 2
-         |ORDER BY source, pack""".stripMargin,
+         |ORDER BY source, pack""".stripMargin),
   )
 
   /** The q170 quantile-bin ensemble through a final

@@ -9,10 +9,9 @@ import graft.ext.{Calibration, CorpusStats, Perceptron, SetSimJoin, TextAnalysis
 /** Round-12 continuation gates: the asymmetric containment join, the
   * classifier reliability/AUC audit, the embargoed chronological
   * split, and the per-source distinct-n diversity audit. Each query
-  * sits next to its DuckDB oracle (trait pair discipline, VERDICT r9
-  * #4).
+  * sits next to its `Gate` entry and DuckDB oracle.
   */
-private[graft] trait PipelinesRound12 { this: PipelinesBase =>
+private[graft] trait PipelinesRound12 extends PipelinesBase { this: PipelinesRound10 =>
 
   /** Quote / subset-document detection: every document's first-8-token
     * snippet is planted back into the corpus under its negated id, then
@@ -208,47 +207,14 @@ private[graft] trait PipelinesRound12 { this: PipelinesBase =>
           .cast("decimal(38,0)")) % lit(1L << 52)).cast("long").as("fp_sum"))
       .orderBy("source", "lang")
   }
-}
 
-private[graft] object PipelinesRound12 {
-  /** Best-effort recursive delete for per-run scratch (checkpoints,
-    * temp feature stores) — never throws: cleanup failure must not
-    * fail a gate that already produced its result.
-    */
-  def deleteRecursively(p: java.nio.file.Path): Unit =
-    try {
-      if (java.nio.file.Files.isDirectory(p)) {
-        val s = java.nio.file.Files.list(p)
-        try s.forEach(deleteRecursively(_)) finally s.close()
-      }
-      java.nio.file.Files.deleteIfExists(p); ()
-    } catch { case _: Exception => () }
-
-  // q196's JSONL fixture path: a pure function of the dataset dir
-  // (q44's concurrent-SF discipline). The query no longer records it
-  // in shared state — the oracle builder resolves the path for the SF
-  // being VERIFIED via [[oracleDatasetDir]], which Verify pins to its
-  // own sfDir before dumping oracle_sql.json (r12 ADVICE: a process
-  // running two SF dirs back-to-back must not leak the second SF's
-  // fixture path into the first SF's oracle).
-  def jsonlFixturePathFor(d: String): String =
-    "/tmp/graft_q196_jsonl_" + d.replaceAll("[^A-Za-z0-9.-]", "_")
-
-  /** The dataset dir the NEXT oracleSql dump describes. Set by Verify
-    * (and any local sweep) to its sfDir; defaults to the driver's
-    * correctness SF.
-    */
-  @volatile private[graft] var oracleDatasetDir: String = "/root/testdata/sf0.01"
-}
-
-private[graft] trait OraclesRound12 { this: OracleSnippets with OraclesRound10 =>
-  protected def sqlRound12: Map[String, String] = Map(
+  override def gates: Seq[Gate] = super.gates ++ Seq(
 
     // brute-force directed containment over the sliced corpus + its
     // planted first-8-token quotes — the Spark side answers from
     // asymmetric prefix-filtered candidates, so a hash match proves
     // the A-prefix ⋈ B-all filter is lossless
-    "q189_containment_join" ->
+    Gate("q189_containment_join", Family.Dedup, containmentQuotes, _ =>
       """WITH corpus AS (
         |  SELECT doc_id, text FROM documents WHERE doc_id % 10 = 3
         |  UNION ALL
@@ -270,12 +236,12 @@ private[graft] trait OraclesRound12 { this: OracleSnippets with OraclesRound10 =
         |SELECT id_a, id_b,
         |  CAST(floor(c * 1000000000.0e0 + 0.5e0) AS BIGINT) AS cont_q
         |FROM pr WHERE c >= 0.9e0
-        |ORDER BY id_a, id_b""".stripMargin,
+        |ORDER BY id_a, id_b""".stripMargin),
 
     // the q151 training recurrence on the labeled slice, margins over
     // the COMPLEMENT, then the global (margin, id) rank, integer-
     // division decile bins, and the tie-aware Mann-Whitney rank-sum
-    "q190_classifier_reliability" ->
+    Gate("q190_classifier_reliability", Family.Lm, classifierReliability, _ =>
       s"""WITH ${perceptronCtesSql(3, " WHERE doc_id % 5 = 0")},
          |ho AS MATERIALIZED (
          |  SELECT doc_id, (lang = 'en') AS lab FROM documents WHERE doc_id % 5 <> 0),
@@ -318,11 +284,11 @@ private[graft] trait OraclesRound12 { this: OracleSnippets with OraclesRound10 =
          |  min(ix.m) AS margin_lo, max(ix.m) AS margin_hi, min(a.auc) AS auc
          |FROM ix, tot t, a
          |GROUP BY 1, t.n
-         |ORDER BY bin""".stripMargin,
+         |ORDER BY bin""".stripMargin),
 
     // exact integer boundary arithmetic + the three-way CASE, then the
     // per-(split, type) count/span summary
-    "q191_embargo_split" ->
+    Gate("q191_embargo_split", Family.Lm, embargoSplit, _ =>
       """WITH b AS (SELECT min(epoch_us(ts)) AS lo, max(epoch_us(ts)) AS hi FROM events),
         |lab AS (
         |  SELECT event_type, epoch_us(ts) AS us,
@@ -333,12 +299,12 @@ private[graft] trait OraclesRound12 { this: OracleSnippets with OraclesRound10 =
         |SELECT split, event_type, CAST(count(*) AS BIGINT) AS n,
         |  min(us) AS ts_lo, max(us) AS ts_hi
         |FROM lab GROUP BY 1, 2
-        |ORDER BY split, event_type""".stripMargin,
+        |ORDER BY split, event_type""".stripMargin),
 
     // the Hamilton apportionment replayed in exact integers: floor
     // quotas, remainder ranking with the stratum-name tie order, then
     // the per-stratum md5-ordered fill — the 137-row output SET gates
-    "q193_quota_allocation" ->
+    Gate("q193_quota_allocation", Family.Lm, quotaAllocation, _ =>
       """WITH c AS (SELECT lang, CAST(count(*) AS BIGINT) AS cnt
         |  FROM documents GROUP BY 1),
         |tn AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM c),
@@ -357,11 +323,11 @@ private[graft] trait OraclesRound12 { this: OracleSnippets with OraclesRound10 =
         |SELECT r.doc_id, r.lang, r.source
         |FROM ranked r JOIN quota USING (lang)
         |WHERE r.rn <= quota.quota
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
 
     // the q41 md5 80/20 split feeding the q79 gram equi-join with the
     // whole train side as the probe set, rolled up per test source
-    "q194_split_contamination" ->
+    Gate("q194_split_contamination", Family.Dedup, splitContamination, _ =>
       s"""WITH t AS (SELECT doc_id, source,
          |    md5(CAST(doc_id AS VARCHAR)) <
          |      printf('%08x', CAST(floor(0.8e0 * 4294967296.0e0) AS BIGINT)) AS is_train,
@@ -385,40 +351,40 @@ private[graft] trait OraclesRound12 { this: OracleSnippets with OraclesRound10 =
          |FROM g LEFT JOIN th USING (doc_id)
          |WHERE NOT g.is_train
          |GROUP BY 1
-         |ORDER BY source NULLS FIRST""".stripMargin,
+         |ORDER BY source NULLS FIRST""".stripMargin),
 
     // the batch daily-sum replay of the STREAMING bounded-mode
     // maintenance: window(ts, '1 day') starts are UTC-day aligned
     // (the session zone is pinned UTC), so date_trunc replays them
-    "q195_stream_daily_sums" ->
+    Gate("q195_stream_daily_sums", Family.Streaming, streamDailySums, _ =>
       """SELECT user_id, epoch_us(date_trunc('day', ts)) AS day_us,
         |  CAST(count(*) AS BIGINT) AS n_events,
         |  CAST(sum(CAST(floor(value * 100.0e0 + 0.5e0) AS BIGINT)) AS BIGINT) AS sum_vq
         |FROM events
         |WHERE ts IS NOT NULL AND value IS NOT NULL
         |GROUP BY 1, 2
-        |ORDER BY user_id, day_us""".stripMargin,
+        |ORDER BY user_id, day_us""".stripMargin),
 
     // DuckDB parses the SAME JSONL files Spark wrote — the JSON
     // encode/decode round-trip is the thing under test; fp_sum digests
     // RAW text (md5-52 sums, the q127 strpos/list_reduce idiom)
-    "q196_jsonl_ingest" ->
+    Gate("q196_jsonl_ingest", Family.Lm, jsonlIngest, d =>
       s"""SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
          |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
          |  CAST(sum(list_reduce(list_transform(range(1, 14),
          |    i -> CAST(strpos('0123456789abcdef',
          |      substr(md5(text), i, 1)) - 1 AS BIGINT)),
          |    (a, b) -> a * 16 + b)) % 4503599627370496 AS BIGINT) AS fp_sum
-         |FROM read_json('${PipelinesRound12.jsonlFixturePathFor(PipelinesRound12.oracleDatasetDir)}/*.json',
+         |FROM read_json('${PipelinesRound12.jsonlFixturePathFor(d)}/*.json',
          |  format = 'newline_delimited',
          |  columns = {doc_id: 'BIGINT', text: 'VARCHAR', lang: 'VARCHAR',
          |    source: 'VARCHAR', n_chars: 'BIGINT'})
          |GROUP BY 1, 2
-         |ORDER BY source NULLS FIRST, lang NULLS FIRST""".stripMargin,
+         |ORDER BY source NULLS FIRST, lang NULLS FIRST""".stripMargin),
 
     // per-source exact distinct unigram/bigram counts and ratios over
     // the shared lowercase whitespace tokens
-    "q192_corpus_diversity" ->
+    Gate("q192_corpus_diversity", Family.Lm, corpusDiversity, _ =>
       """WITH base AS (
         |  SELECT source,
         |    CASE WHEN text IS NULL OR length(trim(text)) = 0 THEN []
@@ -446,6 +412,28 @@ private[graft] trait OraclesRound12 { this: OracleSnippets with OraclesRound10 =
         |FROM ps
         |LEFT JOIN u1 ON ps.source IS NOT DISTINCT FROM u1.source
         |LEFT JOIN u2 ON ps.source IS NOT DISTINCT FROM u2.source
-        |ORDER BY ps.source NULLS FIRST""".stripMargin,
+        |ORDER BY ps.source NULLS FIRST""".stripMargin),
   )
+}
+
+private[graft] object PipelinesRound12 {
+  /** Best-effort recursive delete for per-run scratch (checkpoints,
+    * temp feature stores) — never throws: cleanup failure must not
+    * fail a gate that already produced its result.
+    */
+  def deleteRecursively(p: java.nio.file.Path): Unit =
+    try {
+      if (java.nio.file.Files.isDirectory(p)) {
+        val s = java.nio.file.Files.list(p)
+        try s.forEach(deleteRecursively(_)) finally s.close()
+      }
+      java.nio.file.Files.deleteIfExists(p); ()
+    } catch { case _: Exception => () }
+
+  // q196's JSONL fixture path: a pure function of the dataset dir
+  // (q44's concurrent-SF discipline). The query derives it from its
+  // `d`, and the oracle from the dataset dir it is given, so a process
+  // running two SF dirs back-to-back never mixes their fixtures.
+  def jsonlFixturePathFor(d: String): String =
+    "/tmp/graft_q196_jsonl_" + d.replaceAll("[^A-Za-z0-9.-]", "_")
 }

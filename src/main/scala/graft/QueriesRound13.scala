@@ -3,10 +3,12 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Round-13 gates. Each query sits next to its DuckDB oracle (trait
-  * pair discipline, VERDICT r9 #4).
+/** Round-13 gates. Each query sits next to its `Gate` entry and
+  * DuckDB oracle.
   */
-private[graft] trait PipelinesRound13 { this: PipelinesBase =>
+// self-type includes PipelinesBehavior: q202's oracle replays q176's
+// shared co-occurrence CTE (one source of truth for the pair semantics)
+private[graft] trait PipelinesRound13 extends PipelinesBase { this: PipelinesBehavior =>
 
   /** Stream-stream interval join as a hash gate (r12 verdict ask #4 —
     * the THIRD real streaming tier made driver-visible, after q184's
@@ -426,17 +428,13 @@ private[graft] trait PipelinesRound13 { this: PipelinesBase =>
         (0 until 8).map(k => element_at(col("histogram"), k + 1).as(s"h$k")): _*)
       .orderBy("doc_id")
   }
-}
 
-// self-type includes OraclesBehavior: q202 replays q176's shared
-// co-occurrence CTE (one source of truth for the pair semantics)
-private[graft] trait OraclesRound13 { this: OracleSnippets with OraclesBehavior =>
-  protected def sqlRound13: Map[String, String] = Map(
+  override def gates: Seq[Gate] = super.gates ++ Seq(
 
     // the batch replay of the streaming interval join: same key
     // equality, same half-open [p_ts, p_ts + 1 day) band, exact
     // integer micros difference
-    "q197_stream_interval_join" ->
+    Gate("q197_stream_interval_join", Family.Streaming, streamIntervalJoin, _ =>
       """WITH p AS (
         |  SELECT user_id, event_id AS purchase_id, ts AS p_ts
         |  FROM events WHERE event_type = 'purchase'),
@@ -447,12 +445,12 @@ private[graft] trait OraclesRound13 { this: OracleSnippets with OraclesBehavior 
         |  epoch_us(c_ts) - epoch_us(p_ts) AS dt_us
         |FROM p JOIN c ON p.user_id = c.user_id
         |  AND c_ts >= p_ts AND c_ts < p_ts + INTERVAL 1 DAY
-        |ORDER BY purchase_id, click_id""".stripMargin,
+        |ORDER BY purchase_id, click_id""".stripMargin),
 
     // invariant gate: the routed retained set is geometry-specific;
     // the counts are exact (the q187 broadcast-decontam oracle), the
     // booleans assert routing-independent facts
-    "q198_decontam_ivf" ->
+    Gate("q198_decontam_ivf", Family.Dedup, decontamIvfGate, _ =>
       """WITH p AS (SELECT vec_id AS pid, CAST(embedding AS DOUBLE[]) AS pe
         |           FROM embeddings WHERE vec_id % 100 = 3),
         |m AS (SELECT e.vec_id,
@@ -466,12 +464,12 @@ private[graft] trait OraclesRound13 { this: OracleSnippets with OraclesBehavior 
         |    AS n_retained_exact,
         |  TRUE AS full_probe_matches_exact,
         |  TRUE AS routed_superset_ok,
-        |  TRUE AS routed_bounds_ok""".stripMargin,
+        |  TRUE AS routed_bounds_ok""".stripMargin),
 
     // batch replay of the streaming as-of join: per purchase, the
     // latest at-or-before view (views pre-rolled per (user, ts) like
     // the gate), exact integer micros, NULL when no version precedes
-    "q199_stream_asof_join" ->
+    Gate("q199_stream_asof_join", Family.Streaming, streamAsOfJoin, _ =>
       """WITH f AS (
         |  SELECT user_id, ts AS fts, max(value) AS value
         |  FROM events WHERE event_type = 'view' GROUP BY 1, 2),
@@ -484,22 +482,22 @@ private[graft] trait OraclesRound13 { this: OracleSnippets with OraclesBehavior 
         |  SELECT fts, value FROM f
         |  WHERE f.user_id = p.user_id AND f.fts <= p.ts
         |  ORDER BY fts DESC LIMIT 1) b ON TRUE
-        |ORDER BY probe_id""".stripMargin,
+        |ORDER BY probe_id""".stripMargin),
 
     // batch replay of the streaming content dedup: the emitted
     // fingerprint set must equal batch-distinct, each key exactly once
-    "q200_stream_dedup" ->
+    Gate("q200_stream_dedup", Family.Streaming, streamContentDedup, _ =>
       s"""SELECT $fpSql AS fingerprint,
          |  CAST(1 AS BIGINT) AS n_emissions,
          |  CAST(min(doc_id) AS BIGINT) AS keep_id,
          |  CAST(count(*) AS BIGINT) AS n_copies
-         |FROM documents GROUP BY 1 ORDER BY keep_id""".stripMargin,
+         |FROM documents GROUP BY 1 ORDER BY keep_id""".stripMargin),
 
     // batch replay of the streaming sessionizer: q34's lag/window
     // session assignment, sessions keyed by (user, start) instead of
     // ordinal, values quantized per event (the q195 floor(v*100+0.5)
     // discipline) so both engines sum exact integers
-    "q201_stream_sessionize" ->
+    Gate("q201_stream_sessionize", Family.Streaming, streamSessionize, _ =>
       """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us,
         |    CAST(floor(value * 100.0e0 + 0.5e0) AS BIGINT) AS vq FROM events),
         |s AS (SELECT *, CASE WHEN lag(us) OVER w IS NULL THEN 1
@@ -512,20 +510,20 @@ private[graft] trait OraclesRound13 { this: OracleSnippets with OraclesBehavior 
         |  CAST(count(*) AS BIGINT) AS n_events,
         |  CAST(sum(vq) AS BIGINT) AS sum_vq
         |FROM s2 GROUP BY user_id, session_id
-        |ORDER BY user_id, start_us""".stripMargin,
+        |ORDER BY user_id, start_us""".stripMargin),
 
     // q176's oracle verbatim (the shared pair CTE): the streaming
     // bounded-deque miner must reproduce the batch pair-count table
-    "q202_stream_cooccur" ->
+    Gate("q202_stream_cooccur", Family.Streaming, streamCoOccurrence, _ =>
       s"""WITH $coocCtesSql
          |SELECT src_type, dst_type, n_pairs FROM pc
-         |ORDER BY src_type, dst_type""".stripMargin,
+         |ORDER BY src_type, dst_type""".stripMargin),
 
     // the WAV round-trip replayed from the PCM generator arithmetic:
     // kept frames are i % 3 = 0 of (doc_id % 5 + 1)*400 samples, each
     // sample (doc_id*31 + i*7) mod 256; mean is ONE IEEE division of
     // exact integers, bins are v // 32
-    "q203_audio_features" ->
+    Gate("q203_audio_features", Family.Ann, audioFeatures, _ =>
       """WITH e AS (
         |  SELECT doc_id,
         |    unnest(generate_series(0, (doc_id % 5 + 1) * 400 - 1)) AS i
@@ -543,6 +541,6 @@ private[graft] trait OraclesRound13 { this: OracleSnippets with OraclesBehavior 
         |  CAST(count(*) FILTER (WHERE v // 32 = 5) AS BIGINT) AS h5,
         |  CAST(count(*) FILTER (WHERE v // 32 = 6) AS BIGINT) AS h6,
         |  CAST(count(*) FILTER (WHERE v // 32 = 7) AS BIGINT) AS h7
-        |FROM v GROUP BY doc_id ORDER BY doc_id""".stripMargin
+        |FROM v GROUP BY doc_id ORDER BY doc_id""".stripMargin)
   )
 }

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Round-14 gates. Each query sits next to its DuckDB oracle (trait
-  * pair discipline, VERDICT r9 #4).
+/** Round-14 gates. Each query sits next to its `Gate` entry and
+  * DuckDB oracle.
   */
-private[graft] trait PipelinesRound14 { this: PipelinesBase =>
+private[graft] trait PipelinesRound14 extends PipelinesBase {
 
   /** Streaming RESTART as a hash gate (r13 verdict ask #2 — the
     * checkpoint-recovery/exactly-once story was spec-only): a
@@ -491,16 +491,14 @@ private[graft] trait PipelinesRound14 { this: PipelinesBase =>
         col("rel_bal_band").as("rel_band"))
       .orderBy("c_custkey")
   }
-}
 
-private[graft] trait OraclesRound14 { this: OracleSnippets =>
-  protected def sqlRound14: Map[String, String] = Map(
+  override def gates: Seq[Gate] = super.gates ++ Seq(
 
     // batch replay of the restarted stream: 1-day tumbling windows are
     // epoch-aligned under the pinned UTC session, values quantized per
     // event BEFORE summing (exact integer arithmetic both engines);
     // n_emissions = 1 is the exactly-once column
-    "q204_stream_restart" ->
+    Gate("q204_stream_restart", Family.Streaming, streamRestartAgg, _ =>
       """WITH e AS (SELECT user_id, epoch_us(ts) AS us,
         |    CAST(floor(value * 100.0e0 + 0.5e0) AS BIGINT) AS vq FROM events)
         |SELECT user_id, us - us % 86400000000 AS window_start_us,
@@ -508,12 +506,12 @@ private[graft] trait OraclesRound14 { this: OracleSnippets =>
         |  CAST(count(*) AS BIGINT) AS n_events,
         |  CAST(sum(vq) AS BIGINT) AS sum_vq
         |FROM e GROUP BY 1, 2
-        |ORDER BY user_id, window_start_us""".stripMargin,
+        |ORDER BY user_id, window_start_us""".stripMargin),
 
     // the same naive theta join, replayed as batch SQL: DuckDB plans
     // its own IEJoin — the point is identical PAIRS, exact integer
     // micros difference
-    "q205_range_rewrite_sql" ->
+    Gate("q205_range_rewrite_sql", Family.Sql, rangeRewriteSql, _ =>
       """WITH p AS (SELECT event_id AS purchase_id, ts AS p_ts FROM events
         |           WHERE event_type = 'purchase' AND event_id % 97 = 0),
         |c AS (SELECT event_id AS click_id, ts AS c_ts FROM events
@@ -521,7 +519,7 @@ private[graft] trait OraclesRound14 { this: OracleSnippets =>
         |SELECT purchase_id, click_id,
         |  epoch_us(c_ts) - epoch_us(p_ts) AS dt_us
         |FROM p JOIN c ON c_ts >= p_ts AND c_ts < p_ts + INTERVAL 1 DAY
-        |ORDER BY purchase_id, click_id""".stripMargin,
+        |ORDER BY purchase_id, click_id""".stripMargin),
 
     // full arithmetic replay of the dHash pipeline: block sums from the
     // generator formula (md5 nibble via the strpos idiom), horizontal
@@ -529,7 +527,7 @@ private[graft] trait OraclesRound14 { this: OracleSnippets =>
     // intermediate non-negative — no sign-bit traps), the BANDED
     // candidate join (≥1 exact shared band, the operator's documented
     // semantics), and band-wise bit_count Hamming ≤ 8
-    "q206_image_phash_neardup" ->
+    Gate("q206_image_phash_neardup", Family.Dedup, imageNearDup, _ =>
       """WITH grid AS (SELECT bx, by FROM range(9) t1(bx), range(8) t2(by)),
         |docs AS (SELECT doc_id, doc_id // 4 AS gid, doc_id % 4 AS v FROM documents),
         |gids AS (SELECT DISTINCT gid FROM docs),
@@ -562,14 +560,14 @@ private[graft] trait OraclesRound14 { this: OracleSnippets =>
         |  FROM cand c JOIN wide wa ON wa.doc_id = c.id_a
         |              JOIN wide wb ON wb.doc_id = c.id_b)
         |SELECT id_a, id_b, CAST(hd AS INTEGER) AS hamming
-        |FROM pairs WHERE hd <= 8 ORDER BY id_a, id_b""".stripMargin,
+        |FROM pairs WHERE hd <= 8 ORDER BY id_a, id_b""".stripMargin),
 
     // INDEPENDENT derivation of the canonical form from the messyUrl
     // generator arithmetic — the oracle never parses a url, it states
     // what canonicalization must produce (already-lowercased host, www
     // stripped, default ports dropped, trailing slash cut, tracking
     // params removed, survivors sorted)
-    "q207_url_canonicalize" ->
+    Gate("q207_url_canonicalize", Family.Crawl, urlCanonicalize, _ =>
       """WITH d AS (SELECT doc_id AS i FROM documents),
         |c AS (SELECT i,
         |    CASE WHEN i % 4 < 2 THEN 'http' ELSE 'https' END AS scheme,
@@ -586,12 +584,12 @@ private[graft] trait OraclesRound14 { this: OracleSnippets =>
         |SELECT i AS doc_id,
         |  scheme || '://' || host || port || path || q AS canonical_url,
         |  registered_domain
-        |FROM c ORDER BY doc_id""".stripMargin,
+        |FROM c ORDER BY doc_id""".stripMargin),
 
     // same generator keyed by doc_id % 150, then the curation windows:
     // best fetch per canonical url (n_chars desc, doc_id), then the 4
     // best pages per registered domain
-    "q208_domain_cap" ->
+    Gate("q208_domain_cap", Family.Crawl, domainCap, _ =>
       """WITH docs AS (SELECT doc_id, n_chars, doc_id % 150 AS g FROM documents),
         |b AS (SELECT doc_id, n_chars, g,
         |    ['example','news-site','blog','data7','archive'][CAST((g // 4) % 5 AS INTEGER) + 1] AS base,
@@ -614,12 +612,12 @@ private[graft] trait OraclesRound14 { this: OracleSnippets =>
         |SELECT registered_domain, CAST(dr AS INTEGER) AS domain_rank,
         |  doc_id, canonical_url, n_chars
         |FROM capped WHERE dr <= 4
-        |ORDER BY registered_domain, domain_rank""".stripMargin,
+        |ORDER BY registered_domain, domain_rank""".stripMargin),
 
     // the ITERATIVE ladder: each coarser level counts only the
     // remainder of the previous one (records already released at a
     // finer level do not hide anyone)
-    "q209_k_anonymity" ->
+    Gate("q209_k_anonymity", Family.Sql, kAnonymity, _ =>
       """WITH c AS (SELECT c_custkey, c_nationkey, c_mktsegment,
         |    least(CAST(floor(c_acctbal / 2000) AS BIGINT), 2) AS bal_band FROM customer),
         |l0 AS (SELECT *, count(*) OVER (PARTITION BY c_nationkey, c_mktsegment,
@@ -640,13 +638,13 @@ private[graft] trait OraclesRound14 { this: OracleSnippets =>
         |SELECT c_custkey, 2, '*', c_mktsegment, '*' FROM l2 WHERE n2 >= 5
         |UNION ALL
         |SELECT c_custkey, 3, '*', '*', '*' FROM l2 WHERE n2 < 5
-        |ORDER BY c_custkey""".stripMargin,
+        |ORDER BY c_custkey""".stripMargin),
 
     // EXPECTED visible text constructed straight from the docHtml
     // generator arithmetic — no regex on the oracle side; every
     // extraction-order hazard (script drop before tag strip, entities
     // after tag strip, &amp; last, whitespace collapse) is hash-visible
-    "q210_html_extract" ->
+    Gate("q210_html_extract", Family.Crawl, htmlExtract, _ =>
       """WITH d AS (SELECT doc_id AS i FROM documents)
         |SELECT i AS doc_id,
         |  'Doc ' || i || ' & notes' AS title,
@@ -656,12 +654,12 @@ private[graft] trait OraclesRound14 { this: OracleSnippets =>
         |    || CASE CAST(i % 3 AS INTEGER) WHEN 0 THEN ''
         |       WHEN 1 THEN ' link 0' ELSE ' link 0 link 1' END AS text,
         |  CAST(i % 3 AS INTEGER) AS n_links
-        |FROM d ORDER BY doc_id""".stripMargin,
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // per-(doc, link ordinal) rows from the generator, canonical urls
     // restated directly (www/port/slash/tracking normalization already
     // applied), then the domain rollup
-    "q211_link_graph" ->
+    Gate("q211_link_graph", Family.Graph, linkGraph, _ =>
       """WITH d AS (SELECT doc_id AS i, doc_id % 3 AS nl FROM documents),
         |l AS (SELECT i, j FROM d,
         |    (SELECT unnest(generate_series(0, 1)) AS j) s WHERE j < nl),
@@ -671,12 +669,12 @@ private[graft] trait OraclesRound14 { this: OracleSnippets =>
         |    'site' || ((i // 3 + 4 * j) % 9) || '.com' AS dom FROM l)
         |SELECT dom AS registered_domain, count(*) AS in_degree,
         |  count(DISTINCT i) AS n_sources, count(DISTINCT curl) AS n_urls
-        |FROM u GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM u GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // expected robots decision per (domain k, path ordinal j) stated
     // directly from the rule set: longest match wins, equal-length tie
     // → allow, no match / no rules → allowed with matched_len 0
-    "q212_robots_filter" ->
+    Gate("q212_robots_filter", Family.Crawl, robotsFilter, _ =>
       """WITH d AS (SELECT doc_id AS i, doc_id % 3 AS nl FROM documents),
         |l AS (SELECT i, j FROM d,
         |    (SELECT unnest(generate_series(0, 1)) AS j) s WHERE j < nl),
@@ -694,12 +692,12 @@ private[graft] trait OraclesRound14 { this: OracleSnippets =>
         |       WHEN k = 4 AND j = 0 THEN 4
         |       WHEN k = 5 THEN 2
         |       ELSE 0 END AS INTEGER) AS matched_len
-        |FROM u ORDER BY doc_id, curl""".stripMargin,
+        |FROM u ORDER BY doc_id, curl""".stripMargin),
 
     // expected WARC fields and payloads stated from the generator;
     // the j=1 payload embeds a fake header block (chr(13)||chr(10)
     // CRLFs) that only length-driven framing survives
-    "q213_warc_ingest" ->
+    Gate("q213_warc_ingest", Family.Crawl, warcIngest, _ =>
       """WITH d AS (SELECT doc_id AS i, doc_id % 3 + 1 AS n FROM documents),
         |l AS (SELECT i, j FROM d,
         |    (SELECT unnest(generate_series(0, 2)) AS j) s WHERE j < n),
@@ -715,6 +713,6 @@ private[graft] trait OraclesRound14 { this: OracleSnippets =>
         |  'http://site' || ((i // 3 + 4 * j) % 9) || '.com/p/' || j AS target_uri,
         |  CAST(length(payload) AS BIGINT) AS content_length,
         |  payload AS payload_text
-        |FROM p ORDER BY doc_id, rec_idx""".stripMargin
+        |FROM p ORDER BY doc_id, rec_idx""".stripMargin)
   )
 }

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Round-15 gates. Each query sits next to its DuckDB oracle (trait
-  * pair discipline, VERDICT r9 #4).
+/** Round-15 gates. Each query sits next to its `Gate` entry and
+  * DuckDB oracle.
   */
-private[graft] trait PipelinesRound15 { this: PipelinesBase =>
+private[graft] trait PipelinesRound15 extends PipelinesBase {
 
   /** Gzipped WARC ingest ([[graft.ext.Warc.gunzipMembers]], r14
     * verdict ask #1): real crawl archives (`.warc.gz`) arrive as one
@@ -754,26 +754,13 @@ private[graft] trait PipelinesRound15 { this: PipelinesBase =>
         graft.ext.Html.extractMainText(col("html")).as("main_text"))
       .orderBy("doc_id")
   }
-}
 
-/** Suffix fixture shared by the q218 gate and UrlsSpec — a PSL-shaped
-  * exact-entry subset: ICANN TLDs, ccTLD second levels, and one
-  * private suffix.
-  */
-private[graft] object PslFixture {
-  val Suffixes: Seq[String] = Seq(
-    "com", "org", "net", "io", "au", "uk", "edu", "gov",
-    "com.au", "net.au", "gov.au", "co.uk", "org.uk", "ac.uk",
-    "github.io")
-}
-
-private[graft] trait OraclesRound15 { this: OracleSnippets =>
-  protected def sqlRound15: Map[String, String] = Map(
+  override def gates: Seq[Gate] = super.gates ++ Seq(
 
     // expected fields and payloads restated from the q214 generator —
     // gzip is transparent to the oracle by construction; the j=1
     // payload still embeds the fake header block
-    "q214_warc_gz_ingest" ->
+    Gate("q214_warc_gz_ingest", Family.Crawl, warcGzIngest, _ =>
       """WITH d AS (SELECT doc_id AS i, doc_id % 3 + 1 AS n FROM documents),
         |l AS (SELECT i, j FROM d,
         |    (SELECT unnest(generate_series(0, 2)) AS j) s WHERE j < n),
@@ -789,12 +776,12 @@ private[graft] trait OraclesRound15 { this: OracleSnippets =>
         |  'http://gz' || ((i // 5 + 3 * j) % 7) || '.org/g/' || j AS target_uri,
         |  CAST(length(payload) AS BIGINT) AS content_length,
         |  payload AS payload_text
-        |FROM p ORDER BY doc_id, rec_idx""".stripMargin,
+        |FROM p ORDER BY doc_id, rec_idx""".stripMargin),
 
     // the q206 arithmetic under the r15: salt — resize exactness means
     // the hash pipeline sees the SAME 18×16 block grid at every source
     // scale, so scale never appears in the oracle
-    "q215_image_resize_dedup" ->
+    Gate("q215_image_resize_dedup", Family.Dedup, imageResizeDedup, _ =>
       """WITH grid AS (SELECT bx, by FROM range(9) t1(bx), range(8) t2(by)),
         |docs AS (SELECT doc_id, doc_id // 4 AS gid, doc_id % 4 AS v FROM documents),
         |gids AS (SELECT DISTINCT gid FROM docs),
@@ -827,12 +814,12 @@ private[graft] trait OraclesRound15 { this: OracleSnippets =>
         |  FROM cand c JOIN wide wa ON wa.doc_id = c.id_a
         |              JOIN wide wb ON wb.doc_id = c.id_b)
         |SELECT id_a, id_b, CAST(hd AS INTEGER) AS hamming
-        |FROM pairs WHERE hd <= 8 ORDER BY id_a, id_b""".stripMargin,
+        |FROM pairs WHERE hd <= 8 ORDER BY id_a, id_b""".stripMargin),
 
     // the canonical string stated from the generator — the oracle never
     // percent-decodes: unreserved escapes are written decoded, reserved
     // ones uppercase, the malformed %zz verbatim
-    "q216_url_percent_canonicalize" ->
+    Gate("q216_url_percent_canonicalize", Family.Crawl, urlPercentCanonicalize, _ =>
       """WITH d AS (SELECT doc_id AS i FROM documents)
         |SELECT i AS doc_id,
         |  'https://ex' || (i % 4) || '.com/f/~%2F'
@@ -841,12 +828,12 @@ private[graft] trait OraclesRound15 { this: OracleSnippets =>
         |    || '?v=' || ['J', 'J', '%7C'][CAST((i // 9) % 3 AS INTEGER) + 1]
         |    AS canonical_url,
         |  TRUE AS idempotent
-        |FROM d ORDER BY doc_id""".stripMargin,
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // the q212 decision table restated — 90 dummy rule domains match no
     // frontier row, so the broadcast-join gear must reproduce the
     // literal gear's decisions exactly
-    "q217_robots_join_filter" ->
+    Gate("q217_robots_join_filter", Family.Crawl, robotsJoinFilter, _ =>
       """WITH d AS (SELECT doc_id AS i, doc_id % 3 AS nl FROM documents),
         |l AS (SELECT i, j FROM d,
         |    (SELECT unnest(generate_series(0, 1)) AS j) s WHERE j < nl),
@@ -864,12 +851,12 @@ private[graft] trait OraclesRound15 { this: OracleSnippets =>
         |       WHEN k = 4 AND j = 0 THEN 4
         |       WHEN k = 5 THEN 2
         |       ELSE 0 END AS INTEGER) AS matched_len
-        |FROM u ORDER BY doc_id, curl""".stripMargin,
+        |FROM u ORDER BY doc_id, curl""".stripMargin),
 
     // expected registered domain per host branch: longest listed
     // suffix + one label; suffix-only host → NULL; unlisted TLD → the
     // default * rule; IPv4 → the address itself
-    "q218_psl_domains" ->
+    Gate("q218_psl_domains", Family.Crawl, pslDomains, _ =>
       """WITH d AS (SELECT doc_id AS i, CAST(doc_id % 7 AS VARCHAR) AS k
         |  FROM documents)
         |SELECT i AS doc_id,
@@ -887,13 +874,13 @@ private[graft] trait OraclesRound15 { this: OracleSnippets =>
         |       WHEN i % 5 = 3 THEN 'delta' || k || '.org'
         |       WHEN i % 2 = 0 THEN NULL
         |       ELSE 'eps' || k || '.zz' END AS registered_domain
-        |FROM d ORDER BY doc_id""".stripMargin,
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // the whole stack chained as CTEs: q211's link arithmetic + the
     // single-quoted footer, canonical urls restated, q212's robots
     // decisions + the footer rules, the frontier rollup, and the
     // per-domain cap windows
-    "q219_crawl_stack" ->
+    Gate("q219_crawl_stack", Family.Crawl, crawlStack, _ =>
       """WITH d AS (SELECT doc_id AS i, doc_id % 3 AS nl FROM documents),
         |main AS (SELECT i,
         |    'http://site' || ((i // 3 + 4 * j) % 9) || '.com/p/' || j
@@ -922,13 +909,13 @@ private[graft] trait OraclesRound15 { this: OracleSnippets =>
         |SELECT dom AS registered_domain, CAST(dr AS INTEGER) AS domain_rank,
         |  curl, in_degree, first_doc
         |FROM capped WHERE dr <= 3
-        |ORDER BY registered_domain, domain_rank""".stripMargin,
+        |ORDER BY registered_domain, domain_rank""".stripMargin),
 
     // expected (ordinal, prefix, allow) rows stated from the generator:
     // exactly one disallow from the * group (the googlebot and otherbot
     // groups' rules must never appear), plus the even-doc allow; the
     // empty Disallow and Crawl-delay contribute nothing
-    "q220_robots_txt_parse" ->
+    Gate("q220_robots_txt_parse", Family.Crawl, robotsTxtParse, _ =>
       """WITH d AS (SELECT doc_id AS i, CAST(doc_id % 7 AS VARCHAR) AS k
         |  FROM documents)
         |SELECT doc_id, rule_idx, prefix, allow FROM (
@@ -937,13 +924,13 @@ private[graft] trait OraclesRound15 { this: OracleSnippets =>
         |  UNION ALL
         |  SELECT i, CAST(1 AS INTEGER), '/p/' || k || '/pub',
         |    CAST(1 AS INTEGER) FROM d WHERE i % 2 = 0)
-        |ORDER BY doc_id, rule_idx""".stripMargin,
+        |ORDER BY doc_id, rule_idx""".stripMargin),
 
     // expected message split stated from the generator: status code,
     // parameter-stripped lowercased media type, the named header, and
     // the body INCLUDING the embedded-blank-line hazard; the non-HTTP
     // row yields NULL/empty across the board
-    "q221_http_parse" ->
+    Gate("q221_http_parse", Family.Crawl, httpParse, _ =>
       """WITH d AS (SELECT doc_id AS i FROM documents)
         |SELECT i AS doc_id,
         |  CASE WHEN i % 11 = 0 THEN NULL
@@ -956,12 +943,12 @@ private[graft] trait OraclesRound15 { this: OracleSnippets =>
         |       WHEN i % 4 = 1 THEN 'A' || chr(13) || chr(10) || chr(13)
         |         || chr(10) || 'B ' || i
         |       ELSE 'body ' || i END AS body_text
-        |FROM d ORDER BY doc_id""".stripMargin,
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // the q219 chain with the HTTP layer's filters applied up front
     // (404s and JSON responses contribute no links) and the q212
     // robots decisions — now produced by the in-plan robots.txt parse
-    "q222_crawl_pipeline" ->
+    Gate("q222_crawl_pipeline", Family.Crawl, crawlPipeline, _ =>
       """WITH d AS (SELECT doc_id AS i, doc_id % 3 AS nl FROM documents
         |           WHERE doc_id % 10 <> 0 AND doc_id % 9 <> 0),
         |main AS (SELECT i,
@@ -984,13 +971,13 @@ private[graft] trait OraclesRound15 { this: OracleSnippets =>
         |SELECT dom AS registered_domain, CAST(dr AS INTEGER) AS domain_rank,
         |  curl, in_degree, first_doc
         |FROM capped WHERE dr <= 3
-        |ORDER BY registered_domain, domain_rank""".stripMargin,
+        |ORDER BY registered_domain, domain_rank""".stripMargin),
 
     // expected charset and decoded text per branch — the é/€/“ ”
     // characters are literal in the oracle, so a UTF-8-view framing
     // bug, an ignored charset parameter (mojibake), or a cp1252 block
     // left as C1 controls breaks the hash; shift_jis rows must be NULL
-    "q224_charset_decode" ->
+    Gate("q224_charset_decode", Family.Crawl, charsetDecode, _ =>
       """WITH d AS (SELECT doc_id AS i FROM documents)
         |SELECT i AS doc_id,
         |  CASE CAST(i % 4 AS INTEGER)
@@ -1005,13 +992,13 @@ private[graft] trait OraclesRound15 { this: OracleSnippets =>
         |    WHEN 2 THEN 'plain ascii ' || i
         |    ELSE CASE WHEN i % 8 = 3 THEN 'price €9 “quoted” ' || i
         |         ELSE NULL END END AS body_text
-        |FROM d ORDER BY doc_id""".stripMargin,
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // resolved URL per RFC 3986 merge branch, stated directly: the
     // dot-segment stack (incl. the root clamp), query replacement vs
     // inheritance, and the authority choice are all in the expected
     // strings
-    "q225_url_resolve" ->
+    Gate("q225_url_resolve", Family.Crawl, urlResolve, _ =>
       """WITH d AS (SELECT doc_id AS i, doc_id % 3 AS k, doc_id % 4 AS m,
         |    doc_id % 5 AS r5,
         |    CASE WHEN doc_id % 2 = 0 THEN '?id=9' ELSE '' END AS bq
@@ -1036,12 +1023,12 @@ private[graft] trait OraclesRound15 { this: OracleSnippets =>
         |         root || dir || '/same/' || m || '?z=1',
         |         root || dir || '/c.html?q=' || m]
         |         [CAST(i % 7 AS INTEGER) + 1] END AS resolved
-        |FROM b ORDER BY doc_id""".stripMargin,
+        |FROM b ORDER BY doc_id""".stripMargin),
 
     // expected wildcard decisions stated per (domain k, path ordinal j):
     // matched_len is the RAW pattern length, so wildcard-vs-prefix
     // precedence (site3: 5 > 3) is hash-pinned, not just the boolean
-    "q226_robots_wildcard" ->
+    Gate("q226_robots_wildcard", Family.Crawl, robotsWildcard, _ =>
       """WITH d AS (SELECT doc_id AS i, doc_id % 3 AS nl FROM documents),
         |l AS (SELECT i, j FROM d,
         |    (SELECT unnest(generate_series(0, 1)) AS j) s WHERE j < nl),
@@ -1061,13 +1048,13 @@ private[graft] trait OraclesRound15 { this: OracleSnippets =>
         |       WHEN k = 3 AND j = 1 THEN 5
         |       WHEN k = 6 AND j = 0 THEN 5
         |       ELSE 0 END AS INTEGER) AS matched_len
-        |FROM u ORDER BY doc_id, curl""".stripMargin,
+        |FROM u ORDER BY doc_id, curl""".stripMargin),
 
     // the surviving prose blocks stated from the generator: the nav,
     // promo, footer, and title chunks never appear — length and
     // density kills are both exercised (the promo dies by density
     // alone: 26 anchor chars against 44 text chars at the 50% gate)
-    "q228_main_content" ->
+    Gate("q228_main_content", Family.Crawl, mainContent, _ =>
       """WITH d AS (SELECT doc_id AS i FROM documents)
         |SELECT i AS doc_id,
         |  'Opening paragraph ' || (i % 7)
@@ -1076,13 +1063,13 @@ private[graft] trait OraclesRound15 { this: OracleSnippets =>
         |     THEN ' Second passage keeps one link ' || (i % 5)
         |       || ' inside substantially longer surrounding prose text.'
         |     ELSE '' END AS main_text
-        |FROM d ORDER BY doc_id""".stripMargin,
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // the capstone chain stated stage by stage: the HTTP filters cut
     // the doc set (decorrelated keys), the three link arms state their
     // RESOLVED canonical urls and robots decisions directly, then the
     // frontier rollup and cap windows replay
-    "q227_crawl_full" ->
+    Gate("q227_crawl_full", Family.Crawl, crawlFull, _ =>
       """WITH d AS (SELECT doc_id AS i FROM documents
         |           WHERE doc_id % 10 <> 0 AND doc_id % 11 <> 1),
         |la AS (SELECT i, i % 9 AS k,
@@ -1108,12 +1095,12 @@ private[graft] trait OraclesRound15 { this: OracleSnippets =>
         |SELECT dom AS registered_domain, CAST(dr AS INTEGER) AS domain_rank,
         |  curl, in_degree, first_doc
         |FROM capped WHERE dr <= 3
-        |ORDER BY registered_domain, domain_rank""".stripMargin,
+        |ORDER BY registered_domain, domain_rank""".stripMargin),
 
     // expected (ordinal, raw trimmed+decoded loc, canonical) per doc:
     // the oracle writes the DECODED loc (it never runs entity or url
     // logic) and the canonical form with port/tracking/case folded
-    "q223_sitemap_ingest" ->
+    Gate("q223_sitemap_ingest", Family.Crawl, sitemapIngest, _ =>
       """WITH d AS (SELECT doc_id AS i, doc_id % 3 AS nl FROM documents),
         |l AS (SELECT i, j FROM d,
         |    (SELECT unnest(generate_series(0, 2)) AS j) s WHERE j <= nl),
@@ -1123,6 +1110,17 @@ private[graft] trait OraclesRound15 { this: OracleSnippets =>
         |    || '?utm_y=2&id=' || (i % 5) AS loc,
         |  'https://site' || kk || '.com/s/' || j || '?id=' || (i % 5)
         |    AS canonical_url
-        |FROM u ORDER BY doc_id, loc_idx""".stripMargin
+        |FROM u ORDER BY doc_id, loc_idx""".stripMargin)
   )
+}
+
+/** Suffix fixture shared by the q218 gate and UrlsSpec — a PSL-shaped
+  * exact-entry subset: ICANN TLDs, ccTLD second levels, and one
+  * private suffix.
+  */
+private[graft] object PslFixture {
+  val Suffixes: Seq[String] = Seq(
+    "com", "org", "net", "io", "au", "uk", "edu", "gov",
+    "com.au", "net.au", "gov.au", "co.uk", "org.uk", "ac.uk",
+    "github.io")
 }

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Round-16 gates. Each query sits next to its DuckDB oracle (trait
-  * pair discipline, VERDICT r9 #4).
+/** Round-16 gates. Each query sits next to its `Gate` entry and
+  * DuckDB oracle.
   */
-private[graft] trait PipelinesRound16 { this: PipelinesBase =>
+private[graft] trait PipelinesRound16 extends PipelinesBase {
 
   /** Transfer/content-decoded HTTP bodies as a hash gate
     * ([[graft.ext.Http.decodeBodyFull]], r15 verdict ask #1): real
@@ -979,25 +979,23 @@ private[graft] trait PipelinesRound16 { this: PipelinesBase =>
     graft.ext.Http.decodeBodyFull(payloads, "doc_id", "payload")
       .orderBy("doc_id")
   }
-}
 
-private[graft] trait OraclesRound16 { this: OracleSnippets =>
-  protected def sqlRound16: Map[String, String] = Map(
+  override def gates: Seq[Gate] = super.gates ++ Seq(
 
     // expected text per branch from the generator arithmetic: framing
     // and compression are transparent (the text survives byte-exact),
     // the truncated-chunk and br branches quarantine to NULL
-    "q229_http_transfer_decode" ->
+    Gate("q229_http_transfer_decode", Family.Crawl, httpTransferDecode, _ =>
       """WITH d AS (SELECT doc_id AS i FROM documents)
         |SELECT i AS doc_id, 'utf-8' AS charset,
         |  CASE WHEN i % 11 = 0 OR i % 13 = 0 THEN NULL
         |       ELSE 'crawl body ' || i || ' é' || (i % 7) END AS body_text
-        |FROM d ORDER BY doc_id""".stripMargin,
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // expected registered domain per PSL branch: wildcard suffixes add
     // one label, the exception's own span registers, suffix-only hosts
     // (exact OR wildcard-matched) are strict NULL, IPv4 is the unit
-    "q231_psl_wildcard_domains" ->
+    Gate("q231_psl_wildcard_domains", Family.Crawl, pslWildcardDomains, _ =>
       """WITH d AS (SELECT doc_id AS i,
         |    CAST((doc_id // 6) % 7 AS VARCHAR) AS k FROM documents)
         |SELECT i AS doc_id,
@@ -1015,13 +1013,13 @@ private[graft] trait OraclesRound16 { this: OracleSnippets =>
         |       WHEN i % 6 = 3 THEN 's' || k || '.city.kawasaki.jp'
         |       WHEN i % 6 = 4 THEN NULL
         |       ELSE 'shop' || k || '.com' END AS registered_domain
-        |FROM d ORDER BY doc_id""".stripMargin,
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // url, folded form, and canonical per branch from the generator
     // arithmetic — punycode constants verified against java.net.IDN;
     // the collapse pair (branches 0/1) shares one canonical string and
     // the dup-count window replays identically
-    "q232_idn_host_fold" ->
+    Gate("q232_idn_host_fold", Family.Crawl, idnHostFold, _ =>
       """WITH d AS (SELECT doc_id AS i,
         |    CAST((doc_id // 9) % 5 AS VARCHAR) AS k,
         |    CAST(doc_id % 4 AS VARCHAR) AS m FROM documents),
@@ -1059,14 +1057,14 @@ private[graft] trait OraclesRound16 { this: OracleSnippets =>
         | FROM d)
         |SELECT i AS doc_id, url, url_idn, canonical_url,
         |  COUNT(*) OVER (PARTITION BY canonical_url) AS dup_count
-        |FROM r ORDER BY doc_id""".stripMargin,
+        |FROM r ORDER BY doc_id""".stripMargin),
 
     // directive extraction, one-level index recursion, and canonical
     // arithmetic replayed per branch: pages_a rides the index (level 1)
     // for even k and the direct lowercase directive (level 0) for odd
     // k; pages_b arrives via the index for even k and ALSO directly
     // when k % 3 = 0
-    "q233_robots_sitemap_wiring" ->
+    Gate("q233_robots_sitemap_wiring", Family.Crawl, robotsSitemapWiring, _ =>
       """WITH d AS (SELECT doc_id AS i, CAST(doc_id % 7 AS VARCHAR) AS k,
         |    doc_id % 7 AS kn FROM documents),
         |aj AS (SELECT 0 AS j UNION ALL SELECT 1),
@@ -1086,13 +1084,13 @@ private[graft] trait OraclesRound16 { this: OracleSnippets =>
         |  FROM d WHERE kn % 3 = 0
         |)
         |SELECT i AS doc_id, level, sm_url, canonical_url
-        |FROM r ORDER BY doc_id, level, canonical_url""".stripMargin,
+        |FROM r ORDER BY doc_id, level, canonical_url""".stripMargin),
 
     // the delay branch table, the per-host slot window, and the offset
     // arithmetic replayed; NULL delay (absent / other-group / malformed)
     // falls to the 1.0 s default in the offset only, staying NULL in
     // the crawl_delay column itself
-    "q234_crawl_delay_schedule" ->
+    Gate("q234_crawl_delay_schedule", Family.Crawl, crawlDelaySchedule, _ =>
       """WITH d AS (SELECT doc_id AS i, doc_id % 20 AS m,
         |    (doc_id % 20) % 6 AS k FROM documents),
         |f AS (SELECT i, j AS url_ord, 'site' || m || '.com' AS host,
@@ -1108,12 +1106,12 @@ private[graft] trait OraclesRound16 { this: OracleSnippets =>
         |SELECT i AS doc_id, url_ord, host, crawl_delay, fetch_slot,
         |  fetch_slot * COALESCE(crawl_delay, CAST(1 AS DOUBLE))
         |    AS fetch_offset_secs
-        |FROM s ORDER BY doc_id, url_ord""".stripMargin,
+        |FROM s ORDER BY doc_id, url_ord""".stripMargin),
 
     // every parsed-back field restated from the generator arithmetic;
     // content_length is the UTF-8 OCTET length of the text (the
     // multibyte pin), rec_idx is the parse order = the build order
-    "q235_warc_round_trip" ->
+    Gate("q235_warc_round_trip", Family.Crawl, warcRoundTrip, _ =>
       """WITH d AS (SELECT doc_id AS i, CAST(doc_id % 7 AS VARCHAR) AS k
         |    FROM documents),
         |js AS (SELECT 0 AS j UNION ALL SELECT 1 UNION ALL SELECT 2),
@@ -1129,13 +1127,13 @@ private[graft] trait OraclesRound16 { this: OracleSnippets =>
         |  octet_length(encode(txt)) AS content_length,
         |  txt AS body_text,
         |  CASE WHEN i % 2 = 0 THEN 1 ELSE 0 END AS gz
-        |FROM r ORDER BY doc_id, rec_idx""".stripMargin,
+        |FROM r ORDER BY doc_id, rec_idx""".stripMargin),
 
     // every harvested field restated per branch (extractTitle keeps
     // its documented empty-string-when-absent contract; the meta and
     // link extractors are NULL-when-absent); the canonical-identity
     // window replays over coalesce(canonical target, own URL)
-    "q236_html_metadata" ->
+    Gate("q236_html_metadata", Family.Crawl, htmlMetadata, _ =>
       """WITH d AS (SELECT doc_id AS i, doc_id % 8 AS k,
         |    CAST((doc_id // 2) % 5 AS VARCHAR) AS g FROM documents),
         |r AS (SELECT i, k, g,
@@ -1154,12 +1152,12 @@ private[graft] trait OraclesRound16 { this: OracleSnippets =>
         |SELECT i AS doc_id, title, description, og_url, canonical_href,
         |  canonical_url,
         |  COUNT(*) OVER (PARTITION BY canonical_url) AS dup_count
-        |FROM r ORDER BY doc_id""".stripMargin,
+        |FROM r ORDER BY doc_id""".stripMargin),
 
     // the full composition replayed: three anchors per doc (relative,
     // absolute-with-trailing-slash, query-only), (target, text) counts
     // from the documents table itself, mode by (n DESC, text DESC)
-    "q237_anchor_text_graph" ->
+    Gate("q237_anchor_text_graph", Family.Graph, anchorTextGraph, _ =>
       """WITH d AS (SELECT doc_id AS i FROM documents),
         |a AS (
         |  SELECT 'http://self.com/t/' || (i % 5) AS target_url,
@@ -1178,11 +1176,11 @@ private[graft] trait OraclesRound16 { this: OracleSnippets =>
         |    COUNT(*) AS n_texts FROM g GROUP BY 1)
         |SELECT t.target_url, tot.in_degree, tot.n_texts, t.text AS top_text
         |FROM top t JOIN tot ON t.target_url = tot.target_url
-        |WHERE t.rn = 1 ORDER BY t.target_url""".stripMargin,
+        |WHERE t.rn = 1 ORDER BY t.target_url""".stripMargin),
 
     // the chain topology stated per node: (status, resolved target,
     // outcome, final URL, hops) over the distinct site families
-    "q238_redirect_chains" ->
+    Gate("q238_redirect_chains", Family.Crawl, redirectChains, _ =>
       """WITH d AS (SELECT DISTINCT CAST(doc_id % 10 AS VARCHAR) AS m
         |    FROM documents),
         |jt AS (SELECT * FROM (VALUES
@@ -1199,13 +1197,13 @@ private[graft] trait OraclesRound16 { this: OracleSnippets =>
         |       ELSE 'http://s' || m || '.com/hop/' || r END AS redirect_to,
         |  outcome, 'http://s' || m || '.com/hop/' || fin AS final_url,
         |  CAST(hops AS BIGINT) AS n_hops
-        |FROM d, jt ORDER BY url""".stripMargin,
+        |FROM d, jt ORDER BY url""".stripMargin),
 
     // the whole per-branch profile restated: segment counts after the
     // minChars floor, per-language line counts, majority with the
     // langOrder tie-break, the mixed flag, and the unknown segment
     // that must never inherit the argmax default
-    "q239_segment_langs" ->
+    Gate("q239_segment_langs", Family.Lm, segmentLangs, _ =>
       """WITH d AS (SELECT doc_id AS i, doc_id % 4 AS k FROM documents)
         |SELECT i AS doc_id,
         |  CASE WHEN k = 0 THEN 3 WHEN k = 1 THEN 3 WHEN k = 2 THEN 3
@@ -1217,12 +1215,12 @@ private[graft] trait OraclesRound16 { this: OracleSnippets =>
         |  0 AS n_fr,
         |  CASE WHEN k = 2 THEN 'es' ELSE 'en' END AS majority_lang,
         |  k IN (1, 2) AS is_mixed
-        |FROM d ORDER BY doc_id""".stripMargin,
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // the rebuilt text restated byte-for-byte: case-variant and exact
     // repeats die (first occurrence in ORIGINAL form), the blank
     // structural line survives, clean docs pass untouched
-    "q240_repeated_line_scrub" ->
+    Gate("q240_repeated_line_scrub", Family.Lm, repeatedLineScrub, _ =>
       """WITH d AS (SELECT doc_id AS i, CAST(doc_id % 5 AS VARCHAR) AS m
         |    FROM documents)
         |SELECT i AS doc_id,
@@ -1233,12 +1231,12 @@ private[graft] trait OraclesRound16 { this: OracleSnippets =>
         |            'unique content B ' || i || chr(10) ||
         |            'tail ' || i END AS text,
         |  CASE WHEN i % 3 = 0 THEN 0 ELSE 2 END AS n_removed
-        |FROM d ORDER BY doc_id""".stripMargin,
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // every ratio stated as the SAME integer division the operator
     // performs (IEEE-identical across engines); pass only for the
     // good-prose branch
-    "q241_gopher_quality" ->
+    Gate("q241_gopher_quality", Family.Lm, gopherQuality, _ =>
       """WITH d AS (SELECT doc_id AS i, doc_id % 8 AS k FROM documents)
         |SELECT i AS doc_id,
         |  CASE k WHEN 0 THEN 21 WHEN 1 THEN 3 WHEN 2 THEN 13
@@ -1265,12 +1263,12 @@ private[graft] trait OraclesRound16 { this: OracleSnippets =>
         |  CASE k WHEN 0 THEN 4 WHEN 1 THEN 0 WHEN 5 THEN 3
         |         WHEN 7 THEN 0 ELSE 2 END AS n_stopword_hits,
         |  k = 0 AS pass
-        |FROM d ORDER BY doc_id""".stripMargin,
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // the rebuilt text per branch: terminal-punctuation/word-floor/
     // brace/javascript/lorem-ipsum drops, quote-terminated lines kept,
     // the >=3-kept-lines doc flag
-    "q242_c4_line_clean" ->
+    Gate("q242_c4_line_clean", Family.Lm, c4LineClean, _ =>
       """WITH d AS (SELECT doc_id AS i, doc_id % 3 AS k FROM documents)
         |SELECT i AS doc_id,
         |  CASE WHEN k = 0 THEN 'This line is a fine sentence.' || chr(10)
@@ -1282,12 +1280,12 @@ private[graft] trait OraclesRound16 { this: OracleSnippets =>
         |  CASE WHEN k = 0 THEN 3 WHEN k = 1 THEN 2 ELSE 0 END AS n_kept,
         |  5 AS n_dropped,
         |  k = 0 AS keep_doc
-        |FROM d ORDER BY doc_id""".stripMargin,
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // uri/digest/length/text restated per record (md5 over the same
     // UTF-8 bytes both sides), access_ok pinned TRUE — a wrong offset,
     // a torn member, or a digest drift would flip it
-    "q243_warc_cdx_access" ->
+    Gate("q243_warc_cdx_access", Family.Crawl, warcCdxAccess, _ =>
       """WITH d AS (SELECT doc_id AS i, CAST(doc_id % 7 AS VARCHAR) AS k
         |    FROM documents),
         |js AS (SELECT 0 AS j UNION ALL SELECT 1 UNION ALL SELECT 2),
@@ -1300,12 +1298,12 @@ private[graft] trait OraclesRound16 { this: OracleSnippets =>
         |  octet_length(encode(txt)) AS content_length,
         |  txt AS body_text,
         |  TRUE AS access_ok
-        |FROM r ORDER BY doc_id, rec_idx""".stripMargin,
+        |FROM r ORDER BY doc_id, rec_idx""".stripMargin),
 
     // declared vs sniffed vs mismatch verdict per branch — a sniffer
     // that trusted the header, missed a magic, or tripped on the BOM
     // changes rows
-    "q244_mime_sniff" ->
+    Gate("q244_mime_sniff", Family.Crawl, mimeSniff, _ =>
       """WITH d AS (SELECT doc_id AS i, doc_id % 7 AS k FROM documents)
         |SELECT i AS doc_id,
         |  CASE k WHEN 0 THEN 'text/html' WHEN 1 THEN 'text/html'
@@ -1318,12 +1316,12 @@ private[graft] trait OraclesRound16 { this: OracleSnippets =>
         |         WHEN 5 THEN 'application/xml'
         |         ELSE 'text/plain' END AS sniffed,
         |  k IN (1, 3) AS mismatch
-        |FROM d ORDER BY doc_id""".stripMargin,
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // effective charset (header beats meta beats default) + exact text
     // per branch; the unknown-meta branch quarantines to NULL while
     // still NAMING what the page declared
-    "q245_meta_charset_decode" ->
+    Gate("q245_meta_charset_decode", Family.Crawl, metaCharsetDecode, _ =>
       """WITH d AS (SELECT doc_id AS i, doc_id % 5 AS k FROM documents)
         |SELECT i AS doc_id,
         |  CASE k WHEN 0 THEN 'shift_jis' WHEN 1 THEN 'utf-8'
@@ -1340,12 +1338,12 @@ private[graft] trait OraclesRound16 { this: OracleSnippets =>
         |    WHEN 3 THEN NULL
         |    ELSE '<html><body>plain é ' || i || '</body></html>'
         |    END AS body_text
-        |FROM d ORDER BY doc_id""".stripMargin,
+        |FROM d ORDER BY doc_id""".stripMargin),
 
     // type/URI/extracted text/UTF-8 octet length restated per record:
     // the nav block dies inside the archive cycle, the prose paragraph
     // survives byte-exactly through two WARC round trips
-    "q246_wet_conversion" ->
+    Gate("q246_wet_conversion", Family.Crawl, wetConversion, _ =>
       """WITH d AS (SELECT doc_id AS i, CAST(doc_id % 7 AS VARCHAR) AS k
         |    FROM documents),
         |js AS (SELECT 0 AS j UNION ALL SELECT 1),
@@ -1358,13 +1356,13 @@ private[graft] trait OraclesRound16 { this: OracleSnippets =>
         |  'http://wet' || k || '.com/p/' || j AS target_uri,
         |  octet_length(encode(txt)) AS content_length,
         |  txt AS wet_text
-        |FROM r ORDER BY doc_id, rec_idx""".stripMargin,
+        |FROM r ORDER BY doc_id, rec_idx""".stripMargin),
 
     // all three policy fields restated per branch: rules (with the
     // compiled wildcard regex), first-valid delay under stacking-end
     // semantics, group-independent sitemaps; rule-less docs emit one
     // outer row of NULL rule fields
-    "q247_robots_policy" ->
+    Gate("q247_robots_policy", Family.Crawl, robotsPolicy, _ =>
       """WITH d AS (SELECT doc_id AS i, doc_id % 4 AS k,
         |    CAST(doc_id % 4 AS VARCHAR) AS ks FROM documents),
         |r AS (
@@ -1385,11 +1383,11 @@ private[graft] trait OraclesRound16 { this: OracleSnippets =>
         |  CASE k WHEN 0 THEN 2 WHEN 2 THEN 1 ELSE 0 END AS n_rules,
         |  r.rule_idx, r.prefix, r.allow, r.rx
         |FROM d JOIN r ON d.i = r.i
-        |ORDER BY doc_id, rule_idx""".stripMargin,
+        |ORDER BY doc_id, rule_idx""".stripMargin),
 
     // canonical URL and its SURT key per branch; the ORDER BY surt
     // makes the domain-contiguity property itself hash-visible
-    "q248_surt_keys" ->
+    Gate("q248_surt_keys", Family.Crawl, surtKeys, _ =>
       """WITH d AS (SELECT doc_id AS i, CAST(doc_id % 5 AS VARCHAR) AS k,
         |    doc_id % 3 AS m, CAST(doc_id % 3 AS VARCHAR) AS ms
         |  FROM documents)
@@ -1402,12 +1400,12 @@ private[graft] trait OraclesRound16 { this: OracleSnippets =>
         |         'com,shop' || k || ',a)/x/' || ms || '?id=' || ms
         |       WHEN m = 1 THEN 'com,shop' || k || ')/y'
         |       ELSE '10.0.' || k || '.1)/z' END AS surt
-        |FROM d ORDER BY surt, doc_id""".stripMargin,
+        |FROM d ORDER BY surt, doc_id""".stripMargin),
 
     // the Unicode text per charset branch, stated literally — a decoder
     // that guessed, mojibake'd, or framed through a UTF-8 view changes
     // rows; the unknown-charset branch must stay NULL
-    "q230_charset_jre_decode" ->
+    Gate("q230_charset_jre_decode", Family.Crawl, charsetJreDecode, _ =>
       """WITH d AS (SELECT doc_id AS i, CAST(doc_id % 7 AS VARCHAR) AS k
         |  FROM documents)
         |SELECT i AS doc_id,
@@ -1422,6 +1420,6 @@ private[graft] trait OraclesRound16 { this: OracleSnippets =>
         |    WHEN 3 THEN '資料處理 ' || k
         |    WHEN 4 THEN 'данные ' || k
         |    ELSE NULL END AS body_text
-        |FROM d ORDER BY doc_id""".stripMargin
+        |FROM d ORDER BY doc_id""".stripMargin)
   )
 }

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Round-16 second wave. Each query sits next to its DuckDB oracle
-  * (trait pair discipline, VERDICT r9 #4).
+/** Round-16 second wave. Each query sits next to its `Gate` entry and
+  * DuckDB oracle.
   */
-private[graft] trait PipelinesRound16b { this: PipelinesBase =>
+private[graft] trait PipelinesRound16b extends PipelinesBase {
 
   /** JSON-LD structured-data harvest as a hash gate
     * ([[graft.ext.Html.extractJsonLd]] /
@@ -947,10 +947,6 @@ private[graft] trait PipelinesRound16b { this: PipelinesBase =>
         col("_rev").isNotNull.as("reciprocal"))
       .orderBy("src")
   }
-}
-
-/** DuckDB oracle SQL for the [[PipelinesRound16b]] queries. */
-private[graft] trait OraclesRound16b { this: OracleSnippets =>
 
   // ONE revisit ground truth for the batch (q252) and streaming
   // (q265) paths — the stream ≡ batch discipline: two plans, one
@@ -981,13 +977,13 @@ private[graft] trait OraclesRound16b { this: OracleSnippets =>
       |  CASE WHEN rn > 1 THEN ft END AS refers_to_ts
       |FROM d ORDER BY doc_id, crawl""".stripMargin
 
-  protected def sqlRound16b: Map[String, String] = Map(
-    "q265_stream_revisits" -> revisitOracleSql,
+  override def gates: Seq[Gate] = super.gates ++ Seq(
+    Gate("q265_stream_revisits", Family.Streaming, streamRevisits, _ => revisitOracleSql),
 
     // q266: diff arithmetic restated — new-only (i%5=2) → added,
     // old-only (i%7=1) → removed, in-both-classes → absent, stable
     // (i%3=0) → unchanged, rest → changed; host rollup.
-    "q266_crawl_snapshot_diff" ->
+    Gate("q266_crawl_snapshot_diff", Family.Crawl, crawlSnapshotDiff, _ =>
       """WITH b AS (SELECT doc_id, doc_id % 10 AS h,
         |    doc_id % 5 = 2 AS only_new, doc_id % 7 = 1 AS only_old,
         |    doc_id % 3 = 0 AS stable
@@ -1010,11 +1006,11 @@ private[graft] trait OraclesRound16b { this: OracleSnippets =>
         |  CAST(sum(CASE WHEN status = 'unchanged' THEN 1 ELSE 0 END)
         |    AS BIGINT) AS n_unchanged
         |FROM c WHERE status IS NOT NULL
-        |GROUP BY h ORDER BY host""".stripMargin,
+        |GROUP BY h ORDER BY host""".stripMargin),
 
     // q267: expected templates restated per branch — the hex branch
     // masks whole (never digit-shredded), the static path survives.
-    "q267_url_templates" ->
+    Gate("q267_url_templates", Family.Crawl, urlTemplateMining, _ =>
       """WITH b AS (SELECT doc_id, doc_id % 5 AS h, doc_id % 4 AS j
         |  FROM documents),
         |t AS (SELECT h,
@@ -1025,12 +1021,12 @@ private[graft] trait OraclesRound16b { this: OracleSnippets =>
         |  FROM b)
         |SELECT 'tm' || CAST(h AS VARCHAR) || '.com' AS host, template,
         |  CAST(count(*) AS BIGINT) AS n_urls
-        |FROM t GROUP BY host, template ORDER BY host, template""".stripMargin,
+        |FROM t GROUP BY host, template ORDER BY host, template""".stripMargin),
 
     // q268: policy arithmetic restated — 200 applies rules (/priv
     // denied, /pub allowed), 404 allow-all, 5xx disallow-all, 301
     // defers (NULLs), garbage status = NULL = disallow-all.
-    "q268_robots_fetch_policy" ->
+    Gate("q268_robots_fetch_policy", Family.Crawl, robotsFetchPolicy, _ =>
       """WITH b AS (SELECT doc_id, doc_id % 6 AS k FROM documents)
         |SELECT doc_id,
         |  CAST(CASE k WHEN 0 THEN 200 WHEN 1 THEN 404 WHEN 2 THEN 500
@@ -1043,12 +1039,12 @@ private[graft] trait OraclesRound16b { this: OracleSnippets =>
         |       WHEN k IN (2, 3, 5) THEN false END AS allowed_priv,
         |  CASE WHEN k = 0 THEN true WHEN k = 1 THEN true
         |       WHEN k IN (2, 3, 5) THEN false END AS allowed_pub
-        |FROM b ORDER BY doc_id""".stripMargin,
+        |FROM b ORDER BY doc_id""".stripMargin),
     // q249: expected JSON-LD fields restated per branch from the
     // generator arithmetic — k=3 has no block (has_ld false), k=4 is
     // malformed (has_ld true, fields NULL), k=2 takes the FIRST
     // entity of the array (the Article).
-    "q249_jsonld_harvest" ->
+    Gate("q249_jsonld_harvest", Family.Crawl, jsonLdHarvest, _ =>
       """WITH b AS (SELECT doc_id, doc_id % 6 AS k,
         |    CAST(doc_id % 9 AS VARCHAR) AS g,
         |    CAST(doc_id % 9 + 1 AS VARCHAR) AS m
@@ -1065,13 +1061,13 @@ private[graft] trait OraclesRound16b { this: OracleSnippets =>
         |  CASE WHEN k = 1 THEN 'Widget g' || g END AS product_name,
         |  CASE WHEN k = 1 THEN g || '9.99' END AS price,
         |  CASE WHEN k = 1 THEN 'USD' END AS currency
-        |FROM b ORDER BY doc_id""".stripMargin,
+        |FROM b ORDER BY doc_id""".stripMargin),
 
     // q250: directive arithmetic restated — noindex from meta
     // (1,3,6), header (5), and the 'none' shorthand; page-nofollow
     // from meta (2,3,5,6) and header (4); of the five planted links
     // only /a (plain) and /d (rel=sponsored) survive a follow page.
-    "q250_nofollow_links" ->
+    Gate("q250_nofollow_links", Family.Graph, nofollowLinkGraph, _ =>
       """WITH b AS (SELECT doc_id, doc_id % 8 AS k,
         |    CAST(doc_id % 5 AS VARCHAR) AS g
         |  FROM documents)
@@ -1084,13 +1080,13 @@ private[graft] trait OraclesRound16b { this: OracleSnippets =>
         |  CASE WHEN k IN (2, 3, 4, 5, 6) THEN ''
         |       ELSE 'http://t' || g || '.com/a http://t' || g || '.com/d'
         |  END AS kept_hrefs
-        |FROM b ORDER BY doc_id""".stripMargin,
+        |FROM b ORDER BY doc_id""".stripMargin),
 
     // q251: blocklist arithmetic restated — track0..2.com block their
     // ads.* subdomains, bad0/2/4.net block sub.* (bad0 dual-category,
     // sorted), good3.org matches itself exactly, notbad*.net never
     // matches (label suffix, not substring).
-    "q251_blocklist_curation" ->
+    Gate("q251_blocklist_curation", Family.Crawl, blocklistCuration, _ =>
       """WITH b AS (SELECT doc_id, doc_id % 4 AS j, doc_id % 5 AS g,
         |    CAST(doc_id % 5 AS VARCHAR) AS gs
         |  FROM documents)
@@ -1106,17 +1102,17 @@ private[graft] trait OraclesRound16b { this: OracleSnippets =>
         |       ELSE '' END AS categories,
         |  (j = 0 AND g < 3) OR (j = 1 AND g = 3)
         |    OR (j = 2 AND g IN (0, 2, 4)) AS blocked
-        |FROM b ORDER BY doc_id""".stripMargin,
+        |FROM b ORDER BY doc_id""".stripMargin),
 
     // q252: the same md5 + first-capture window replayed in SQL —
     // digest partitions, (ts, url) orders, row 1 is the response
     // (shared with the q265 streaming gate, see revisitOracleSql).
-    "q252_revisit_dedup" -> revisitOracleSql,
+    Gate("q252_revisit_dedup", Family.Crawl, revisitDedup, _ => revisitOracleSql),
 
     // q253: expected entries restated per branch — RSS docs yield
     // items a1/a2 (channel link skipped), Atom docs yield e1/e2/e3
     // resolved against the feed URL (self links skipped).
-    "q253_feed_ingest" ->
+    Gate("q253_feed_ingest", Family.Crawl, feedIngest, _ =>
       """WITH b AS (SELECT doc_id, doc_id % 2 = 0 AS is_rss,
         |    CAST(doc_id % 6 AS VARCHAR) AS g
         |  FROM documents),
@@ -1135,12 +1131,12 @@ private[graft] trait OraclesRound16b { this: OracleSnippets =>
         |       WHEN idx = 0 THEN 'AOne g' || g
         |       WHEN idx = 1 THEN 'ATwo g' || g
         |       ELSE 'AThree g' || g END AS title
-        |FROM e ORDER BY doc_id, idx""".stripMargin,
+        |FROM e ORDER BY doc_id, idx""".stripMargin),
 
     // q254: expected normalized strings restated per branch — the é
     // literals here are PRECOMPOSED (U+00E9); branch k=1 plants the
     // decomposed form and must fold onto them.
-    "q254_unicode_normalize" ->
+    Gate("q254_unicode_normalize", Family.Lm, unicodeNormalizeGate, _ =>
       """WITH b AS (SELECT doc_id, doc_id % 5 AS k,
         |    CAST(doc_id AS VARCHAR) AS s
         |  FROM documents)
@@ -1155,13 +1151,13 @@ private[graft] trait OraclesRound16b { this: OracleSnippets =>
         |       ELSE 'plain ascii ' || s END AS nfkc,
         |  k = 1 AS changed_nfc,
         |  k IN (1, 2, 3) AS changed_nfkc
-        |FROM b ORDER BY doc_id""".stripMargin,
+        |FROM b ORDER BY doc_id""".stripMargin),
 
     // q255: family arithmetic restated — every block of four doc_ids
     // is one alias family whose component minimum is the '/old' url
     // ('old' < 'older' < 'page' < the mirror host). Assumes the doc
     // count is a multiple of 4 (all driver SFs are).
-    "q255_alias_clusters" ->
+    Gate("q255_alias_clusters", Family.Graph, aliasClusterGate, _ =>
       """WITH b AS (SELECT doc_id, doc_id % 4 AS m,
         |    CAST(doc_id // 4 AS VARCHAR) AS f
         |  FROM documents)
@@ -1172,12 +1168,12 @@ private[graft] trait OraclesRound16b { this: OracleSnippets =>
         |       ELSE 'http://fam' || f || '.com/older' END AS url,
         |  'http://fam' || f || '.com/old' AS cluster_rep,
         |  CAST(4 AS BIGINT) AS cluster_size
-        |FROM b ORDER BY doc_id""".stripMargin,
+        |FROM b ORDER BY doc_id""".stripMargin),
 
     // q256: the q139 wrapped-separator replace chain (same merge
     // table) rolled up by lang; ratios quantized to ppm in double
     // arithmetic on both engines.
-    "q256_tokenizer_fertility" -> {
+    Gate("q256_tokenizer_fertility", Family.Lm, tokenizerFertility, _ => {
       val SEP = "\u001f"
       val wrapped =
         s"array_to_string(list_transform(range(1, length(w)+1), i -> '$SEP' || substr(w, i, 1) || '$SEP'), '')"
@@ -1205,12 +1201,12 @@ private[graft] trait OraclesRound16b { this: OracleSnippets =>
          |  CAST(floor(CAST(np AS DOUBLE) * 100000000e0 / CAST(nc AS DOUBLE)
          |    + 0.5e0) AS BIGINT) AS pieces_per_100c_ppm
          |FROM a ORDER BY lang""".stripMargin
-    },
+    }),
 
     // q257: the exact compact JSON restated by concatenation —
     // to_json emits schema-ordered fields, no whitespace; the
     // link-less branch keeps "Links":[].
-    "q257_wat_metadata" ->
+    Gate("q257_wat_metadata", Family.Crawl, watMetadata, _ =>
       """WITH b AS (SELECT doc_id, CAST(doc_id % 7 AS VARCHAR) AS g,
         |    doc_id % 4 = 3 AS nolinks
         |  FROM documents)
@@ -1226,12 +1222,12 @@ private[graft] trait OraclesRound16b { this: OracleSnippets =>
         |       ELSE '[{"url":"/a' || g || '"},{"url":"http://x' || g
         |         || '.org/b"}]' END
         |    || '}}}}}' AS wat_json
-        |FROM b ORDER BY doc_id""".stripMargin,
+        |FROM b ORDER BY doc_id""".stripMargin),
 
     // q258: change arithmetic restated — a URL changed unless it is a
     // mirror doc (d%10=1) or a stable doc (d%3=0); host rollup,
     // ppm-quantized rate, rank by (rate desc, host).
-    "q258_recrawl_priority" ->
+    Gate("q258_recrawl_priority", Family.Crawl, recrawlPriority, _ =>
       """WITH b AS (SELECT doc_id, doc_id % 10 AS h,
         |    NOT (doc_id % 10 = 1 OR doc_id % 3 = 0) AS changed
         |  FROM documents),
@@ -1247,12 +1243,12 @@ private[graft] trait OraclesRound16b { this: OracleSnippets =>
         |SELECT host, n_urls, n_changed, change_ppm,
         |  CAST(rank() OVER (ORDER BY change_ppm DESC, host) AS BIGINT)
         |    AS recrawl_rank
-        |FROM p ORDER BY host""".stripMargin,
+        |FROM p ORDER BY host""".stripMargin),
 
     // q259: refresh arithmetic restated — k=0/4 immediate, k=1 quoted
     // uppercase URL with delay 5, k=2 reload-only (url NULL), k=3 no
     // tag, k=5 malformed delay with live target.
-    "q259_meta_refresh" ->
+    Gate("q259_meta_refresh", Family.Crawl, metaRefreshRedirects, _ =>
       """WITH b AS (SELECT doc_id, doc_id % 6 AS k,
         |    CAST(doc_id % 5 AS VARCHAR) AS g
         |  FROM documents)
@@ -1268,12 +1264,12 @@ private[graft] trait OraclesRound16b { this: OracleSnippets =>
         |       WHEN k = 4 THEN 'http://mr' || g || '.com/dir/page.html'
         |       WHEN k = 5 THEN 'http://mr' || g || '.com/x'
         |  END AS target_url
-        |FROM b ORDER BY doc_id""".stripMargin,
+        |FROM b ORDER BY doc_id""".stripMargin),
 
     // q260: two-stage resolution restated — the base (absolute,
     // relative, or absent) retargets the relative links; absolute
     // links ignore it.
-    "q260_base_href_links" ->
+    Gate("q260_base_href_links", Family.Crawl, baseHrefLinks, _ =>
       """WITH b AS (SELECT doc_id, doc_id % 4 AS j,
         |    CAST(doc_id % 5 AS VARCHAR) AS g
         |  FROM documents),
@@ -1292,12 +1288,12 @@ private[graft] trait OraclesRound16b { this: OracleSnippets =>
         |         ELSE 'http://abs.com/x' END AS resolved_url
         |  FROM b)
         |SELECT doc_id, CAST(idx AS BIGINT) AS idx, href, resolved_url
-        |FROM e ORDER BY doc_id, idx""".stripMargin,
+        |FROM e ORDER BY doc_id, idx""".stripMargin),
 
     // q261: sitemap metadata restated — full-metadata, loc-only, and
     // malformed-priority (NULL) blocks; due_soon = daily/weekly OR
     // stale lastmod.
-    "q261_sitemap_metadata" ->
+    Gate("q261_sitemap_metadata", Family.Crawl, sitemapEntryMetadata, _ =>
       """WITH b AS (SELECT doc_id, CAST(doc_id % 9 AS VARCHAR) AS g,
         |    CAST(doc_id % 9 + 1 AS VARCHAR) AS m
         |  FROM documents),
@@ -1316,13 +1312,13 @@ private[graft] trait OraclesRound16b { this: OracleSnippets =>
         |  FROM b)
         |SELECT doc_id, CAST(idx AS BIGINT) AS idx, loc, lastmod, changefreq,
         |  priority, due_soon
-        |FROM e ORDER BY doc_id, idx""".stripMargin,
+        |FROM e ORDER BY doc_id, idx""".stripMargin),
 
     // q262: the variant map restated — en/x-default (k=0), en/fr/
     // x-default with case-folded FR (k=1), alternate-free page (k=2,
     // one NULL row from the outer explode); the feed link (no
     // hreflang) and the stylesheet never appear.
-    "q262_hreflang_variants" ->
+    Gate("q262_hreflang_variants", Family.Crawl, hreflangVariants, _ =>
       """WITH b AS (SELECT doc_id, doc_id % 3 AS k,
         |    CAST(doc_id % 5 AS VARCHAR) AS g
         |  FROM documents),
@@ -1343,13 +1339,13 @@ private[graft] trait OraclesRound16b { this: OracleSnippets =>
         |  SELECT doc_id, 2, 'x-default', 'http://hl' || g || '.com/p'
         |  FROM b WHERE k = 1)
         |SELECT doc_id, idx, lang, href
-        |FROM e ORDER BY doc_id, idx""".stripMargin,
+        |FROM e ORDER BY doc_id, idx""".stripMargin),
 
     // q263: the unified frontier restated from channel arithmetic —
     // per residue family g: /a = link+sitemap (2 refs/doc), /b =
     // feed+link (the utm param dies in canonicalization), /c =
     // refresh from EVEN docs only, /d = hreflang.
-    "q263_frontier_unify" ->
+    Gate("q263_frontier_unify", Family.Crawl, frontierUnify, _ =>
       """WITH d AS (SELECT doc_id, doc_id % 10 AS g,
         |    (doc_id // 10) % 2 = 0 AS even
         |  FROM documents),
@@ -1369,12 +1365,12 @@ private[graft] trait OraclesRound16b { this: OracleSnippets =>
         |  SELECT 'http://f' || CAST(g AS VARCHAR) || '.com/d',
         |    'hreflang', ng FROM c)
         |SELECT url, channels, CAST(n_refs AS BIGINT) AS n_refs
-        |FROM e ORDER BY url""".stripMargin,
+        |FROM e ORDER BY url""".stripMargin),
 
     // q264: the same first-occurrence window replayed in SQL — the
     // dedupable key is the trimmed line, exempt (blank) rows get a
     // unique key, first (doc_id, pos) wins globally.
-    "q264_line_dedup_global" ->
+    Gate("q264_line_dedup_global", Family.Dedup, lineDedupGlobal, _ =>
       """WITH f AS (SELECT doc_id,
         |    'Shared Header ' || CAST(doc_id % 4 AS VARCHAR) || chr(10) ||
         |    text || chr(10) || chr(10) ||
@@ -1399,11 +1395,11 @@ private[graft] trait OraclesRound16b { this: OracleSnippets =>
         |  CAST(count(*) AS BIGINT) AS n_lines,
         |  CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_removed
-        |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // q269: trap arithmetic replayed data-driven — counts from the
     // same residue classes, share quantized, the ≥60% + '{n}' rule.
-    "q269_crawl_traps" ->
+    Gate("q269_crawl_traps", Family.Crawl, crawlTrapDetection, _ =>
       """WITH b AS (SELECT doc_id, doc_id % 4 AS h,
         |    (doc_id // 4) % 2 = 1 AS alt
         |  FROM documents),
@@ -1424,12 +1420,12 @@ private[graft] trait OraclesRound16b { this: OracleSnippets =>
         |    + 0.5e0) AS BIGINT) AS share_pct,
         |  floor(CAST(n AS DOUBLE) * 100.0e0 / CAST(tot AS DOUBLE) + 0.5e0)
         |    >= 60 AND template LIKE '%{n}%' AS trap
-        |FROM w ORDER BY host, template""".stripMargin,
+        |FROM w ORDER BY host, template""".stripMargin),
 
     // q270: reciprocity restated — even pages always declare their
     // sibling (reciprocal unless the f%3=0 odd page omitted the
     // backlink); surviving odd-page edges are always reciprocal.
-    "q270_hreflang_reciprocity" ->
+    Gate("q270_hreflang_reciprocity", Family.Crawl, hreflangReciprocity, _ =>
       """WITH b AS (SELECT doc_id, doc_id // 2 AS f, doc_id % 2 = 0 AS ev
         |  FROM documents),
         |e AS (
@@ -1441,6 +1437,6 @@ private[graft] trait OraclesRound16b { this: OracleSnippets =>
         |  SELECT 'http://hr' || CAST(f AS VARCHAR) || '.com/fr',
         |    'http://hr' || CAST(f AS VARCHAR) || '.com/en', 'en', true
         |  FROM b WHERE NOT ev AND f % 3 <> 0)
-        |SELECT src, dst, lang, reciprocal FROM e ORDER BY src""".stripMargin,
+        |SELECT src, dst, lang, reciprocal FROM e ORDER BY src""".stripMargin),
   )
 }

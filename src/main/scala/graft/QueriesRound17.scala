@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Round-17 wave. Each query sits next to its DuckDB oracle
-  * (trait pair discipline, VERDICT r9 #4).
+/** Round-17 wave. Each query sits next to its `Gate` entry and
+  * DuckDB oracle.
   */
-private[graft] trait PipelinesRound17 { this: PipelinesBase =>
+private[graft] trait PipelinesRound17 extends PipelinesBase {
 
   /** Full HTML character-reference decoding as a hash gate
     * ([[graft.functions.HtmlEntityExpressions.HtmlEntityDecode]]
@@ -335,16 +335,13 @@ private[graft] trait PipelinesRound17 { this: PipelinesBase =>
         concat_ws("|", col("cells")).as("cells"))
       .orderBy("doc_id", "table_idx", "row_idx")
   }
-}
 
-private[graft] trait OraclesRound17 { this: OracleSnippets =>
-
-  protected def sqlRound17: Map[String, String] = Map(
+  override def gates: Seq[Gate] = super.gates ++ Seq(
     // q271: the generator arithmetic restated with DECODED literals —
     // ’/—/é/€/… below are the real code points, U+FFFD for the
     // surrogate branch; the double-escape branch stays TEXT (&lt;)
     // and the k=5 degradations stay verbatim.
-    "q271_entity_decode" ->
+    Gate("q271_entity_decode", Family.Crawl, entityDecode, _ =>
       """WITH b AS (SELECT doc_id, doc_id % 6 AS k,
         |    CAST(doc_id AS VARCHAR) AS s
         |  FROM documents),
@@ -365,13 +362,13 @@ private[graft] trait OraclesRound17 { this: OracleSnippets =>
         |    ' paragraph body text long enough to keep.' AS main_text,
         |  'T ' || s AS title,
         |  CAST(length(text) AS BIGINT) AS n_chars
-        |FROM o ORDER BY doc_id""".stripMargin,
+        |FROM o ORDER BY doc_id""".stripMargin),
 
     // q272: the span table restated from the family arithmetic — the
     // host's two touching-but-unchained windows stay split, the pair
     // passage is one exact-boundary span, and n_removed is the window
     // union (5+12 / 4+12 / 12) per role.
-    "q272_maximal_spans" ->
+    Gate("q272_maximal_spans", Family.Dedup, maximalSpanGate, _ =>
       """WITH b AS (SELECT doc_id, doc_id % 4 AS r,
         |    CAST(doc_id // 4 AS VARCHAR) AS f,
         |    CAST(doc_id // 2 AS VARCHAR) AS h
@@ -397,11 +394,11 @@ private[graft] trait OraclesRound17 { this: OracleSnippets =>
         |  CAST(CASE WHEN r = 0 THEN 17 WHEN r = 3 THEN 12
         |            ELSE 16 END AS BIGINT) AS n_removed
         |FROM s JOIN b USING (doc_id)
-        |ORDER BY doc_id, start_pos""".stripMargin,
+        |ORDER BY doc_id, start_pos""".stripMargin),
 
     // q273: the per-URL total order restated — unique (ppm, url) sort
     // pairs make row_number ≡ rank ≡ the GlobalIndex offset + 1.
-    "q273_recrawl_order" ->
+    Gate("q273_recrawl_order", Family.Crawl, recrawlOrderGate, _ =>
       """WITH b AS (SELECT doc_id, CAST(doc_id AS VARCHAR) AS s,
         |    doc_id % 10 AS g, doc_id % 3 AS m3
         |  FROM documents),
@@ -414,12 +411,12 @@ private[graft] trait OraclesRound17 { this: OracleSnippets =>
         |  CAST(changed * 1000000 AS BIGINT) AS change_ppm,
         |  CAST(row_number() OVER (ORDER BY changed * 1000000 DESC, url)
         |    AS BIGINT) AS recrawl_rank
-        |FROM u ORDER BY url""".stripMargin,
+        |FROM u ORDER BY url""".stripMargin),
 
     // q274: the decision table restated from the branch arithmetic —
     // robots-denied/unresolved hosts skip, volatile URLs fetch, stable
     // URLs revalidate iff a validator was stored.
-    "q274_conditional_fetch" ->
+    Gate("q274_conditional_fetch", Family.Crawl, conditionalFetchGate, _ =>
       """WITH b AS (SELECT doc_id, doc_id % 10 AS g, doc_id % 4 AS v,
         |    doc_id % 3 AS m3, CAST(doc_id AS VARCHAR) AS s
         |  FROM documents)
@@ -434,11 +431,11 @@ private[graft] trait OraclesRound17 { this: OracleSnippets =>
         |       WHEN NOT (g = 1 OR m3 = 0) THEN 'fetch'
         |       WHEN v IN (0, 1, 2) THEN 'conditional'
         |       ELSE 'fetch' END AS decision
-        |FROM b ORDER BY doc_id""".stripMargin,
+        |FROM b ORDER BY doc_id""".stripMargin),
 
     // q275: the expected Markdown restated with E'' escapes — title
     // prose first, the #-run by level, inline marks inside the link.
-    "q275_html_markdown" ->
+    Gate("q275_html_markdown", Family.Crawl, htmlMarkdownGate, _ =>
       """WITH b AS (SELECT doc_id, CAST(doc_id % 3 + 1 AS INTEGER) AS lvl,
         |    CAST(doc_id % 5 AS VARCHAR) AS g, CAST(doc_id AS VARCHAR) AS s
         |  FROM documents),
@@ -452,12 +449,12 @@ private[graft] trait OraclesRound17 { this: OracleSnippets =>
         |SELECT doc_id, markdown,
         |  CAST(length(markdown) - length(replace(markdown, E'\n', ''))
         |    + 1 AS BIGINT) AS n_lines
-        |FROM m ORDER BY doc_id""".stripMargin,
+        |FROM m ORDER BY doc_id""".stripMargin),
 
     // q276: folded strings and group sizes restated — branches 0-3
     // share one lower() key (group of 4), the control keeps its own
     // key with ß surviving.
-    "q276_diacritic_fold" ->
+    Gate("q276_diacritic_fold", Family.Lm, diacriticFoldGate, _ =>
       """WITH b AS (SELECT doc_id, doc_id % 5 AS k,
         |    CAST(doc_id // 5 AS VARCHAR) AS f
         |  FROM documents)
@@ -470,12 +467,12 @@ private[graft] trait OraclesRound17 { this: OracleSnippets =>
         |  CASE WHEN k = 4 THEN 'manana straße ' || f
         |       ELSE 'cafe con leche ' || f END AS match_key,
         |  CAST(CASE WHEN k = 4 THEN 1 ELSE 4 END AS BIGINT) AS group_n
-        |FROM b ORDER BY doc_id""".stripMargin,
+        |FROM b ORDER BY doc_id""".stripMargin),
 
     // q277: the grid restated row-by-row — the header row, the two
     // data rows (bold stripped, entity decoded, padding collapsed),
     // and the every-third-doc second table.
-    "q277_table_extract" ->
+    Gate("q277_table_extract", Family.Crawl, tableExtractGate, _ =>
       """WITH b AS (SELECT doc_id, CAST(doc_id % 7 AS VARCHAR) AS g,
         |    CAST(doc_id AS VARCHAR) AS s, doc_id % 3 = 0 AS extra
         |  FROM documents),
@@ -490,5 +487,5 @@ private[graft] trait OraclesRound17 { this: OracleSnippets =>
         |  SELECT doc_id, 1, 0, 'extra ' || g FROM b WHERE extra)
         |SELECT doc_id, CAST(table_idx AS BIGINT) AS table_idx,
         |  CAST(row_idx AS BIGINT) AS row_idx, cells
-        |FROM r ORDER BY doc_id, table_idx, row_idx""".stripMargin)
+        |FROM r ORDER BY doc_id, table_idx, row_idx""".stripMargin))
 }

@@ -4,10 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round-18 wave: the r17 verdict's polish-and-composition asks.
-  * Each query sits next to its DuckDB oracle (trait pair discipline,
-  * VERDICT r9 #4).
+  * Each query sits next to its `Gate` entry and DuckDB oracle.
   */
-private[graft] trait PipelinesRound18 { this: PipelinesBase =>
+private[graft] trait PipelinesRound18 extends PipelinesBase {
 
   /** Markdown STRUCTURAL completeness as a hash gate
     * ([[graft.ext.Html.toMarkdown]], r17 verdict ask #1): each doc is
@@ -636,14 +635,11 @@ private[graft] trait PipelinesRound18 { this: PipelinesBase =>
           .otherwise(col("r") > 400).as("in_band"))
       .orderBy("doc_id")
   }
-}
 
-private[graft] trait OraclesRound18 { this: OracleSnippets =>
-
-  protected def sqlRound18: Map[String, String] = Map(
+  override def gates: Seq[Gate] = super.gates ++ Seq(
     // q278: the expected Markdown restated with E'' escapes — ol
     // numbers, quoted lines, the two-space nested indent, the badge.
-    "q278_markdown_struct" ->
+    Gate("q278_markdown_struct", Family.Crawl, markdownStructGate, _ =>
       """WITH b AS (SELECT doc_id, CAST(doc_id % 3 + 1 AS INTEGER) AS lvl,
         |    CAST(doc_id % 5 AS VARCHAR) AS g, CAST(doc_id AS VARCHAR) AS s
         |  FROM documents),
@@ -663,12 +659,12 @@ private[graft] trait OraclesRound18 { this: OracleSnippets =>
         |SELECT doc_id, markdown,
         |  CAST(length(markdown) - length(replace(markdown, E'\n', ''))
         |    + 1 AS BIGINT) AS n_lines
-        |FROM m ORDER BY doc_id""".stripMargin,
+        |FROM m ORDER BY doc_id""".stripMargin),
 
     // q279: the expanded rectangle restated — the colspan duplicate,
     // the rowspan re-occupation shifting row 2, the padded tail row,
     // and the every-third-doc second table.
-    "q279_table_grid" ->
+    Gate("q279_table_grid", Family.Crawl, tableGridGate, _ =>
       """WITH b AS (SELECT doc_id, CAST(doc_id % 7 AS VARCHAR) AS g,
         |    CAST(doc_id AS VARCHAR) AS s, doc_id % 3 = 0 AS extra
         |  FROM documents),
@@ -686,12 +682,12 @@ private[graft] trait OraclesRound18 { this: OracleSnippets =>
         |  SELECT doc_id, 1, 0, FALSE, 'extra ' || g FROM b WHERE extra)
         |SELECT doc_id, CAST(table_idx AS BIGINT) AS table_idx,
         |  CAST(row_idx AS BIGINT) AS row_idx, is_header, cells
-        |FROM r ORDER BY doc_id, table_idx, row_idx""".stripMargin,
+        |FROM r ORDER BY doc_id, table_idx, row_idx""".stripMargin),
 
     // q280: decoded literals per branch — ©/é/</>/&/£/° where legacy
     // decode applies, verbatim where the alnum/= guards block it, and
     // the double-escape staying single-pass TEXT.
-    "q280_legacy_entities" ->
+    Gate("q280_legacy_entities", Family.Crawl, legacyEntityGate, _ =>
       """WITH b AS (SELECT doc_id, doc_id % 6 AS k,
         |    CAST(doc_id AS VARCHAR) AS s
         |  FROM documents),
@@ -704,22 +700,22 @@ private[graft] trait OraclesRound18 { this: OracleSnippets =>
         |       ELSE '5£, 20° C &lt; kept ' || s END AS text
         |  FROM b)
         |SELECT doc_id, text, CAST(length(text) AS BIGINT) AS n_chars
-        |FROM e ORDER BY doc_id""".stripMargin,
+        |FROM e ORDER BY doc_id""".stripMargin),
 
     // q281: one folded pair per family at distance 1 — the three
     // diacritic variants collapse onto the canonical key.
-    "q281_folded_fuzzy" ->
+    Gate("q281_folded_fuzzy", Family.Dedup, foldedFuzzyGate, _ =>
       """WITH f AS (SELECT DISTINCT
         |    repeat(CAST((doc_id // 4) % 50 AS VARCHAR), 3) AS fam
         |  FROM documents)
         |SELECT 'jose nunes ' || fam AS name_a,
         |  'jose nunez ' || fam AS name_b, CAST(1 AS INT) AS dist
-        |FROM f ORDER BY name_a, name_b""".stripMargin,
+        |FROM f ORDER BY name_a, name_b""".stripMargin),
 
     // q282: one cluster of 4 per family, representative = the folded
     // minimum key; original urls (precomposed AND decomposed bytes)
     // survive in the output.
-    "q282_folded_aliases" ->
+    Gate("q282_folded_aliases", Family.Crawl, foldedAliasGate, _ =>
       ("""WITH b AS (SELECT doc_id, doc_id % 4 AS m,
         |    CAST(doc_id // 4 AS VARCHAR) AS f
         |  FROM documents)
@@ -732,12 +728,12 @@ private[graft] trait OraclesRound18 { this: OracleSnippets =>
         |       ELSE 'http://fam' || f || '.com/old' END AS url,
         |  'http://fam' || f || '.com/jose' AS cluster_rep,
         |  CAST(4 AS BIGINT) AS cluster_size
-        |FROM b ORDER BY doc_id""".stripMargin),
+        |FROM b ORDER BY doc_id""".stripMargin)),
 
     // q284: the fenced Markdown restated — the pre body byte-exact
     // (tab via chr(9), double spaces literal, blank line kept, &lt;
     // decoded once), the hr as ---.
-    "q284_markdown_fences" ->
+    Gate("q284_markdown_fences", Family.Crawl, markdownFenceGate, _ =>
       """WITH b AS (SELECT doc_id, CAST(doc_id AS VARCHAR) AS s
         |  FROM documents),
         |m AS (SELECT doc_id,
@@ -751,12 +747,12 @@ private[graft] trait OraclesRound18 { this: OracleSnippets =>
         |SELECT doc_id, markdown,
         |  CAST(length(markdown) - length(replace(markdown, E'\n', ''))
         |    + 1 AS BIGINT) AS n_lines
-        |FROM m ORDER BY doc_id""".stripMargin,
+        |FROM m ORDER BY doc_id""".stripMargin),
 
     // q285: the GFM table restated — header + separator + data rows,
     // bold cell kept inline, entity decoded once, colspan duplicated,
     // pipe escaped.
-    "q285_markdown_tables" ->
+    Gate("q285_markdown_tables", Family.Crawl, markdownTableGate, _ =>
       """WITH b AS (SELECT doc_id, CAST(doc_id AS VARCHAR) AS s,
         |    CAST(doc_id % 7 AS VARCHAR) AS g
         |  FROM documents),
@@ -771,12 +767,12 @@ private[graft] trait OraclesRound18 { this: OracleSnippets =>
         |SELECT doc_id, markdown,
         |  CAST(length(markdown) - length(replace(markdown, E'\n', ''))
         |    + 1 AS BIGINT) AS n_lines
-        |FROM m ORDER BY doc_id""".stripMargin,
+        |FROM m ORDER BY doc_id""".stripMargin),
 
     // q286: the Markdown-Extra definition list restated — term lines,
     // ': ' definition lines, blank line between term groups, entity
     // decoded, bold kept inline.
-    "q286_markdown_dl" ->
+    Gate("q286_markdown_dl", Family.Crawl, markdownDlGate, _ =>
       """WITH b AS (SELECT doc_id, CAST(doc_id AS VARCHAR) AS s,
         |    CAST(doc_id % 5 AS VARCHAR) AS g
         |  FROM documents),
@@ -792,12 +788,12 @@ private[graft] trait OraclesRound18 { this: OracleSnippets =>
         |SELECT doc_id, markdown,
         |  CAST(length(markdown) - length(replace(markdown, E'\n', ''))
         |    + 1 AS BIGINT) AS n_lines
-        |FROM m ORDER BY doc_id""".stripMargin,
+        |FROM m ORDER BY doc_id""".stripMargin),
 
     // q287: the render-ordered grid restated — head row (header flag),
     // body rows, tfoot LAST; both source shapes (streaming tfoot-first
     // and close-less in-order) produce the SAME rectangle.
-    "q287_table_sections" ->
+    Gate("q287_table_sections", Family.Crawl, tableSectionsGate, _ =>
       """WITH b AS (SELECT doc_id, CAST(doc_id AS VARCHAR) AS s,
         |    CAST(doc_id % 7 AS VARCHAR) AS g
         |  FROM documents),
@@ -809,12 +805,12 @@ private[graft] trait OraclesRound18 { this: OracleSnippets =>
         |  UNION ALL SELECT doc_id, 3, FALSE, 'total ' || s FROM b)
         |SELECT doc_id, CAST(0 AS BIGINT) AS table_idx,
         |  CAST(row_idx AS BIGINT) AS row_idx, is_header, cells
-        |FROM r ORDER BY doc_id, table_idx, row_idx""".stripMargin,
+        |FROM r ORDER BY doc_id, table_idx, row_idx""".stripMargin),
 
     // q288: fence info strings per branch — language-python on the
     // inner code, lang-SQL folded on the pre, clang-format NOT a
     // match, class-less bare.
-    "q288_fence_lang" ->
+    Gate("q288_fence_lang", Family.Crawl, fenceLangGate, _ =>
       """WITH b AS (SELECT doc_id, doc_id % 4 AS k,
         |    CAST(doc_id AS VARCHAR) AS s
         |  FROM documents),
@@ -829,13 +825,13 @@ private[graft] trait OraclesRound18 { this: OracleSnippets =>
         |SELECT doc_id, markdown,
         |  CAST(length(markdown) - length(replace(markdown, E'\n', ''))
         |    + 1 AS BIGINT) AS n_lines
-        |FROM m ORDER BY doc_id""".stripMargin,
+        |FROM m ORDER BY doc_id""".stripMargin),
 
     // q289: the conversion records restated — expected Markdown per
     // (doc, record), its UTF-8 octet length (é is 2 bytes) as
     // content_length, the structure (heading, bullets, GFM table,
     // tagged fence) surviving both archive hops.
-    "q289_markdown_corpus" ->
+    Gate("q289_markdown_corpus", Family.Crawl, markdownCorpusGate, _ =>
       """WITH d AS (SELECT doc_id AS i, CAST(doc_id % 7 AS VARCHAR) AS k
         |    FROM documents),
         |js AS (SELECT 0 AS j UNION ALL SELECT 1),
@@ -853,12 +849,12 @@ private[graft] trait OraclesRound18 { this: OracleSnippets =>
         |  md AS md_text,
         |  CAST(length(md) - length(replace(md, E'\n', '')) + 1 AS BIGINT)
         |    AS n_lines
-        |FROM r ORDER BY doc_id, rec_idx""".stripMargin,
+        |FROM r ORDER BY doc_id, rec_idx""".stripMargin),
 
     // q290: the clipped rectangles restated — the tbody rowspan stops
     // at its group end (tfoot un-shifted, un-filled), rowspan=0 fills
     // to the group end only, the single-cell tfoot row pads.
-    "q290_rowgroup_clip" ->
+    Gate("q290_rowgroup_clip", Family.Crawl, rowgroupClipGate, _ =>
       """WITH b AS (SELECT doc_id, CAST(doc_id AS VARCHAR) AS s,
         |    CAST(doc_id % 7 AS VARCHAR) AS g, doc_id % 2 = 0 AS extra
         |  FROM documents),
@@ -877,12 +873,12 @@ private[graft] trait OraclesRound18 { this: OracleSnippets =>
         |  UNION ALL SELECT doc_id, 1, 2, FALSE, 'f|' FROM b WHERE extra)
         |SELECT doc_id, CAST(table_idx AS BIGINT) AS table_idx,
         |  CAST(row_idx AS BIGINT) AS row_idx, is_header, cells
-        |FROM r ORDER BY doc_id, table_idx, row_idx""".stripMargin,
+        |FROM r ORDER BY doc_id, table_idx, row_idx""".stripMargin),
 
     // q291: the expected Markdown restated per block — strikethrough,
     // the caption paragraph, the padded code span, the escalated
     // 4-backtick fence around a ``` body line.
-    "q291_markdown_inline" ->
+    Gate("q291_markdown_inline", Family.Crawl, markdownInlineGate, _ =>
       """WITH b AS (SELECT doc_id, CAST(doc_id AS VARCHAR) AS s,
         |    CAST(doc_id % 5 AS VARCHAR) AS g
         |  FROM documents),
@@ -898,12 +894,12 @@ private[graft] trait OraclesRound18 { this: OracleSnippets =>
         |SELECT doc_id, markdown,
         |  CAST(length(markdown) - length(replace(markdown, E'\n', ''))
         |    + 1 AS BIGINT) AS n_lines
-        |FROM m ORDER BY doc_id""".stripMargin,
+        |FROM m ORDER BY doc_id""".stripMargin),
 
     // q292: the resumed numbering restated — 1. 2. / 3. 4. around the
     // prose break, the nested start=5 list indented, the data-start
     // decoy back at 1.
-    "q292_ol_start" ->
+    Gate("q292_ol_start", Family.Crawl, olStartGate, _ =>
       """WITH b AS (SELECT doc_id, CAST(doc_id AS VARCHAR) AS s,
         |    CAST(doc_id % 5 AS VARCHAR) AS g
         |  FROM documents),
@@ -918,12 +914,12 @@ private[graft] trait OraclesRound18 { this: OracleSnippets =>
         |SELECT doc_id, markdown,
         |  CAST(length(markdown) - length(replace(markdown, E'\n', ''))
         |    + 1 AS BIGINT) AS n_lines
-        |FROM m ORDER BY doc_id""".stripMargin,
+        |FROM m ORDER BY doc_id""".stripMargin),
 
     // q293: the main-content Markdown restated — heading, prose,
     // numbered list, GFM table; every chrome string (SEO title, menu,
     // banner, promo, copyright) absent.
-    "q293_main_markdown" ->
+    Gate("q293_main_markdown", Family.Crawl, mainMarkdownGate, _ =>
       """WITH b AS (SELECT doc_id, CAST(doc_id AS VARCHAR) AS s,
         |    CAST(doc_id % 5 AS VARCHAR) AS g
         |  FROM documents),
@@ -937,11 +933,11 @@ private[graft] trait OraclesRound18 { this: OracleSnippets =>
         |SELECT doc_id, markdown,
         |  CAST(length(markdown) - length(replace(markdown, E'\n', ''))
         |    + 1 AS BIGINT) AS n_lines
-        |FROM m ORDER BY doc_id""".stripMargin,
+        |FROM m ORDER BY doc_id""".stripMargin),
 
     // q294: class, byte length (ASCII fixtures: octet = char length;
     // md5 hex is 32 chars per link), and the band verdict TRUE.
-    "q294_compress_ratio" ->
+    Gate("q294_compress_ratio", Family.Lm, compressRatioGate, _ =>
       """WITH b AS (SELECT doc_id, doc_id % 3 AS k,
         |    CAST(doc_id AS VARCHAR) AS s
         |  FROM documents)
@@ -950,11 +946,11 @@ private[graft] trait OraclesRound18 { this: OracleSnippets =>
         |            WHEN k = 1 THEN 568 + length(s)
         |            ELSE 512 + length(s) END AS BIGINT) AS n_bytes,
         |  TRUE AS in_band
-        |FROM b ORDER BY doc_id""".stripMargin,
+        |FROM b ORDER BY doc_id""".stripMargin),
 
     // q283: the q272 span table with witnessed = TRUE — every span in
     // the family fixture has a verbatim witness doc.
-    "q283_span_verify" ->
+    Gate("q283_span_verify", Family.Lm, spanVerifyGate, _ =>
       """WITH b AS (SELECT doc_id, doc_id % 4 AS r,
         |    CAST(doc_id // 4 AS VARCHAR) AS f,
         |    CAST(doc_id // 2 AS VARCHAR) AS h
@@ -978,5 +974,5 @@ private[graft] trait OraclesRound18 { this: OracleSnippets =>
         |SELECT doc_id, CAST(start_pos AS BIGINT) AS start_pos,
         |  CAST(span_len AS BIGINT) AS span_len, span_text,
         |  TRUE AS witnessed
-        |FROM s ORDER BY doc_id, start_pos""".stripMargin)
+        |FROM s ORDER BY doc_id, start_pos""".stripMargin))
 }

@@ -13,12 +13,8 @@ import graft.fs.{FeatureTableSpec, PointInTime, WriteMode}
   * sampling, DSIR, bigram LM, PageRank, k-means, triangles,
   * classifier scoring, decay aggregates, winsorization,
   * nearest as-of join.
-  *
-  * Mixed into [[PipelinesExt]]; the sibling [[OraclesScaleOps]]
-  * below keeps each query's DuckDB oracle SQL in the same file
-  * (one review unit per query, the VERDICT r9 #4 split).
   */
-private[graft] trait PipelinesScaleOps { this: PipelinesBase =>
+private[graft] trait PipelinesScaleOps extends PipelinesBase {
 
   // batch 9 — matryoshka retrieval, priority sampling, DSIR scoring,
   // bigram LM, quantized PageRank
@@ -153,11 +149,8 @@ private[graft] trait PipelinesScaleOps { this: PipelinesBase =>
     graft.operators.Decay.decayedDailySumQuantized(t(s, d, "events"),
       "user_id", "ts", "value", maxAgeDays = 30, halfLifeDays = 7)
       .orderBy("user_id")
-}
 
-/** DuckDB oracle SQL for the [[PipelinesScaleOps]] queries. */
-private[graft] trait OraclesScaleOps { this: OracleSnippets =>
-  protected def sqlScaleOps: Map[String, String] = Map(
+  override def gates: Seq[Gate] = super.gates ++ Seq(
 
     // q101_neardup_dedup: rows-only — the MinHash signature rides
     // xxhash64 (§5.3, not portable); transitive retention semantics
@@ -184,7 +177,7 @@ private[graft] trait OraclesScaleOps { this: OracleSnippets =>
     // literal e0-suffixed, no Scala-computed constant folded into a
     // parsed literal, division sequences written in the same order.
 
-    "q126_matryoshka_ann" ->
+    Gate("q126_matryoshka_ann", Family.Ann, matryoshkaAnn, _ =>
       """WITH qe AS (SELECT vec_id, list_transform(range(1, 17),
         |    i -> CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000.0e0 + 0.5e0)
         |      AS BIGINT)) AS v
@@ -206,10 +199,10 @@ private[graft] trait OraclesScaleOps { this: OracleSnippets =>
         |      ORDER BY cos_tq DESC, vec_id) AS BIGINT) AS rnk
         |  FROM ct)
         |SELECT query_id, vec_id, cos_tq, rnk FROM rk WHERE rnk <= 10
-        |ORDER BY query_id, rnk""".stripMargin,
+        |ORDER BY query_id, rnk""".stripMargin),
 
 
-    "q127_priority_sample" ->
+    Gate("q127_priority_sample", Family.Sketch, prioritySampleDocs, _ =>
       """WITH u AS (SELECT doc_id, source, n_chars,
         |    list_reduce(list_transform(range(1, 14),
         |      i -> CAST(strpos('0123456789abcdef',
@@ -226,10 +219,10 @@ private[graft] trait OraclesScaleOps { this: OracleSnippets =>
         |  FROM p)
         |SELECT doc_id, source, n_chars, prio_rank, prio_q
         |FROM rk WHERE prio_rank <= 8
-        |ORDER BY source, prio_rank""".stripMargin,
+        |ORDER BY source, prio_rank""".stripMargin),
 
 
-    "q128_dsir_scores" ->
+    Gate("q128_dsir_scores", Family.Lm, dsirScores, _ =>
       """WITH d AS (SELECT doc_id, lang,
         |    CASE WHEN text IS NULL OR length(trim(text)) = 0 THEN []
         |         ELSE regexp_split_to_array(lower(trim(text)), '\s+') END AS toks
@@ -253,10 +246,10 @@ private[graft] trait OraclesScaleOps { this: OracleSnippets =>
         |  FROM tm JOIN qb USING (bucket) GROUP BY doc_id)
         |SELECT doc_id, CAST(coalesce(n_tokens, 0) AS BIGINT) AS n_tokens,
         |  CAST(coalesce(dsir_q, 0) AS BIGINT) AS dsir_q
-        |FROM d LEFT JOIN sc USING (doc_id) ORDER BY doc_id""".stripMargin,
+        |FROM d LEFT JOIN sc USING (doc_id) ORDER BY doc_id""".stripMargin),
 
 
-    "q129_bigram_lm" ->
+    Gate("q129_bigram_lm", Family.Lm, bigramLm, _ =>
       """WITH d AS (SELECT doc_id,
         |    CASE WHEN text IS NULL OR length(trim(text)) = 0 THEN []
         |         ELSE regexp_split_to_array(lower(trim(text)), '\s+') END AS toks
@@ -289,32 +282,32 @@ private[graft] trait OraclesScaleOps { this: OracleSnippets =>
         |  GROUP BY doc_id)
         |SELECT doc_id, CAST(coalesce(n_tokens, 0) AS BIGINT) AS n_tokens,
         |  CAST(coalesce(lm2_q, 0) AS BIGINT) AS lm2_q
-        |FROM d LEFT JOIN sc USING (doc_id) ORDER BY doc_id""".stripMargin,
+        |FROM d LEFT JOIN sc USING (doc_id) ORDER BY doc_id""".stripMargin),
 
 
     // unrolled 5-iteration integer recurrence — exact BIGINT arithmetic
     // (// is integer division), so this matches the Spark loop
     // hash-for-hash; see Components.pageRankQuantized
-    "q130_pagerank_dups" ->
+    Gate("q130_pagerank_dups", Family.Graph, pageRankDups, _ =>
       s"""WITH $dupEdgesCtesSql,
          |${pageRankCtesSql(5)}
-         |SELECT node, CAST(rq AS BIGINT) AS rq FROM r5 ORDER BY node""".stripMargin,
+         |SELECT node, CAST(rq AS BIGINT) AS rq FROM r5 ORDER BY node""".stripMargin),
 
 
     // q131: the unrolled 2-round Lloyd recurrence (shared kmeansCtesSql
     // — assignment, floor-mean update with emptied clusters keeping the
     // previous centroid, final assignment vs c2; all-BIGINT distances).
-    "q131_kmeans_clusters" ->
+    Gate("q131_kmeans_clusters", Family.Ann, kmeansClusters, _ =>
       s"""WITH ${kmeansCtesSql(8, 2)}
          |SELECT vec_id, cid, dist AS dist_q FROM a3 WHERE rk = 1
-         |ORDER BY vec_id""".stripMargin,
+         |ORDER BY vec_id""".stripMargin),
 
 
     // q132: ground truth by the naive canonical triple join a<b<c —
     // each triangle appears once; per-node counts unnest the three
     // corners. The engine's degree-ordered orientation must agree
     // exactly.
-    "q132_triangle_stats" ->
+    Gate("q132_triangle_stats", Family.Graph, triangleStats, _ =>
       s"""WITH $dupEdgesCtesSql,
          |ce AS (SELECT id_a AS a, id_b AS b FROM pairs),
          |deg AS (
@@ -333,12 +326,12 @@ private[graft] trait OraclesScaleOps { this: OracleSnippets =>
          |SELECT deg.n AS node, deg.deg,
          |  CAST(coalesce(tn.triangles, 0) AS BIGINT) AS triangles
          |FROM deg LEFT JOIN tn ON tn.n = deg.n
-         |ORDER BY node""".stripMargin,
+         |ORDER BY node""".stripMargin),
 
 
     // q133: replay the md5 13-hex-digit weight projection (the q127
     // list_reduce idiom) over unigram + space-joined-bigram features
-    "q133_classifier_score" ->
+    Gate("q133_classifier_score", Family.Lm, classifierScore, _ =>
       """WITH d AS (SELECT doc_id,
         |    CASE WHEN text IS NULL OR length(trim(text)) = 0 THEN []
         |         ELSE regexp_split_to_array(lower(trim(text)), '\s+') END AS toks
@@ -362,13 +355,13 @@ private[graft] trait OraclesScaleOps { this: OracleSnippets =>
         |SELECT d.doc_id, CAST(coalesce(s.n_feats, 0) AS BIGINT) AS n_feats,
         |  CAST(coalesce(s.logit_q, 0) AS BIGINT) AS logit_q
         |FROM d LEFT JOIN s ON s.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin),
 
 
     // q134: naive nearest-candidate formulation — rank every same-user
     // daily row by |ts − day_ts| with the earlier day winning ties
     // (the engine's backward preference); two formulations cross-check
-    "q134_pit_nearest" ->
+    Gate("q134_pit_nearest", Family.Fs, pitNearest, _ =>
       """WITH daily AS (
         |  SELECT user_id, date_trunc('day', ts) AS day_ts,
         |    CAST(count(*) AS BIGINT) AS day_events
@@ -385,12 +378,12 @@ private[graft] trait OraclesScaleOps { this: OracleSnippets =>
         |  c.day_events, c.matched_us
         |FROM spine s LEFT JOIN (SELECT * FROM cand WHERE rk = 1) c
         |  ON c.event_id = s.event_id
-        |ORDER BY s.event_id""".stripMargin,
+        |ORDER BY s.event_id""".stripMargin),
 
 
     // q135: replay the fixed-point power-of-two decay — exact-divisible
     // integer division for the day age, bit-shift weights, BIGINT sums
-    "q135_decayed_features" ->
+    Gate("q135_decayed_features", Family.Fs, decayedFeatures, _ =>
       """WITH e AS (
         |  SELECT user_id, epoch_us(ts) AS us,
         |    CAST(floor(value * 100.0e0 + 0.5e0) AS BIGINT) AS vq
@@ -407,13 +400,13 @@ private[graft] trait OraclesScaleOps { this: OracleSnippets =>
         |  FROM a WHERE age < 30)
         |SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
         |  CAST(sum(wv) AS BIGINT) AS decayed_q
-        |FROM w GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM w GROUP BY user_id ORDER BY user_id""".stripMargin),
 
 
     // q136: per-group quantile_cont bounds (the q42 parity contract)
     // + pure min/max clamp — the output doubles are existing values
     // or interpolated bounds, both bit-identical across engines
-    "q136_winsorized_prices" ->
+    Gate("q136_winsorized_prices", Family.Sketch, winsorizedPrices, _ =>
       """WITH b AS (
         |  SELECT l_returnflag,
         |    quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.05) AS blo,
@@ -425,12 +418,12 @@ private[graft] trait OraclesScaleOps { this: OracleSnippets =>
         |         least(b.bhi, CAST(l.l_extendedprice AS DOUBLE))) END
         |    AS price_w
         |FROM lineitem l JOIN b USING (l_returnflag)
-        |ORDER BY l.l_orderkey, l.l_linenumber""".stripMargin,
+        |ORDER BY l.l_orderkey, l.l_linenumber""".stripMargin),
 
 
     // q137: day-bucketed decay replay — daily sums first, then the
     // shift weights on day ages with a 7-day half-life step (S = 4)
-    "q137_decayed_daily" ->
+    Gate("q137_decayed_daily", Family.Fs, decayedDailyFeatures, _ =>
       """WITH e AS (
         |  SELECT user_id, epoch_us(date_trunc('day', ts)) AS day_us,
         |    CAST(floor(value * 100.0e0 + 0.5e0) AS BIGINT) AS vq
@@ -452,6 +445,6 @@ private[graft] trait OraclesScaleOps { this: OracleSnippets =>
         |  FROM a WHERE age < 30)
         |SELECT user_id, CAST(sum(n_events) AS BIGINT) AS n_events,
         |  CAST(sum(wv) AS BIGINT) AS decayed_q
-        |FROM w GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM w GROUP BY user_id ORDER BY user_id""".stripMargin),
   )
 }

@@ -12,12 +12,8 @@ import graft.fs.{FeatureTableSpec, PointInTime, WriteMode}
 /** Gate queries — the SQL analytics suite — pivots, correlated subqueries,
   * range joins, window frames, set ops, sketches, scalers,
   * TPC-H-shaped joins and aggregates.
-  *
-  * Mixed into [[PipelinesExt]]; the sibling [[OraclesSqlSuite]]
-  * below keeps each query's DuckDB oracle SQL in the same file
-  * (one review unit per query, the VERDICT r9 #4 split).
   */
-private[graft] trait PipelinesSqlSuite { this: PipelinesBase =>
+private[graft] trait PipelinesSqlSuite extends PipelinesBase {
 
   // pivot — wide per-status counts per priority (Expand + one agg
   // under the hood). Absent (priority, status) cells are 0, not NULL,
@@ -338,25 +334,22 @@ private[graft] trait PipelinesSqlSuite { this: PipelinesBase =>
           (lit(1) - col("l_discount").cast(DecimalType(18, 2)))))
           .cast("double").as("revenue"))
       .orderBy("p_brand", "s_nationkey")
-}
 
-/** DuckDB oracle SQL for the [[PipelinesSqlSuite]] queries. */
-private[graft] trait OraclesSqlSuite { this: OracleSnippets =>
-  protected def sqlSqlSuite: Map[String, String] = Map(
+  override def gates: Seq[Gate] = super.gates ++ Seq(
 
     // naive correlated-scalar-aggregate form; the Spark side runs the
     // agg-once + join-back rewrite (see minCostSupplier)
-    "q69_min_cost_supplier" ->
+    Gate("q69_min_cost_supplier", Family.Sql, minCostSupplier, _ =>
       """SELECT DISTINCT p_partkey, p_name, s_suppkey, s_name
         |FROM part, supplier, lineitem l
         |WHERE p_partkey = l.l_partkey AND s_suppkey = l.l_suppkey
         |  AND l.l_extendedprice = (
         |    SELECT min(l2.l_extendedprice) FROM lineitem l2
         |    WHERE l2.l_partkey = l.l_partkey)
-        |ORDER BY p_partkey, s_suppkey""".stripMargin,
+        |ORDER BY p_partkey, s_suppkey""".stripMargin),
 
 
-    "q70_waiting_suppliers" ->
+    Gate("q70_waiting_suppliers", Family.Sql, waitingSuppliers, _ =>
       """SELECT s_name, CAST(count(DISTINCT l1.l_orderkey) AS BIGINT) AS numwait
         |FROM supplier JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
         |WHERE l1.l_returnflag = 'R'
@@ -368,10 +361,10 @@ private[graft] trait OraclesSqlSuite { this: OracleSnippets =>
         |    WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
         |      AND l3.l_returnflag = 'R')
         |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name""".stripMargin,
+        |ORDER BY numwait DESC, s_name""".stripMargin),
 
 
-    "q76_big_volume_orders" ->
+    Gate("q76_big_volume_orders", Family.Sql, bigVolumeOrders, _ =>
       """SELECT c_custkey, o_orderkey,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
         |FROM customer, orders, lineitem
@@ -381,10 +374,10 @@ private[graft] trait OraclesSqlSuite { this: OracleSnippets =>
         |    HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 300)
         |  AND c_custkey = o_custkey AND o_orderkey = l_orderkey
         |GROUP BY c_custkey, o_orderkey
-        |ORDER BY total_qty DESC, o_orderkey LIMIT 100""".stripMargin,
+        |ORDER BY total_qty DESC, o_orderkey LIMIT 100""".stripMargin),
 
 
-    "q77_window_suite" ->
+    Gate("q77_window_suite", Family.Sql, windowSuite, _ =>
       """SELECT o_orderkey,
         |  lag(o_totalprice, 1) OVER w AS prev_price,
         |  lead(o_totalprice, 1) OVER w AS next_price,
@@ -393,10 +386,10 @@ private[graft] trait OraclesSqlSuite { this: OracleSnippets =>
         |  CAST(ntile(4) OVER w AS INTEGER) AS quartile
         |FROM orders
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin),
 
 
-    "q47_part_supplier_revenue" ->
+    Gate("q47_part_supplier_revenue", Family.Sql, partSupplierRevenue, _ =>
       """SELECT p_brand, s_nationkey,
         |  CAST(count(*) AS BIGINT) AS n_items,
         |  CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -405,37 +398,37 @@ private[graft] trait OraclesSqlSuite { this: OracleSnippets =>
         |JOIN part     ON l_partkey = p_partkey
         |JOIN supplier ON l_suppkey = s_suppkey
         |GROUP BY p_brand, s_nationkey
-        |ORDER BY p_brand, s_nationkey""".stripMargin,
+        |ORDER BY p_brand, s_nationkey""".stripMargin),
 
 
-    "q52_pivot" ->
+    Gate("q52_pivot", Family.Sql, pivotStatus, _ =>
       """SELECT o_orderpriority,
         |  CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS F,
         |  CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS O,
         |  CAST(sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS P
         |FROM orders GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+        |ORDER BY o_orderpriority""".stripMargin),
 
 
-    "q53_unpivot" ->
+    Gate("q53_unpivot", Family.Sql, unpivotLineitem, _ =>
       """SELECT l_orderkey, l_linenumber, 'l_quantity' AS metric, l_quantity AS val
         |FROM lineitem
         |UNION ALL
         |SELECT l_orderkey, l_linenumber, 'l_tax' AS metric, l_tax AS val
         |FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber, metric""".stripMargin,
+        |ORDER BY l_orderkey, l_linenumber, metric""".stripMargin),
 
 
-    "q51_correlated_subquery" ->
+    Gate("q51_correlated_subquery", Family.Sql, correlatedMaxOrder, _ =>
       """SELECT o_orderkey, o_custkey, o_totalprice
         |FROM orders o
         |WHERE o_totalprice = (SELECT max(o2.o_totalprice)
         |                      FROM orders o2
         |                      WHERE o2.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin),
 
 
-    "q55_nested_correlated" ->
+    Gate("q55_nested_correlated", Family.Sql, nestedCorrelated, _ =>
       """SELECT s_suppkey, s_name FROM supplier WHERE s_suppkey IN (
         |  SELECT l_suppkey FROM lineitem
         |  GROUP BY l_suppkey, l_partkey
@@ -443,18 +436,18 @@ private[graft] trait OraclesSqlSuite { this: OracleSnippets =>
         |    SELECT avg(q) FROM (
         |      SELECT sum(l2.l_quantity) AS q FROM lineitem l2
         |      WHERE l2.l_partkey = lineitem.l_partkey GROUP BY l2.l_suppkey) t))
-        |ORDER BY s_suppkey""".stripMargin,
+        |ORDER BY s_suppkey""".stripMargin),
 
 
-    "q56_range_frame_window" ->
+    Gate("q56_range_frame_window", Family.Sql, rollingRevenue, _ =>
       """SELECT o_orderkey,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
         |    PARTITION BY o_custkey ORDER BY epoch_us(o_orderdate)
         |    RANGE BETWEEN 2592000000000 PRECEDING AND CURRENT ROW) AS DOUBLE) AS rolling_30d
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
 
-    "q60_standardize" ->
+    Gate("q60_standardize", Family.Fs, standardizeFeatures, _ =>
       """WITH s AS (
         |  SELECT c_custkey, c_mktsegment, c_acctbal,
         |    CAST(count(*) OVER w AS BIGINT) AS n,
@@ -463,10 +456,10 @@ private[graft] trait OraclesSqlSuite { this: OracleSnippets =>
         |  FROM customer WINDOW w AS (PARTITION BY c_mktsegment))
         |SELECT c_custkey, c_mktsegment,
         |  (c_acctbal - sm / n) / sqrt((sq - sm * sm / n) / (n - 1)) AS acctbal_z
-        |FROM s ORDER BY c_custkey""".stripMargin,
+        |FROM s ORDER BY c_custkey""".stripMargin),
 
 
-    "q64_shipping_priority" ->
+    Gate("q64_shipping_priority", Family.Sql, shippingPriority, _ =>
       """SELECT l_orderkey,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
         |    * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
@@ -477,10 +470,10 @@ private[graft] trait OraclesSqlSuite { this: OracleSnippets =>
         |  AND l_orderkey = o_orderkey
         |  AND o_orderdate < DATE '1998-03-15' AND l_shipdate > DATE '1998-03-15'
         |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
+        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin),
 
 
-    "q65_market_share" ->
+    Gate("q65_market_share", Family.Sql, marketShare, _ =>
       """SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
         |  CAST(sum(CASE WHEN n2.n_name = 'NATION_9'
         |      THEN CAST(l_extendedprice AS DECIMAL(18,2))
@@ -493,10 +486,10 @@ private[graft] trait OraclesSqlSuite { this: OracleSnippets =>
         |  AND l_suppkey = s_suppkey
         |  AND c_nationkey = n1.n_nationkey AND n1.n_regionkey = r_regionkey
         |  AND s_nationkey = n2.n_nationkey AND r_name = 'ASIA'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
 
-    "q63_quarantine" ->
+    Gate("q63_quarantine", Family.Sql, quarantineEvents, _ =>
       """SELECT event_id,
         |  concat_ws(',',
         |    CASE WHEN user_id IS NULL THEN 'not_null(user_id)' END,
@@ -510,10 +503,10 @@ private[graft] trait OraclesSqlSuite { this: OracleSnippets =>
         |   OR (value IS NOT NULL AND (value < 0 OR value > 400))
         |   OR (event_type IS NOT NULL
         |       AND event_type NOT IN ('click','view','purchase','signup','error'))
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
 
 
-    "q62_expectations" ->
+    Gate("q62_expectations", Family.Sql, expectationsAudit, _ =>
       """WITH t AS (SELECT CAST(count(*) AS BIGINT) AS total FROM lineitem),
         |checks AS (
         |  SELECT 'not_null(l_orderkey)' AS check,
@@ -541,35 +534,35 @@ private[graft] trait OraclesSqlSuite { this: OracleSnippets =>
         |            AND l.l_orderkey NOT IN (SELECT o_orderkey FROM orders)) AS BIGINT))
         |SELECT c.check, t.total AS total_rows, c.violations,
         |  c.violations = 0 AS passed
-        |FROM checks c, t ORDER BY c.check""".stripMargin,
+        |FROM checks c, t ORDER BY c.check""".stripMargin),
 
 
-    "q54_range_join" ->
+    Gate("q54_range_join", Family.Sql, rangeJoinEvents, _ =>
       """SELECT p.event_id AS purchase_id, e.event_id AS event_id
         |FROM events p, events e
         |WHERE p.event_type = 'purchase'
         |  AND e.ts >= p.ts AND e.ts < p.ts + INTERVAL 60 SECOND
         |  AND e.event_id <> p.event_id
-        |ORDER BY purchase_id, event_id""".stripMargin,
+        |ORDER BY purchase_id, event_id""".stripMargin),
 
 
-    "q48_semi_join" ->
+    Gate("q48_semi_join", Family.Sql, semiJoinPriority, _ =>
       """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders
         |FROM orders
         |WHERE EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o_orderkey AND l_quantity >= 45)
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+        |ORDER BY o_orderpriority""".stripMargin),
 
 
-    "q49_anti_join" ->
+    Gate("q49_anti_join", Family.Sql, antiJoinCustomers, _ =>
       """SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_custs
         |FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders
         |                  WHERE o_custkey = c_custkey
         |                    AND o_orderpriority = '1-URGENT')
         |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
+        |ORDER BY c_mktsegment""".stripMargin),
 
 
   )

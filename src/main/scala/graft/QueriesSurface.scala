@@ -12,12 +12,8 @@ import graft.fs.{FeatureTableSpec, PointInTime, WriteMode}
 /** Gate queries — reference-surface completion: U1 per-row counts, summary
   * stats, events window/json ops, SQL/catalog/online surfaces,
   * point-in-time training sets, sampling splits, CSV ingest.
-  *
-  * Mixed into [[PipelinesExt]]; the sibling [[OraclesSurface]]
-  * (own file since r13 — this one hit the 700-line split bound)
-  * keeps each query's DuckDB oracle SQL adjacent.
   */
-private[graft] trait PipelinesSurface { this: PipelinesBase =>
+private[graft] trait PipelinesSurface extends PipelinesBase {
 
   // U1 pattern — per-row count of "Yes"-valued string columns across a
   // row (pandas_udf FS:413-416 rewritten as a codegen'd expression).
@@ -366,10 +362,9 @@ private[graft] trait PipelinesSurface { this: PipelinesBase =>
   // CSV parse itself is under cross-engine test. The dump path is a
   // pure function of the dataset dir (concurrent SF runs never
   // overwrite each other's fixture mid-oracle-read), and the oracle
-  // SQL resolves it through the SF Verify pins in
-  // [[PipelinesRound12.oracleDatasetDir]] — the same r13 fix as q196:
-  // a query-run-recorded mutable path leaked the second SF's fixture
-  // into the first SF's oracle when one process ran both.
+  // resolves it from the dataset dir it is given — the same fix as
+  // q196: a query-run-recorded mutable path leaked the second SF's
+  // fixture into the first SF's oracle when one process ran both.
   def csvFixturePathFor(d: String): String =
     "/tmp/graft_q44_csv_" + d.replaceAll("[^A-Za-z0-9.-]", "_")
 
@@ -451,4 +446,249 @@ private[graft] trait PipelinesSurface { this: PipelinesBase =>
         ok("l_discount").as("discount_ok"))
       .orderBy("summary")
   }
+
+  override def gates: Seq[Gate] = super.gates ++ Seq(
+    Gate("q06_num_optional_services", Family.Fs, numOptionalServices, _ =>
+      """SELECT o_orderkey,
+        |  CAST((CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END)
+        |     + (CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END)
+        |     + (CASE WHEN o_totalprice > 200000 THEN 1 ELSE 0 END) AS INTEGER)
+        |    AS num_optional_services
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+
+
+    Gate("q10_summary_stats", Family.Sketch, summaryStats, _ =>
+      (Seq("l_quantity", "l_extendedprice", "l_discount").map(statsForSql)
+        .mkString("", "\nUNION ALL\n", "\nORDER BY column_name"))),
+
+
+    Gate("q13_window_dedup", Family.Fs, windowDedup, _ =>
+      """SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us, value FROM (
+        |  SELECT *, row_number() OVER (
+        |    PARTITION BY user_id, event_type ORDER BY ts DESC, event_id DESC) AS rn
+        |  FROM events) WHERE rn = 1
+        |ORDER BY user_id, event_type""".stripMargin),
+
+
+    Gate("q15_sql_revenue_per_nation", Family.Sql, sqlRevenuePerNation, _ =>
+      """SELECT n_name,
+        |  CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
+        |           * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS VARCHAR) AS DOUBLE) AS revenue,
+        |  CAST(count(*) AS BIGINT) AS n_lineitems
+        |FROM customer
+        |JOIN orders   ON c_custkey = o_custkey
+        |JOIN lineitem ON l_orderkey = o_orderkey
+        |JOIN nation   ON c_nationkey = n_nationkey
+        |JOIN region   ON n_regionkey = r_regionkey
+        |WHERE r_name = 'ASIA'
+        |GROUP BY n_name
+        |ORDER BY n_name""".stripMargin),
+
+
+    Gate("q16_json_extract", Family.Sql, jsonExtract, _ =>
+      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS INTEGER) AS k_val
+        |FROM events ORDER BY event_id""".stripMargin),
+
+
+    Gate("q18_export_join", Family.Fs, exportJoin, _ =>
+      """SELECT c.c_custkey, c.c_name, c.c_mktsegment, o.n_orders, o.total_spent
+        |FROM customer c
+        |JOIN (SELECT o_custkey AS c_custkey,
+        |        CAST(count(*) AS BIGINT) AS n_orders,
+        |        CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spent
+        |      FROM orders GROUP BY o_custkey) o
+        |  ON c.c_custkey = o.c_custkey
+        |ORDER BY c.c_custkey""".stripMargin),
+
+
+    Gate("q19_catalog_ops", Family.Fs, catalogOps, _ =>
+      "SELECT c_custkey, c_name, c_mktsegment FROM customer ORDER BY c_custkey"),
+
+
+    Gate("q17_event_window_agg", Family.Fs, eventWindowAgg, _ =>
+      """SELECT epoch_us(date_trunc('hour', ts)) AS hour_us, event_type,
+        |  CAST(count(*) AS BIGINT) AS n_events,
+        |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+        |FROM events GROUP BY 1, 2 ORDER BY hour_us, event_type""".stripMargin),
+
+
+    Gate("q14_publish_online", Family.Fs, publishOnline, _ =>
+      """SELECT o_custkey AS c_custkey,
+        |  CAST(count(*) AS BIGINT) AS n_orders,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spent,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_order_price,
+        |  epoch_us(max(o_orderdate)) AS last_order_us,
+        |  CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_open_orders
+        |FROM orders GROUP BY o_custkey ORDER BY c_custkey""".stripMargin),
+
+
+    Gate("q67_online_lookup", Family.Fs, onlineLookup, _ =>
+      """SELECT o_custkey AS c_custkey,
+        |  CAST(count(*) AS BIGINT) AS n_orders,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spent,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_order_price,
+        |  epoch_us(max(o_orderdate)) AS last_order_us,
+        |  CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_open_orders
+        |FROM orders WHERE o_custkey BETWEEN 1 AND 50
+        |GROUP BY o_custkey ORDER BY c_custkey""".stripMargin),
+
+
+    Gate("q33_pit_training_set", Family.Fs, pitTrainingSet, _ =>
+      """WITH daily AS (
+        |  SELECT user_id, date_trunc('day', ts) AS day_ts,
+        |    CAST(count(*) AS BIGINT) AS day_events
+        |  FROM events GROUP BY 1, 2),
+        |spine AS (
+        |  SELECT event_id, user_id, ts, value FROM events
+        |  WHERE event_type = 'purchase')
+        |SELECT s.event_id, s.user_id, epoch_us(s.ts) AS ts_us, s.value,
+        |  d.day_events
+        |FROM spine s ASOF LEFT JOIN daily d
+        |  ON s.user_id = d.user_id AND s.ts >= d.day_ts
+        |ORDER BY s.event_id""".stripMargin),
+
+
+    Gate("q57_pit_forward", Family.Fs, pitForwardLabels, _ =>
+      """WITH daily AS (
+        |  SELECT user_id, date_trunc('day', ts) AS day_ts,
+        |    CAST(count(*) AS BIGINT) AS day_events
+        |  FROM events GROUP BY 1, 2),
+        |spine AS (
+        |  SELECT event_id, user_id, ts, value FROM events
+        |  WHERE event_type = 'purchase')
+        |SELECT s.event_id, s.user_id, epoch_us(s.ts) AS ts_us, s.value,
+        |  d.day_events
+        |FROM spine s ASOF LEFT JOIN daily d
+        |  ON s.user_id = d.user_id AND s.ts <= d.day_ts
+        |ORDER BY s.event_id""".stripMargin),
+
+
+    Gate("q32_media_features", Family.Ann, mediaFeatures, _ =>
+      """SELECT doc_id AS media_id, CAST(strlen(text) AS INTEGER) AS n_bytes
+        |FROM documents ORDER BY media_id""".stripMargin),
+
+
+    Gate("q34_sessionize", Family.Sql, sessionize, _ =>
+      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us, value FROM events),
+        |s AS (SELECT *, CASE WHEN lag(us) OVER w IS NULL THEN 1
+        |                     WHEN us - lag(us) OVER w > 14400000000 THEN 1
+        |                     ELSE 0 END AS brk
+        |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
+        |s2 AS (SELECT *, CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY us, event_id
+        |         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id FROM s)
+        |SELECT user_id, session_id, min(us) AS start_us, max(us) AS end_us,
+        |  CAST(count(*) AS BIGINT) AS n_events,
+        |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+        |FROM s2 GROUP BY user_id, session_id
+        |ORDER BY user_id, session_id""".stripMargin),
+
+
+    Gate("q36_salted_join", Family.Sql, saltedJoin, _ =>
+      """SELECT c.c_custkey, c.c_mktsegment,
+        |  CAST(count(*) AS BIGINT) AS n_events,
+        |  CAST(sum(CAST(e.value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
+        |GROUP BY c.c_custkey, c.c_mktsegment
+        |ORDER BY c.c_custkey""".stripMargin),
+
+
+    Gate("q37_distinct_counts", Family.Sketch, distinctCounts, _ =>
+      """SELECT l_returnflag,
+        |  CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_parts,
+        |  CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_supps,
+        |  CAST(count(*) AS BIGINT) AS n_rows
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+
+
+    Gate("q38_rollup", Family.Sql, rollupSummary, _ =>
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(count(*) AS BIGINT) AS n_rows,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
+        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
+
+
+    Gate("q39_set_ops", Family.Sql, setOps, _ =>
+      """WITH urgent AS (SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'),
+        |open_o AS (SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'),
+        |u AS (SELECT o_custkey, 'intersect' AS set_op FROM (SELECT * FROM urgent INTERSECT SELECT * FROM open_o)
+        |      UNION ALL
+        |      SELECT o_custkey, 'except' AS set_op FROM (SELECT * FROM urgent EXCEPT SELECT * FROM open_o))
+        |SELECT set_op, CAST(count(*) AS BIGINT) AS n_custs
+        |FROM u GROUP BY set_op ORDER BY set_op""".stripMargin),
+
+
+    Gate("q40_term_stats", Family.Lm, termStats, _ =>
+      """WITH toks AS (
+        |  SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
+        |  FROM documents WHERE length(trim(text)) > 0),
+        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
+        |       FROM toks GROUP BY doc_id, term),
+        |dfreq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term)
+        |SELECT t.term, t.doc_id, t.tf, d.df,
+        |  CAST((SELECT count(*) FROM documents) AS DOUBLE) / d.df AS idf_ratio
+        |FROM tf t JOIN dfreq d USING (term)
+        |ORDER BY doc_id, term""".stripMargin),
+
+    // same md5-threshold arithmetic as Sampling.hashSplit: the
+    // 0.8 cut is the first 8 hex digits of 0.8·2³², and an
+    // 8-char-prefix tie compares greater (test side) in both engines
+    Gate("q41_train_test_split", Family.Fs, trainTestSplit, _ =>
+      """SELECT c_custkey,
+        |  CASE WHEN md5(CAST(c_custkey AS VARCHAR)) <
+        |    printf('%08x', CAST(floor(0.8e0 * 4294967296.0e0) AS BIGINT))
+        |  THEN 'train' ELSE 'test' END AS side
+        |FROM customer ORDER BY c_custkey""".stripMargin),
+
+
+    Gate("q42_percentiles", Family.Sketch, percentiles, _ =>
+      """SELECT l_returnflag,
+        |  quantile_cont(l_quantity, 0.25) AS qty_p25,
+        |  quantile_cont(l_quantity, 0.5) AS qty_p50,
+        |  quantile_cont(l_quantity, 0.75) AS qty_p75,
+        |  quantile_cont(l_extendedprice, 0.5) AS price_p50
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+
+
+    Gate("q43_cube", Family.Sql, cubeSummary, _ =>
+      """SELECT o_orderstatus, o_orderpriority,
+        |  CAST(count(*) AS BIGINT) AS n_orders,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
+        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin),
+
+
+    Gate("q44_csv_ingest", Family.Fs, csvIngest, d =>
+      s"""SELECT CAST(c_custkey AS BIGINT) AS c_custkey,
+         |  CAST(length(trim(c_name)) AS INTEGER) AS name_len,
+         |  CASE WHEN c_mktsegment = 'BUILDING' THEN 1
+         |       WHEN c_mktsegment = 'AUTOMOBILE' THEN 2
+         |       WHEN c_mktsegment = 'MACHINERY' THEN 3 END AS segment_code,
+         |  CAST(c_acctbal AS DOUBLE) AS acctbal
+         |FROM read_csv_auto('${csvFixturePathFor(d)}/*.csv', header=true)
+         |ORDER BY c_custkey""".stripMargin),
+
+
+    // invariant gate (r12): IVF cell routing is engine-specific; the
+    // driver hashes the portable per-query facts + the recall floor
+    Gate("q35_ivf_ann", Family.Ann, ivfAnn, _ => annInvariantOracleSql(withRecall = true)),
+
+
+    // the sampler's portable fact: ceil(n/2) frames survive everyK=2
+    // over the (doc_id % 5 + 1)-frame container
+    Gate("q186_video_frames", Family.Ann, videoFrameSample, _ =>
+      """SELECT doc_id AS media_id,
+        |  CAST((doc_id % 5 + 2) // 2 AS INTEGER) AS frames_kept
+        |FROM documents ORDER BY media_id""".stripMargin),
+
+
+    // invariant gate (r12): summary()'s cells are engine-formatted
+    // strings; the booleans assert the parsed-back parity facts
+    Gate("q45_summary", Family.Sketch, summaryParity, _ =>
+      """SELECT s AS summary, TRUE AS quantity_ok,
+        |  TRUE AS extendedprice_ok, TRUE AS discount_ok
+        |FROM (VALUES ('count'), ('mean'), ('stddev'), ('min'),
+        |  ('25%'), ('50%'), ('75%'), ('max')) t(s)
+        |ORDER BY summary""".stripMargin),
+  )
 }

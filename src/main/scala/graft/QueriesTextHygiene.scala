@@ -10,11 +10,8 @@ import graft.ext.{Pq, Similarity, TextAnalysis}
 /** Gate queries — text hygiene: decontamination (gram equi-join +
   * bloom-prefiltered), repetition filtering, PII scrubbing. Split out
   * of QueriesSqlSuite in r12 (the >700-line file discipline).
-  *
-  * Mixed into [[PipelinesExt]]; the sibling [[OraclesTextHygiene]]
-  * below keeps each query's DuckDB oracle SQL in the same file.
   */
-private[graft] trait PipelinesTextHygiene { this: PipelinesBase =>
+private[graft] trait PipelinesTextHygiene extends PipelinesBase {
 
   // Scalable decontamination: word-8-gram fingerprint equi-join (the
   // corpus-sized-probe-set path; q75 is the broadcast-substring path).
@@ -80,19 +77,16 @@ private[graft] trait PipelinesTextHygiene { this: PipelinesBase =>
       .withColumn("n_hits", col("n_hits").cast("long"))
       .orderBy("doc_id")
   }
-}
 
-/** DuckDB oracle SQL for the [[PipelinesTextHygiene]] queries. */
-private[graft] trait OraclesTextHygiene { this: OracleSnippets =>
-  protected def sqlTextHygiene: Map[String, String] = Map(
-    "q79_contamination_ngram" -> contaminationNgramOverlapSql,
+  override def gates: Seq[Gate] = super.gates ++ Seq(
+    Gate("q79_contamination_ngram", Family.Dedup, contaminationNgram, _ => contaminationNgramOverlapSql),
 
     // q109: the bloom-prefiltered path computes the SAME exact overlap
     // (false positives die in the confirming join), so it shares q79's
     // oracle verbatim — two different plans, one ground truth.
-    "q109_contamination_bloom" -> contaminationNgramOverlapSql,
+    Gate("q109_contamination_bloom", Family.Dedup, contaminationBloom, _ => contaminationNgramOverlapSql),
 
-    "q73_repetition_filter" ->
+    Gate("q73_repetition_filter", Family.Lm, repetitionFilter, _ =>
       """WITH t AS (SELECT doc_id,
         |    CASE WHEN text IS NULL OR length(trim(text)) = 0 THEN []
         |         ELSE regexp_split_to_array(trim(text), '\s+') END AS w
@@ -106,9 +100,9 @@ private[graft] trait OraclesTextHygiene { this: OracleSnippets =>
         |    ELSE 1.0 - CAST(len(list_distinct(list_transform(generate_series(1, len(w) - 1),
         |      i -> w[i] || ' ' || w[i + 1]))) AS DOUBLE) / CAST(len(w) - 1 AS DOUBLE)
         |  END AS rep_ratio
-        |FROM t ORDER BY doc_id""".stripMargin,
+        |FROM t ORDER BY doc_id""".stripMargin),
 
-    "q74_pii_scrub" ->
+    Gate("q74_pii_scrub", Family.Lm, piiScrub, _ =>
       """WITH p AS (SELECT doc_id,
         |    CASE WHEN doc_id % 50 = 0
         |      THEN text || ' Contact user' || doc_id || '@example.com or 555-867-'
@@ -123,14 +117,14 @@ private[graft] trait OraclesTextHygiene { this: OracleSnippets =>
         |  regexp_replace(regexp_replace(t2,
         |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
         |    '[0-9]{3}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g') AS clean_text
-        |FROM p ORDER BY doc_id""".stripMargin,
+        |FROM p ORDER BY doc_id""".stripMargin),
 
-    "q75_contamination" ->
+    Gate("q75_contamination", Family.Dedup, contamination, _ =>
       """WITH probes AS (
         |  SELECT DISTINCT substr(text, 5, 48) AS probe FROM documents
         |  WHERE doc_id IN (3, 7, 11, 19, 23))
         |SELECT doc_id, CAST(count(DISTINCT probe) AS BIGINT) AS n_hits
         |FROM documents, probes WHERE contains(text, probe)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
   )
 }

@@ -12,12 +12,8 @@ import graft.fs.{FeatureTableSpec, PointInTime, WriteMode}
 /** Gate queries — dedup (exact/MinHash/SimHash/n-gram), text analysis
   * (lang-id, quality, tokens, fingerprints), and the
   * similarity/ANN tier (kNN, cosine, LSH, IVF, PQ).
-  *
-  * Mixed into [[PipelinesExt]]; the sibling [[OraclesTextSim]]
-  * below keeps each query's DuckDB oracle SQL in the same file
-  * (one review unit per query, the VERDICT r9 #4 split).
   */
-private[graft] trait PipelinesTextSim { this: PipelinesBase =>
+private[graft] trait PipelinesTextSim extends PipelinesBase {
 
   // ---------------------------------------------------------- dedup
 
@@ -187,37 +183,34 @@ private[graft] trait PipelinesTextSim { this: PipelinesBase =>
   def cosineTiled(s: SparkSession, d: String): DataFrame =
     Similarity.cosineAllPairsTiled(t(s, d, "embeddings"), threshold = 0.45)
       .orderBy("id_a", "id_b")
-}
 
-/** DuckDB oracle SQL for the [[PipelinesTextSim]] queries. */
-private[graft] trait OraclesTextSim { this: OracleSnippets =>
-  protected def sqlTextSim: Map[String, String] = Map(
+  override def gates: Seq[Gate] = super.gates ++ Seq(
 
-    "q20_dedup_exact_groups" ->
+    Gate("q20_dedup_exact_groups", Family.Dedup, dedupExactGroups, _ =>
       s"""SELECT $fpSql AS fingerprint,
          |  CAST(min(doc_id) AS BIGINT) AS keep_id,
          |  CAST(count(*) AS BIGINT) AS n_copies
-         |FROM documents GROUP BY 1 ORDER BY keep_id""".stripMargin,
+         |FROM documents GROUP BY 1 ORDER BY keep_id""".stripMargin),
 
 
-    "q21_dedup_exact_rows" ->
+    Gate("q21_dedup_exact_rows", Family.Dedup, dedupExactRows, _ =>
       s"""SELECT doc_id, text, lang, source, n_chars FROM (
          |  SELECT *, row_number() OVER (PARTITION BY $fpSql ORDER BY doc_id) AS rn
-         |  FROM documents) WHERE rn = 1 ORDER BY doc_id""".stripMargin,
+         |  FROM documents) WHERE rn = 1 ORDER BY doc_id""".stripMargin),
 
 
-    "q22_token_count" ->
-      s"SELECT doc_id, $tokenCountSql AS n_tokens FROM documents ORDER BY doc_id",
+    Gate("q22_token_count", Family.Lm, tokenCount, _ =>
+      s"SELECT doc_id, $tokenCountSql AS n_tokens FROM documents ORDER BY doc_id"),
 
 
-    "q23_lang_id" ->
+    Gate("q23_lang_id", Family.Lm, langId, _ =>
       s"""SELECT doc_id,
          |  ${langs.map(l => s"CAST(${stopHitsSql(TextAnalysis.stopwords(l))} AS INTEGER) AS score_$l").mkString(",\n  ")},
          |  $langCaseSql AS pred_lang
-         |FROM (SELECT doc_id, text FROM documents) ORDER BY doc_id""".stripMargin,
+         |FROM (SELECT doc_id, text FROM documents) ORDER BY doc_id""".stripMargin),
 
 
-    "q24_quality_score" ->
+    Gate("q24_quality_score", Family.Lm, qualityScore, _ =>
       s"""WITH f AS (SELECT doc_id,
          |    CAST(length(text) AS DOUBLE) AS nc,
          |    CAST($tokenCountSql AS DOUBLE) AS nt,
@@ -234,26 +227,26 @@ private[graft] trait OraclesTextSim { this: OracleSnippets =>
          |  + (CASE WHEN (CASE WHEN nt > 0 THEN ns / nt ELSE 0.0 END) > 0.05 THEN 1.0
          |          ELSE (CASE WHEN nt > 0 THEN ns / nt ELSE 0.0 END) / 0.05 END) * 0.5
          |    AS quality
-         |FROM f ORDER BY doc_id""".stripMargin,
+         |FROM f ORDER BY doc_id""".stripMargin),
 
 
-    "q25_fingerprint" ->
-      s"SELECT doc_id, $fpSql AS fingerprint FROM documents ORDER BY doc_id",
+    Gate("q25_fingerprint", Family.Dedup, fingerprintDocs, _ =>
+      s"SELECT doc_id, $fpSql AS fingerprint FROM documents ORDER BY doc_id"),
 
 
     // portable-MinHash replay (r12): planted dups → word-2-gram md5-52
     // signatures under the shared affine family → 8 band arms →
     // agreement estimate at the 0.5 gate threshold
-    "q26_minhash_pairs" ->
+    Gate("q26_minhash_pairs", Family.Dedup, minhashPairs, _ =>
       s"""WITH $plantedDupsCteSql,
          |${minhashEstCtesSql("dp", n = 2, numHashes = 32, bands = 8)}
          |SELECT id_a, id_b, est_jaccard FROM mest
-         |WHERE est_jaccard >= 0.5 ORDER BY id_a, id_b""".stripMargin,
+         |WHERE est_jaccard >= 0.5 ORDER BY id_a, id_b""".stripMargin),
 
 
     // portable-SimHash replay (r12): 52 md5 vote bits, candidates by
     // any equal 13-bit pigeonhole block, exact hamming <= 8
-    "q27_simhash_pairs" ->
+    Gate("q27_simhash_pairs", Family.Dedup, simhashPairs, _ =>
       s"""WITH $plantedDupsCteSql,
          |${simhashCtesSql("dp")},
          |scand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -264,12 +257,12 @@ private[graft] trait OraclesTextSim { this: OracleSnippets =>
          |     OR ((a.sh >> 26) & 8191) = ((b.sh >> 26) & 8191)
          |     OR ((a.sh >> 39) & 8191) = ((b.sh >> 39) & 8191))
          |SELECT id_a, id_b, hamming FROM scand WHERE hamming <= 8
-         |ORDER BY id_a, id_b""".stripMargin,
+         |ORDER BY id_a, id_b""".stripMargin),
 
 
     // q26's candidate pipeline at the 0.4 estimate threshold, then the
     // EXACT 2-gram Jaccard re-load on the surviving pairs
-    "q28_ngram_jaccard" ->
+    Gate("q28_ngram_jaccard", Family.Dedup, ngramJaccardPairs, _ =>
       s"""WITH $plantedDupsCteSql,
          |${minhashEstCtesSql("dp", n = 2, numHashes = 32, bands = 8)},
          |mgs AS (SELECT doc_id,
@@ -281,10 +274,10 @@ private[graft] trait OraclesTextSim { this: OracleSnippets =>
          |    / len(list_distinct(list_concat(a.grams, b.grams))) AS jaccard
          |FROM mest e JOIN mgs a ON a.doc_id = e.id_a
          |  JOIN mgs b ON b.doc_id = e.id_b
-         |WHERE e.est_jaccard >= 0.4 ORDER BY id_a, id_b""".stripMargin,
+         |WHERE e.est_jaccard >= 0.4 ORDER BY id_a, id_b""".stripMargin),
 
 
-    "q29_embedding_knn" ->
+    Gate("q29_embedding_knn", Family.Ann, embeddingKnn, _ =>
       """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
         |    FROM embeddings WHERE vec_id < 10),
         |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS ce FROM embeddings),
@@ -294,24 +287,24 @@ private[graft] trait OraclesTextSim { this: OracleSnippets =>
         |ranked AS (SELECT *, row_number() OVER (
         |    PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank FROM scored)
         |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cosine
-        |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
+        |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
 
 
-    "q30_cosine_near_dup" ->
+    Gate("q30_cosine_near_dup", Family.Dedup, cosineNearDup, _ =>
       """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
         |  list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) AS cosine
         |FROM embeddings a, embeddings b
         |WHERE a.vec_id < b.vec_id
         |  AND list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) >= 0.4
-        |ORDER BY id_a, id_b""".stripMargin,
+        |ORDER BY id_a, id_b""".stripMargin),
 
-    "q46_cosine_tiled" ->
+    Gate("q46_cosine_tiled", Family.Ann, cosineTiled, _ =>
       """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
         |  list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) AS cosine
         |FROM embeddings a, embeddings b
         |WHERE a.vec_id < b.vec_id
         |  AND list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) >= 0.45
-        |ORDER BY id_a, id_b""".stripMargin,
+        |ORDER BY id_a, id_b""".stripMargin),
 
 
     // the LSH path's recall budget (missProb 1e-8/pair, r=4 b=107)
@@ -320,26 +313,26 @@ private[graft] trait OraclesTextSim { this: OracleSnippets =>
     // data (verified at sf0.01 AND sf0.1; SimilaritySpec asserts the
     // same equality). The oracle is therefore q30's exhaustive scan at
     // the same threshold.
-    "q66_cosine_lsh" ->
+    Gate("q66_cosine_lsh", Family.Ann, cosineLshPairs, _ =>
       """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
         |  list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) AS cosine
         |FROM embeddings a, embeddings b
         |WHERE a.vec_id < b.vec_id
         |  AND list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) >= 0.4
-        |ORDER BY id_a, id_b""".stripMargin,
+        |ORDER BY id_a, id_b""".stripMargin),
 
 
     // invariant gate (r12): the LSH selection is engine-specific; the
     // driver hashes the portable per-query facts (annInvariantGate)
-    "q31_lsh_ann" -> annInvariantOracleSql(withRecall = false),
+    Gate("q31_lsh_ann", Family.Ann, lshAnn, _ => annInvariantOracleSql(withRecall = false)),
 
 
     // the STREAMING flatMapGroupsWithState path must emit exactly the
     // batch portable-MinHash candidate set (q26 CTEs, n = 3)
-    "q184_stream_neardup" ->
+    Gate("q184_stream_neardup", Family.Streaming, streamNearDupPairs, _ =>
       s"""WITH ${minhashEstCtesSql("documents", n = 3, numHashes = 32, bands = 8)}
          |SELECT id_a, id_b, est_jaccard FROM mest
-         |WHERE est_jaccard >= 0.5 ORDER BY id_a, id_b""".stripMargin,
+         |WHERE est_jaccard >= 0.5 ORDER BY id_a, id_b""".stripMargin),
   )
 }
 

@@ -8,12 +8,8 @@ import org.apache.spark.sql.types.DecimalType
 /** Gate queries — the deeper TPC-H-shaped analytics suite (Q6, Q7,
   * Q10, Q13, Q14, Q15, Q17, Q19, Q22 shapes), split out of
   * QueriesCuration in r12 (the >700-line file discipline).
-  *
-  * Mixed into [[PipelinesExt]]; the sibling [[OraclesTpchDeep]] below
-  * keeps each query's DuckDB oracle SQL in the same file (one review
-  * unit per query, the VERDICT r9 #4 split).
   */
-private[graft] trait PipelinesTpchDeep { this: PipelinesBase =>
+private[graft] trait PipelinesTpchDeep extends PipelinesBase {
 
   // TPC-H Q10 shape: returned-item revenue per customer — fact join
   // with a date band, broadcast nation dim, deterministic top-20.
@@ -277,12 +273,9 @@ private[graft] trait PipelinesTpchDeep { this: PipelinesBase =>
       .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"),
         col("p_size"))
   }
-}
 
-/** DuckDB oracle SQL for the [[PipelinesTpchDeep]] queries. */
-private[graft] trait OraclesTpchDeep { this: OracleSnippets =>
-  protected def sqlTpchDeep: Map[String, String] = Map(
-    "q83_returned_items" ->
+  override def gates: Seq[Gate] = super.gates ++ Seq(
+    Gate("q83_returned_items", Family.Sql, returnedItems, _ =>
       """SELECT c_custkey, c_name,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
         |    * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
@@ -292,9 +285,9 @@ private[graft] trait OraclesTpchDeep { this: OracleSnippets =>
         |  AND o_orderdate >= DATE '1997-01-01' AND o_orderdate < DATE '1997-07-01'
         |  AND l_returnflag = 'R' AND c_nationkey = n_nationkey
         |GROUP BY c_custkey, c_name, c_acctbal, n_name
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
+        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin),
 
-    "q84_disjunctive_revenue" ->
+    Gate("q84_disjunctive_revenue", Family.Sql, disjunctiveRevenue, _ =>
       """SELECT
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
         |    * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
@@ -306,9 +299,9 @@ private[graft] trait OraclesTpchDeep { this: OracleSnippets =>
         |  OR (p_brand = 'Brand#2' AND p_size BETWEEN 5 AND 30
         |       AND l_quantity BETWEEN 10 AND 40)
         |  OR (p_brand = 'Brand#3' AND p_size BETWEEN 10 AND 50
-        |       AND l_quantity BETWEEN 20 AND 50))""".stripMargin,
+        |       AND l_quantity BETWEEN 20 AND 50))""".stripMargin),
 
-    "q85_idle_customers" ->
+    Gate("q85_idle_customers", Family.Sql, idleCustomers, _ =>
       """WITH s AS (
         |  SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS sm,
         |         count(*) AS n
@@ -319,19 +312,19 @@ private[graft] trait OraclesTpchDeep { this: OracleSnippets =>
         |WHERE CAST(c_acctbal AS DECIMAL(18,2)) * n > sm
         |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
         |                  AND o_orderdate >= DATE '2000-01-01')
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
 
     // naive correlated form — cross-checks the engine's agg-once +
     // join-back decorrelation (the q69 discipline)
-    "q102_small_qty_revenue" ->
+    Gate("q102_small_qty_revenue", Family.Sql, smallQtyRevenue, _ =>
       """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS avg_yearly
         |FROM lineitem, part
         |WHERE p_partkey = l_partkey AND p_brand = 'Brand#12'
         |  AND l_quantity < 0.2 * (
         |    SELECT CAST(sum(CAST(l2.l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*)
-        |    FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""".stripMargin,
+        |    FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""".stripMargin),
 
-    "q110_promo_revenue" ->
+    Gate("q110_promo_revenue", Family.Sql, promoRevenue, _ =>
       """SELECT CAST(100.0 * CAST(sum(CASE WHEN p_type LIKE 'PROMO%'
         |    THEN CAST(l_extendedprice AS DECIMAL(18,2))
         |      * (1 - CAST(l_discount AS DECIMAL(18,2)))
@@ -342,9 +335,9 @@ private[graft] trait OraclesTpchDeep { this: OracleSnippets =>
         |FROM lineitem, part
         |WHERE l_partkey = p_partkey
         |  AND l_shipdate >= DATE '1996-01-01'
-        |  AND l_shipdate < DATE '1996-04-01'""".stripMargin,
+        |  AND l_shipdate < DATE '1996-04-01'""".stripMargin),
 
-    "q111_top_supplier" ->
+    Gate("q111_top_supplier", Family.Sql, topSupplier, _ =>
       """WITH revenue AS (
         |  SELECT l_suppkey,
         |    sum(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -357,9 +350,9 @@ private[graft] trait OraclesTpchDeep { this: OracleSnippets =>
         |FROM supplier, revenue
         |WHERE s_suppkey = l_suppkey
         |  AND rev_dec = (SELECT max(rev_dec) FROM revenue)
-        |ORDER BY s_suppkey""".stripMargin,
+        |ORDER BY s_suppkey""".stripMargin),
 
-    "q112_forecast_revenue" ->
+    Gate("q112_forecast_revenue", Family.Sql, forecastRevenue, _ =>
       """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
         |    * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
         |FROM lineitem
@@ -367,9 +360,9 @@ private[graft] trait OraclesTpchDeep { this: OracleSnippets =>
         |  AND l_shipdate < DATE '1997-01-01'
         |  AND l_discount >= CAST(0.05 AS DOUBLE)
         |  AND l_discount <= CAST(0.07 AS DOUBLE)
-        |  AND l_quantity < 24""".stripMargin,
+        |  AND l_quantity < 24""".stripMargin),
 
-    "q113_volume_shipping" ->
+    Gate("q113_volume_shipping", Family.Sql, volumeShipping, _ =>
       """SELECT supp_nation, cust_nation, l_year,
         |  CAST(sum(volume) AS DOUBLE) AS revenue
         |FROM (
@@ -386,17 +379,17 @@ private[graft] trait OraclesTpchDeep { this: OracleSnippets =>
         |    AND l_shipdate >= DATE '1995-01-01'
         |    AND l_shipdate < DATE '1997-01-01')
         |GROUP BY supp_nation, cust_nation, l_year
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
+        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin),
 
-    "q105_cust_order_histogram" ->
+    Gate("q105_cust_order_histogram", Family.Sql, custOrderHistogram, _ =>
       """WITH per_cust AS (
         |  SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
         |  FROM customer LEFT OUTER JOIN orders ON c_custkey = o_custkey
         |  GROUP BY c_custkey)
         |SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
         |FROM per_cust GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q172_ship_priority" ->
+        |ORDER BY custdist DESC, c_count DESC""".stripMargin),
+    Gate("q172_ship_priority", Family.Sql, shipPriorityCounts, _ =>
       """SELECT l_returnflag,
         |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
         |    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -404,9 +397,9 @@ private[graft] trait OraclesTpchDeep { this: OracleSnippets =>
         |    THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1997-01-01'
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
-    "q173_profit_rollup" ->
+    Gate("q173_profit_rollup", Family.Sql, profitByNationYear, _ =>
       """SELECT n_name AS nation, CAST(year(o_orderdate) AS INTEGER) AS o_year,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
         |    * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS profit
@@ -416,9 +409,9 @@ private[graft] trait OraclesTpchDeep { this: OracleSnippets =>
         |  JOIN nation ON s_nationkey = n_nationkey
         |  JOIN orders ON l_orderkey = o_orderkey
         |WHERE p_name LIKE '%red%'
-        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin),
 
-    "q174_part_supplier_counts" ->
+    Gate("q174_part_supplier_counts", Family.Sql, partSupplierCounts, _ =>
       """WITH ps AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
         |kept AS (
         |  SELECT ps.l_partkey, ps.l_suppkey FROM ps
@@ -430,7 +423,7 @@ private[graft] trait OraclesTpchDeep { this: OracleSnippets =>
         |WHERE p_brand != 'Brand#4' AND p_type NOT LIKE 'MEDIUM%'
         |  AND p_size IN (1, 4, 7, 10, 13, 16, 19, 22, 25)
         |GROUP BY 1, 2, 3
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin),
 
   )
 }

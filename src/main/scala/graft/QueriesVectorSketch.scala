@@ -10,11 +10,8 @@ import graft.ext.{Pq, Similarity, TextAnalysis}
 /** Gate queries — sketches, vector expressions, data layout, and the
   * PQ/IVF ANN tiers. Split out of QueriesSqlSuite in r12 (the
   * >700-line file discipline).
-  *
-  * Mixed into [[PipelinesExt]]; the sibling [[OraclesVectorSketch]]
-  * below keeps each query's DuckDB oracle SQL in the same file.
   */
-private[graft] trait PipelinesVectorSketch { this: PipelinesBase =>
+private[graft] trait PipelinesVectorSketch extends PipelinesBase {
 
   // Sketch aggregations as an INVARIANT gate (r12; HLL/quantile-sketch
   // estimates are engine-specific by construction): the gate emits the
@@ -239,40 +236,37 @@ private[graft] trait PipelinesVectorSketch { this: PipelinesBase =>
       array_max(transform(e, x => abs(x))).as("max_abs"))
       .orderBy("vec_id")
   }
-}
 
-/** DuckDB oracle SQL for the [[PipelinesVectorSketch]] queries. */
-private[graft] trait OraclesVectorSketch { this: OracleSnippets =>
-  protected def sqlVectorSketch: Map[String, String] = Map(
+  override def gates: Seq[Gate] = super.gates ++ Seq(
     // invariant gate (r12): exact distinct counts recomputed here; the
     // sketch-accuracy booleans assert TRUE
-    "q58_approx_stats" ->
+    Gate("q58_approx_stats", Family.Sketch, approxStats, _ =>
       """SELECT l_returnflag, l_linestatus,
         |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS exact_orders,
         |  CAST(count(DISTINCT l_partkey) AS BIGINT) AS exact_parts,
         |  TRUE AS orders_ok, TRUE AS parts_ok,
         |  TRUE AS median_ok, TRUE AS p95_ok
         |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
 
     // the CM-sketch estimate degenerates to the exact count at this
     // cardinality (no full-row collision under the fixed seeds), so a
     // plain GROUP BY is the oracle — see cmHeavyHitters. IS NOT NULL
     // pins the aggregate's NULL-skipping semantics: CmTopK never emits
     // a NULL item, so the oracle must not either.
-    "q68_cm_heavy_hitters" ->
+    Gate("q68_cm_heavy_hitters", Family.Sketch, cmHeavyHitters, _ =>
       """SELECT event_type AS item, CAST(count(*) AS BIGINT) AS est
         |FROM events WHERE event_type IS NOT NULL
-        |GROUP BY 1 ORDER BY est DESC, item LIMIT 10""".stripMargin,
+        |GROUP BY 1 ORDER BY est DESC, item LIMIT 10""".stripMargin),
 
-    "q61_kmv_distinct" ->
+    Gate("q61_kmv_distinct", Family.Sketch, kmvDistinctCounts, _ =>
       """SELECT l_returnflag,
         |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS exact_orders,
         |  TRUE AS kmv_ok
         |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
+        |ORDER BY l_returnflag""".stripMargin),
 
-    "q59_zorder_values" -> {
+    Gate("q59_zorder_values", Family.Sql, zorderValues, _ => {
       // independent Morton implementation: bit j of x → z bit 2j, of
       // y → z bit 2j+1 (must mirror InterleaveBits' j·k+d layout)
       val terms = (0 until 8).map(j =>
@@ -282,20 +276,20 @@ private[graft] trait OraclesVectorSketch { this: OracleSnippets =>
          |           FROM customer)
          |SELECT c_custkey, CAST($terms AS BIGINT) AS z
          |FROM m ORDER BY c_custkey""".stripMargin
-    },
+    }),
 
     // invariant gates (r12): codebooks / cell routing are
     // engine-specific; the driver hashes the portable per-query facts
     // + each tier's AnnRecallGateSpec floor
-    "q50_pq_ann" -> annInvariantOracleSql(withRecall = true),
+    Gate("q50_pq_ann", Family.Ann, pqAnn, _ => annInvariantOracleSql(withRecall = true)),
 
-    "q72_ivfpq_ann" -> annInvariantOracleSql(withRecall = true),
+    Gate("q72_ivfpq_ann", Family.Ann, ivfPqAnn, _ => annInvariantOracleSql(withRecall = true)),
 
-    "q78_ivf_indexed_ann" -> annInvariantOracleSql(withRecall = true),
+    Gate("q78_ivf_indexed_ann", Family.Ann, ivfIndexedAnn, _ => annInvariantOracleSql(withRecall = true)),
 
     // list_reduce is DuckDB's sequential left fold — same evaluation
     // order as Spark's aggregate(), so the doubles are bit-identical
-    "q71_vector_norms" ->
+    Gate("q71_vector_norms", Family.Ann, vectorNorms, _ =>
       """SELECT vec_id,
         |  sqrt(list_reduce(list_transform(embedding,
         |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (a, b) -> a + b)) AS l2_norm,
@@ -303,6 +297,6 @@ private[graft] trait OraclesVectorSketch { this: OracleSnippets =>
         |    x -> abs(CAST(x AS DOUBLE))), (a, b) -> a + b) AS l1_norm,
         |  list_max(list_transform(embedding,
         |    x -> abs(CAST(x AS DOUBLE)))) AS max_abs
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
+        |FROM embeddings ORDER BY vec_id""".stripMargin),
   )
 }

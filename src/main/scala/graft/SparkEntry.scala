@@ -26,320 +26,18 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Pipelines.scoreBatch(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_cleanse_recode" -> ((s, d) => Pipelines.cleanseRecode(s, d)),
-    "q02_dynamic_projection" -> ((s, d) => Pipelines.dynamicProjection(s, d)),
-    "q03_fillna" -> ((s, d) => Pipelines.fillNa(s, d)),
-    "q04_demographic_features" -> ((s, d) => Pipelines.demographicFeatures(s, d)),
-    "q05_order_features" -> ((s, d) => Pipelines.orderFeatures(s, d)),
-    "q07_training_set" -> ((s, d) => Pipelines.trainingSet(s, d)),
-    "q08_score_batch" -> ((s, d) => Pipelines.scoreBatch(s, d)),
-    "q09_merge_upsert" -> ((s, d) => Pipelines.mergeUpsert(s, d)),
-    "q11_pricing_summary" -> ((s, d) => Pipelines.pricingSummary(s, d)),
-    "q12_topk_orders" -> ((s, d) => Pipelines.topkOrders(s, d)),
-    // batch 2 — reference-surface completion
-    "q06_num_optional_services" -> ((s, d) => PipelinesExt.numOptionalServices(s, d)),
-    "q10_summary_stats" -> ((s, d) => PipelinesExt.summaryStats(s, d)),
-    "q13_window_dedup" -> ((s, d) => PipelinesExt.windowDedup(s, d)),
-    "q14_publish_online" -> ((s, d) => PipelinesExt.publishOnline(s, d)),
-    "q15_sql_revenue_per_nation" -> ((s, d) => PipelinesExt.sqlRevenuePerNation(s, d)),
-    "q16_json_extract" -> ((s, d) => PipelinesExt.jsonExtract(s, d)),
-    "q17_event_window_agg" -> ((s, d) => PipelinesExt.eventWindowAgg(s, d)),
-    "q18_export_join" -> ((s, d) => PipelinesExt.exportJoin(s, d)),
-    "q19_catalog_ops" -> ((s, d) => PipelinesExt.catalogOps(s, d)),
-    // batch 3 — [extension] LLM-data-pipeline operators
-    "q20_dedup_exact_groups" -> ((s, d) => PipelinesExt.dedupExactGroups(s, d)),
-    "q21_dedup_exact_rows" -> ((s, d) => PipelinesExt.dedupExactRows(s, d)),
-    "q22_token_count" -> ((s, d) => PipelinesExt.tokenCount(s, d)),
-    "q23_lang_id" -> ((s, d) => PipelinesExt.langId(s, d)),
-    "q24_quality_score" -> ((s, d) => PipelinesExt.qualityScore(s, d)),
-    "q25_fingerprint" -> ((s, d) => PipelinesExt.fingerprintDocs(s, d)),
-    "q26_minhash_pairs" -> ((s, d) => PipelinesExt.minhashPairs(s, d)),
-    "q27_simhash_pairs" -> ((s, d) => PipelinesExt.simhashPairs(s, d)),
-    "q28_ngram_jaccard" -> ((s, d) => PipelinesExt.ngramJaccardPairs(s, d)),
-    "q29_embedding_knn" -> ((s, d) => PipelinesExt.embeddingKnn(s, d)),
-    "q30_cosine_near_dup" -> ((s, d) => PipelinesExt.cosineNearDup(s, d)),
-    "q31_lsh_ann" -> ((s, d) => PipelinesExt.lshAnn(s, d)),
-    "q33_pit_training_set" -> ((s, d) => PipelinesExt.pitTrainingSet(s, d)),
-    "q32_media_features" -> ((s, d) => PipelinesExt.mediaFeatures(s, d)),
-    "q34_sessionize" -> ((s, d) => PipelinesExt.sessionize(s, d)),
-    "q35_ivf_ann" -> ((s, d) => PipelinesExt.ivfAnn(s, d)),
-    "q36_salted_join" -> ((s, d) => PipelinesExt.saltedJoin(s, d)),
-    "q37_distinct_counts" -> ((s, d) => PipelinesExt.distinctCounts(s, d)),
-    "q38_rollup" -> ((s, d) => PipelinesExt.rollupSummary(s, d)),
-    "q39_set_ops" -> ((s, d) => PipelinesExt.setOps(s, d)),
-    "q40_term_stats" -> ((s, d) => PipelinesExt.termStats(s, d)),
-    "q41_train_test_split" -> ((s, d) => PipelinesExt.trainTestSplit(s, d)),
-    "q42_percentiles" -> ((s, d) => PipelinesExt.percentiles(s, d)),
-    "q43_cube" -> ((s, d) => PipelinesExt.cubeSummary(s, d)),
-    "q44_csv_ingest" -> ((s, d) => PipelinesExt.csvIngest(s, d)),
-    "q45_summary" -> ((s, d) => PipelinesExt.summaryParity(s, d)),
-    "q46_cosine_tiled" -> ((s, d) => PipelinesExt.cosineTiled(s, d)),
-    "q47_part_supplier_revenue" -> ((s, d) => PipelinesExt.partSupplierRevenue(s, d)),
-    "q48_semi_join" -> ((s, d) => PipelinesExt.semiJoinPriority(s, d)),
-    "q49_anti_join" -> ((s, d) => PipelinesExt.antiJoinCustomers(s, d)),
-    "q50_pq_ann" -> ((s, d) => PipelinesExt.pqAnn(s, d)),
-    "q51_correlated_subquery" -> ((s, d) => PipelinesExt.correlatedMaxOrder(s, d)),
-    "q52_pivot" -> ((s, d) => PipelinesExt.pivotStatus(s, d)),
-    "q53_unpivot" -> ((s, d) => PipelinesExt.unpivotLineitem(s, d)),
-    "q54_range_join" -> ((s, d) => PipelinesExt.rangeJoinEvents(s, d)),
-    "q55_nested_correlated" -> ((s, d) => PipelinesExt.nestedCorrelated(s, d)),
-    "q56_range_frame_window" -> ((s, d) => PipelinesExt.rollingRevenue(s, d)),
-    "q57_pit_forward" -> ((s, d) => PipelinesExt.pitForwardLabels(s, d)),
-    "q58_approx_stats" -> ((s, d) => PipelinesExt.approxStats(s, d)),
-    "q59_zorder_values" -> ((s, d) => PipelinesExt.zorderValues(s, d)),
-    "q60_standardize" -> ((s, d) => PipelinesExt.standardizeFeatures(s, d)),
-    "q61_kmv_distinct" -> ((s, d) => PipelinesExt.kmvDistinctCounts(s, d)),
-    "q62_expectations" -> ((s, d) => PipelinesExt.expectationsAudit(s, d)),
-    "q63_quarantine" -> ((s, d) => PipelinesExt.quarantineEvents(s, d)),
-    "q64_shipping_priority" -> ((s, d) => PipelinesExt.shippingPriority(s, d)),
-    "q65_market_share" -> ((s, d) => PipelinesExt.marketShare(s, d)),
-    "q66_cosine_lsh" -> ((s, d) => PipelinesExt.cosineLshPairs(s, d)),
-    "q67_online_lookup" -> ((s, d) => PipelinesExt.onlineLookup(s, d)),
-    "q68_cm_heavy_hitters" -> ((s, d) => PipelinesExt.cmHeavyHitters(s, d)),
-    "q69_min_cost_supplier" -> ((s, d) => PipelinesExt.minCostSupplier(s, d)),
-    "q70_waiting_suppliers" -> ((s, d) => PipelinesExt.waitingSuppliers(s, d)),
-    "q71_vector_norms" -> ((s, d) => PipelinesExt.vectorNorms(s, d)),
-    "q72_ivfpq_ann" -> ((s, d) => PipelinesExt.ivfPqAnn(s, d)),
-    "q73_repetition_filter" -> ((s, d) => PipelinesExt.repetitionFilter(s, d)),
-    "q74_pii_scrub" -> ((s, d) => PipelinesExt.piiScrub(s, d)),
-    "q75_contamination" -> ((s, d) => PipelinesExt.contamination(s, d)),
-    "q76_big_volume_orders" -> ((s, d) => PipelinesExt.bigVolumeOrders(s, d)),
-    "q77_window_suite" -> ((s, d) => PipelinesExt.windowSuite(s, d)),
-    "q78_ivf_indexed_ann" -> ((s, d) => PipelinesExt.ivfIndexedAnn(s, d)),
-    "q79_contamination_ngram" -> ((s, d) => PipelinesExt.contaminationNgram(s, d)),
-    "q80_semantic_dedup" -> ((s, d) => PipelinesExt.semanticDedupExact(s, d)),
-    "q81_semdedup_clustered" -> ((s, d) => PipelinesExt.semanticDedupClustered(s, d)),
-    "q82_vocab_prune" -> ((s, d) => PipelinesExt.vocabPrune(s, d)),
-    "q83_returned_items" -> ((s, d) => PipelinesExt.returnedItems(s, d)),
-    "q84_disjunctive_revenue" -> ((s, d) => PipelinesExt.disjunctiveRevenue(s, d)),
-    "q85_idle_customers" -> ((s, d) => PipelinesExt.idleCustomers(s, d)),
-    "q86_incremental_agg" -> ((s, d) => PipelinesExt.incrementalAggRefresh(s, d)),
-    "q87_partitioned_scan" -> ((s, d) => PipelinesExt.partitionedScan(s, d)),
-    "q88_grouped_arrays" -> ((s, d) => PipelinesExt.groupedArrays(s, d)),
-    "q89_decile_binning" -> ((s, d) => PipelinesExt.decileBinning(s, d)),
-    "q90_robust_scale" -> ((s, d) => PipelinesExt.robustScaleBalances(s, d)),
-    "q91_target_encoding" -> ((s, d) => PipelinesExt.targetEncodePriority(s, d)),
-    "q92_fuzzy_names" -> ((s, d) => PipelinesExt.fuzzyNamePairs(s, d)),
-    "q93_funnel" -> ((s, d) => PipelinesExt.conversionFunnel(s, d)),
-    "q94_cohort_retention" -> ((s, d) => PipelinesExt.cohortRetention(s, d)),
-    "q95_session_funnel" -> ((s, d) => PipelinesExt.sessionFunnel(s, d)),
-    "q96_event_transitions" -> ((s, d) => PipelinesExt.eventTransitions(s, d)),
-    // batch 8 — graph closure, deterministic sampling, context-window prep
-    "q97_dup_clusters" -> ((s, d) => PipelinesExt.dupClusters(s, d)),
-    "q98_stratified_sample" -> ((s, d) => PipelinesExt.stratifiedSample(s, d)),
-    "q99_chunk_documents" -> ((s, d) => PipelinesExt.chunkDocuments(s, d)),
-    "q100_packing_plan" -> ((s, d) => PipelinesExt.packingPlan(s, d)),
-    "q101_neardup_dedup" -> ((s, d) => PipelinesExt.nearDupDedup(s, d)),
-    "q102_small_qty_revenue" -> ((s, d) => PipelinesExt.smallQtyRevenue(s, d)),
-    "q103_mix_rebalance" -> ((s, d) => PipelinesExt.mixRebalance(s, d)),
-    "q104_quality_top_frac" -> ((s, d) => PipelinesExt.qualityTopFraction(s, d)),
-    "q105_cust_order_histogram" -> ((s, d) => PipelinesExt.custOrderHistogram(s, d)),
-    "q106_embedding_gram" -> ((s, d) => PipelinesExt.embeddingGram(s, d)),
-    "q107_pca_whiten" -> ((s, d) => PipelinesExt.pcaWhiten(s, d)),
-    "q108_curriculum_schedule" -> ((s, d) => PipelinesExt.curriculumSchedule(s, d)),
-    "q109_contamination_bloom" -> ((s, d) => PipelinesExt.contaminationBloom(s, d)),
-    "q110_promo_revenue" -> ((s, d) => PipelinesExt.promoRevenue(s, d)),
-    "q111_top_supplier" -> ((s, d) => PipelinesExt.topSupplier(s, d)),
-    "q112_forecast_revenue" -> ((s, d) => PipelinesExt.forecastRevenue(s, d)),
-    "q113_volume_shipping" -> ((s, d) => PipelinesExt.volumeShipping(s, d)),
-    "q114_bm25_search" -> ((s, d) => PipelinesExt.bm25Search(s, d)),
-    "q115_int8_quantize" -> ((s, d) => PipelinesExt.int8Quantize(s, d)),
-    "q116_dup_spans" -> ((s, d) => PipelinesExt.dupSpans(s, d)),
-    "q117_unigram_lm" -> ((s, d) => PipelinesExt.unigramLm(s, d)),
-    "q118_hybrid_rrf" -> ((s, d) => PipelinesExt.hybridRrf(s, d)),
-    "q119_binary_ann" -> ((s, d) => PipelinesExt.binaryAnn(s, d)),
-    "q120_cluster_split" -> ((s, d) => PipelinesExt.clusterSplit(s, d)),
-    "q121_bpe_pairs" -> ((s, d) => PipelinesExt.bpePairs(s, d)),
-    "q122_group_topk" -> ((s, d) => PipelinesExt.groupTopK(s, d)),
-    "q123_label_centroids" -> ((s, d) => PipelinesExt.labelCentroids(s, d)),
-    "q124_curation_pipeline" -> ((s, d) => PipelinesExt.curationPipeline(s, d)),
-    "q125_dist_drift" -> ((s, d) => PipelinesExt.distDrift(s, d)),
-    // batch 9 — matryoshka retrieval, priority sampling, DSIR scoring,
-    // bigram LM, quantized PageRank
-    "q126_matryoshka_ann" -> ((s, d) => PipelinesExt.matryoshkaAnn(s, d)),
-    "q127_priority_sample" -> ((s, d) => PipelinesExt.prioritySampleDocs(s, d)),
-    "q128_dsir_scores" -> ((s, d) => PipelinesExt.dsirScores(s, d)),
-    "q129_bigram_lm" -> ((s, d) => PipelinesExt.bigramLm(s, d)),
-    "q130_pagerank_dups" -> ((s, d) => PipelinesExt.pageRankDups(s, d)),
-    // batch 10 — distributed k-means, graph triangles, hashed
-    // classifier scoring, nearest as-of join
-    "q131_kmeans_clusters" -> ((s, d) => PipelinesExt.kmeansClusters(s, d)),
-    "q132_triangle_stats" -> ((s, d) => PipelinesExt.triangleStats(s, d)),
-    "q133_classifier_score" -> ((s, d) => PipelinesExt.classifierScore(s, d)),
-    "q134_pit_nearest" -> ((s, d) => PipelinesExt.pitNearest(s, d)),
-    "q135_decayed_features" -> ((s, d) => PipelinesExt.decayedFeatures(s, d)),
-    "q136_winsorized_prices" -> ((s, d) => PipelinesExt.winsorizedPrices(s, d)),
-    "q137_decayed_daily" -> ((s, d) => PipelinesExt.decayedDailyFeatures(s, d)),
-    // round 10 — exact-pair retention, BPE application, delta-CC,
-    // decay × feature-store composition
-    "q138_neardup_retain_exact" -> ((s, d) => PipelinesExt.nearDupRetainExact(s, d)),
-    "q139_bpe_segment" -> ((s, d) => PipelinesExt.bpeSegmentDocs(s, d)),
-    "q140_delta_cc" -> ((s, d) => PipelinesExt.deltaCcLabels(s, d)),
-    "q141_decayed_scoring" -> ((s, d) => PipelinesExt.decayedScoring(s, d)),
-    "q142_bpe_train" -> ((s, d) => PipelinesExt.bpeTrainMerges(s, d)),
-    "q143_perceptron_train" -> ((s, d) => PipelinesExt.perceptronTrain(s, d)),
-    "q144_perceptron_score" -> ((s, d) => PipelinesExt.perceptronScore(s, d)),
-    "q145_rank_retention" -> ((s, d) => PipelinesExt.rankRetainExact(s, d)),
-    "q146_hard_negatives" -> ((s, d) => PipelinesExt.hardNegatives(s, d)),
-    "q147_corpus_card" -> ((s, d) => PipelinesExt.corpusCardBySource(s, d)),
-    "q148_pit_ttl" -> ((s, d) => PipelinesExt.pitTtlLookup(s, d)),
-    "q149_length_buckets" -> ((s, d) => PipelinesExt.lengthBuckets(s, d)),
-    "q150_embedding_drift" -> ((s, d) => PipelinesExt.embeddingDriftHalves(s, d)),
-    // batch 12 — round-11 consolidation compositions
-    "q151_classifier_curation" -> ((s, d) => PipelinesExt.classifierCuration(s, d)),
-    "q152_incremental_retention" -> ((s, d) => PipelinesExt.incrementalRetention(s, d)),
-    "q153_summary_exact" -> ((s, d) => PipelinesExt.summaryExactRows(s, d)),
-    "q154_jaccard_join" -> ((s, d) => PipelinesExt.jaccardJoinPairs(s, d)),
-    "q155_label_noise" -> ((s, d) => PipelinesExt.labelNoiseAudit(s, d)),
-    "q156_temperature_mix" -> ((s, d) => PipelinesExt.temperatureMixDocs(s, d)),
-    "q157_mmr_rerank" -> ((s, d) => PipelinesExt.mmrRerankTopK(s, d)),
-    "q158_jaccard_retention" -> ((s, d) => PipelinesExt.jaccardRetention(s, d)),
-    "q159_numeric_drift" -> ((s, d) => PipelinesExt.numericDriftPrices(s, d)),
-    "q160_hybrid_mmr" -> ((s, d) => PipelinesExt.hybridMmrRerank(s, d)),
-    "q161_token_budget" -> ((s, d) => PipelinesExt.tokenBudgetCard(s, d)),
-    "q162_contrastive_pairs" -> ((s, d) => PipelinesExt.contrastivePairs(s, d)),
-    "q163_scrub_spans" -> ((s, d) => PipelinesExt.scrubSpans(s, d)),
-    "q164_threshold_sweep" -> ((s, d) => PipelinesExt.thresholdSweep(s, d)),
-    "q165_retrieval_eval" -> ((s, d) => PipelinesExt.retrievalEval(s, d)),
-    "q166_prototype_prune" -> ((s, d) => PipelinesExt.prototypePrune(s, d)),
-    "q167_decontam_scrub" -> ((s, d) => PipelinesExt.decontamScrub(s, d)),
-    "q168_epoch_mix" -> ((s, d) => PipelinesExt.epochMixPlan(s, d)),
-    "q169_epoch_packing" -> ((s, d) => PipelinesExt.epochPacking(s, d)),
-    "q170_quality_ensemble" -> ((s, d) => PipelinesExt.qualityEnsemble(s, d)),
-    "q171_span_corruption" -> ((s, d) => PipelinesExt.spanCorruption(s, d)),
-    "q172_ship_priority" -> ((s, d) => PipelinesExt.shipPriorityCounts(s, d)),
-    "q173_profit_rollup" -> ((s, d) => PipelinesExt.profitByNationYear(s, d)),
-    "q174_part_supplier_counts" -> ((s, d) => PipelinesExt.partSupplierCounts(s, d)),
-    "q175_fim_plan" -> ((s, d) => PipelinesExt.fimPlanDocs(s, d)),
-    "q176_session_cooccur" -> ((s, d) => PipelinesExt.sessionCoOccurrence(s, d)),
-    "q177_ensemble_curation" -> ((s, d) => PipelinesExt.ensembleCuration(s, d)),
-    "q178_cooccur_lift" -> ((s, d) => PipelinesExt.sessionCoOccurLift(s, d)),
-    "q179_manifest_diff" -> ((s, d) => PipelinesExt.manifestDiffHalves(s, d)),
-    "q180_capped_mix" -> ((s, d) => PipelinesExt.cappedMixDocs(s, d)),
-    "q181_pack_manifest" -> ((s, d) => PipelinesExt.packManifest(s, d)),
-    "q182_negative_samples" -> ((s, d) => PipelinesExt.negativeSamples(s, d)),
-    "q183_temporal_spikes" -> ((s, d) => PipelinesExt.temporalSpikesByType(s, d)),
-    // round 12 — streaming tier, bucketed store, and video made
-    // driver-visible
-    "q184_stream_neardup" -> ((s, d) => PipelinesExt.streamNearDupPairs(s, d)),
-    "q185_bucketed_training_set" -> ((s, d) => Pipelines.bucketedTrainingSet(s, d)),
-    "q186_video_frames" -> ((s, d) => PipelinesExt.videoFrameSample(s, d)),
-    "q187_semantic_decontam" -> ((s, d) => PipelinesExt.semanticDecontam(s, d)),
-    "q188_cluster_balance" -> ((s, d) => PipelinesExt.clusterBalancedDocs(s, d)),
-    "q189_containment_join" -> ((s, d) => PipelinesExt.containmentQuotes(s, d)),
-    "q190_classifier_reliability" -> ((s, d) => PipelinesExt.classifierReliability(s, d)),
-    "q191_embargo_split" -> ((s, d) => PipelinesExt.embargoSplit(s, d)),
-    "q192_corpus_diversity" -> ((s, d) => PipelinesExt.corpusDiversity(s, d)),
-    "q193_quota_allocation" -> ((s, d) => PipelinesExt.quotaAllocation(s, d)),
-    "q194_split_contamination" -> ((s, d) => PipelinesExt.splitContamination(s, d)),
-    "q195_stream_daily_sums" -> ((s, d) => PipelinesExt.streamDailySums(s, d)),
-    "q196_jsonl_ingest" -> ((s, d) => PipelinesExt.jsonlIngest(s, d)),
-    "q197_stream_interval_join" -> ((s, d) => PipelinesExt.streamIntervalJoin(s, d)),
-    "q198_decontam_ivf" -> ((s, d) => PipelinesExt.decontamIvfGate(s, d)),
-    "q199_stream_asof_join" -> ((s, d) => PipelinesExt.streamAsOfJoin(s, d)),
-    "q200_stream_dedup" -> ((s, d) => PipelinesExt.streamContentDedup(s, d)),
-    "q201_stream_sessionize" -> ((s, d) => PipelinesExt.streamSessionize(s, d)),
-    "q202_stream_cooccur" -> ((s, d) => PipelinesExt.streamCoOccurrence(s, d)),
-    "q203_audio_features" -> ((s, d) => PipelinesExt.audioFeatures(s, d)),
-    "q204_stream_restart" -> ((s, d) => PipelinesExt.streamRestartAgg(s, d)),
-    "q205_range_rewrite_sql" -> ((s, d) => PipelinesExt.rangeRewriteSql(s, d)),
-    "q206_image_phash_neardup" -> ((s, d) => PipelinesExt.imageNearDup(s, d)),
-    "q207_url_canonicalize" -> ((s, d) => PipelinesExt.urlCanonicalize(s, d)),
-    "q208_domain_cap" -> ((s, d) => PipelinesExt.domainCap(s, d)),
-    "q209_k_anonymity" -> ((s, d) => PipelinesExt.kAnonymity(s, d)),
-    "q210_html_extract" -> ((s, d) => PipelinesExt.htmlExtract(s, d)),
-    "q211_link_graph" -> ((s, d) => PipelinesExt.linkGraph(s, d)),
-    "q212_robots_filter" -> ((s, d) => PipelinesExt.robotsFilter(s, d)),
-    "q213_warc_ingest" -> ((s, d) => PipelinesExt.warcIngest(s, d)),
-    // round 15 — crawl-stack hardening: gzip WARC, resize-fused image
-    // dedup, percent normalization, robots join gear, PSL domains, and
-    // the end-to-end crawl composition
-    "q214_warc_gz_ingest" -> ((s, d) => PipelinesExt.warcGzIngest(s, d)),
-    "q215_image_resize_dedup" -> ((s, d) => PipelinesExt.imageResizeDedup(s, d)),
-    "q216_url_percent_canonicalize" -> ((s, d) => PipelinesExt.urlPercentCanonicalize(s, d)),
-    "q217_robots_join_filter" -> ((s, d) => PipelinesExt.robotsJoinFilter(s, d)),
-    "q218_psl_domains" -> ((s, d) => PipelinesExt.pslDomains(s, d)),
-    "q219_crawl_stack" -> ((s, d) => PipelinesExt.crawlStack(s, d)),
-    "q220_robots_txt_parse" -> ((s, d) => PipelinesExt.robotsTxtParse(s, d)),
-    "q221_http_parse" -> ((s, d) => PipelinesExt.httpParse(s, d)),
-    "q222_crawl_pipeline" -> ((s, d) => PipelinesExt.crawlPipeline(s, d)),
-    "q223_sitemap_ingest" -> ((s, d) => PipelinesExt.sitemapIngest(s, d)),
-    "q224_charset_decode" -> ((s, d) => PipelinesExt.charsetDecode(s, d)),
-    "q225_url_resolve" -> ((s, d) => PipelinesExt.urlResolve(s, d)),
-    "q226_robots_wildcard" -> ((s, d) => PipelinesExt.robotsWildcard(s, d)),
-    "q227_crawl_full" -> ((s, d) => PipelinesExt.crawlFull(s, d)),
-    "q228_main_content" -> ((s, d) => PipelinesExt.mainContent(s, d)),
-    "q229_http_transfer_decode" -> ((s, d) => PipelinesExt.httpTransferDecode(s, d)),
-    "q230_charset_jre_decode" -> ((s, d) => PipelinesExt.charsetJreDecode(s, d)),
-    "q231_psl_wildcard_domains" -> ((s, d) => PipelinesExt.pslWildcardDomains(s, d)),
-    // round 16 — IDN host folding, robots→sitemap wiring, politeness
-    "q232_idn_host_fold" -> ((s, d) => PipelinesExt.idnHostFold(s, d)),
-    "q233_robots_sitemap_wiring" -> ((s, d) => PipelinesExt.robotsSitemapWiring(s, d)),
-    "q234_crawl_delay_schedule" -> ((s, d) => PipelinesExt.crawlDelaySchedule(s, d)),
-    "q235_warc_round_trip" -> ((s, d) => PipelinesExt.warcRoundTrip(s, d)),
-    "q236_html_metadata" -> ((s, d) => PipelinesExt.htmlMetadata(s, d)),
-    "q237_anchor_text_graph" -> ((s, d) => PipelinesExt.anchorTextGraph(s, d)),
-    "q238_redirect_chains" -> ((s, d) => PipelinesExt.redirectChains(s, d)),
-    "q239_segment_langs" -> ((s, d) => PipelinesExt.segmentLangs(s, d)),
-    "q240_repeated_line_scrub" -> ((s, d) => PipelinesExt.repeatedLineScrub(s, d)),
-    "q241_gopher_quality" -> ((s, d) => PipelinesExt.gopherQuality(s, d)),
-    "q242_c4_line_clean" -> ((s, d) => PipelinesExt.c4LineClean(s, d)),
-    "q243_warc_cdx_access" -> ((s, d) => PipelinesExt.warcCdxAccess(s, d)),
-    "q244_mime_sniff" -> ((s, d) => PipelinesExt.mimeSniff(s, d)),
-    "q245_meta_charset_decode" -> ((s, d) => PipelinesExt.metaCharsetDecode(s, d)),
-    "q246_wet_conversion" -> ((s, d) => PipelinesExt.wetConversion(s, d)),
-    "q247_robots_policy" -> ((s, d) => PipelinesExt.robotsPolicy(s, d)),
-    "q248_surt_keys" -> ((s, d) => PipelinesExt.surtKeys(s, d)),
-    "q249_jsonld_harvest" -> ((s, d) => PipelinesExt.jsonLdHarvest(s, d)),
-    "q250_nofollow_links" -> ((s, d) => PipelinesExt.nofollowLinkGraph(s, d)),
-    "q251_blocklist_curation" -> ((s, d) => PipelinesExt.blocklistCuration(s, d)),
-    "q252_revisit_dedup" -> ((s, d) => PipelinesExt.revisitDedup(s, d)),
-    "q253_feed_ingest" -> ((s, d) => PipelinesExt.feedIngest(s, d)),
-    "q254_unicode_normalize" -> ((s, d) => PipelinesExt.unicodeNormalizeGate(s, d)),
-    "q255_alias_clusters" -> ((s, d) => PipelinesExt.aliasClusterGate(s, d)),
-    "q256_tokenizer_fertility" -> ((s, d) => PipelinesExt.tokenizerFertility(s, d)),
-    "q257_wat_metadata" -> ((s, d) => PipelinesExt.watMetadata(s, d)),
-    "q258_recrawl_priority" -> ((s, d) => PipelinesExt.recrawlPriority(s, d)),
-    "q259_meta_refresh" -> ((s, d) => PipelinesExt.metaRefreshRedirects(s, d)),
-    "q260_base_href_links" -> ((s, d) => PipelinesExt.baseHrefLinks(s, d)),
-    "q261_sitemap_metadata" -> ((s, d) => PipelinesExt.sitemapEntryMetadata(s, d)),
-    "q262_hreflang_variants" -> ((s, d) => PipelinesExt.hreflangVariants(s, d)),
-    "q263_frontier_unify" -> ((s, d) => PipelinesExt.frontierUnify(s, d)),
-    "q264_line_dedup_global" -> ((s, d) => PipelinesExt.lineDedupGlobal(s, d)),
-    "q265_stream_revisits" -> ((s, d) => PipelinesExt.streamRevisits(s, d)),
-    "q266_crawl_snapshot_diff" -> ((s, d) => PipelinesExt.crawlSnapshotDiff(s, d)),
-    "q267_url_templates" -> ((s, d) => PipelinesExt.urlTemplateMining(s, d)),
-    "q268_robots_fetch_policy" -> ((s, d) => PipelinesExt.robotsFetchPolicy(s, d)),
-    "q269_crawl_traps" -> ((s, d) => PipelinesExt.crawlTrapDetection(s, d)),
-    "q270_hreflang_reciprocity" -> ((s, d) => PipelinesExt.hreflangReciprocity(s, d)),
-    "q271_entity_decode" -> ((s, d) => PipelinesExt.entityDecode(s, d)),
-    "q272_maximal_spans" -> ((s, d) => PipelinesExt.maximalSpanGate(s, d)),
-    "q273_recrawl_order" -> ((s, d) => PipelinesExt.recrawlOrderGate(s, d)),
-    "q274_conditional_fetch" -> ((s, d) => PipelinesExt.conditionalFetchGate(s, d)),
-    "q275_html_markdown" -> ((s, d) => PipelinesExt.htmlMarkdownGate(s, d)),
-    "q276_diacritic_fold" -> ((s, d) => PipelinesExt.diacriticFoldGate(s, d)),
-    "q277_table_extract" -> ((s, d) => PipelinesExt.tableExtractGate(s, d)),
-    "q278_markdown_struct" -> ((s, d) => PipelinesExt.markdownStructGate(s, d)),
-    "q279_table_grid" -> ((s, d) => PipelinesExt.tableGridGate(s, d)),
-    "q280_legacy_entities" -> ((s, d) => PipelinesExt.legacyEntityGate(s, d)),
-    "q281_folded_fuzzy" -> ((s, d) => PipelinesExt.foldedFuzzyGate(s, d)),
-    "q282_folded_aliases" -> ((s, d) => PipelinesExt.foldedAliasGate(s, d)),
-    "q283_span_verify" -> ((s, d) => PipelinesExt.spanVerifyGate(s, d)),
-    "q284_markdown_fences" -> ((s, d) => PipelinesExt.markdownFenceGate(s, d)),
-    "q285_markdown_tables" -> ((s, d) => PipelinesExt.markdownTableGate(s, d)),
-    "q286_markdown_dl" -> ((s, d) => PipelinesExt.markdownDlGate(s, d)),
-    "q287_table_sections" -> ((s, d) => PipelinesExt.tableSectionsGate(s, d)),
-    "q288_fence_lang" -> ((s, d) => PipelinesExt.fenceLangGate(s, d)),
-    "q289_markdown_corpus" -> ((s, d) => PipelinesExt.markdownCorpusGate(s, d)),
-    "q290_rowgroup_clip" -> ((s, d) => PipelinesExt.rowgroupClipGate(s, d)),
-    "q291_markdown_inline" -> ((s, d) => PipelinesExt.markdownInlineGate(s, d)),
-    "q292_ol_start" -> ((s, d) => PipelinesExt.olStartGate(s, d)),
-    "q293_main_markdown" -> ((s, d) => PipelinesExt.mainMarkdownGate(s, d)),
-    "q294_compress_ratio" -> ((s, d) => PipelinesExt.compressRatioGate(s, d)),
-  )
+  /** Every gate, each declared once next to its query. */
+  lazy val gates: Seq[Gate] = Gate.registry(Pipelines.gates ++ PipelinesExt.gates)
 
-  def oracleSql: Map[String, String] = Oracles.sql ++ OraclesExt.sql
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map(g => g.name -> g.build).toMap
+
+  /** Oracle SQL for the dataset at `sfDir`. */
+  def oracleSqlFor(sfDir: String): Map[String, String] =
+    gates.map(g => g.name -> g.oracle(sfDir)).toMap
+
+  /** [[oracleSqlFor]] the sf0.01 correctness dataset. */
+  def oracleSql: Map[String, String] = oracleSqlFor("/root/testdata/sf0.01")
 }
 
 /** One builder per query; shared sub-plans factored for reuse. */
@@ -533,9 +231,7 @@ object Pipelines {
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
       .limit(100)
-}
 
-object Oracles {
   /** Shared SQL fragments, spliced so Spark and oracle stay in sync. */
   private val orderFeaturesSql =
     """SELECT o_custkey AS c_custkey,
@@ -550,8 +246,8 @@ object Oracles {
     """SELECT c_custkey, c_mktsegment, n_name AS nation_name, c_acctbal
       |FROM customer JOIN nation ON c_nationkey = n_nationkey""".stripMargin
 
-  val sql: Map[String, String] = Map(
-    "q01_cleanse_recode" ->
+  def gates: Seq[Gate] = Seq(
+    Gate("q01_cleanse_recode", Family.Fs, cleanseRecode, _ =>
       """SELECT c_custkey,
         |  CASE WHEN c_mktsegment = 'BUILDING' THEN 1
         |       WHEN c_mktsegment = 'AUTOMOBILE' THEN 2
@@ -559,24 +255,24 @@ object Oracles {
         |  c_acctbal > 0 AS positive_bal,
         |  CAST(length(trim(c_name)) AS INTEGER) AS name_len,
         |  CASE WHEN c_acctbal < 0 THEN NULL ELSE c_acctbal END AS nonneg_bal
-        |FROM customer ORDER BY c_custkey""".stripMargin,
+        |FROM customer ORDER BY c_custkey""".stripMargin),
 
-    "q02_dynamic_projection" ->
-      "SELECT c_custkey, c_nationkey, c_mktsegment FROM customer ORDER BY c_custkey",
+    Gate("q02_dynamic_projection", Family.Fs, dynamicProjection, _ =>
+      "SELECT c_custkey, c_nationkey, c_mktsegment FROM customer ORDER BY c_custkey"),
 
-    "q03_fillna" ->
+    Gate("q03_fillna", Family.Fs, fillNa, _ =>
       """SELECT o_orderkey,
         |  CASE WHEN o_orderpriority = '4-NOT SPECIFIED' THEN 'NONE'
         |       ELSE o_orderpriority END AS priority_opt
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
-    "q04_demographic_features" ->
-      (demographicsSql + "\nORDER BY c_custkey"),
+    Gate("q04_demographic_features", Family.Fs, demographicFeatures, _ =>
+      (demographicsSql + "\nORDER BY c_custkey")),
 
-    "q05_order_features" ->
-      (orderFeaturesSql + "\nGROUP BY o_custkey ORDER BY c_custkey"),
+    Gate("q05_order_features", Family.Fs, orderFeatures, _ =>
+      (orderFeaturesSql + "\nGROUP BY o_custkey ORDER BY c_custkey")),
 
-    "q07_training_set" ->
+    Gate("q07_training_set", Family.Fs, trainingSet, _ =>
       s"""WITH ord AS ($orderFeaturesSql GROUP BY o_custkey),
          |demo AS ($demographicsSql)
          |SELECT c.c_custkey, c.c_acctbal > 1000 AS high_value,
@@ -585,9 +281,9 @@ object Oracles {
          |FROM customer c
          |LEFT JOIN ord o ON c.c_custkey = o.c_custkey
          |LEFT JOIN demo d ON c.c_custkey = d.c_custkey
-         |ORDER BY c.c_custkey""".stripMargin,
+         |ORDER BY c.c_custkey""".stripMargin),
 
-    "q08_score_batch" ->
+    Gate("q08_score_batch", Family.Fs, scoreBatch, _ =>
       """WITH ord AS (SELECT o_custkey AS c_custkey,
         |    CAST(count(*) AS BIGINT) AS n_orders,
         |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spent
@@ -598,9 +294,9 @@ object Oracles {
         |      + coalesce(o.total_spent, 0.0) * CAST(0.0005 AS DOUBLE)) > 0
         |    THEN 'True' ELSE 'False' END AS prediction
         |FROM customer c LEFT JOIN ord o ON c.c_custkey = o.c_custkey
-        |ORDER BY c.c_custkey""".stripMargin,
+        |ORDER BY c.c_custkey""".stripMargin),
 
-    "q09_merge_upsert" ->
+    Gate("q09_merge_upsert", Family.Fs, mergeUpsert, _ =>
       s"""WITH oldf AS ($orderFeaturesSql WHERE o_orderdate < TIMESTAMP '1999-01-01' GROUP BY o_custkey),
          |newf AS (SELECT o_custkey AS c_custkey,
          |    CAST(count(*) AS BIGINT) AS n_orders,
@@ -614,9 +310,9 @@ object Oracles {
          |FROM oldf o WHERE NOT EXISTS (SELECT 1 FROM newf n WHERE n.c_custkey = o.c_custkey)
          |UNION ALL
          |SELECT * FROM newf
-         |ORDER BY c_custkey""".stripMargin,
+         |ORDER BY c_custkey""".stripMargin),
 
-    "q11_pricing_summary" ->
+    Gate("q11_pricing_summary", Family.Sql, pricingSummary, _ =>
       """SELECT l_returnflag, l_linestatus,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
@@ -628,20 +324,20 @@ object Oracles {
         |  CAST(count(*) AS BIGINT) AS count_order
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '2001-09-02'
         |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
 
-    "q12_topk_orders" ->
+    Gate("q12_topk_orders", Family.Sql, topkOrders, _ =>
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin),
 
     // bucketing is physical layout only — the oracle is the plain join
-    "q185_bucketed_training_set" ->
+    Gate("q185_bucketed_training_set", Family.Fs, bucketedTrainingSet, _ =>
       s"""WITH ord AS ($orderFeaturesSql GROUP BY o_custkey)
          |SELECT c.c_custkey, c.c_acctbal > 1000 AS high_value,
          |  o.n_orders, o.total_spent, o.avg_order_price, o.last_order_us,
          |  o.n_open_orders
          |FROM customer c
          |LEFT JOIN ord o ON c.c_custkey = o.c_custkey
-         |ORDER BY c.c_custkey""".stripMargin,
+         |ORDER BY c.c_custkey""".stripMargin),
   )
 }
