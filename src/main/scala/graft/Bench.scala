@@ -100,14 +100,16 @@ object Bench {
       val best =
         if (s1.ok != s2.ok) { if (s1.ok) s1 else s2 }
         else if (s2.wall < s1.wall) s2 else s1
-      g -> best
+      (g, best, Seq(s1.wall, s2.wall))
     }
-    val qs = results.map { case (g, v) => s"\"" + g.name + "\":" + v.wall }
+    val qs = results.map { case (g, v, _) => s"\"" + g.name + "\":" + v.wall }
       .mkString("{", ",", "}")
-    val metricsJson = results.map { case (g, v) =>
+    // "pass_walls": both passes' walls, so a diff can read each
+    // family's pass-to-pass spread as its noise band
+    val metricsJson = results.map { case (g, v, walls) =>
       s"\"" + g.name + "\":" + s"""{"wall":${v.wall},"ok":${v.ok},"cpu":${v.cpu},""" +
         s""""shuffle_read":${v.shufRead},"shuffle_write":${v.shufWrite},""" +
-        s""""family":"${g.family.name}"""" +
+        s""""family":"${g.family.name}","pass_walls":${walls.mkString("[", ",", "]")}""" +
         v.err.fold("")(e => ",\"err\":" + Verify.jsonString(e)) + "}"
     }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2.wall).sum else 0.0

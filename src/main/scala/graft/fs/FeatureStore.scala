@@ -1,10 +1,13 @@
 package graft.fs
 
+import java.io.FileNotFoundException
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.Properties
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.StructType
 
 /** Write disposition for [[FeatureStore.writeTable]] — the reference's
@@ -57,15 +60,36 @@ object WriteMode {
   * sidecar litter).
   *
   * Scale notes (SURVEY.md §7.7):
-  *   - merge is a single shuffle (the anti-join on the key); AQE handles
-  *     skewed keys at runtime;
+  *   - every version a merge, `applyChanges` or `compact` writes of a
+  *     plain table (no buckets, no `partitionBy`) is key-clustered:
+  *     range-partitioned on the leading key (`compact`: into its target
+  *     file count), each file sorted by the keys, and listed with
+  *     per-file key min/max in a `_manifest` inside the version
+  *     directory that commits with it ([[KeyRanges]]). An overwrite
+  *     writes its frame as it comes: clustering it costs a sampling job
+  *     and a shuffle of the whole table, which the first merge pays
+  *     anyway;
+  *   - a merge keeps that layout without re-sorting the table: both
+  *     join sides are routed by the base's file boundaries
+  *     (`repartitionById` on the range id) and joined on (keys, range
+  *     id), one routing shuffle per side. Split points for
+  *     `spark.sql.shuffle.partitions` ranges are re-sampled (one Spark
+  *     job over the leading key) only when the base is not clustered
+  *     into that many files with disjoint ranges — the first merge
+  *     after an overwrite, after `compact(1)` or after a z-order
+  *     rewrite, into a version written before versions carried a
+  *     `_manifest`, or into a bucketed or partitioned table, which is
+  *     routed the same way but written in its own layout;
+  *   - publishing a clustered version copies (hard-links, on a local
+  *     root) its files and manifest into the online snapshot with no
+  *     Spark job;
   *   - feature tables may be written partitioned (`spec.partitionBy`)
   *     so training-set joins at scale can prune partitions;
   *   - nothing here ever collects a data-sized result to the driver;
   *     the publish-time key manifest reads one footer per snapshot FILE
   *     (i.e. bounded by `numPartitions`), and an online point lookup
-  *     decodes on the driver only its manifest-pruned, row-group-pruned
-  *     range files and keeps only the requested rows.
+  *     decodes on the driver only its manifest-pruned range files and
+  *     keeps only the requested rows.
   */
 final class FeatureStore(private[fs] val spark: SparkSession,
     val root: String, val retainVersions: Int = 2)
@@ -84,16 +108,16 @@ final class FeatureStore(private[fs] val spark: SparkSession,
     try Some(FileContext.getFileContext(fs.getUri, hconf))
     catch { case _: org.apache.hadoop.fs.UnsupportedFileSystemException => None }
 
-  private def isLocalFs: Boolean = fs.getUri.getScheme == "file"
+  private[fs] def isLocalFs: Boolean = fs.getUri.getScheme == "file"
 
-  private def localNio(p: Path): java.nio.file.Path =
+  private[fs] def localNio(p: Path): java.nio.file.Path =
     java.nio.file.Paths.get(p.toUri.getPath)
 
   fs.mkdirs(rootPath)
 
   private def tableDir(name: String) = new Path(rootPath, name)
   private def specFile(name: String) = new Path(tableDir(name), "spec.properties")
-  private def dataDir(name: String, version: Int) = new Path(tableDir(name), s"v$version")
+  private[fs] def dataDir(name: String, version: Int) = new Path(tableDir(name), s"v$version")
 
   // ---------------------------------------------------------------- catalog
 
@@ -273,51 +297,71 @@ final class FeatureStore(private[fs] val spark: SparkSession,
     * then FS:411-435 merges a DataFrame carrying two NEW columns into
     * the existing table — existing keys are updated, new keys inserted,
     * and the table schema gains the new columns with NULL for rows only
-    * present in the old snapshot). Without Delta's MERGE INTO the plan
-    * is: `old ANTI-JOIN new ON keys` (rows to carry forward) UNION-BY-
-    * NAME `new` (rows that win), allowMissingColumns covering evolution
-    * in both directions. One shuffle on the keys; broadcast if `new` is
-    * small (Catalyst/AQE decides).
+    * present in the old snapshot). For columns the incoming DataFrame
+    * CARRIES, the new row wins on matched keys (including explicit
+    * NULLs); columns it OMITS keep their existing values — a
+    * partial-column refresh must not NULL out untouched features.
+    *
+    * A merge into a plain table (no buckets, no `partitionBy`) writes a
+    * key-clustered version (see [[KeyRanges]]). An overwrite writes `df`
+    * as it comes: clustering it would cost every overwrite a sampling
+    * job and a shuffle of the whole table, and the first merge after it
+    * clusters the table anyway.
     */
-  /** The merge computation shared by writeTable(Merge) and
-    * [[applyChanges]]: full-outer coalesce of `df` onto `old` by the
-    * keys, with schema-evolution add-column and a named type-conflict
-    * error.
+  def writeTable(name: String, df: DataFrame, mode: WriteMode): Unit = {
+    val (spec, version) = loadSpec(name)
+    val missingKeys = spec.keys.filterNot(df.columns.contains)
+    require(missingKeys.isEmpty,
+      s"write to $name: key column(s) ${missingKeys.mkString(", ")} missing from DataFrame")
+    if (mode == WriteMode.Overwrite || version == 0)
+      writeVersion(name, spec, version, df, clustered = false)
+    else {
+      val old = readTable(name)
+      checkMergeTypes(old, df, name)
+      val ranges = rangesFor(name, spec, version, old, df)
+      writeClustered(name, spec, version, mergeRouted(ranges.route(old), ranges.route(df), spec.keys))
+    }
+  }
+
+  /** Schema evolution adds columns; it never retypes them — catch type
+    * conflicts with a named error instead of a positional cast failure
+    * deep in the plan. Nullability flags are NOT a conflict: parquet
+    * round trips and aggregate outputs disagree on nullable/containsNull
+    * for identical value types.
     */
-  private def mergeInto(old: DataFrame, df: DataFrame, keys: Seq[String],
-      name: String): DataFrame = {
-    // schema evolution adds columns; it never retypes them — catch
-    // type conflicts here with a named error instead of a positional
-    // cast failure deep in the plan. Nullability flags are NOT a
-    // conflict: parquet round trips and aggregate outputs disagree
-    // on nullable/containsNull for identical value types.
+  private def checkMergeTypes(old: DataFrame, df: DataFrame, name: String): Unit = {
     val conflicts = df.schema.flatMap { f =>
       old.schema.find(_.name == f.name)
-        .filterNot(o => org.apache.spark.sql.graftbridge.Bridge
+        .filterNot(o => Bridge
           .sameTypeIgnoringNullability(o.dataType, f.dataType))
         .map(o => s"${f.name}: table has ${o.dataType.simpleString}, write has ${f.dataType.simpleString}")
     }
     require(conflicts.isEmpty,
       s"merge into $name: column type conflict(s) — ${conflicts.mkString("; ")}")
-    // Full-outer coalesce, not anti-join ∪ new: for columns the
-    // incoming DataFrame CARRIES, the new row wins on matched keys
-    // (including explicit NULLs); columns it OMITS keep their
-    // existing values — a partial-column refresh must not NULL out
-    // untouched features. Still one shuffle on the keys.
-    // Value columns are RENAMED per side before the join (name-based
-    // disambiguation): Dataset-column references (`old(c)`/`newDf(c)`)
-    // trip DetectAmbiguousSelfJoin when both frames share lineage —
-    // exactly what an applyChanges batch does, where deletes and
-    // upserts split from ONE changes frame.
+  }
+
+  /** The merge shared by writeTable(Merge) and [[applyChanges]]:
+    * full-outer coalesce of `df` onto `old` by the keys. Both sides
+    * arrive routed through the same [[KeyRanges]], so the join is on
+    * (keys, range id) and plans no exchange beyond the two routing
+    * ones; output partition `i` holds exactly key range `i`.
+    * Value columns are RENAMED per side before the join (name-based
+    * disambiguation): Dataset-column references (`old(c)`/`newDf(c)`)
+    * trip DetectAmbiguousSelfJoin when both frames share lineage —
+    * exactly what an applyChanges batch does, where deletes and
+    * upserts split from ONE changes frame.
+    */
+  private def mergeRouted(old: DataFrame, df: DataFrame, keys: Seq[String]): DataFrame = {
+    val on = keys :+ KeyRanges.Col
     val marker = "_graft_merge_new"
-    val oldVals = old.columns.filterNot(keys.contains)
-    val newVals = df.columns.filterNot(keys.contains)
+    val oldVals = old.columns.filterNot(on.contains)
+    val newVals = df.columns.filterNot(on.contains)
     val renamedOld = old.select(
-      keys.map(col) ++ oldVals.map(c => col(c).as(s"_graft_old_$c")): _*)
+      on.map(col) ++ oldVals.map(c => col(c).as(s"_graft_old_$c")): _*)
     val renamedNew = df.select(
-      keys.map(col) ++ newVals.map(c => col(c).as(s"_graft_new_$c"))
+      on.map(col) ++ newVals.map(c => col(c).as(s"_graft_new_$c"))
         :+ lit(1).as(marker): _*)
-    val joined = renamedOld.join(renamedNew, keys, "full_outer")
+    val joined = renamedOld.join(renamedNew, on, "full_outer")
     val matched = col(marker).isNotNull
     val valueCols = (oldVals ++ newVals.filterNot(oldVals.contains)).map { c =>
       if (oldVals.contains(c) && newVals.contains(c))
@@ -325,37 +369,37 @@ final class FeatureStore(private[fs] val spark: SparkSession,
       else if (oldVals.contains(c)) col(s"_graft_old_$c").as(c) // omitted → preserved
       else col(s"_graft_new_$c").as(c)   // new column → NULL for old rows
     }
-    joined.select(keys.map(col) ++ valueCols: _*)
+    joined.select(keys.map(col) ++ valueCols :+ col(KeyRanges.Col): _*)
   }
 
-  def writeTable(name: String, df: DataFrame, mode: WriteMode): Unit =
-    writeTableFrom(name, df, mode, expectedParent = None)
-
-  /** writeTable with an optional optimistic-concurrency pin: when
-    * `expectedParent` is set and another writer has already advanced
-    * the table past it, the write aborts BEFORE computing anything —
-    * the caller's read-modify-write (e.g. [[applyChanges]]) would
-    * otherwise silently overwrite the racer's commit. The residual
-    * window between this check and the version claim is closed by the
-    * claim + post-claim re-check below, same as every write.
+  /** Commit `ranged` — rows already partitioned by leading-key range,
+    * by [[KeyRanges]] routing (dropping their range column) or by a
+    * range repartition — as version `version + 1` of `name`. A plain
+    * table's version is written key-clustered: each file sorted by the
+    * keys, with its `_manifest` written inside the version directory
+    * before the claim, so the version and its manifest commit together.
+    * Bucketed and partitioned tables write the rows in their own layout.
     */
-  private def writeTableFrom(name: String, df: DataFrame, mode: WriteMode,
-      expectedParent: Option[Long]): Unit = {
-    val (spec, version) = loadSpec(name)
-    expectedParent.filter(_ != version).foreach { p =>
-      throw new java.util.ConcurrentModificationException(
-        s"feature table $name: version moved $p -> $version before write; retry")
-    }
-    val missingKeys = spec.keys.filterNot(df.columns.contains)
-    require(missingKeys.isEmpty,
-      s"write to $name: key column(s) ${missingKeys.mkString(", ")} missing from DataFrame")
+  private[fs] def writeClustered(name: String, spec: FeatureTableSpec, version: Int,
+      ranged: DataFrame): Unit = {
+    val data = ranged.drop(KeyRanges.Col)
+    if (isPlain(spec))
+      writeVersion(name, spec, version, data.sortWithinPartitions(spec.keys.map(col): _*),
+        clustered = true)
+    else writeVersion(name, spec, version, data, clustered = false)
+  }
 
-    val result: DataFrame = mode match {
-      case WriteMode.Overwrite => df
-      case WriteMode.Merge if version == 0 => df
-      case WriteMode.Merge => mergeInto(readTable(name), df, spec.keys, name)
-    }
-
+  /** Commit `result` as version `version + 1` of `name`, exactly as laid
+    * out, with a `_manifest` when `clustered`.
+    *
+    * Writers are pinned to `version`: the new version is claimed by a
+    * no-overwrite rename and the pointer re-checked after it, so a
+    * racer committing in between makes this write abort with
+    * ConcurrentModificationException instead of silently reverting the
+    * racer's rows (the optimistic-concurrency contract).
+    */
+  private[fs] def writeVersion(name: String, spec: FeatureTableSpec, version: Int,
+      result: DataFrame, clustered: Boolean): Unit = {
     val newVersion = version + 1
     val target = dataDir(name, newVersion)
     // write into a writer-private temp dir, then claim v<N+1> by atomic
@@ -391,6 +435,14 @@ final class FeatureStore(private[fs] val spark: SparkSession,
         if (spec.partitionBy.nonEmpty) writer.partitionBy(spec.partitionBy: _*) else writer
       partitioned.parquet(tmp.toString)
     }
+    if (clustered) {
+      val schema = OnlineManifest.asNullable(result.schema).asInstanceOf[StructType]
+      val keyIndex = schema.fieldIndex(spec.keys.head)
+      val manifest = OnlineManifest(target.getName, schema, keyIndex,
+        footerKeyStats(tmp, schema(keyIndex)))
+      val out = fs.create(new Path(tmp, KeyRanges.Manifest), false)
+      try out.write(manifest.render.getBytes(UTF_8)) finally out.close()
+    }
     claimVersionDir(name, tmp, target)
     val nowVersion = loadSpec(name)._2
     if (nowVersion != version) {
@@ -398,7 +450,7 @@ final class FeatureStore(private[fs] val spark: SparkSession,
       throw new java.util.ConcurrentModificationException(
         s"feature table $name: version moved $version -> $nowVersion during write; retry")
     }
-    saveSpec(spec.copy(schema = structTypeOf(result)), newVersion)
+    saveSpec(spec.copy(schema = result.schema), newVersion)
     // Old versions are kept for time travel; prune to the store's
     // retention window (vacuumTable reclaims more on demand).
     (1 to newVersion - retainVersions).foreach { v =>
@@ -419,11 +471,12 @@ final class FeatureStore(private[fs] val spark: SparkSession,
     * reference's `mode='merge'` sits beside (FS:435): one changes
     * frame carrying the key columns, an op column ('upsert' |
     * 'delete'), and the value columns for upserts; applied as ONE
-    * atomic version bump. Deletes drop matched keys via a LEFT ANTI
-    * join on the keys (one shuffle, broadcast when the delete set is
-    * small — AQE's call); upserts then merge through the same
+    * atomic version bump. The batch is routed once through the base's
+    * [[KeyRanges]]; deletes drop matched keys via a LEFT ANTI join on
+    * (keys, range id) and upserts then merge through the same
     * full-outer coalesce as writeTable(Merge), so partial-column
-    * refresh semantics and schema evolution hold for CDC feeds too.
+    * refresh semantics, schema evolution and the clustered layout hold
+    * for CDC feeds too.
     *
     * Multiple change events per key: with no `seqCol`, duplicate keys
     * in the batch are an ERROR (Delta's multiple-source-match
@@ -453,38 +506,82 @@ final class FeatureStore(private[fs] val spark: SparkSession,
         .map(_.getString(0)).filterNot(Set("upsert", "delete"))
       require(badOps.isEmpty,
         s"applyChanges: unknown op(s) ${badOps.mkString(", ")} (want upsert | delete)")
+      if (seqCol.isEmpty) {
+        val dups = cached.groupBy(spec.keys.map(col): _*)
+          .agg(count(lit(1)).as("_n")).filter(col("_n") > 1)
+          .select(spec.keys.map(col): _*).limit(5).collect()
+        require(dups.isEmpty,
+          s"applyChanges: multiple change events for key(s) " +
+            s"${dups.mkString(", ")} — pass seqCol to resolve to the " +
+            "last event per key, or pre-compact the batch")
+      }
+      val old = readTable(name)
+      checkMergeTypes(old, cached.drop(opCol +: seqCol.toSeq: _*), name)
+      val ranges = rangesFor(name, spec, version, old, cached)
+      val routed = ranges.route(cached)
       val perKey: DataFrame = seqCol match {
         case Some(sc) =>
           // last event per key wins — rank by seq desc, ties broken
-          // arbitrarily-but-deterministically by op so replays agree
+          // arbitrarily-but-deterministically by op so replays agree;
+          // the range id is a function of the keys, so partitioning on
+          // it too keeps the window inside the routing exchange
           val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(spec.keys.map(col): _*)
+            .partitionBy((spec.keys :+ KeyRanges.Col).map(col): _*)
             .orderBy(col(sc).desc, col(opCol))
-          cached.withColumn("_graft_cdc_rn", row_number().over(w))
+          routed.withColumn("_graft_cdc_rn", row_number().over(w))
             .filter(col("_graft_cdc_rn") === 1)
             .drop("_graft_cdc_rn", sc)
-        case None =>
-          val dups = cached.groupBy(spec.keys.map(col): _*)
-            .agg(count(lit(1)).as("_n")).filter(col("_n") > 1)
-            .select(spec.keys.map(col): _*).limit(5).collect()
-          require(dups.isEmpty,
-            s"applyChanges: multiple change events for key(s) " +
-              s"${dups.mkString(", ")} — pass seqCol to resolve to the " +
-              "last event per key, or pre-compact the batch")
-          cached
+        case None => routed
       }
-      val deletes = perKey.filter(col(opCol) === "delete")
-        .select(spec.keys.map(col): _*)
+      val on = spec.keys :+ KeyRanges.Col
+      val deletes = perKey.filter(col(opCol) === "delete").select(on.map(col): _*)
       val upserts = perKey.filter(col(opCol) === "upsert").drop(opCol)
-      val kept = readTable(name).join(deletes, spec.keys, "left_anti")
-      writeTableFrom(name, mergeInto(kept, upserts, spec.keys, name),
-        WriteMode.Overwrite, expectedParent = Some(version))
+      val kept = ranges.route(old).join(deletes, on, "left_anti")
+      writeClustered(name, spec, version, mergeRouted(kept, upserts, spec.keys))
     } finally {
       cached.unpersist()
       ()
     }
   }
 
+  // ---------------------------------------------------------------- layout
+
+  /** The key ranges a merge re-samples when its base is not clustered
+    * into that many files.
+    */
+  private[fs] def clusterFiles: Int = spark.sessionState.conf.numShufflePartitions
+
+  /** Plain tables hold key-clustered versions; bucketed and partitioned
+    * tables keep the layout their spec fixes.
+    */
+  private[fs] def isPlain(spec: FeatureTableSpec): Boolean =
+    spec.buckets == 0 && spec.partitionBy.isEmpty
+
+  /** The `_manifest` of a key-clustered version; None for a version
+    * written any other way (bucketed, partitioned, z-ordered, or
+    * committed before versions carried one).
+    */
+  private[fs] def versionManifest(name: String, version: Int): Option[OnlineManifest] =
+    try {
+      val in = fs.open(new Path(dataDir(name, version), KeyRanges.Manifest))
+      try Some(OnlineManifest.parse(new String(in.readAllBytes(), UTF_8))) finally in.close()
+    } catch { case _: FileNotFoundException => None }
+
+  /** The key ranges a merge into version `version` routes both sides
+    * through: the version's own file boundaries when its manifest shows
+    * it clustered into [[clusterFiles]] files, else [[clusterFiles]]
+    * ranges sampled from the leading key of `base` and `incoming`.
+    */
+  private def rangesFor(name: String, spec: FeatureTableSpec, version: Int,
+      base: DataFrame, incoming: DataFrame): KeyRanges = {
+    val lead = spec.keys.head
+    versionManifest(name, version)
+      .flatMap(KeyRanges.ofManifest(lead, _, clusterFiles))
+      .getOrElse {
+        KeyRanges(lead, Bridge.sampleRangeBounds(
+          base.select(lead).union(incoming.select(lead)), clusterFiles).toIndexedSeq)
+      }
+  }
 
   // ---------------------------------------------------------------- impl
 
@@ -516,8 +613,6 @@ final class FeatureStore(private[fs] val spark: SparkSession,
         }
     }
   }
-
-  private def structTypeOf(df: DataFrame): StructType = df.schema
 
   private def saveSpec(spec: FeatureTableSpec, version: Int): Unit = {
     val p = new Properties()

@@ -8,15 +8,15 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.metadata.ColumnPath
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{DataFrame, Row, sources}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -48,21 +48,37 @@ private[fs] trait FeatureStoreOnline { this: FeatureStore =>
     * runs build the KV index without re-sorting). `numPartitions`
     * controls write parallelism and file count; the default follows the
     * session's parallelism so a 1000-executor cluster writes 1000-way,
-    * never through one task. A real deployment swaps the parquet sink
-    * for JDBC — [[publishTableJdbc]] builds exactly that plan. Returns
-    * the new snapshot directory.
+    * never through one task. A key-clustered version already has that
+    * shape: when it holds `numPartitions` files, its files are copied
+    * (hard-linked on a local root) into the snapshot and its manifest
+    * reused, with no Spark job; any other version is range-partitioned
+    * and sorted by [[publishFrame]]. A real deployment swaps the
+    * parquet sink for JDBC — [[publishTableJdbc]] builds exactly that
+    * plan. Returns the new snapshot directory.
     */
   def publishTable(name: String,
       numPartitions: Int = spark.sparkContext.defaultParallelism): String = {
-    val frame = publishFrame(name, numPartitions)
+    require(numPartitions > 0, s"publishTable($name): numPartitions must be > 0")
+    val (spec, version) = loadSpec(name)
     val online = onlinePath(name)
     val snapshot = f"s${System.currentTimeMillis()}%013d-${java.util.UUID.randomUUID().toString.take(8)}"
     val dir = new Path(online, snapshot)
-    frame.write.parquet(dir.toString)
-    val schema = OnlineManifest.asNullable(frame.schema).asInstanceOf[StructType]
-    val keyIndex = schema.fieldIndex(loadSpec(name)._1.keys.head)
-    val manifest = OnlineManifest(snapshot, schema, keyIndex,
-      footerKeyStats(dir, schema(keyIndex)))
+    val clustered =
+      if (version == 0) None
+      else versionManifest(name, version).filter(_.files.size == numPartitions)
+    val manifest = clustered match {
+      case Some(vm) =>
+        fs.mkdirs(dir)
+        vm.files.foreach(f => copyFile(new Path(dataDir(name, version), f.name), new Path(dir, f.name)))
+        val schema = onlineSchema(readTable(name))
+        OnlineManifest(snapshot, schema, schema.fieldIndex(spec.keys.head), vm.files)
+      case None =>
+        val frame = publishFrame(name, numPartitions)
+        frame.write.parquet(dir.toString)
+        val schema = onlineSchema(frame)
+        val keyIndex = schema.fieldIndex(spec.keys.head)
+        OnlineManifest(snapshot, schema, keyIndex, footerKeyStats(dir, schema(keyIndex)))
+    }
     val previous =
       try Some(onlineManifest(name).snapshot)
       catch { case _: IllegalArgumentException => None } // first publish
@@ -75,6 +91,25 @@ private[fs] trait FeatureStoreOnline { this: FeatureStore =>
     }
     dir.toString
   }
+
+  /** The schema a parquet read of `df`'s written files gives back. */
+  private def onlineSchema(df: DataFrame): StructType =
+    OnlineManifest.asNullable(df.schema).asInstanceOf[StructType]
+
+  /** Copy an immutable file: a hard link on a local root (no bytes move;
+    * the link outlives the version directory's pruning), else a byte copy.
+    */
+  private def copyFile(src: Path, dst: Path): Unit =
+    if (isLocalFs)
+      try { java.nio.file.Files.createLink(localNio(dst), localNio(src)); () }
+      catch {
+        case _: UnsupportedOperationException | _: java.io.IOException =>
+          java.nio.file.Files.copy(localNio(src), localNio(dst)); ()
+      }
+    else {
+      org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, hconf)
+      ()
+    }
 
   /** K7 over JDBC — the reference's actual online sink
     * (Feature_Store_Telco_Churn_Sean_Original.py:374-387 publishes to
@@ -136,16 +171,15 @@ private[fs] trait FeatureStoreOnline { this: FeatureStore =>
     * for integral and string leading keys: the manifest's per-file key
     * range prunes the read to the range files that can hold a requested
     * key, and those files stream through the driver in Spark's own
-    * parquet decoder, with the keys pushed down as an `In` filter so
-    * row-group stats skip most of each (sorted) file. Only rows whose
-    * leading key was asked for are kept; the answer is a local relation
-    * in the published schema, so a point lookup touches O(1) files and
-    * O(requested) rows on the driver regardless of snapshot size — the
-    * bulk-loaded-KV access pattern, without a database in the
-    * container. Tables with a composite key prune and filter on the
-    * LEADING key (the range-partitioning major order); callers needing
-    * full-tuple lookups filter the result. Other leading key types get a
-    * pushed-down filtered scan of the whole snapshot.
+    * parquet decoder, built once per published snapshot. Only rows
+    * whose leading key was asked for are kept; the answer is a local
+    * relation in the published schema, so a point lookup decodes O(1)
+    * range files and keeps O(requested) rows on the driver regardless
+    * of snapshot size — the bulk-loaded-KV access pattern, without a
+    * database in the container. Tables with a composite key prune and
+    * filter on the LEADING key (the range-partitioning major order);
+    * callers needing full-tuple lookups filter the result. Other leading
+    * key types get a pushed-down filtered scan of the whole snapshot.
     */
   def lookupOnline(name: String, keys: Seq[Any]): DataFrame = {
     require(keys.nonEmpty, s"lookupOnline($name): need at least one key")
@@ -156,6 +190,24 @@ private[fs] trait FeatureStoreOnline { this: FeatureStore =>
       spark.createDataFrame(lookupRows(name, m, keys).asJava, m.schema)
   }
 
+  /** The parquet decoder of each table's current snapshot, built once
+    * per published snapshot: building one broadcasts the session's whole
+    * Hadoop configuration, which would otherwise cost every lookup a
+    * broadcast. It takes no pushed filter, since the filter would be
+    * fixed at build time; rows are filtered on the requested keys
+    * instead.
+    */
+  private val snapshotReaders =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, PartitionedFile => Iterator[InternalRow])]()
+
+  private def snapshotReader(name: String, m: OnlineManifest): PartitionedFile => Iterator[InternalRow] =
+    snapshotReaders.compute(name, (_, cached) =>
+      if (cached != null && cached._1 == m.snapshot) cached
+      else m.snapshot -> new ParquetFileFormat().buildReaderWithPartitionValues(spark, m.schema,
+        new StructType(), m.schema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        // the reader mutates the conf it is given
+        new Configuration(hconf)))._2
+
   /** Decode the pruned range files on the driver through the decoder a
     * scan task uses (every Spark type decodes identically), keeping the
     * rows whose leading key is in `keys`.
@@ -165,30 +217,14 @@ private[fs] trait FeatureStoreOnline { this: FeatureStore =>
     if (files.isEmpty) return Nil
     val wanted = m.wanted(keys)
     val i = m.keyIndex
-    val keyType = m.schema(i).dataType
-    val keyOf: InternalRow => Any = keyType match {
+    val keyOf: InternalRow => Any = m.schema(i).dataType match {
       case ByteType => _.getByte(i).toLong
       case ShortType => _.getShort(i).toLong
       case IntegerType => _.getInt(i).toLong
       case LongType => _.getLong(i)
       case _ => _.getUTF8String(i)
     }
-    // the pushed filter only skips row groups and pages; it takes the
-    // column's own value type and drops keys the column cannot hold
-    val pushed: Array[Any] = wanted.toArray.flatMap {
-      case u: UTF8String => Some(u.toString)
-      case k: Long => keyType match {
-        case ByteType if k.isValidByte => Some(k)
-        case ShortType if k.isValidShort => Some(k)
-        case IntegerType if k.isValidInt => Some(k)
-        case LongType => Some(k)
-        case _ => None
-      }
-    }
-    // the reader mutates the conf it is given
-    val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, m.schema,
-      new StructType(), m.schema, Seq(sources.In(m.keyCol, pushed)),
-      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), new Configuration(hconf))
+    val read = snapshotReader(name, m)
     val toRow = CatalystTypeConverters.createToScalaConverter(m.schema)
     files.flatMap { f =>
       val rows = read(PartitionedFile(InternalRow.empty,
@@ -213,8 +249,8 @@ private[fs] trait FeatureStoreOnline { this: FeatureStore =>
     val kind = OnlineManifest.kindOf(key.dataType)
     def stats(st: FileStatus): (Option[Any], Option[Any]) = {
       if (kind == OnlineManifest.NoStats) return (None, None)
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, hconf))
-      val footer = try reader.getFooter finally reader.close()
+      val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(st, hconf),
+        ParquetMetadataConverter.NO_FILTER)
       val path = ColumnPath.get(key.name)
       def catalyst(v: Any): Any = v match {
         case b: Binary => UTF8String.fromBytes(b.getBytes)
@@ -248,15 +284,18 @@ private[fs] trait FeatureStoreOnline { this: FeatureStore =>
 
   /** Compact the current snapshot into `targetPartitions` files (repeated
     * merges leave one file per shuffle partition per write — at 100 TB
-    * the equivalent is OPTIMIZE/bin-packing; here: read → repartition on
-    * the keys → rewrite as a new version through the same commit path).
+    * the equivalent is OPTIMIZE/bin-packing; here: read → cluster into
+    * `targetPartitions` key ranges, or hash-partition on the keys for a
+    * bucketed or partitioned table → rewrite as a new version through
+    * the same commit path).
     */
   def compact(name: String, targetPartitions: Int = 1): Unit = {
     val (spec, version) = loadSpec(name)
     require(version > 0, s"compact($name): table has no data yet")
-    val compacted = readTable(name)
-      .repartition(targetPartitions, spec.keys.map(col): _*)
-    writeTable(name, compacted, WriteMode.Overwrite)
+    val current = readTable(name)
+    writeClustered(name, spec, version,
+      if (isPlain(spec)) current.repartitionByRange(targetPartitions, col(spec.keys.head))
+      else current.repartition(targetPartitions, spec.keys.map(col): _*))
   }
 
   /** OPTIMIZE … ZORDER BY analog (r12) — the other half of the Delta
@@ -285,7 +324,7 @@ private[fs] trait FeatureStoreOnline { this: FeatureStore =>
       s"optimizeTable($name): zorderBy column(s) ${bad.mkString(", ")} not in schema")
     val laidOut = graft.operators.ZOrder
       .layout(readTable(name), zorderBy, numFiles = targetPartitions)
-    writeTable(name, laidOut, WriteMode.Overwrite)
+    writeVersion(name, spec, version, laidOut, clustered = false)
   }
 }
 

@@ -24,6 +24,35 @@ object Bridge {
       b: org.apache.spark.sql.types.DataType): Boolean =
     org.apache.spark.sql.types.DataType.equalsIgnoreNullability(a, b)
 
+  /** Up to `parts - 1` ascending, distinct bounds that split the single
+    * column of `keys` into `parts` ranges of about equal row count, in
+    * Catalyst form. Sampled the way a range exchange samples, in one
+    * Spark job: a reservoir sample per input partition, weighted by that
+    * partition's row count. Null keys are not sampled; no non-null key
+    * gives no bounds.
+    */
+  def sampleRangeBounds(keys: org.apache.spark.sql.DataFrame, parts: Int): Seq[Any] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, SortOrder}
+    import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
+    val dt = keys.schema.head.dataType
+    val rdd = keys.queryExecution.toRdd
+      .mapPartitions(_.filter(!_.isNullAt(0)).map(_.copy()))
+    val size = math.min(
+      org.apache.spark.sql.internal.SQLConf.get.rangeExchangeSampleSizePerPartition.toDouble * parts,
+      1e6)
+    val perPartition = math.ceil(3.0 * size / math.max(1, rdd.partitions.length)).toInt
+    val (_, sketched) = org.apache.spark.RangePartitioner.sketch(rdd, perPartition)
+    val candidates = scala.collection.mutable.ArrayBuffer.empty[(InternalRow, Float)]
+    sketched.foreach { case (_, n, sample) =>
+      sample.foreach(k => candidates += ((k, (n.toDouble / sample.length).toFloat)))
+    }
+    if (candidates.isEmpty) return Nil
+    implicit val ordering: Ordering[InternalRow] = new LazilyGeneratedOrdering(
+      Seq(SortOrder(BoundReference(0, dt, nullable = true), Ascending)))
+    org.apache.spark.RangePartitioner.determineBounds(candidates, parts).toSeq.map(_.get(0, dt))
+  }
+
   /** Expose the private[sql] optimizer-rule builder so specs can
     * assert what a SparkSessionExtensions instance injects.
     */
