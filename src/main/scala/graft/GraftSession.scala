@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session shape every graft main runs in — Bench, Verify,
-  * ScaleCheck, GenPlans and the `tools.Probe` modes — so a benched,
-  * verified, probed or scaled number always comes from the same
-  * planner and the same installed rules.
+/** The one session shape every graft main runs in — Bench, Verify
+  * and the `tools.Probe` modes — so a benched, verified or probed
+  * number always comes from the same planner and the same installed
+  * rules.
   *
   * `SPARK_GRAFT_EXTRA_CONF` ("k=v;k2=v2") is the single A/B hook: its
   * entries apply last, over the shape below, and an unset env leaves

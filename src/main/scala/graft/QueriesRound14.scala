@@ -43,11 +43,10 @@ private[graft] trait PipelinesRound14 extends PipelinesBase {
       col("event_id"), col("user_id"),
       col("ts").cast("timestamp").as("ts"),
       floor(col("value") * lit(100.0) + lit(0.5)).cast("double").as("vq"))
-    // per-invocation temp dir (Files.createTempDirectory, the
-    // ScaleCheck stream-tier pattern): the source dir is APPENDED to
-    // between phases, and a path keyed only by the dataset would let
-    // two concurrent processes (Bench and Verify on the same sf)
-    // corrupt each other's in-flight checkpoint (r14 ADVICE)
+    // per-invocation temp dir (Files.createTempDirectory): the source
+    // dir is APPENDED to between phases, and a path keyed only by the
+    // dataset would let two concurrent processes (Bench and Verify on
+    // the same sf) corrupt each other's in-flight checkpoint (r14 ADVICE)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_q204_rst_").toString
     val srcDir = s"$dir/src"
@@ -172,10 +171,9 @@ private[graft] trait PipelinesRound14 extends PipelinesBase {
   }
 
   /** The q206 BMP fixture generator on its own — (media_id, payload)
-    * from a one-column id frame; also driven at 1×–256× by
-    * `tools/ScaleCheck`'s image tier.
+    * from a one-column id frame.
     */
-  private[graft] def imageMedia(ids: DataFrame): DataFrame = {
+  private def imageMedia(ids: DataFrame): DataFrame = {
     val s = ids.sparkSession
     import s.implicits._
     ids.select(col(ids.columns.head).cast("long")).as[Long]

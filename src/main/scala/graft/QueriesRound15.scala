@@ -91,7 +91,7 @@ private[graft] trait PipelinesRound15 extends PipelinesBase {
     // eager=true: materialize and unpersist the (id, dhash) snapshot
     // before returning — Bench/Verify call this gate repeatedly per
     // session, and the lazy gear's cached partitions would accumulate
-    // in storage memory (r15 ADVICE; the ScaleCheck discipline)
+    // in storage memory (r15 ADVICE)
     graft.ext.ImageHash.nearDupPairs(hashes, maxHamming = 8, eager = true)
       .orderBy("id_a", "id_b")
   }
@@ -100,10 +100,9 @@ private[graft] trait PipelinesRound15 extends PipelinesBase {
     * scale s = id % 3 + 1 — an (18s)×(16s) image whose every s×s
     * target-pixel footprint is uniform, carrying the q206 group
     * structure (id/4 groups, exposure variant id % 4, +64 bump in
-    * block (0,0) for variant 3) under the `r15:` md5 salt. Also driven
-    * by `tools/ScaleCheck`'s resize tier.
+    * block (0,0) for variant 3) under the `r15:` md5 salt.
     */
-  private[graft] def resizeImageMedia(ids: DataFrame): DataFrame = {
+  private def resizeImageMedia(ids: DataFrame): DataFrame = {
     val s = ids.sparkSession
     import s.implicits._
     ids.select(col(ids.columns.head).cast("long")).as[Long]

@@ -343,7 +343,7 @@ private[graft] object PipelinesTextSim {
     */
   val streamGateRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Start a streaming query under 8 state partitions (r13): a
+  /** Start a streaming query under 4 state partitions (r13): a
     * stateful operator opens its stores per shuffle partition and the
     * 32-partition session default spends a gate-sized run on empty
     * stores (q197 measured 6.9 s → 2.7 s). Keyed-state output is
@@ -356,17 +356,15 @@ private[graft] object PipelinesTextSim {
       start: => A): A = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     try {
-      // conf-parameterized + retuned r19 (was 8 since r17): state-store
-      // instances per stateful operator scale with this, and each one
-      // pays load/update/commit per micro-batch regardless of its row
+      // retuned r19 (was 8 since r17): state-store instances per
+      // stateful operator scale with this, and each one pays
+      // load/update/commit per micro-batch regardless of its row
       // share. Paired 8-vs-4 `Probe stream` A/B at sf0.1: the state-machine
       // gates dropped 0.4–0.95 s each (q204 5.16→4.21, q195 3.02→2.39,
       // q199 3.18→2.73, q197 3.94→3.53) while the CPU-heavy gates
       // (q184/q200–q202/q265) stayed flat; 2 showed no further gain.
-      // A production deployment sizes this to its state volume via the
-      // conf — the default suits gate-fixture state.
-      s.conf.set("spark.sql.shuffle.partitions",
-        s.conf.get("spark.graft.stream.stateParts", "4"))
+      // Sized to gate-fixture state.
+      s.conf.set("spark.sql.shuffle.partitions", "4")
       start
     } finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }

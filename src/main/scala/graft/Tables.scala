@@ -68,33 +68,25 @@ object Tables {
     * partition count is BELOW the target — at 100 TB a table scan has
     * thousands of splits and this is a no-op, so nothing here is
     * tuned to local[32]. The target derives from the session's
-    * default parallelism (`spark.graft.scan.spread.parts` overrides
-    * for A/B measurement; `spark.graft.scan.spread=false` disables).
+    * default parallelism.
     */
   private def spread(spark: SparkSession, dir: String, name: String,
-      df: DataFrame): DataFrame = {
-    val dflt = sys.env.getOrElse("SPARK_GRAFT_SCAN_SPREAD", "true")
-    if (!spark.conf.get("spark.graft.scan.spread", dflt).toBoolean)
-      return df
+      df: DataFrame): DataFrame =
     spreadKeys.get(name) match {
       case None => df
       case Some(key) =>
-        // default: parallelism/4, floored at 4 — measured sweet spot
+        // parallelism/4, floored at 4 — measured sweet spot
         // (q290 at 8/16/32 parts: warm wall 2.9/3.1/4.6 s, cpu
         // 4.5/5.7/8.0 s): enough fan-out to break the serial scan,
         // few enough tasks that the per-task fixed cost stays small;
         // scales DOWN with the session's cores so the low-core bench
         // run is not taxed 32 fixed costs per stage
-        val target = spark.conf.getOption("spark.graft.scan.spread.parts")
-          .orElse(sys.env.get("SPARK_GRAFT_SCAN_SPREAD_PARTS"))
-          .map(_.toInt)
-          .getOrElse(math.max(4, spark.sparkContext.defaultParallelism / 4))
+        val target = math.max(4, spark.sparkContext.defaultParallelism / 4)
         val parts = scanPartsMemo.computeIfAbsent((dir, name),
           _ => Integer.valueOf(df.rdd.getNumPartitions))
         if (parts >= target) df
         else df.repartition(target, org.apache.spark.sql.functions.col(key))
     }
-  }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, dir)

@@ -66,14 +66,6 @@ object ImageHash {
             s"ImageHash: payload is not a decodable image: ${e.getMessage}", e)
       }
     require(img != null, "ImageHash: payload is not a decodable image")
-    dHashOfImage(img)
-  }
-
-  /** The hash core over an already-decoded image — shared by
-    * [[dHash64]] and the fused [[imageDHashResized]] so the two paths
-    * cannot drift.
-    */
-  private def dHashOfImage(img: java.awt.image.BufferedImage): Long = {
     require(img.getWidth == 2 * GridW && img.getHeight == 2 * GridH,
       s"ImageHash: expected ${2 * GridW}x${2 * GridH} px, " +
         s"got ${img.getWidth}x${img.getHeight} — resize first (Multimodal.resizeImages)")
@@ -122,46 +114,6 @@ object ImageHash {
       .as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, payload) => (id, dHash64(payload)) })
       .toDF(idCol, "dhash")
-  }
-
-  /** Single-decode resize→hash — the FUSED form of
-    * `Multimodal.resizeImages(media, 18, 16)` → [[imageDHash]]: one
-    * ImageIO decode, a nearest-neighbor rescale onto the 18×16
-    * canvas (the identical Graphics2D call the resizer makes), and
-    * the hash computed straight off the canvas — no PNG re-encode,
-    * no second decode. Hash-IDENTICAL to the two-stage path
-    * (ImageHashSpec parity pin: NN sampling and the lossless
-    * intermediate make the canvas pixels equal), at roughly half the
-    * decode CPU — the production choice when the image corpus
-    * dominates and per-stage hashes are already pinned (r15 ADVICE).
-    */
-  def imageDHashResized(media: DataFrame, idCol: String = "media_id",
-      payloadCol: String = "payload"): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        val img =
-          try javax.imageio.ImageIO.read(
-            new javax.imageio.stream.MemoryCacheImageInputStream(
-              new java.io.ByteArrayInputStream(payload)))
-          catch {
-            case e: java.io.IOException =>
-              throw new IllegalArgumentException(
-                s"ImageHash: payload is not a decodable image: ${e.getMessage}", e)
-          }
-        require(img != null, "ImageHash: payload is not a decodable image")
-        val dst = new java.awt.image.BufferedImage(2 * GridW, 2 * GridH,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val g = dst.createGraphics()
-        try {
-          g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-            java.awt.RenderingHints.VALUE_INTERPOLATION_NEAREST_NEIGHBOR)
-          g.drawImage(img, 0, 0, 2 * GridW, 2 * GridH, null)
-        } finally g.dispose()
-        (id, dHashOfImage(dst))
-      }).toDF(idCol, "dhash")
   }
 
   /** The b-th 16-bit fragment of a 64-bit hash (b ∈ 0..3), as a
@@ -225,14 +177,15 @@ object ImageHash {
     // cache the (id, dhash) projection: the self-join reads it twice,
     // and the upstream is typically the DECODE pass — without the
     // cache every image decodes once per join side (measured 2× wall
-    // on the 16× ScaleCheck corpus). 16 bytes/row; eager count so the
-    // two sides never race the fill (the Dedup.minhashPairs
-    // discipline). With eager=false the returned frame stays lazy over
-    // this plan and the cache lives for the session; eager=true
-    // materializes the result (localCheckpoint) and unpersists the
-    // snapshot before returning — the mode for sweep harnesses like
-    // ScaleCheck that call this many times per session and would
-    // otherwise accumulate cached partitions (r14 ADVICE).
+    // on an image corpus 16× the sf0.1 document count). 16 bytes/row;
+    // eager count so the two sides never race the fill (the
+    // Dedup.minhashPairs discipline). With eager=false the returned
+    // frame stays lazy over this plan and the cache lives for the
+    // session; eager=true materializes the result (localCheckpoint)
+    // and unpersists the snapshot before returning — the mode for
+    // callers that run many times per session (q215 under Bench and
+    // Verify) and would otherwise accumulate cached partitions
+    // (r14 ADVICE).
     val snap = hashes.select(col(idCol).cast("long").as("id"),
       col("dhash").cast("long").as("dhash")).cache()
     snap.count()

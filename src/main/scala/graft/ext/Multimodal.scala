@@ -102,9 +102,6 @@ object Multimodal {
     }
   }
 
-  private[ext] def stubDecode(payload: Array[Byte]): (Double, Array[Long]) =
-    ByteStatsDecoder.decode(payload)
-
   /** Real image decoder over the JDK's pure-Java ImageIO readers
     * (PNG/BMP/GIF/JPEG ship with the JRE — no native codec needed).
     * Per pixel: Rec.601 luma from the ARGB int; features are the mean

@@ -38,12 +38,8 @@ object SetSimJoin {
     * that per-task fixed costs stay small; scales with the session
     * conf rather than any local constant.
     */
-  private def pinnedWidth(df: DataFrame): Int = {
-    val conf = df.sparkSession.conf
-    conf.getOption("spark.graft.setsim.parts").map(_.toInt).getOrElse {
-      math.max(4, conf.get("spark.sql.shuffle.partitions").toInt / 4)
-    }
-  }
+  private def pinnedWidth(df: DataFrame): Int =
+    math.max(4, df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt / 4)
 
   /** Distinct lowercase whitespace tokens (the corpus-wide token-set
     * view of a document; empty/NULL text → empty set).

@@ -46,14 +46,6 @@ object TextAnalysis extends TextAnalysisLm with TextAnalysisBpe {
         "(?<=\\p{IsLatin})\\p{M}+", ""),
       "NFC")
 
-  /** BPE-ish subword count estimate: words plus intra-word splits on
-    * letter/digit and case boundaries — a cheap, deterministic proxy
-    * for tokenizer-token counts when no vocabulary is available.
-    */
-  def subwordCount(text: Column): Column =
-    size(when(length(trim(text)) === 0, array().cast("array<string>"))
-      .otherwise(split(trim(text), "\\s+|(?<=[a-z])(?=[A-Z])|(?<=[A-Za-z])(?=[0-9])|(?<=[0-9])(?=[A-Za-z])")))
-
   /** Document fingerprint: md5 of case/whitespace-normalized text.
     * md5 is identical across engines, making this the portable exact-
     * dedup key (Spark's hash/xxhash64 are not reproducible in DuckDB,
@@ -733,7 +725,7 @@ object TextAnalysis extends TextAnalysisLm with TextAnalysisBpe {
     // bounded at sampleK rows, so materialization is safe
     val sampleOrder =
       if (sampleByHash)
-        Seq(md5(concat_ws(" ", col(idCol), col("start_pos"))),
+        Seq(md5(concat_ws("\u0000", col(idCol), col("start_pos"))),
           col(idCol), col("start_pos"))
       else Seq(desc("span_len"), col(idCol), col("start_pos"))
     val sample = spans

@@ -44,9 +44,10 @@ private[ext] trait TextAnalysisBpe {
     * occurrence left-to-right — Sennrich et al. 2016's apply step.
     *
     * Representation: the token sequence is a single string with every
-    * token wrapped in  separators (`␟t␟␟h␟␟e␟`), so one merge is
-    * ONE literal `replace(␟l␟␟r␟ → ␟lr␟)` — boundary-safe (a pattern
-    * can never match across a token) and overlap-correct (`aaa` +
+    * token wrapped in U+001F separators (drawn ␟ here:
+    * `␟t␟␟h␟␟e␟`), so one merge is ONE literal
+    * `replace(␟l␟␟r␟ → ␟lr␟)` — boundary-safe (a pattern can never
+    * match across a token) and overlap-correct (`aaa` +
     * merge (a,a) → [aa, a], leftmost-first, because the second
     * occurrence's leading separator is consumed by the first match).
     * The whole merge table unrolls at plan-build time into a chain of

@@ -288,7 +288,7 @@ object Urls {
               // sentinel — slice past the array start is not portable
               when(size(col("_psl_labels")) >= d,
                 concat_ws(".", slice(col("_psl_labels"), -d, d)))
-                .otherwise(lit(" ")))
+                .otherwise(lit("\u0000")))
             .join(broadcast(lookup),
               col(s"_psl_cand$d") === col(s"_psl_c$d"), "left_outer")
             .withColumn(s"_psl_m$d",
@@ -309,7 +309,7 @@ object Urls {
             when(size(col("_psl_labels")) >= d,
               concat(lit("*."),
                 concat_ws(".", slice(col("_psl_labels"), -(d - 1), d - 1))))
-              .otherwise(lit(" ")))
+              .otherwise(lit("\u0000")))
           .join(broadcast(lookup),
             col(s"_psl_wcand$d") === col(s"_psl_wc$d"), "left_outer")
           .withColumn(s"_psl_w$d", col(s"_psl_wc$d").isNotNull)

@@ -43,9 +43,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * Usage: sbt "runMain graft.tools.Probe layers q140_delta_cc"
   *
   * Env: SPARK_GRAFT_SF_DIR (default: Bench's sf0.1 dataset),
-  * SPARK_GRAFT_CPUS, SPARK_GRAFT_SCAN_SPREAD to toggle the Tables.load
-  * scan spread for before/after pairs. Diagnostic only — never part of
-  * a query path.
+  * SPARK_GRAFT_CPUS. Diagnostic only — never part of a query path.
   */
 object Probe {
 

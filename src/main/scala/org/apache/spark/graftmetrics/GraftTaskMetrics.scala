@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
-/** Process-wide executor-side counters for the bench/scale harnesses
+/** Process-wide executor-side counters for `graft.Bench` and `Probe`
   * (VERDICT r13 ask #1): wall time is the only number a noisy host can
   * corrupt — three consecutive rounds of judging re-derived host-steal
   * normalizations by hand because identical-code sweeps ranged ±30%

@@ -185,20 +185,6 @@ class ImageHashSpec extends SparkSpec {
     }
   }
 
-  test("imageDHashResized (fused, single decode) ≡ resizeImages → imageDHash") {
-    import spark.implicits._
-    for (s <- Seq(1, 2, 3)) {
-      val media = Seq((1L, scaledBmp(base, s))).toDF("media_id", "payload")
-        .withColumn("meta", struct(lit("image/bmp").as("format"),
-          lit(2 * GridW * s).as("width"), lit(2 * GridH * s).as("height"),
-          lit(1).as("n_frames")))
-      val twoStage = ImageHash.imageDHash(
-        Multimodal.resizeImages(media, 2 * GridW, 2 * GridH)).head().getLong(1)
-      val fused = ImageHash.imageDHashResized(media).head().getLong(1)
-      assert(fused === twoStage, s"fused hash must equal two-stage at $s×")
-    }
-  }
-
   test("nearDupPairs eager mode leaves no cached snapshot behind") {
     import spark.implicits._
     val hashes = Seq((1L, 5L), (2L, 5L)).toDF("media_id", "dhash")

@@ -8,17 +8,54 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ProbeSpec extends AnyFunSuite {
 
-  test("SparkSession.builder appears in main code only inside GraftSession") {
+  /** Every main source as (path relative to src/main/scala, bytes). */
+  private lazy val mainSources: List[(String, Array[Byte])] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root (${root.toAbsolutePath})")
     val files = Files.walk(root)
-    val builders =
-      try files.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala"))
-        .filter(p => Files.readString(p).contains("SparkSession.builder"))
-        .map(p => root.relativize(p).toString).toList.sorted
-      finally files.close()
+    try files.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .map(p => (root.relativize(p).toString, Files.readAllBytes(p)))
+      .toList.sortBy(_._1)
+    finally files.close()
+  }
+
+  private lazy val mainText: List[(String, String)] =
+    mainSources.map { case (f, b) => (f, new String(b, "UTF-8")) }
+
+  test("SparkSession.builder appears in main code only inside GraftSession") {
+    val builders = mainText.collect {
+      case (f, text) if text.contains("SparkSession.builder") => f
+    }
     assert(builders === List("graft/GraftSession.scala"))
+  }
+
+  test("main code reads exactly the four deployment env vars") {
+    val read = """(?:sys\.env(?:\.get|\.getOrElse|\.contains)?|System\.getenv)\(\s*"([^"]+)"""".r
+    val names = mainText.flatMap { case (_, text) =>
+      read.findAllMatchIn(text).map(_.group(1)) }.toSet
+    assert(names === Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
+      "SPARK_GRAFT_QUERIES", "SPARK_GRAFT_EXTRA_CONF"))
+  }
+
+  test("main code names exactly three spark.graft.* conf keys") {
+    // the only knobs a spec sets: RangeJoinRewriteSpec the two
+    // rangejoin keys, RetrievalSpec the token-frame storage mode
+    val key = """"(spark\.graft\.[A-Za-z0-9_.]+)"""".r
+    val keys = mainText.flatMap { case (_, text) =>
+      key.findAllMatchIn(text).map(_.group(1)) }.toSet
+    assert(keys === Set("spark.graft.rangejoin.bucket.micros",
+      "spark.graft.rangejoin.max.buckets", "spark.graft.tokenFrame.storage"))
+  }
+
+  test("no main source carries a C0 control byte other than tab, LF or CR") {
+    val bad = for {
+      (f, bytes) <- mainSources
+      (b, i) <- bytes.zipWithIndex
+      if b >= 0 && b < 0x20 && b != '\t' && b != '\n' && b != '\r'
+    } yield s"$f: byte 0x${"%02x".format(b.toInt)} at line " +
+      (bytes.take(i).count(_ == '\n') + 1)
+    assert(bad.isEmpty, bad.mkString("; "))
   }
 
   test("Probe rejects an unknown mode or query name with its usage") {
