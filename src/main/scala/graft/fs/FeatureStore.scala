@@ -69,17 +69,26 @@ object WriteMode {
   *     writes its frame as it comes: clustering it costs a sampling job
   *     and a shuffle of the whole table, which the first merge pays
   *     anyway;
-  *   - a merge keeps that layout without re-sorting the table: both
-  *     join sides are routed by the base's file boundaries
+  *   - a merge keeps that layout without re-sorting the table: the
+  *     incoming rows are routed by the base's file boundaries
   *     (`repartitionById` on the range id) and joined on (keys, range
-  *     id), one routing shuffle per side. Split points for
-  *     `spark.sql.shuffle.partitions` ranges are re-sampled (one Spark
-  *     job over the leading key) only when the base is not clustered
-  *     into that many files with disjoint ranges — the first merge
-  *     after an overwrite, after `compact(1)` or after a z-order
-  *     rewrite, into a version written before versions carried a
-  *     `_manifest`, or into a bucketed or partitioned table, which is
-  *     routed the same way but written in its own layout;
+  *     id) with the base read in place — file `i` is partition `i`,
+  *     already in range `i` and sorted by the keys — so the base side
+  *     plans no exchange and no sort, and only the incoming rows are
+  *     shuffled. When the base is not clustered into
+  *     `spark.sql.shuffle.partitions` files with disjoint ranges — the
+  *     first merge after an overwrite, after `compact(1)` or after a
+  *     z-order rewrite, into a version written before versions carried
+  *     a `_manifest`, or into a bucketed or partitioned table, which is
+  *     written in its own layout — split points for that many ranges
+  *     are sampled (one Spark job over the leading key) and both sides
+  *     are routed by them, one routing shuffle per side;
+  *   - a merge writes no parquet dictionary for a column that no file
+  *     of its base stores with one (unique keys, continuous doubles:
+  *     parquet would build the dictionary and then drop it for PLAIN);
+  *     overwrite, `compact` and `optimizeTable` use the default writer,
+  *     so a column whose values turned repetitive regains its
+  *     dictionary there;
   *   - publishing a clustered version copies (hard-links, on a local
   *     root) its files and manifest into the online snapshot with no
   *     Spark job;
@@ -303,10 +312,13 @@ final class FeatureStore(private[fs] val spark: SparkSession,
     * partial-column refresh must not NULL out untouched features.
     *
     * A merge into a plain table (no buckets, no `partitionBy`) writes a
-    * key-clustered version (see [[KeyRanges]]). An overwrite writes `df`
-    * as it comes: clustering it would cost every overwrite a sampling
-    * job and a shuffle of the whole table, and the first merge after it
-    * clusters the table anyway.
+    * key-clustered version (see [[KeyRanges]]); a merge into a clustered
+    * version reads it in place and shuffles only `df`. A merge writes no
+    * dictionary for the columns its base stores without one (see
+    * [[mergeWriteOptions]]). An overwrite writes `df` as it comes, with
+    * the default writer: clustering it would cost every overwrite a
+    * sampling job and a shuffle of the whole table, and the first merge
+    * after it clusters the table anyway.
     */
   def writeTable(name: String, df: DataFrame, mode: WriteMode): Unit = {
     val (spec, version) = loadSpec(name)
@@ -316,10 +328,10 @@ final class FeatureStore(private[fs] val spark: SparkSession,
     if (mode == WriteMode.Overwrite || version == 0)
       writeVersion(name, spec, version, df, clustered = false)
     else {
-      val old = readTable(name)
-      checkMergeTypes(old, df, name)
-      val ranges = rangesFor(name, spec, version, old, df)
-      writeClustered(name, spec, version, mergeRouted(ranges.route(old), ranges.route(df), spec.keys))
+      checkMergeTypes(spec.schema, df.schema, name)
+      val (ranges, base) = mergeBase(name, spec, version, df)
+      writeClustered(name, spec, version, mergeRouted(base, ranges.route(df), spec.keys),
+        mergeWriteOptions(name, version))
     }
   }
 
@@ -329,9 +341,9 @@ final class FeatureStore(private[fs] val spark: SparkSession,
     * round trips and aggregate outputs disagree on nullable/containsNull
     * for identical value types.
     */
-  private def checkMergeTypes(old: DataFrame, df: DataFrame, name: String): Unit = {
-    val conflicts = df.schema.flatMap { f =>
-      old.schema.find(_.name == f.name)
+  private def checkMergeTypes(table: StructType, write: StructType, name: String): Unit = {
+    val conflicts = write.flatMap { f =>
+      table.find(_.name == f.name)
         .filterNot(o => Bridge
           .sameTypeIgnoringNullability(o.dataType, f.dataType))
         .map(o => s"${f.name}: table has ${o.dataType.simpleString}, write has ${f.dataType.simpleString}")
@@ -342,9 +354,10 @@ final class FeatureStore(private[fs] val spark: SparkSession,
 
   /** The merge shared by writeTable(Merge) and [[applyChanges]]:
     * full-outer coalesce of `df` onto `old` by the keys. Both sides
-    * arrive routed through the same [[KeyRanges]], so the join is on
-    * (keys, range id) and plans no exchange beyond the two routing
-    * ones; output partition `i` holds exactly key range `i`.
+    * arrive routed through the same [[KeyRanges]] (a clustered `old`
+    * read in place), so the join is on (keys, range id) and plans no
+    * exchange beyond the routing ones; output partition `i` holds
+    * exactly key range `i`.
     * Value columns are RENAMED per side before the join (name-based
     * disambiguation): Dataset-column references (`old(c)`/`newDf(c)`)
     * trip DetectAmbiguousSelfJoin when both frames share lineage —
@@ -381,16 +394,17 @@ final class FeatureStore(private[fs] val spark: SparkSession,
     * Bucketed and partitioned tables write the rows in their own layout.
     */
   private[fs] def writeClustered(name: String, spec: FeatureTableSpec, version: Int,
-      ranged: DataFrame): Unit = {
+      ranged: DataFrame, options: Map[String, String] = Map.empty): Unit = {
     val data = ranged.drop(KeyRanges.Col)
     if (isPlain(spec))
       writeVersion(name, spec, version, data.sortWithinPartitions(spec.keys.map(col): _*),
-        clustered = true)
-    else writeVersion(name, spec, version, data, clustered = false)
+        clustered = true, options)
+    else writeVersion(name, spec, version, data, clustered = false, options)
   }
 
   /** Commit `result` as version `version + 1` of `name`, exactly as laid
-    * out, with a `_manifest` when `clustered`.
+    * out, with a `_manifest` when `clustered`; `options` go to the
+    * parquet writer.
     *
     * Writers are pinned to `version`: the new version is claimed by a
     * no-overwrite rename and the pointer re-checked after it, so a
@@ -399,7 +413,7 @@ final class FeatureStore(private[fs] val spark: SparkSession,
     * racer's rows (the optimistic-concurrency contract).
     */
   private[fs] def writeVersion(name: String, spec: FeatureTableSpec, version: Int,
-      result: DataFrame, clustered: Boolean): Unit = {
+      result: DataFrame, clustered: Boolean, options: Map[String, String] = Map.empty): Unit = {
     val newVersion = version + 1
     val target = dataDir(name, newVersion)
     // write into a writer-private temp dir, then claim v<N+1> by atomic
@@ -417,7 +431,7 @@ final class FeatureStore(private[fs] val spark: SparkSession,
       // readers re-declare the bucket spec over the committed dir
       // (readBucketed).
       val tmpTable = s"graft_fs_tmp_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      result.write.mode("overwrite").format("parquet")
+      result.write.mode("overwrite").format("parquet").options(options)
         .bucketBy(spec.buckets, spec.keys.head, spec.keys.tail: _*)
         .sortBy(spec.keys.head, spec.keys.tail: _*)
         .option("path", tmp.toString)
@@ -430,7 +444,7 @@ final class FeatureStore(private[fs] val spark: SparkSession,
       spark.sql(s"DROP TABLE IF EXISTS `${bucketedCatalogName(name, newVersion)}`")
       ()
     } else {
-      val writer = result.write.mode("overwrite")
+      val writer = result.write.mode("overwrite").options(options)
       val partitioned =
         if (spec.partitionBy.nonEmpty) writer.partitionBy(spec.partitionBy: _*) else writer
       partitioned.parquet(tmp.toString)
@@ -475,8 +489,9 @@ final class FeatureStore(private[fs] val spark: SparkSession,
     * [[KeyRanges]]; deletes drop matched keys via a LEFT ANTI join on
     * (keys, range id) and upserts then merge through the same
     * full-outer coalesce as writeTable(Merge), so partial-column
-    * refresh semantics, schema evolution and the clustered layout hold
-    * for CDC feeds too.
+    * refresh semantics, schema evolution, the clustered layout, the
+    * in-place read of a clustered base (through both joins) and the
+    * dictionary rule hold for CDC feeds too.
     *
     * Multiple change events per key: with no `seqCol`, duplicate keys
     * in the batch are an ERROR (Delta's multiple-source-match
@@ -515,9 +530,8 @@ final class FeatureStore(private[fs] val spark: SparkSession,
             s"${dups.mkString(", ")} — pass seqCol to resolve to the " +
             "last event per key, or pre-compact the batch")
       }
-      val old = readTable(name)
-      checkMergeTypes(old, cached.drop(opCol +: seqCol.toSeq: _*), name)
-      val ranges = rangesFor(name, spec, version, old, cached)
+      checkMergeTypes(spec.schema, cached.drop(opCol +: seqCol.toSeq: _*).schema, name)
+      val (ranges, base) = mergeBase(name, spec, version, cached)
       val routed = ranges.route(cached)
       val perKey: DataFrame = seqCol match {
         case Some(sc) =>
@@ -536,8 +550,9 @@ final class FeatureStore(private[fs] val spark: SparkSession,
       val on = spec.keys :+ KeyRanges.Col
       val deletes = perKey.filter(col(opCol) === "delete").select(on.map(col): _*)
       val upserts = perKey.filter(col(opCol) === "upsert").drop(opCol)
-      val kept = ranges.route(old).join(deletes, on, "left_anti")
-      writeClustered(name, spec, version, mergeRouted(kept, upserts, spec.keys))
+      val kept = base.join(deletes, on, "left_anti")
+      writeClustered(name, spec, version, mergeRouted(kept, upserts, spec.keys),
+        mergeWriteOptions(name, version))
     } finally {
       cached.unpersist()
       ()
@@ -568,20 +583,43 @@ final class FeatureStore(private[fs] val spark: SparkSession,
     } catch { case _: FileNotFoundException => None }
 
   /** The key ranges a merge into version `version` routes both sides
-    * through: the version's own file boundaries when its manifest shows
-    * it clustered into [[clusterFiles]] files, else [[clusterFiles]]
-    * ranges sampled from the leading key of `base` and `incoming`.
+    * through, and that version's rows routed by them. A version whose
+    * manifest shows it clustered into [[clusterFiles]] files routes by
+    * its own file boundaries and is read in place ([[KeyRanges.scan]]):
+    * no exchange, no sort. Any other version is read, and routed through
+    * [[clusterFiles]] ranges sampled from the leading key of it and
+    * `incoming`.
     */
-  private def rangesFor(name: String, spec: FeatureTableSpec, version: Int,
-      base: DataFrame, incoming: DataFrame): KeyRanges = {
+  private def mergeBase(name: String, spec: FeatureTableSpec, version: Int,
+      incoming: DataFrame): (KeyRanges, DataFrame) = {
     val lead = spec.keys.head
-    versionManifest(name, version)
-      .flatMap(KeyRanges.ofManifest(lead, _, clusterFiles))
-      .getOrElse {
-        KeyRanges(lead, Bridge.sampleRangeBounds(
-          base.select(lead).union(incoming.select(lead)), clusterFiles).toIndexedSeq)
-      }
+    val clustered = versionManifest(name, version).flatMap { m =>
+      KeyRanges.ofManifest(lead, m, clusterFiles).map(_ -> m.files)
+    }
+    clustered match {
+      case Some((ranges, files)) =>
+        (ranges, KeyRanges.scan(spark, dataDir(name, version), files, spec.schema, spec.keys, hconf))
+      case None =>
+        val old = readTable(name)
+        val ranges = KeyRanges(lead, Bridge.sampleRangeBounds(
+          old.select(lead).union(incoming.select(lead)), clusterFiles).toIndexedSeq)
+        (ranges, ranges.route(old))
+    }
   }
+
+  /** Parquet writer options of a merge into version `version`: no
+    * dictionary for each top-level column that no file of the version
+    * stores with one. For such a column (unique keys, continuous
+    * doubles) parquet builds a dictionary per chunk and then drops it
+    * for PLAIN, so skipping it writes the same encodings for less CPU.
+    * Columns the version stores dictionary-encoded keep it, and a column
+    * the merge adds has no chunk to judge by. Overwrite, `compact` and
+    * `optimizeTable` write with the default writer, which is where a
+    * column whose values turned repetitive gets its dictionary back.
+    */
+  private def mergeWriteOptions(name: String, version: Int): Map[String, String] =
+    footerPlainColumns(dataDir(name, version))
+      .map(c => s"parquet.enable.dictionary#$c" -> "false").toMap
 
   // ---------------------------------------------------------------- impl
 

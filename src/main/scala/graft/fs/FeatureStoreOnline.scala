@@ -249,8 +249,6 @@ private[fs] trait FeatureStoreOnline { this: FeatureStore =>
     val kind = OnlineManifest.kindOf(key.dataType)
     def stats(st: FileStatus): (Option[Any], Option[Any]) = {
       if (kind == OnlineManifest.NoStats) return (None, None)
-      val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(st, hconf),
-        ParquetMetadataConverter.NO_FILTER)
       val path = ColumnPath.get(key.name)
       def catalyst(v: Any): Any = v match {
         case b: Binary => UTF8String.fromBytes(b.getBytes)
@@ -258,7 +256,7 @@ private[fs] trait FeatureStoreOnline { this: FeatureStore =>
       }
       // per row group: None for all-null keys, which add nothing to the
       // range, else its stats, if they hold a min/max
-      val groups = footer.getBlocks.asScala.toSeq.flatMap { b =>
+      val groups = footer(st).getBlocks.asScala.toSeq.flatMap { b =>
         b.getColumns.asScala.find(_.getPath == path).map(_.getStatistics) match {
           case Some(s) if !s.hasNonNullValue && s.isNumNullsSet && s.getNumNulls == b.getRowCount => None
           case s => Some(s.filter(_.hasNonNullValue))
@@ -270,16 +268,40 @@ private[fs] trait FeatureStoreOnline { this: FeatureStore =>
       if (Seq(lo, hi).exists(b => b.toString.exists(c => c == '\t' || c == '\n'))) (None, None)
       else (Some(lo), Some(hi))
     }
+    dataFiles(dir).map { st =>
+      val (lo, hi) = stats(st)
+      OnlineFile(st.getPath.getName, st.getLen, lo, hi)
+    }
+  }
+
+  /** The data files directly inside `dir`, by name. */
+  private def dataFiles(dir: Path): Seq[FileStatus] =
     fs.listStatus(dir).toSeq
       .filter { st =>
         val n = st.getPath.getName
         st.isFile && !n.startsWith("_") && !n.startsWith(".")
       }
       .sortBy(_.getPath.getName)
-      .map { st =>
-        val (lo, hi) = stats(st)
-        OnlineFile(st.getPath.getName, st.getLen, lo, hi)
-      }
+
+  private def footer(st: FileStatus) =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(st, hconf),
+      ParquetMetadataConverter.NO_FILTER)
+
+  /** The top-level columns that every data file in `dir` holds in every
+    * row group with no dictionary page, by the footers' encoding stats:
+    * one footer read per file, no Spark job. A chunk without encoding
+    * stats, or a directory with no data file or with a file that holds
+    * no row group, counts as having one.
+    */
+  private[fs] def footerPlainColumns(dir: Path): Set[String] = {
+    val perFile = dataFiles(dir).map { st =>
+      val groups = footer(st).getBlocks.asScala.toSeq.map(_.getColumns.asScala.collect {
+        case c if c.getPath.size == 1 &&
+            Option(c.getEncodingStats).exists(!_.hasDictionaryPages) => c.getPath.toDotString
+      }.toSet)
+      groups.reduceOption(_ intersect _).getOrElse(Set.empty[String])
+    }
+    perFile.reduceOption(_ intersect _).getOrElse(Set.empty)
   }
 
   /** Compact the current snapshot into `targetPartitions` files (repeated

@@ -1,11 +1,18 @@
 package graft.fs
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, DirectShufflePartitionID, Expression, SortOrder, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.execution.datasources.{FilePartition, FileFormat, FileScanRDD, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
@@ -54,6 +61,36 @@ private[fs] object KeyRanges {
     }
     if (m.keyCol != lead || m.files.size != files || !ascending) None
     else Some(KeyRanges(lead, m.files.tail.map(f => bound(f.kmin.get)).toIndexedSeq))
+  }
+
+  /** A version whose manifest [[ofManifest]] accepted, read in place and
+    * routed as [[KeyRanges.route]] routes it: partition `i` decodes file
+    * `i` of `dir` through Spark's parquet reader, with range id `i`
+    * appended as a per-partition constant. File `i` holds exactly key
+    * range `i`, sorted by `keys`, so the scan declares the pass-through
+    * partitioning of the routing exchange and the (keys, range id)
+    * order a join on them requires: a merge plans no exchange and no
+    * sort on this side. `schema` is the version's schema; every column
+    * reads back nullable, as in a plain parquet read.
+    */
+  def scan(spark: SparkSession, dir: Path, files: Seq[OnlineFile], schema: StructType,
+      keys: Seq[String], hconf: Configuration): DataFrame = {
+    val data = OnlineManifest.asNullable(schema).asInstanceOf[StructType]
+    val range = StructType(Seq(StructField(Col, IntegerType, nullable = false)))
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, data, range, data,
+      Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      // the reader mutates the conf it is given
+      new Configuration(hconf))
+    val parts = files.zipWithIndex.map { case (f, i) =>
+      FilePartition(i, Array(PartitionedFile(InternalRow(i),
+        SparkPath.fromPath(new Path(dir, f.name)), 0L, f.size, Array.empty[String], 0L, f.size)))
+    }
+    val rows = StructType(data.fields ++ range.fields)
+    val output = DataTypeUtils.toAttributes(rows)
+    val rangeId = output.last
+    Bridge.scanRdd(spark, output, new FileScanRDD(spark, read, parts, rows),
+      ShufflePartitionIdPassThrough(DirectShufflePartitionID(rangeId), parts.size),
+      (keys.map(k => output.find(_.name == k).get) :+ rangeId).map(SortOrder(_, Ascending)))
   }
 }
 

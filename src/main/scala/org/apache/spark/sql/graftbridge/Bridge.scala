@@ -53,6 +53,22 @@ object Bridge {
     org.apache.spark.RangePartitioner.determineBounds(candidates, parts).toSeq.map(_.get(0, dt))
   }
 
+  /** A DataFrame over `rdd`, whose rows hold `output`, planned as a leaf
+    * scan (`LogicalRDD`, through the private[sql] `Dataset.ofRows`) that
+    * declares `partitioning` and `ordering`: the planner trusts both, so
+    * the caller must make them true of every partition.
+    */
+  def scanRdd(spark: org.apache.spark.sql.SparkSession,
+      output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      partitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning,
+      ordering: Seq[org.apache.spark.sql.catalyst.expressions.SortOrder])
+      : org.apache.spark.sql.DataFrame = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    org.apache.spark.sql.classic.Dataset.ofRows(session,
+      org.apache.spark.sql.execution.LogicalRDD(output, rdd, partitioning, ordering)(session))
+  }
+
   /** Expose the private[sql] optimizer-rule builder so specs can
     * assert what a SparkSessionExtensions instance injects.
     */

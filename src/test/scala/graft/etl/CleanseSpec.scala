@@ -136,7 +136,7 @@ class CleanseSpec extends SparkSpec {
     val rows = Seq(
       (1L, "line one\nline two"), (2L, "tab\there \"quoted\" back\\slash"),
       (3L, "汉字 émoji 😃 ok"), (4L, null.asInstanceOf[String]),
-      (5L, ""), (6L, "controlchar"))
+      (5L, ""), (6L, "control\u0001char"))
     val dir = java.nio.file.Files.createTempDirectory("graft-jsonl-rt-").toString
     rows.toDF("id", "text").write.mode("overwrite").json(dir)
     import org.apache.spark.sql.types._

@@ -5,8 +5,17 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.{FullOuter, LeftAnti}
+import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
+import org.apache.spark.sql.execution.{RDDScanExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -16,9 +25,10 @@ import graft.SparkSpec
 /** Key-clustered feature-table versions: the routed merge against the
   * full-outer reference over generated cases, the layout every write
   * leaves (disjoint key-sorted range files matching the version's
-  * `_manifest`), Spark job counts of the merge and of the publish by
-  * file copy, stores whose versions carry no `_manifest`, and lookups
-  * that create no broadcast.
+  * `_manifest`), the plan and Spark job count of a merge that reads its
+  * clustered base in place, the dictionary encodings a merge writes,
+  * Spark job counts of the publish by file copy, stores whose versions
+  * carry no `_manifest`, and lookups that create no broadcast.
   */
 class ClusteredLayoutSpec extends SparkSpec {
   import spark.implicits._
@@ -54,6 +64,64 @@ class ClusteredLayoutSpec extends SparkSpec {
       sc.setLocalProperty("graft.test.layout", null)
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** The physical plans of the queries `f` runs on this session, in
+    * order. Query events reach listeners late, so one from before `f`
+    * can arrive after the listener is registered: two sentinel queries,
+    * told apart by their column name, bracket the events of `f`.
+    */
+  private def plansDuring(f: => Unit): Seq[SparkPlan] = {
+    val Seq(start, end) = Seq("_graft_plans_start", "_graft_plans_end")
+    val events = new ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(fn: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+        val mark = Seq(start, end).find(m => qe.analyzed.exists(_.output.exists(_.name == m)))
+        events.add(mark.getOrElse("") -> qe.executedPlan)
+      }
+      def onFailure(fn: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      spark.range(1).toDF(start).count()
+      f
+      spark.range(1).toDF(end).count()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!events.asScala.exists(_._1 == end) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(events.asScala.exists(_._1 == end), "sentinel query not observed")
+      events.asScala.toSeq.dropWhile(_._1 != start).drop(1).takeWhile(_._1 != end).map(_._2)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Every node of `p`, through adaptive plans and their query stages. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case _ => p.children.flatMap(nodes)
+  })
+
+  /** The nodes from `p` down to the in-place scan of a clustered base. */
+  private def pathToScan(p: SparkPlan): Option[Seq[SparkPlan]] = p match {
+    case s: RDDScanExec => Some(Seq(s))
+    case a: AdaptiveSparkPlanExec => pathToScan(a.executedPlan).map(p +: _)
+    case q: QueryStageExec => pathToScan(q.plan).map(p +: _)
+    case _ => p.children.iterator.flatMap(pathToScan).nextOption().map(p +: _)
+  }
+
+  private def passThroughExchanges(plan: SparkPlan): Seq[ShuffleExchangeExec] =
+    nodes(plan).collect { case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[ShufflePartitionIdPassThrough] => e }
+
+  /** The merge's full-outer join reads the base in place: the path from
+    * its base side down to the scan crosses no exchange and no sort.
+    */
+  private def assertBaseInPlace(plan: SparkPlan): Seq[SparkPlan] = {
+    val joins = nodes(plan).collect { case j: SortMergeJoinExec if j.joinType == FullOuter => j }
+    assert(joins.size == 1, plan.toString)
+    val path = pathToScan(joins.head.left)
+    assert(path.isDefined, s"base side is not read in place:\n$plan")
+    assert(path.get.forall(n => !n.isInstanceOf[Exchange] && !n.isInstanceOf[SortExec]),
+      s"exchange or sort above the base scan:\n$plan")
+    path.get
   }
 
   private def dataFiles(dir: java.io.File): Seq[java.io.File] =
@@ -302,21 +370,70 @@ class ClusteredLayoutSpec extends SparkSpec {
       .write.mode("overwrite").parquet(ref))
     val jobs = jobsDuring(store.writeTable("t", delta, WriteMode.Merge))
     assert(jobs <= refJobs, s"routed merge ran $jobs jobs, the reference $refJobs")
-    // both sides are routed by the base's key ranges: no hash exchange
-    val plans = new ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      store.writeTable("t", delta, WriteMode.Merge)
-      val deadline = System.nanoTime() + 10000000000L
-      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
-    } finally spark.listenerManager.unregister(listener)
-    val plan = plans.asScala.mkString("\n").toLowerCase
-    assert(plan.contains("shufflepartitionidpassthrough") && !plan.contains("hashpartitioning"), plan)
+    // the base is read in place: the delta's routing shuffle and the write
+    assert(jobs == 2, s"routed merge ran $jobs jobs")
+    // the delta is routed by the base's key ranges: no hash exchange, and
+    // its exchange is the merge's only one
+    val Seq(plan) = plansDuring(store.writeTable("t", delta, WriteMode.Merge))
+    val text = plan.toString.toLowerCase
+    assert(text.contains("shufflepartitionidpassthrough") && !text.contains("hashpartitioning"), text)
+    assert(nodes(plan).count(_.isInstanceOf[Exchange]) == 1, plan.toString)
+    assertBaseInPlace(plan)
+    val deltaSide = nodes(plan).collectFirst { case j: SortMergeJoinExec => j.right }.get
+    assert(passThroughExchanges(deltaSide).size == 1, plan.toString)
+    // applyChanges with deletes keeps the base in place through its
+    // left-anti join and its full-outer join
+    val changes = delta.withColumn("_op", when(col("id") % 2 === 0, "delete").otherwise("upsert"))
+    val before = frame(store.readTable("t").collect().toSeq, store.readTable("t").schema)
+    val plans = plansDuring(store.applyChanges("t", changes))
+    val write = plans.filter(p => nodes(p).exists {
+      case j: SortMergeJoinExec => j.joinType == FullOuter
+      case _ => false
+    })
+    assert(write.size == 1, plans.mkString("\n"))
+    val path = assertBaseInPlace(write.head)
+    assert(path.exists {
+      case j: SortMergeJoinExec => j.joinType == LeftAnti
+      case j: BroadcastHashJoinExec => j.joinType == LeftAnti
+      case _ => false
+    }, s"the left-anti join is not on the base's path:\n${write.head}")
+    assertSameTable(store.readTable("t"),
+      MergeReference.applyChanges(before, changes, Seq("id"), "t", "_op", None), "applyChanges")
+    assertClustered(store, "t")
+  }
+
+  /** Per column, whether each of its chunks in the current version of
+    * `name` carries a dictionary page.
+    */
+  private def dictionaryPages(store: FeatureStore, name: String): Map[String, Seq[Boolean]] = {
+    val dir = new java.io.File(store.root, s"$name/v${store.currentVersion(name)}")
+    val conf = spark.sessionState.newHadoopConf()
+    dataFiles(dir).flatMap { f =>
+      val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(new Path(f.toString), conf),
+        ParquetMetadataConverter.NO_FILTER)
+      footer.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala.map(c => c.getPath.toDotString -> c.hasDictionaryPage))
+    }.groupBy(_._1).map { case (c, chunks) => c -> chunks.map(_._2) }
+  }
+
+  test("a merge writes no dictionary for the columns its base stores without one") {
+    val store = freshStore
+    val df = spark.range(4000).selectExpr("id", "cast(id as double) * 1.37 as x", "concat('s', cast(id % 5 as string)) as s")
+    store.createTable(FeatureTableSpec("t", Seq("id"), df.schema))
+    store.writeTable("t", df, WriteMode.Overwrite)
+    store.writeTable("t", df.limit(0), WriteMode.Merge)
+    val base = dictionaryPages(store, "t")
+    assert(base("x").forall(!_) && base("id").forall(!_) && base("s").forall(identity), base)
+    // x turns repetitive, which a default writer would dictionary-encode
+    val delta = spark.range(0, 4000, 2).selectExpr("id", "cast(id % 3 as double) as x", "cast(id % 4 as int) as y")
+    val before = frame(store.readTable("t").collect().toSeq, store.readTable("t").schema)
+    store.writeTable("t", delta, WriteMode.Merge)
+    assertSameTable(store.readTable("t"), MergeReference.merge(before, delta, Seq("id"), "t"), "merge")
+    val merged = dictionaryPages(store, "t")
+    assert(merged("x").forall(!_) && merged("id").forall(!_), merged)
+    assert(merged("s").forall(identity) && merged("y").forall(identity), merged)
+    // compact writes with the default writer: x gets its dictionary back
+    store.compact("t")
+    assert(dictionaryPages(store, "t")("x").forall(identity))
   }
 
   test("publishTable of a clustered version runs no Spark job and links the version's files") {
@@ -359,7 +476,10 @@ class ClusteredLayoutSpec extends SparkSpec {
       Set((5L, 5.0), (999L, 999.0)))
     val before = frame(store.readTable("t").collect().toSeq, store.readTable("t").schema)
     val delta = Seq((5L, -5.0, "n"), (1500L, 1.5, "m")).toDF("id", "x", "y")
-    store.writeTable("t", delta, WriteMode.Merge)
+    // no manifest: both sides are routed through sampled ranges
+    val Seq(plan) = plansDuring(store.writeTable("t", delta, WriteMode.Merge))
+    assert(passThroughExchanges(plan).size == 2 && nodes(plan).forall(!_.isInstanceOf[RDDScanExec]),
+      plan.toString)
     assertSameTable(store.readTable("t"), MergeReference.merge(before, delta, Seq("id"), "t"), "merge")
     assertClustered(store, "t")
     assert(jobsDuring(store.publishTable("t", numPartitions = 4)) == 0)

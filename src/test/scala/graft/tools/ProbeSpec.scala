@@ -8,9 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ProbeSpec extends AnyFunSuite {
 
-  /** Every main source as (path relative to src/main/scala, bytes). */
-  private lazy val mainSources: List[(String, Array[Byte])] = {
-    val root = Paths.get("src/main/scala")
+  /** Every Scala source under `dir` as (path relative to `dir`, bytes). */
+  private def sources(dir: String): List[(String, Array[Byte])] = {
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"run from the repo root (${root.toAbsolutePath})")
     val files = Files.walk(root)
     try files.iterator().asScala
@@ -19,6 +19,8 @@ class ProbeSpec extends AnyFunSuite {
       .toList.sortBy(_._1)
     finally files.close()
   }
+
+  private lazy val mainSources = sources("src/main/scala")
 
   private lazy val mainText: List[(String, String)] =
     mainSources.map { case (f, b) => (f, new String(b, "UTF-8")) }
@@ -48,13 +50,25 @@ class ProbeSpec extends AnyFunSuite {
       "spark.graft.rangejoin.max.buckets", "spark.graft.tokenFrame.storage"))
   }
 
-  test("no main source carries a C0 control byte other than tab, LF or CR") {
-    val bad = for {
-      (f, bytes) <- mainSources
+  /** "file: byte 0x.. at line n" for every C0 control byte other than
+    * tab, LF or CR: such a byte makes grep treat the file as binary,
+    * so scans over the tree skip it.
+    */
+  private def controlBytes(srcs: List[(String, Array[Byte])]): List[String] =
+    for {
+      (f, bytes) <- srcs
       (b, i) <- bytes.zipWithIndex
       if b >= 0 && b < 0x20 && b != '\t' && b != '\n' && b != '\r'
     } yield s"$f: byte 0x${"%02x".format(b.toInt)} at line " +
       (bytes.take(i).count(_ == '\n') + 1)
+
+  test("no main source carries a C0 control byte other than tab, LF or CR") {
+    val bad = controlBytes(mainSources)
+    assert(bad.isEmpty, bad.mkString("; "))
+  }
+
+  test("no test source carries a C0 control byte other than tab, LF or CR") {
+    val bad = controlBytes(sources("src/test/scala"))
     assert(bad.isEmpty, bad.mkString("; "))
   }
 
