@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.etl.Features
 import graft.ext.{Chunking, Components, Dedup, Pq, Similarity, TextAnalysis}
-import graft.fs.{FeatureTableSpec, PointInTime, WriteMode}
+import graft.fs.{FeatureTableSpec, ParquetFooters, PointInTime, WriteMode}
 
 /** Gate queries — semantic dedup, curation pipelines, pricing/funnel
   * analytics, encoders, and the dup-graph tier (CC, sampling).
@@ -97,7 +97,7 @@ private[graft] trait PipelinesCuration extends PipelinesBase {
     t(s, d, "events")
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       .write.mode("overwrite").partitionBy("event_type").parquet(dir)
-    s.read.parquet(dir)
+    ParquetFooters.read(s, dir)
       .filter(col("event_type") === "purchase")
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_purchases"),

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.fs.ParquetFooters
+
 /** Round-14 gates. Each query sits next to its `Gate` entry and
   * DuckDB oracle.
   */
@@ -80,7 +82,7 @@ private[graft] trait PipelinesRound14 extends PipelinesBase {
       lit(0.0).as("vq"))
     halfB.unionByName(sentinel).coalesce(1).write.mode("append").parquet(srcDir)
     runPhase() // phase 2: restart from the checkpoint over the new files
-    val out = s.read.parquet(outDir)
+    val out = ParquetFooters.read(s, outDir)
       .filter(col("user_id") >= 0) // the sentinel's window never finalizes; belt
       .groupBy(col("user_id"), col("window_start_us"))
       .agg(count(lit(1)).as("n_emissions"),

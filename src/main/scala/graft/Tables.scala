@@ -2,11 +2,17 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.fs.ParquetFooters
+
 /** Loaders for the driver-materialized parquet tables (TESTDATA.md).
   * One parquet file per table under `$dir/` — the engine treats these as
   * its "raw tables" (SURVEY.md §1.1: raw table ≈ catalog table; here a
-  * parquet path). At 100 TB these would be multi-file partitioned
-  * directories; `spark.read.parquet` handles both identically.
+  * parquet path). Every read goes through [[graft.fs.ParquetFooters.read]],
+  * which learns the schema from one footer on the driver instead of a
+  * one-task schema job; at 100 TB these would be multi-file partitioned
+  * directories, and it lists them and picks the footer exactly as
+  * Spark's own schema inference does, so one file and a directory read
+  * alike.
   */
 object Tables {
 
@@ -90,7 +96,7 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else ParquetFooters.read(spark, s"$dir/$name.parquet")
 
   /** [[load]] + the opt-in scan [[spread]] — for query paths whose
     * scan-stage per-row compute is heavy enough to amortize the
@@ -121,7 +127,7 @@ object Tables {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.LongType
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = ParquetFooters.read(spark, s"$dir/events.parquet")
     val ts = raw.schema("ts").dataType match {
       case LongType => expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)")
       case _        => expr("cast(ts as timestamp_ntz)")

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.fs.ParquetFooters
+
 /** Semantic decontamination — the embedding-space sibling of the
   * verbatim-gram decontamination tier (q75/q79/q109/q167): drop every
   * corpus vector whose cosine to ANY eval-probe vector reaches the
@@ -116,9 +118,9 @@ object Decontamination {
     // resolve a versioned root ONCE: the routing and the scan then read
     // one immutable snapshot across a concurrent rebuild swap
     val dir = IvfIndex.resolveDir(spark, rawDir)
-    val centDf = spark.read.parquet(s"$dir/centroids")
+    val centDf = ParquetFooters.read(spark, s"$dir/centroids")
     val routed = Similarity.nearestCells(probes, centDf, nprobe, idCol, embCol)
-    val data = spark.read.parquet(s"$dir/data")
+    val data = ParquetFooters.read(spark, s"$dir/data")
     val scored0 = routed.join(data, Seq("cell"))
     val scored =
       if (excludeSelf) scored0.filter(col("query_id") =!= col("neighbor_id"))

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.{DataFrame, functions => F}
 
+import graft.fs.ParquetFooters
+
 /** [extension] Versioned lifecycle for materialized IVF indexes — the
   * missing limb between [[Similarity.ivfIndexStaleness]] (the re-fit
   * TRIGGER) and acting on it: a re-fit must rewrite the whole
@@ -125,7 +127,7 @@ object IvfIndex {
           "create() it first (flat ivfIndexWrite dirs re-fit by rewriting in place)"))
     // The old snapshot is immutable, so this scan-and-rewrite reads a
     // consistent corpus no matter how long the write takes.
-    val corpus = spark.read.parquet(s"$root/v$cur/data")
+    val corpus = ParquetFooters.read(spark, s"$root/v$cur/data")
     val next = cur + 1
     Similarity.ivfIndexWrite(corpus, s"$root/v$next", nlist,
       idCol = "neighbor_id", embCol = "c_emb", maxFitPoints = maxFitPoints)
@@ -167,7 +169,7 @@ object IvfIndex {
   def recallProbe(spark: SparkSession, root: String, queries: DataFrame,
       k: Int, nprobe: Int): Double = {
     val dir = resolveDir(spark, root)
-    val corpus = spark.read.parquet(s"$dir/data")
+    val corpus = ParquetFooters.read(spark, s"$dir/data")
       .select(F.col("neighbor_id").as("vec_id"),
         F.col("c_emb").as("embedding"))
     val approx = Similarity.ivfIndexedTopK(spark, root, queries, k, nprobe)

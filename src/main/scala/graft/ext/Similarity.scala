@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.fs.ParquetFooters
+
 /** [extension] Similarity search over embedding columns
   * (SURVEY.md §7.6). Brute-force cosine top-k is the exact baseline;
   * the LSH-bucketed variant is the 100 TB path: random-hyperplane
@@ -318,7 +320,7 @@ object Similarity {
     */
   def ivfIndexStaleness(spark: SparkSession, rawDir: String): DataFrame = {
     val dir = IvfIndex.resolveDir(spark, rawDir)
-    val fit = spark.read.parquet(s"$dir/stats")
+    val fit = ParquetFooters.read(spark, s"$dir/stats")
       .select(col("cell"), col("n_vectors").as("fit_n_vectors"),
         col("mean_d2").as("fit_mean_d2"))
     cellAssignmentStats(spark, dir)
@@ -333,8 +335,8 @@ object Similarity {
     * partitions against the broadcast centroid sidecar.
     */
   private def cellAssignmentStats(spark: SparkSession, dir: String): DataFrame = {
-    val centDf = spark.read.parquet(s"$dir/centroids")
-    spark.read.parquet(s"$dir/data")
+    val centDf = ParquetFooters.read(spark, s"$dir/centroids")
+    ParquetFooters.read(spark, s"$dir/data")
       .join(broadcast(centDf), Seq("cell"))
       .withColumn("_c", col("centroid").cast("array<double>"))
       .withColumn("_d2",
@@ -351,7 +353,7 @@ object Similarity {
     */
   private def readCentroids(spark: SparkSession,
       dir: String): Array[Array[Double]] = {
-    val rows = spark.read.parquet(s"$dir/centroids")
+    val rows = ParquetFooters.read(spark, s"$dir/centroids")
       .orderBy("cell")
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
@@ -391,12 +393,12 @@ object Similarity {
       s"ivfIndexedTopK: query batch exceeds maxBatch=$maxBatch — the " +
         "indexed path collects probe-cell ids for static pruning and is " +
         "for serving-sized batches; use ivfTopK for corpus-scale query sets")
-    val centDf = spark.read.parquet(s"$dir/centroids")
+    val centDf = ParquetFooters.read(spark, s"$dir/centroids")
     // no cache: the probe frame is a tiny batch x nlist cross — cheaper
     // to recompute for the final plan than to pin storage memory forever
     val probes = nearestCells(queries, centDf, nprobe, idCol, embCol)
     val cells = probes.select("cell").distinct().collect().map(_.getInt(0))
-    val data = spark.read.parquet(s"$dir/data")
+    val data = ParquetFooters.read(spark, s"$dir/data")
       .filter(col("cell").isin(cells.map(Integer.valueOf): _*))
     val scored = probes.join(data, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))

@@ -241,7 +241,8 @@ final class FeatureStore(private[fs] val spark: SparkSession,
     * keeps the last `retainVersions` snapshots — default 2, current +
     * previous; older versions are pruned). The historical snapshot
     * keeps its OWN parquet schema — the registered spec describes only
-    * the current version.
+    * the current version — read from one of its footers on the driver
+    * by [[ParquetFooters.read]], so the read runs no Spark job.
     */
   def readTableVersion(name: String, version: Int): DataFrame = {
     val current = currentVersion(name)
@@ -253,9 +254,9 @@ final class FeatureStore(private[fs] val spark: SparkSession,
     val spec = loadSpec(name)._1
     if (spec.buckets > 0)
       readBucketed(spec, version,
-        spark.read.parquet(dataDir(name, version).toString).schema)
+        ParquetFooters.read(spark, dataDir(name, version).toString).schema)
     else
-      spark.read.parquet(dataDir(name, version).toString)
+      ParquetFooters.read(spark, dataDir(name, version).toString)
   }
 
   /** Reclaim history on demand: drop all but the newest `keep`
@@ -277,8 +278,9 @@ final class FeatureStore(private[fs] val spark: SparkSession,
   /** Roll the table back one version: the current snapshot is
     * DISCARDED (its directory removed — the next write reclaims the
     * version number) and the pointer returns to the previous snapshot,
-    * whose parquet schema becomes the registered schema again. One
-    * level only, matching retention.
+    * whose parquet schema, read from one of its footers on the driver
+    * by [[ParquetFooters.read]] (no Spark job), becomes the registered
+    * schema again. One level only, matching retention.
     */
   def rollbackTable(name: String): Unit = {
     val (spec, version) = loadSpec(name)
@@ -286,7 +288,7 @@ final class FeatureStore(private[fs] val spark: SparkSession,
     val prevDir = dataDir(name, version - 1)
     require(fs.exists(prevDir),
       s"rollbackTable($name): previous version ${version - 1} was pruned")
-    val prevSchema = spark.read.parquet(prevDir.toString).schema
+    val prevSchema = ParquetFooters.read(spark, prevDir.toString).schema
     saveSpec(spec.copy(schema = prevSchema), version - 1)
     fs.delete(dataDir(name, version), true)
     // Drop the discarded version's bucketed catalog entry HERE: repeated

@@ -10,13 +10,12 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.metadata.ColumnPath
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -284,8 +283,7 @@ private[fs] trait FeatureStoreOnline { this: FeatureStore =>
       .sortBy(_.getPath.getName)
 
   private def footer(st: FileStatus) =
-    ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(st, hconf),
-      ParquetMetadataConverter.NO_FILTER)
+    ParquetFooters.footer(st, hconf, ParquetMetadataConverter.NO_FILTER)
 
   /** The top-level columns that every data file in `dir` holds in every
     * row group with no dictionary page, by the footers' encoding stats:

@@ -24,6 +24,14 @@ object Bridge {
       b: org.apache.spark.sql.types.DataType): Boolean =
     org.apache.spark.sql.types.DataType.equalsIgnoreNullability(a, b)
 
+  /** Whether Spark's file index hides a file or directory of this name
+    * when it lists a read path (`_`- and `.`-prefixed names, except the
+    * parquet summaries and `_k=v` partition directories), through the
+    * private[spark] `HadoopFSUtils.shouldFilterOutPathName`.
+    */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   /** Up to `parts - 1` ascending, distinct bounds that split the single
     * column of `keys` into `parts` ranges of about equal row count, in
     * Catalyst form. Sampled the way a range exchange samples, in one

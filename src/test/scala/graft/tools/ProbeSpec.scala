@@ -32,6 +32,15 @@ class ProbeSpec extends AnyFunSuite {
     assert(builders === List("graft/GraftSession.scala"))
   }
 
+  test("a schema-inferring parquet read appears in main code only inside ParquetFooters") {
+    // any other one brings back the one-task schema job before the read
+    val inferring = """\.read\s*\.(?:parquet\(|format\(\s*"parquet"\s*\))""".r
+    val readers = mainText.collect {
+      case (f, text) if inferring.findFirstIn(text).isDefined => f
+    }
+    assert(readers === List("graft/fs/ParquetFooters.scala"))
+  }
+
   test("main code reads exactly the four deployment env vars") {
     val read = """(?:sys\.env(?:\.get|\.getOrElse|\.contains)?|System\.getenv)\(\s*"([^"]+)"""".r
     val names = mainText.flatMap { case (_, text) =>
