@@ -3,12 +3,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.build(GraftSession.defaultCores)
-    // Warm-up outside the timed region: first-touch costs (codegen JIT,
-    // parquet footer reads, FileSourceScan setup) otherwise land on
-    // whichever query the map iterates first.
-    Tables.all.foreach { n =>
-      try Tables.load(spark, sfDir, n).count() catch { case _: Throwable => () }
-    }
+    Tables.warmUp(spark, sfDir) // outside the timed region
     // Optional comma-separated allowlist for iterating on single queries
     // locally; the driver leaves it unset and benches everything.
     val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).toSet)

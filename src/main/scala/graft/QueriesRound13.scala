@@ -30,7 +30,6 @@ private[graft] trait PipelinesRound13 extends PipelinesBase { this: PipelinesBeh
     * joined pair.
     */
   def streamIntervalJoin(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val schema = t(s, d, "events").schema
     val streamDir = PipelinesTextSim.stagedStreamDir(d, "events.parquet")
     // def, not val: two INDEPENDENT readStream lineages — a shared one
@@ -42,32 +41,18 @@ private[graft] trait PipelinesRound13 extends PipelinesBase { this: PipelinesBeh
     val clicks = src.filter(col("event_type") === "click")
       .select(col("user_id"), col("event_id").as("click_id"),
         col("ts").cast("timestamp").as("c_ts"))
-    val joined = graft.streaming.StreamJoins.intervalJoin(purchases, clicks,
-      keyCol = "user_id", leftTsCol = "p_ts", rightTsCol = "c_ts",
-      window = "1 day", watermarkDelay = "40 days")
-    val qname = "graft_stream_ivj_" +
-      PipelinesTextSim.streamGateRuns.incrementAndGet()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-q197-ck-").toString
     // a stream-stream join opens TWO state stores per partition — the
-    // motivating case for the shared 8-partition scope (6.9 s → 2.7 s
-    // measured; the join itself is sub-second)
-    val query = PipelinesTextSim.withStreamStatePartitions(s) {
-      joined.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
+    // motivating case for the runner's shared state-partition scope
+    // (6.9 s → 2.7 s measured; the join itself is sub-second)
+    PipelinesTextSim.runToMemory(s, "q197") { _ =>
+      graft.streaming.StreamJoins.intervalJoin(purchases, clicks,
+        keyCol = "user_id", leftTsCol = "p_ts", rightTsCol = "c_ts",
+        window = "1 day", watermarkDelay = "40 days")
+    } { sink =>
+      sink.select(col("user_id"), col("purchase_id"), col("click_id"),
+          (unix_micros(col("c_ts")) - unix_micros(col("p_ts"))).as("dt_us"))
+        .orderBy("purchase_id", "click_id")
     }
-    query.awaitTermination()
-    // materialize off the memory sink, then DROP it and the checkpoint
-    // (the q195 scratch discipline — Bench runs every gate twice)
-    val out = s.table(qname)
-      .select(col("user_id"), col("purchase_id"), col("click_id"),
-        (unix_micros(col("c_ts")) - unix_micros(col("p_ts"))).as("dt_us"))
-      .orderBy("purchase_id", "click_id")
-      .localCheckpoint(true)
-    s.catalog.dropTempView(qname)
-    PipelinesRound12.deleteRecursively(java.nio.file.Paths.get(ckpt))
-    out
   }
 
   /** Streaming as-of (point-in-time) join as a hash gate (r13 — the
@@ -91,7 +76,6 @@ private[graft] trait PipelinesRound13 extends PipelinesBase { this: PipelinesBeh
     * doubles.
     */
   def streamAsOfJoin(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val ev = t(s, d, "events")
     val views = ev.filter(col("event_type") === "view")
       .groupBy(col("user_id"), col("ts").cast("timestamp").as("feat_ts"))
@@ -104,35 +88,17 @@ private[graft] trait PipelinesRound13 extends PipelinesBase { this: PipelinesBeh
       lit(-1L).as("user_id"), sentinelTs.as("feat_ts"), lit(0.0).as("value")))
     val spineFix = purchases.unionByName(s.range(1).select(
       lit(-1L).as("event_id"), lit(-1L).as("user_id"), sentinelTs.as("ts")))
-    val dir = "/tmp/graft_q199_pit_" + d.replaceAll("[^A-Za-z0-9.-]", "_")
-    featFix.coalesce(1).write.mode("overwrite").parquet(s"$dir/features")
-    spineFix.coalesce(1).write.mode("overwrite").parquet(s"$dir/spine")
-    val joined = graft.streaming.StreamingPit.asOfJoin(
-      s.readStream.schema(spineFix.schema).parquet(s"$dir/spine"),
-      s.readStream.schema(featFix.schema).parquet(s"$dir/features"),
-      keyCol = "user_id", tsCol = "ts", idCol = "event_id",
-      featTsCol = "feat_ts", valueCol = "value",
-      watermarkDelay = "1 minute", featureRetention = "forever")
-    val qname = "graft_stream_pit_" +
-      PipelinesTextSim.streamGateRuns.incrementAndGet()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-q199-ck-").toString
-    val query = PipelinesTextSim.withStreamStatePartitions(s) {
-      joined.toDF.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
+    PipelinesTextSim.runToMemory(s, "q199") { fx =>
+      graft.streaming.StreamingPit.asOfJoin(fx.stage(spineFix), fx.stage(featFix),
+        keyCol = "user_id", tsCol = "ts", idCol = "event_id",
+        featTsCol = "feat_ts", valueCol = "value",
+        watermarkDelay = "1 minute", featureRetention = "forever")
+    } { sink =>
+      sink.filter(col("probe_id") >= 0) // the sentinel can't emit; belt anyway
+        .select(col("probe_id"), col("user_id"), col("ts_us"),
+          col("feature_ts_us"), col("feature_value"))
+        .orderBy("probe_id")
     }
-    query.awaitTermination()
-    val out = s.table(qname)
-      .filter(col("probe_id") >= 0) // the sentinel can't emit; belt anyway
-      .select(col("probe_id"), col("user_id"), col("ts_us"),
-        col("feature_ts_us"), col("feature_value"))
-      .orderBy("probe_id")
-      .localCheckpoint(true)
-    s.catalog.dropTempView(qname)
-    PipelinesRound12.deleteRecursively(java.nio.file.Paths.get(ckpt))
-    PipelinesRound12.deleteRecursively(java.nio.file.Paths.get(dir))
-    out
   }
 
   /** IVF-routed semantic decontamination as an INVARIANT gate (r13 —
@@ -224,44 +190,26 @@ private[graft] trait PipelinesRound13 extends PipelinesBase { this: PipelinesBeh
     * spurious fingerprint (NULL keep_id via the left-outer join).
     */
   def streamContentDedup(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val docs = t(s, d, "documents")
     // 2024-01-01T00:00:00Z + doc_id seconds — exact integer micros
     val base = docs.select(col("doc_id"), col("text"))
       .withColumn("ts",
         timestamp_micros(lit(1704067200000000L) + col("doc_id") * lit(1000000L)))
-    val dir = "/tmp/graft_q200_docs_" + d.replaceAll("[^A-Za-z0-9.-]", "_")
-    base.coalesce(1).write.mode("overwrite").parquet(dir)
-    val stream = s.readStream.schema(base.schema).parquet(dir)
-    val deduped = graft.streaming.StreamingFeatures.dedupDocsByContent(
-      stream, textCol = "text", tsCol = "ts", watermarkDelay = "40 days")
-    val qname = "graft_stream_dedup_" +
-      PipelinesTextSim.streamGateRuns.incrementAndGet()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-q200-ck-").toString
-    val query = PipelinesTextSim.withStreamStatePartitions(s) {
-      deduped.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-    }
-    query.awaitTermination()
-    val emitted = s.table(qname)
-      .groupBy(col("fingerprint")).agg(count(lit(1)).as("n_emissions"))
     val groups = docs
       .withColumn("fingerprint",
         graft.ext.TextAnalysis.fingerprint(col("text")))
       .groupBy(col("fingerprint"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-    val out = emitted
-      .join(groups, Seq("fingerprint"), "left_outer")
-      .select(col("fingerprint"), col("n_emissions"), col("keep_id"),
-        col("n_copies"))
-      .orderBy("keep_id")
-      .localCheckpoint(true)
-    s.catalog.dropTempView(qname)
-    PipelinesRound12.deleteRecursively(java.nio.file.Paths.get(ckpt))
-    PipelinesRound12.deleteRecursively(java.nio.file.Paths.get(dir))
-    out
+    PipelinesTextSim.runToMemory(s, "q200") { fx =>
+      graft.streaming.StreamingFeatures.dedupDocsByContent(fx.stage(base),
+        textCol = "text", tsCol = "ts", watermarkDelay = "40 days")
+    } { sink =>
+      sink.groupBy(col("fingerprint")).agg(count(lit(1)).as("n_emissions"))
+        .join(groups, Seq("fingerprint"), "left_outer")
+        .select(col("fingerprint"), col("n_emissions"), col("keep_id"),
+          col("n_copies"))
+        .orderBy("keep_id")
+    }
   }
 
   /** Streaming sessionization as a hash gate (r13 — the SIXTH
@@ -284,7 +232,6 @@ private[graft] trait PipelinesRound13 extends PipelinesBase { this: PipelinesBeh
     * sessions by (user_id, start_us) — the oracle groups identically.
     */
   def streamSessionize(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val gapMicros = 14400000000L // 4 h — q34's session definition
     val ev = t(s, d, "events").select(
       col("user_id"),
@@ -293,33 +240,17 @@ private[graft] trait PipelinesRound13 extends PipelinesBase { this: PipelinesBeh
     val sentinelTs = lit("2024-12-31 00:00:00").cast("timestamp")
     val fix = ev.unionByName(s.range(1).select(
       lit(-1L).as("user_id"), sentinelTs.as("ts"), lit(0.0).as("value")))
-    val dir = "/tmp/graft_q201_sess_" + d.replaceAll("[^A-Za-z0-9.-]", "_")
-    fix.coalesce(1).write.mode("overwrite").parquet(dir)
     import s.implicits._
-    val stream = s.readStream.schema(fix.schema).parquet(dir)
-      .as[graft.streaming.Sessionize.SessEvent]
-    val sessions = graft.streaming.Sessionize.streaming(stream, gapMicros,
-      watermarkDelay = "1 minute")
-    val qname = "graft_stream_sess_" +
-      PipelinesTextSim.streamGateRuns.incrementAndGet()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-q201-ck-").toString
-    val query = PipelinesTextSim.withStreamStatePartitions(s) {
-      sessions.toDF.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
+    PipelinesTextSim.runToMemory(s, "q201") { fx =>
+      graft.streaming.Sessionize.streaming(
+        fx.stage(fix).as[graft.streaming.Sessionize.SessEvent], gapMicros,
+        watermarkDelay = "1 minute")
+    } { sink =>
+      sink.filter(col("user_id") >= 0) // the sentinel's session never times out
+        .select(col("user_id"), col("start_us"), col("end_us"),
+          col("n_events"), col("sum_value").cast("long").as("sum_vq"))
+        .orderBy("user_id", "start_us")
     }
-    query.awaitTermination()
-    val out = s.table(qname)
-      .filter(col("user_id") >= 0) // the sentinel's session never times out
-      .select(col("user_id"), col("start_us"), col("end_us"),
-        col("n_events"), col("sum_value").cast("long").as("sum_vq"))
-      .orderBy("user_id", "start_us")
-      .localCheckpoint(true)
-    s.catalog.dropTempView(qname)
-    PipelinesRound12.deleteRecursively(java.nio.file.Paths.get(ckpt))
-    PipelinesRound12.deleteRecursively(java.nio.file.Paths.get(dir))
-    out
   }
 
   /** Streaming session co-occurrence mining as a hash gate (r13 — the
@@ -342,39 +273,22 @@ private[graft] trait PipelinesRound13 extends PipelinesBase { this: PipelinesBeh
     * (the q187 maxProbes discipline applied to a precondition).
     */
   def streamCoOccurrence(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val ev = t(s, d, "events").select(
       col("user_id"), col("ts").cast("timestamp").as("ts"), col("event_type"))
     require(ev.groupBy(col("user_id"), col("ts"))
       .agg(count(lit(1)).as("_n")).filter(col("_n") > 1).isEmpty,
       "streamCoOccurrence: events fixture has per-(user, ts) collisions — " +
         "stream arrival order vs the batch event_id tie-break would diverge")
-    val dir = "/tmp/graft_q202_cooc_" + d.replaceAll("[^A-Za-z0-9.-]", "_")
-    ev.coalesce(1).write.mode("overwrite").parquet(dir)
     import s.implicits._
-    val stream = s.readStream.schema(ev.schema).parquet(dir)
-      .as[graft.streaming.Sessionize.TypedEvent]
-    val pairs = graft.streaming.Sessionize.streamingCoOccurrence(stream,
-      gapMicros = 14400000000L, maxDist = 3, watermarkDelay = "40 days")
-    val qname = "graft_stream_cooc_" +
-      PipelinesTextSim.streamGateRuns.incrementAndGet()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-q202-ck-").toString
-    val query = PipelinesTextSim.withStreamStatePartitions(s) {
-      pairs.toDF.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
+    PipelinesTextSim.runToMemory(s, "q202") { fx =>
+      graft.streaming.Sessionize.streamingCoOccurrence(
+        fx.stage(ev).as[graft.streaming.Sessionize.TypedEvent],
+        gapMicros = 14400000000L, maxDist = 3, watermarkDelay = "40 days")
+    } { sink =>
+      sink.groupBy(col("src_type"), col("dst_type"))
+        .agg(count(lit(1)).as("n_pairs"))
+        .orderBy("src_type", "dst_type")
     }
-    query.awaitTermination()
-    val out = s.table(qname)
-      .groupBy(col("src_type"), col("dst_type"))
-      .agg(count(lit(1)).as("n_pairs"))
-      .orderBy("src_type", "dst_type")
-      .localCheckpoint(true)
-    s.catalog.dropTempView(qname)
-    PipelinesRound12.deleteRecursively(java.nio.file.Paths.get(ckpt))
-    PipelinesRound12.deleteRecursively(java.nio.file.Paths.get(dir))
-    out
   }
 
   /** End-to-end WAV/PCM audio feature extraction as a hash gate (r13

@@ -703,7 +703,6 @@ private[graft] trait PipelinesRound16b extends PipelinesBase {
     * batch operator (stream ≡ batch, the q200/q204 discipline).
     */
   def streamRevisits(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import s.implicits._
     val i = col("doc_id")
     val url = concat(lit("http://rv"), pmod(i, lit(10)).cast("string"),
@@ -717,32 +716,15 @@ private[graft] trait PipelinesRound16b extends PipelinesBase {
       .select(col("doc_id"), explode(sequence(lit(1), lit(2))).as("crawl"))
       .select(md5(payload).as("digest"), url.as("url"),
         (col("crawl") * 100000 + i).as("ts"), col("doc_id"), col("crawl"))
-    val dir = "/tmp/graft_q265_caps_" + d.replaceAll("[^A-Za-z0-9.-]", "_")
-    captures.coalesce(1).write.mode("overwrite").parquet(dir)
-    val stream = s.readStream.schema(captures.schema).parquet(dir)
-      .as[graft.streaming.StreamingFeatures.CaptureIn]
-    val labeled = graft.streaming.StreamingFeatures.labelRevisits(stream)
-    val qname = "graft_stream_revisit_" +
-      PipelinesTextSim.streamGateRuns.incrementAndGet()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-q265-ck-")
-      .toString
-    val query = PipelinesTextSim.withStreamStatePartitions(s) {
-      labeled.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
+    PipelinesTextSim.runToMemory(s, "q265") { fx =>
+      graft.streaming.StreamingFeatures.labelRevisits(
+        fx.stage(captures).as[graft.streaming.StreamingFeatures.CaptureIn])
+    } { sink =>
+      sink.select(col("doc_id"), col("crawl"), col("url"),
+          col("ts").as("capture_ts"), col("payload_digest"),
+          col("record_type"), col("refers_to_url"), col("refers_to_ts"))
+        .orderBy("doc_id", "crawl")
     }
-    query.awaitTermination()
-    val out = s.table(qname)
-      .select(col("doc_id"), col("crawl"), col("url"),
-        col("ts").as("capture_ts"), col("payload_digest"),
-        col("record_type"), col("refers_to_url"), col("refers_to_ts"))
-      .orderBy("doc_id", "crawl")
-      .localCheckpoint(true)
-    s.catalog.dropTempView(qname)
-    PipelinesRound12.deleteRecursively(java.nio.file.Paths.get(ckpt))
-    PipelinesRound12.deleteRecursively(java.nio.file.Paths.get(dir))
-    out
   }
 
   /** Crawl snapshot diff as a hash gate — the churn report every

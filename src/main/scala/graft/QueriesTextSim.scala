@@ -75,34 +75,22 @@ private[graft] trait PipelinesTextSim extends PipelinesBase {
     * function, band key, or signature flavor breaks the hash.
     */
   def streamNearDupPairs(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val schema = t(s, d, "documents").schema
     // the file source requires a DIRECTORY; the fixture is a single
     // parquet file — stage it (hardlink, copy fallback) once per sfDir
     val streamDir = PipelinesTextSim.stagedStreamDir(d)
-    val stream = s.readStream.schema(schema).parquet(streamDir)
-      .withColumn("ts", lit("2024-01-01 00:00:00").cast("timestamp"))
-    val pairs = graft.streaming.NearDup.nearDupPairs(stream,
-      n = 3, numHashes = 32, bands = 8, minJaccard = 0.5,
-      watermarkDelay = "1 day", maxPerBucket = 1000000,
-      portableHash = true)
-    val qname = "graft_stream_neardup_" +
-      PipelinesTextSim.streamGateRuns.incrementAndGet()
-    val query = PipelinesTextSim.withStreamStatePartitions(s) {
-      pairs.writeStream.format("memory").queryName(qname)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    PipelinesTextSim.runToMemory(s, "q184") { _ =>
+      val stream = s.readStream.schema(schema).parquet(streamDir)
+        .withColumn("ts", lit("2024-01-01 00:00:00").cast("timestamp"))
+      graft.streaming.NearDup.nearDupPairs(stream,
+        n = 3, numHashes = 32, bands = 8, minJaccard = 0.5,
+        watermarkDelay = "1 day", maxPerBucket = 1000000,
+        portableHash = true)
+    } { sink =>
+      sink.select(col("id_a"), col("id_b"), col("est_jaccard"))
+        .dropDuplicates("id_a", "id_b")
+        .orderBy("id_a", "id_b")
     }
-    query.awaitTermination()
-    // materialize off the memory sink, then DROP it — repeated gate
-    // runs (Bench's min-of-2, long sessions) would otherwise pin every
-    // run's full pair set in driver memory (r12 review)
-    val out = s.table(qname)
-      .select(col("id_a"), col("id_b"), col("est_jaccard"))
-      .dropDuplicates("id_a", "id_b")
-      .orderBy("id_a", "id_b")
-      .localCheckpoint(true)
-    s.catalog.dropTempView(qname)
-    out
   }
 
   // ---------------------------------------------------- text analysis
@@ -341,16 +329,19 @@ private[graft] object PipelinesTextSim {
     * every query twice; a restarted query may not reuse an active
     * name).
     */
-  val streamGateRuns = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val streamGateRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Start a streaming query under 4 state partitions (r13): a
-    * stateful operator opens its stores per shuffle partition and the
-    * 32-partition session default spends a gate-sized run on empty
-    * stores (q197 measured 6.9 s → 2.7 s). Keyed-state output is
-    * partition-count independent; a production deployment sizes this
-    * to its key volume. The partition count pins into the query's
-    * offset log at start, so the session conf is restored immediately
-    * after — queries run one at a time under Verify/Bench.
+    * stateful operator opens its stores per shuffle partition, and
+    * the session default (one shuffle partition per core,
+    * `GraftSession`) would size a gate-sized run's state by the host
+    * instead of by its keys, paying load/commit on mostly empty stores
+    * every micro-batch (q197 measured 6.9 s → 2.7 s against 32).
+    * Keyed-state output is partition-count independent; a production
+    * deployment sizes this to its key volume. The partition count pins
+    * into the query's offset log at start, so the session conf is
+    * restored immediately after — queries run one at a time under
+    * Verify/Bench.
     */
   def withStreamStatePartitions[A](s: org.apache.spark.sql.SparkSession)(
       start: => A): A = {
@@ -369,15 +360,66 @@ private[graft] object PipelinesTextSim {
     } finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
+  /** Stages batch frames as file-source streams inside one
+    * [[runToMemory]] invocation's temp dir, so the run deletes them
+    * with its checkpoint and no other process shares the path.
+    */
+  final class StreamFixtures private[PipelinesTextSim] (
+      s: SparkSession, dir: java.nio.file.Path) {
+    private var staged = 0
+
+    /** `frame` written as one parquet file in its own directory (the
+      * file source rejects bare file paths), read back as a stream.
+      */
+    def stage(frame: DataFrame): DataFrame = {
+      staged += 1
+      val src = dir.resolve(s"src$staged").toString
+      frame.coalesce(1).write.parquet(src)
+      s.readStream.schema(frame.schema).parquet(src)
+    }
+  }
+
+  /** Run a streaming gate to completion: the frame `stream` builds
+    * (staging its sources through the given [[StreamFixtures]]) runs
+    * under [[withStreamStatePartitions]] and Trigger.AvailableNow into
+    * an append-mode memory sink, and `finish` of the sink's rows comes
+    * back eagerly checkpointed. The sink view, the checkpoint and
+    * every staged source are dropped before it returns, thrown or not:
+    * Bench runs every gate at least twice, and a kept view pins the
+    * run's whole output in driver memory. `tag` names the sink
+    * (`graft_stream_<tag>_<n>`) and the temp dir (`graft-<tag>-*`).
+    */
+  def runToMemory(s: SparkSession, tag: String)(
+      stream: StreamFixtures => org.apache.spark.sql.Dataset[_])(
+      finish: DataFrame => DataFrame): DataFrame = {
+    import org.apache.spark.sql.streaming.Trigger
+    val dir = java.nio.file.Files.createTempDirectory(s"graft-$tag-")
+    val name = s"graft_stream_${tag}_" + streamGateRuns.incrementAndGet()
+    try {
+      val frame = stream(new StreamFixtures(s, dir))
+      val query = withStreamStatePartitions(s) {
+        frame.writeStream.format("memory").queryName(name)
+          .outputMode("append")
+          .option("checkpointLocation", dir.resolve("ckpt").toString)
+          .trigger(Trigger.AvailableNow()).start()
+      }
+      query.awaitTermination()
+      finish(s.table(name)).localCheckpoint(true)
+    } finally {
+      s.catalog.dropTempView(name)
+      PipelinesRound12.deleteRecursively(dir)
+    }
+  }
+
   private val stagedDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** A directory containing (a hardlink to) `<sfDir>/<fileName>` —
     * the streaming file source rejects bare file paths. Hardlinks
-    * cost nothing; cross-device roots fall back to a copy. One
-    * staging helper serves every streaming gate (q184's documents,
-    * q195's events, q197's events — the r12 review's duplicate-stager
-    * finding).
+    * cost nothing; cross-device roots fall back to a copy. It serves
+    * every gate that streams a raw fixture file unchanged (q184's
+    * documents, q195's and q197's events); a frame computed per run is
+    * staged by [[StreamFixtures]] instead.
     *
     * r13 (fresh-eyes audit): the staging path is now DETERMINISTIC per
     * (sfDir, fileName) — the old per-JVM temp dir leaked one /tmp dir

@@ -787,22 +787,10 @@ object TextAnalysis extends TextAnalysisLm with TextAnalysisBpe {
     rebuildWithoutSpans(toks, hits, idCol, n)
   }
 
-  /** Cached (idCol, _t) token frame shared by a scrub's occurrence
-    * stream and its rebuild join (the shared-consumer lesson — an
-    * uncut lineage re-tokenizes the corpus once per consumer).
-    *
-    * Storage policy via `spark.graft.tokenFrame.storage` (r18, the
-    * r17 verdict watch item): `memory` (default) = eager cache +
-    * count — right for the shared-consumer local gates; `checkpoint`
-    * = eager `localCheckpoint` — blocks are disk-spillable and the
-    * lineage is CUT, the right call for a 100 TB corpus where an
-    * executor-memory-sized cache would thrash (on a real cluster
-    * substitute reliable `checkpoint()` for executor-loss safety —
-    * the lifecycle contract is identical, the GlobalIndex note);
-    * `none` = no materialization — each consumer re-tokenizes, the
-    * honest choice when the corpus scan is cheaper than the cache
-    * footprint. All three produce identical results
-    * (TextAnalysisSpec pins the parity).
+  /** Eagerly cached (idCol, _t) token frame shared by a scrub's
+    * occurrence stream and its rebuild join (the shared-consumer
+    * lesson — an uncut lineage re-tokenizes the corpus once per
+    * consumer).
     */
   private def cachedTokenFrame(docs: DataFrame, idCol: String,
       textCol: String): DataFrame = {
@@ -810,17 +798,11 @@ object TextAnalysis extends TextAnalysisLm with TextAnalysisBpe {
     // measurement): a single-file corpus caches as ONE partition and
     // every span/scrub consumer inherits that serial width; the
     // fan-out is the cache's partitioning, paid once.
-    val projected = Dedup.balanced(docs).select(col(idCol),
+    val toks = Dedup.balanced(docs).select(col(idCol),
       coalesce(tokens(col(textCol)), array().cast("array<string>")).as("_t"))
-    docs.sparkSession.conf
-        .get("spark.graft.tokenFrame.storage", "memory") match {
-      case "checkpoint" => projected.localCheckpoint(true)
-      case "none" => projected
-      case _ =>
-        val toks = projected.cache()
-        toks.count()
-        toks
-    }
+      .cache()
+    toks.count()
+    toks
   }
 
   /** Positional n-token span fingerprints (idCol, _pos, _g) of a

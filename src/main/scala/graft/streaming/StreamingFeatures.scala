@@ -37,23 +37,33 @@ object StreamingFeatures {
       .select(col("user_id"), col("window.start").as("window_start"),
         col("n_events"), col("sum_value"), col("n_purchases"))
 
+  /** Start `frame` under Trigger.AvailableNow with `f` applied to each
+    * non-empty micro-batch: the one sink every maintainer below runs
+    * through.
+    */
+  private def eachBatch(frame: DataFrame, outputMode: String,
+      checkpointDir: String)(f: DataFrame => Unit): StreamingQuery =
+    frame.writeStream
+      .outputMode(outputMode)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        if (!batch.isEmpty) f(batch)
+      }
+      .trigger(Trigger.AvailableNow())
+      .start()
+
   /** Wire a streaming source into a feature table: each micro-batch is
-    * key-merged into `tableName`. Returns the started query; callers
-    * own its lifecycle (`processAllAvailable`/`stop`).
+    * key-merged into `tableName` (update mode, the batch path's
+    * `writeTable(Merge)`); the state maintainers below that upsert end
+    * here. Returns the started query; callers own its lifecycle.
     */
   def refreshFeatureTable(
       stream: DataFrame,
       store: FeatureStore,
       tableName: String,
       checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) store.writeTable(tableName, batch, WriteMode.Merge)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(stream, "update", checkpointDir)(
+      store.writeTable(tableName, _, WriteMode.Merge))
 
   /** Running (unwindowed) per-key aggregate state — the streaming
     * sibling of `operators/IncrementalAgg`: same state columns
@@ -82,14 +92,7 @@ object StreamingFeatures {
       sum(v.cast(DecimalType(18, 2))).cast(DecimalType(38, 2)).as("sm"),
       min(v).as("mn"),
       max(v).as("mx"))
-    agg.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) store.writeTable(tableName, batch, WriteMode.Merge)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    refreshFeatureTable(agg, store, tableName, checkpointDir)
   }
 
   /** Streaming conversion-funnel state — the q93 funnel as a running
@@ -116,14 +119,8 @@ object StreamingFeatures {
       col(userCol).as("user_id"),
       col(typeCol).as("event_type"),
       unix_micros(col(tsCol).cast("timestamp")).as("us"))
-    graft.PipelinesExt.funnelAgg(shaped).writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) store.writeTable(tableName, batch, WriteMode.Merge)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    refreshFeatureTable(graft.PipelinesExt.funnelAgg(shaped), store, tableName,
+      checkpointDir)
   }
 
   /** Streaming sketch state — the [[graft.functions.SketchAggregates]]
@@ -155,14 +152,7 @@ object StreamingFeatures {
       graft.functions.SketchAggregates.kmvDistinct(col(distinctCol)).as("distinct_est"),
       graft.functions.SketchAggregates.cmTopK(col(heavyCol).cast("string"), topK)
         .as("top_items"))
-    agg.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) store.writeTable(tableName, batch, WriteMode.Merge)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    refreshFeatureTable(agg, store, tableName, checkpointDir)
   }
 
   /** File-based streaming read of an events directory with an explicit
@@ -191,14 +181,8 @@ object StreamingFeatures {
       opCol: String,
       checkpointDir: String,
       seqCol: Option[String] = None): StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) store.applyChanges(tableName, batch, opCol, seqCol)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(changes, "append", checkpointDir)(
+      store.applyChanges(tableName, _, opCol, seqCol))
 
   /** Streaming corpus-stats maintenance — the 1-row side of a live
     * BM25 index ([[maintainDocFrequency]] keeps the per-term df; this
@@ -222,14 +206,7 @@ object StreamingFeatures {
     val agg = docStream.select(size(toks).as("dl"))
       .groupBy(lit("corpus").as("corpus_key"))
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-    agg.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) store.writeTable(tableName, batch, WriteMode.Merge)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    refreshFeatureTable(agg, store, tableName, checkpointDir)
   }
 
   /** Streaming per-dimension quantization-bounds maintenance — the
@@ -252,14 +229,7 @@ object StreamingFeatures {
       .select(col("pos"), col("_xf").cast("double").as("x"))
     val agg = dims.groupBy(col("pos"))
       .agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
-    agg.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) store.writeTable(tableName, batch, WriteMode.Merge)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    refreshFeatureTable(agg, store, tableName, checkpointDir)
   }
 
   /** Streaming document-frequency maintenance — the index-side state a
@@ -283,14 +253,7 @@ object StreamingFeatures {
       explode(array_distinct(
         graft.ext.TextAnalysis.tokens(lower(col(textCol))))).as("term"))
     val agg = terms.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    agg.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) store.writeTable(tableName, batch, WriteMode.Merge)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    refreshFeatureTable(agg, store, tableName, checkpointDir)
   }
 
   /** Streaming DSIR bucket-stats maintenance — the corpus model behind
@@ -320,14 +283,7 @@ object StreamingFeatures {
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_raw"),
         sum(when(col("_is_t"), 1L).otherwise(0L)).as("n_target"))
-    agg.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) store.writeTable(tableName, batch, WriteMode.Merge)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    refreshFeatureTable(agg, store, tableName, checkpointDir)
   }
 
   /** Streaming per-term OCCURRENCE counts (positions, not documents —
@@ -345,14 +301,7 @@ object StreamingFeatures {
       .select(explode(
         graft.ext.TextAnalysis.tokens(lower(col(textCol)))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
-    agg.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) store.writeTable(tableName, batch, WriteMode.Merge)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    refreshFeatureTable(agg, store, tableName, checkpointDir)
   }
 
   /** Streaming adjacent-token pair counts (the bigram half of the
@@ -381,14 +330,7 @@ object StreamingFeatures {
         (p, c) => struct(p.as("p"), c.as("c")))).as("_bg"))
       .select(col("_bg.p").as("prev"), col("_bg.c").as("cur"))
       .groupBy(col("prev"), col("cur")).agg(count(lit(1)).as("cnt"))
-    agg.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) store.writeTable(tableName, batch, WriteMode.Merge)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    refreshFeatureTable(agg, store, tableName, checkpointDir)
   }
 
   /** Streaming per-(key, calendar-day) value-sum maintenance — the
@@ -469,14 +411,7 @@ object StreamingFeatures {
           .select(col(keyCol), unix_micros(col("_day.start")).as("day_us"),
             col("n_events"), col("sum_vq"))
     }
-    agg.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) store.writeTable(tableName, batch, WriteMode.Merge)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    refreshFeatureTable(agg, store, tableName, checkpointDir)
   }
 
   /** Streaming duplicate-CLUSTER maintenance — the serving gap between
@@ -503,21 +438,14 @@ object StreamingFeatures {
       checkpointDir: String,
       srcCol: String = "src",
       dstCol: String = "dst"): StreamingQuery =
-    pairStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val prior = store.readTable(tableName)
-            .select(col("node"), col("component"))
-          val updates = graft.ext.Components.incrementalComponentsUpdates(
-            prior, batch, srcCol, dstCol)
-          if (!updates.isEmpty)
-            store.writeTable(tableName, updates, WriteMode.Merge)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(pairStream, "append", checkpointDir) { batch =>
+      val prior = store.readTable(tableName)
+        .select(col("node"), col("component"))
+      val updates = graft.ext.Components.incrementalComponentsUpdates(
+        prior, batch, srcCol, dstCol)
+      if (!updates.isEmpty)
+        store.writeTable(tableName, updates, WriteMode.Merge)
+    }
 
   /** Streaming ANN-index maintenance — continuous ingestion into a
     * materialized IVF index: each micro-batch of embedding rows appends
@@ -548,15 +476,8 @@ object StreamingFeatures {
       checkpointDir: String,
       idCol: String = "vec_id",
       embCol: String = "embedding"): StreamingQuery =
-    vectorStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          graft.ext.Similarity.ivfIndexAppend(batch, indexDir, idCol, embCol)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(vectorStream, "append", checkpointDir)(
+      graft.ext.Similarity.ivfIndexAppend(_, indexDir, idCol, embCol))
 
   /** Exactly-once event dedup for at-least-once sources: state-backed
     * `dropDuplicates` on the event id, bounded by the watermark (state
@@ -671,23 +592,18 @@ object StreamingFeatures {
     // would otherwise only surface as a StreamingQueryException inside
     // the first micro-batch
     graft.operators.Expectations.requireRowLocal(checks)
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // the split + two merges + emptiness probes read the batch up
-        // to four times; cache it so the source (and the check
-        // expressions) run once per micro-batch
-        val cached = batch.persist()
-        try {
-          val (good, bad) = graft.operators.Expectations.enforce(cached, checks)
-          if (!good.isEmpty) store.writeTable(tableName, good, WriteMode.Merge)
-          if (!bad.isEmpty) store.writeTable(quarantineTable,
-            bad.withColumn("violations", concat_ws(",", col("violations"))),
-            WriteMode.Merge)
-        } finally { cached.unpersist(); () }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(stream, "update", checkpointDir) { batch =>
+      // the split + two merges + emptiness probes read the batch up
+      // to four times; cache it so the source (and the check
+      // expressions) run once per micro-batch
+      val cached = batch.persist()
+      try {
+        val (good, bad) = graft.operators.Expectations.enforce(cached, checks)
+        if (!good.isEmpty) store.writeTable(tableName, good, WriteMode.Merge)
+        if (!bad.isEmpty) store.writeTable(quarantineTable,
+          bad.withColumn("violations", concat_ws(",", col("violations"))),
+          WriteMode.Merge)
+      } finally { cached.unpersist(); () }
+    }
   }
 }

@@ -130,9 +130,7 @@ object Probe {
     private val queries = graft.SparkEntry.queries
     private val log = new StageLog
     spark.sparkContext.addSparkListener(log)
-    graft.Tables.all.foreach { n =>
-      try graft.Tables.load(spark, sfDir, n).count() catch { case _: Throwable => () }
-    }
+    graft.Tables.warmUp(spark, sfDir)
 
     private def drain(): Unit =
       org.apache.spark.graftmetrics.GraftTaskMetrics.flush(spark.sparkContext)

@@ -378,28 +378,6 @@ class RetrievalSpec extends SparkSpec {
       .count() === 0L)
   }
 
-  test("tokenFrame storage knob: memory/checkpoint/none parity (r18)") {
-    // spark.graft.tokenFrame.storage switches HOW the shared token
-    // frame materializes (cache / localCheckpoint / recompute), never
-    // WHAT any consumer computes
-    val docs = Seq(
-      (0L, "u1 u2 a b c d e u3"),
-      (1L, "v1 a b c d e v2 v3"),
-      (2L, "w1 w2 w3 w4 w5 w6 w7 w8"))
-      .toDF("doc_id", "text")
-    def run(): Seq[(Long, Long, Long, String)] =
-      TextAnalysis.maximalDupSpans(docs, "doc_id", "text", n = 3)
-        .as[(Long, Long, Long, String)].collect()
-        .sortBy(r => (r._1, r._2)).toSeq
-    val base = run()
-    assert(base.nonEmpty)
-    for (mode <- Seq("checkpoint", "none")) {
-      spark.conf.set("spark.graft.tokenFrame.storage", mode)
-      try assert(run() === base, s"storage mode $mode diverged")
-      finally spark.conf.unset("spark.graft.tokenFrame.storage")
-    }
-  }
-
   test("verifyDupSpans: witnesses confirmed, transitive over-extension flagged + rate") {
     // genuinely pair-shared passage: both reported spans carry a
     // verbatim witness → witnessed=true, measured over-extension 0

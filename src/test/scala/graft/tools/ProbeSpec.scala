@@ -49,14 +49,24 @@ class ProbeSpec extends AnyFunSuite {
       "SPARK_GRAFT_QUERIES", "SPARK_GRAFT_EXTRA_CONF"))
   }
 
-  test("main code names exactly three spark.graft.* conf keys") {
-    // the only knobs a spec sets: RangeJoinRewriteSpec the two
-    // rangejoin keys, RetrievalSpec the token-frame storage mode
+  test("main code names exactly two spark.graft.* conf keys") {
+    // the only knobs a spec sets: RangeJoinRewriteSpec's two rangejoin keys
     val key = """"(spark\.graft\.[A-Za-z0-9_.]+)"""".r
     val keys = mainText.flatMap { case (_, text) =>
       key.findAllMatchIn(text).map(_.group(1)) }.toSet
     assert(keys === Set("spark.graft.rangejoin.bucket.micros",
-      "spark.graft.rangejoin.max.buckets", "spark.graft.tokenFrame.storage"))
+      "spark.graft.rangejoin.max.buckets"))
+  }
+
+  test(".writeStream appears in main code only in the two stream runners and q204") {
+    // StreamingFeatures.eachBatch starts every feature-table maintainer,
+    // PipelinesTextSim.runToMemory every memory-sink gate; q204 restarts
+    // its own foreachBatch query from a checkpoint
+    val starters = mainText.collect {
+      case (f, text) if text.contains(".writeStream") => f
+    }
+    assert(starters === List("graft/QueriesRound14.scala",
+      "graft/QueriesTextSim.scala", "graft/streaming/StreamingFeatures.scala"))
   }
 
   /** "file: byte 0x.. at line n" for every C0 control byte other than
